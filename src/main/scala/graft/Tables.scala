@@ -41,10 +41,4 @@ object Tables {
         df.withColumn("ts", col("ts").cast("timestamp"))
       case _ => df
     }
-
-  /** Register every table as a temp view named after itself, so SQL text
-    * identical to the DuckDB oracle runs on Spark too.
-    */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    all.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
 }

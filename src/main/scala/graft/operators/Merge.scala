@@ -165,31 +165,9 @@ object Merge {
       table: String,
       source: DataFrame,
       keys: Seq[String],
-      partCol: String): Unit = store.withTableLock(table) {
-    if (!store.exists(table)) {
-      store.overwrite(table, source, partitionBy = Seq(partCol))
-    } else {
-      val tableCols = store.read(table).columns.map(_.toLowerCase).toSet
-      if (!source.columns.forall(c => tableCols.contains(c.toLowerCase))) {
-        // a WIDER source must widen EVERY partition, or untouched ones
-        // keep the old schema and reads become listing-order-dependent —
-        // the aligned path only rewrites touched partitions, so fall
-        // back to the full versioned swap for this (rare) load
-        val (t, s) = alignSchemas(store.read(table), source)
-        store.overwrite(table, insertOnly(t, s, keys),
-          partitionBy = Seq(partCol))
-      } else {
-        val values = source.select(col(partCol)).distinct()
-          .collect().map(_.get(0)).toSeq
-        val touched = store.read(table)
-          .filter(col(partCol).isInCollection(values)) // partition-pruned scan
-        // align to the UNION of schemas: a source narrower than an
-        // evolved table must not strip the partition's extra columns
-        val (t, s) = alignSchemas(touched, source)
-        store.overwritePartitions(table, insertOnly(t, s, keys), partCol, values)
-      }
-    }
-  }
+      partCol: String): Unit =
+    partitionAligned(store, table, source, partCol, source, evolve = true)(
+      insertOnly(_, _, keys))
 
   /** Partition-aligned SCD1 MERGE: the update analog of
     * [[insertOnlyPartitionAligned]] — only the partitions the source
@@ -215,32 +193,13 @@ object Merge {
       source: DataFrame,
       keys: Seq[String],
       updateCols: Seq[String],
-      partCol: String): Unit = store.withTableLock(table) {
+      partCol: String): Unit = {
     require(!updateCols.map(_.toLowerCase).contains(partCol.toLowerCase),
       s"scd1PartitionAligned cannot update the partition column $partCol: " +
         "a row changing partitions must delete from a partition this path " +
         "does not rewrite — use mergeInto for partition-moving updates")
-    if (!store.exists(table)) {
-      store.overwrite(table, source, partitionBy = Seq(partCol))
-    } else {
-      val tableCols = store.read(table).columns.map(_.toLowerCase).toSet
-      if (!source.columns.forall(c => tableCols.contains(c.toLowerCase))) {
-        // a WIDER source widens EVERY partition (schema is table-global);
-        // rare path → full versioned swap, as in insertOnlyPartitionAligned
-        val (t, s) = alignSchemas(store.read(table), source)
-        store.overwrite(table, scd1(t, s, keys, updateCols),
-          partitionBy = Seq(partCol))
-      } else {
-        // bounded collect: one row per TOUCHED partition, not per key
-        val values = source.select(col(partCol)).distinct()
-          .collect().map(_.get(0)).toSeq
-        val touched = store.read(table)
-          .filter(col(partCol).isInCollection(values)) // partition-pruned scan
-        val (t, s) = alignSchemas(touched, source)
-        store.overwritePartitions(table, scd1(t, s, keys, updateCols),
-          partCol, values)
-      }
-    }
+    partitionAligned(store, table, source, partCol, source, evolve = true)(
+      scd1(_, _, keys, updateCols))
   }
 
   /** Partition-aligned SCD2 MERGE: effective-dated history maintenance
@@ -265,7 +224,7 @@ object Merge {
       partCol: String,
       validFrom: String = "valid_from",
       validTo: String = "valid_to",
-      isCurrent: String = "is_current"): Unit = store.withTableLock(table) {
+      isCurrent: String = "is_current"): Unit = {
     require(!trackCols.map(_.toLowerCase).contains(partCol.toLowerCase),
       s"scd2PartitionAligned cannot track the partition column $partCol: " +
         "a tracked partition move would split a key's history across " +
@@ -273,23 +232,55 @@ object Merge {
     require(!Seq(validFrom, validTo, isCurrent)
         .map(_.toLowerCase).contains(partCol.toLowerCase),
       s"partition column $partCol cannot be SCD2 metadata")
-    if (!store.exists(table)) {
-      val init = source
+    partitionAligned(store, table, source, partCol,
+      source
         .withColumn(validFrom, lit(effectiveDate))
         .withColumn(validTo, lit(null).cast("string"))
-        .withColumn(isCurrent, lit(true))
-      store.overwrite(table, init, partitionBy = Seq(partCol))
-    } else {
-      val values = source.select(col(partCol)).distinct()
-        .collect().map(_.get(0)).toSeq
-      val touched = store.read(table)
-        .filter(col(partCol).isInCollection(values)) // partition-pruned scan
-      store.overwritePartitions(table,
-        scd2(touched, source, keys, trackCols, effectiveDate,
-          validFrom, validTo, isCurrent),
-        partCol, values)
-    }
+        .withColumn(isCurrent, lit(true)),
+      evolve = false)(
+      scd2(_, _, keys, trackCols, effectiveDate, validFrom, validTo, isCurrent))
   }
+
+  /** The shared body of the partition-aligned merges, under the table
+    * lock: an absent table is created from `initial`; otherwise only the
+    * partitions present in the source are read (a partition-pruned scan;
+    * the collect is bounded by one row per TOUCHED partition, not per
+    * key) and overwritten with `merge(touched, source)`. With `evolve`
+    * the two sides are aligned to the union of their schemas, so a source
+    * narrower than an evolved table keeps the partition's extra columns;
+    * and a WIDER source must widen EVERY partition (schema is
+    * table-global) or untouched ones keep the old schema and reads become
+    * listing-order-dependent, so that rare load falls back to a full
+    * versioned swap of the merged table.
+    */
+  private def partitionAligned(
+      store: TableStore,
+      table: String,
+      source: DataFrame,
+      partCol: String,
+      initial: => DataFrame,
+      evolve: Boolean)(
+      merge: (DataFrame, DataFrame) => DataFrame): Unit =
+    store.withTableLock(table) {
+      def aligned(t: DataFrame): (DataFrame, DataFrame) =
+        if (evolve) alignSchemas(t, source) else (t, source)
+      def widens: Boolean = {
+        val tableCols = store.read(table).columns.map(_.toLowerCase).toSet
+        !source.columns.forall(c => tableCols.contains(c.toLowerCase))
+      }
+      if (!store.exists(table)) {
+        store.overwrite(table, initial, partitionBy = Seq(partCol))
+      } else if (evolve && widens) {
+        val (t, s) = aligned(store.read(table))
+        store.overwrite(table, merge(t, s), partitionBy = Seq(partCol))
+      } else {
+        val values = source.select(col(partCol)).distinct()
+          .collect().map(_.get(0)).toSeq
+        val (t, s) = aligned(store.read(table)
+          .filter(col(partCol).isInCollection(values)))
+        store.overwritePartitions(table, merge(t, s), partCol, values)
+      }
+    }
 
   /** SCD1 with a delete clause — the `WHEN MATCHED AND <cond> THEN
     * DELETE` MERGE shape (GDPR erasure, tombstone propagation): matched

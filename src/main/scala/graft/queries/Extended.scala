@@ -406,8 +406,7 @@ object Extended {
     * what ROLLUP/CUBE generate (the two one-dimension margins plus the
     * grand total, but NOT the (status, priority) cross).
     */
-  val a14_grouping_sets = OpQuery(
-    "a14_grouping_sets",
+  val a14_grouping_sets = OpQuery.sql("a14_grouping_sets", "orders")(
     """SELECT o_orderstatus, o_orderpriority,
       |       CAST(GROUPING(o_orderstatus) AS INT) AS g_status,
       |       CAST(GROUPING(o_orderpriority) AS INT) AS g_priority,
@@ -415,19 +414,7 @@ object Extended {
       |       CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price
       |FROM orders
       |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-      |ORDER BY g_status, g_priority, o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "orders").createOrReplaceTempView("graft_gs_orders")
-    spark.sql(
-      """SELECT o_orderstatus, o_orderpriority,
-        |       CAST(GROUPING(o_orderstatus) AS INT) AS g_status,
-        |       CAST(GROUPING(o_orderpriority) AS INT) AS g_priority,
-        |       COUNT(*) AS n_orders,
-        |       CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price
-        |FROM graft_gs_orders
-        |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-        |ORDER BY g_status, g_priority,
-        |         o_orderstatus ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST""".stripMargin)
-  }
+      |ORDER BY g_status, g_priority, o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin)
 
   /** Statistical aggregates: sample stddev/variance, covariance, and
     * Pearson correlation per group. Both engines accumulate central

@@ -302,8 +302,7 @@ object Round4Ops {
     * the SQL-standard form of the conditional-aggregate family (A5's
     * CASE WHEN shape, stated declaratively).
     */
-  val a18_filter_clause = OpQuery(
-    "a18_filter_clause",
+  val a18_filter_clause = OpQuery.sql("a18_filter_clause", "lineitem")(
     """SELECT l_returnflag,
       |       CAST(COUNT(*) AS BIGINT) AS n_rows,
       |       CAST(COUNT(*) FILTER (WHERE l_quantity > 25) AS BIGINT) AS n_big,
@@ -311,18 +310,7 @@ object Round4Ops {
       |       CAST(ROUND(AVG(l_quantity) FILTER (WHERE l_linestatus = 'F'), 6) AS DOUBLE) AS avg_qty_f
       |FROM lineitem
       |GROUP BY l_returnflag
-      |ORDER BY l_returnflag""".stripMargin) { (spark, dir) =>
-    t(spark, dir, "lineitem").createOrReplaceTempView("graft_fc_lineitem")
-    spark.sql(
-      """SELECT l_returnflag,
-        |       COUNT(*) AS n_rows,
-        |       COUNT(*) FILTER (WHERE l_quantity > 25) AS n_big,
-        |       CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) FILTER (WHERE l_discount > 0.05) AS DECIMAL(18,2)) AS rev_disc,
-        |       CAST(ROUND(AVG(l_quantity) FILTER (WHERE l_linestatus = 'F'), 6) AS DOUBLE) AS avg_qty_f
-        |FROM graft_fc_lineitem
-        |GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin)
-  }
+      |ORDER BY l_returnflag""".stripMargin)
 
   /** BPE tokenizer: train 20 merges on a corpus slice (distributed pair
     * counting over the vocabulary), then tokenize EVERY document with

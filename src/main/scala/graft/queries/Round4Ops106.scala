@@ -162,8 +162,7 @@ object Round4Ops106 {
     * mean of that tail, and the Sharpe-style mean/σ ratio from exact
     * power sums. One sort window over the daily series.
     */
-  val fin_var_es = OpQuery(
-    "fin_var_es",
+  val fin_var_es = OpQuery.sql("fin_var_es", "orders")(
     """WITH daily AS (
       |  SELECT o_orderdate AS d, SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS r
       |  FROM orders GROUP BY 1),
@@ -192,39 +191,7 @@ object Round4Ops106 {
       |       CAST(ROUND((CAST(mom.s1 AS DOUBLE) / mom.n) /
       |         SQRT((CAST(mom.s2 AS DOUBLE) - CAST(mom.s1 AS DOUBLE) * mom.s1 / mom.n)
       |              / (mom.n - 1)), 6) AS DOUBLE) AS sharpe
-      |FROM mom CROSS JOIN k CROSS JOIN tail""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "orders").createOrReplaceTempView("graft_var_orders")
-    spark.sql(
-      """WITH daily AS (
-        |  SELECT o_orderdate AS d, SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS r
-        |  FROM graft_var_orders GROUP BY 1),
-        |chg AS (
-        |  SELECT CAST(r - LAG(r) OVER (ORDER BY d) AS DECIMAL(18,2)) AS c
-        |  FROM daily),
-        |v AS (SELECT c FROM chg WHERE c IS NOT NULL),
-        |ranked AS (
-        |  SELECT c, ROW_NUMBER() OVER (ORDER BY c) AS rk, COUNT(*) OVER () AS n
-        |  FROM v),
-        |k AS (
-        |  SELECT GREATEST(1, CAST(FLOOR(0.05 * MAX(n)) AS INT)) AS k,
-        |         MAX(n) AS n
-        |  FROM ranked),
-        |tail AS (
-        |  SELECT SUM(r.c) AS ts, MAX(CASE WHEN r.rk = k.k THEN r.c END) AS var95
-        |  FROM ranked r CROSS JOIN k WHERE r.rk <= k.k),
-        |mom AS (
-        |  SELECT COUNT(*) AS n, SUM(c) AS s1,
-        |         SUM(CAST(c * c AS DECIMAL(38,4))) AS s2
-        |  FROM v)
-        |SELECT CAST(mom.n AS BIGINT) AS n_days,
-        |       CAST(k.k AS INT) AS tail_k,
-        |       CAST(tail.var95 AS DOUBLE) AS var95,
-        |       CAST(ROUND(CAST(tail.ts AS DOUBLE) / k.k, 4) AS DOUBLE) AS es95,
-        |       CAST(ROUND((CAST(mom.s1 AS DOUBLE) / mom.n) /
-        |         SQRT((CAST(mom.s2 AS DOUBLE) - CAST(mom.s1 AS DOUBLE) * mom.s1 / mom.n)
-        |              / (mom.n - 1)), 6) AS DOUBLE) AS sharpe
-        |FROM mom CROSS JOIN k CROSS JOIN tail""".stripMargin)
-  }
+      |FROM mom CROSS JOIN k CROSS JOIN tail""".stripMargin)
 
   /** Matthews correlation coefficient plus balanced accuracy, Youden's
     * J, and Fowlkes–Mallows, on the same pinned scorer as

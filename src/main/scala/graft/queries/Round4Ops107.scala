@@ -98,8 +98,7 @@ object Round4Ops107 {
     * whole multiple-testing correction is two windows over a 25-row
     * aggregate of one scan.
     */
-  val stat_bh_fdr = OpQuery(
-    "stat_bh_fdr",
+  val stat_bh_fdr = OpQuery.sql("stat_bh_fdr", "orders", "customer")(
     """WITH o AS (
       |  SELECT c.c_nationkey AS nat, o.o_orderstatus AS st
       |  FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey),
@@ -133,46 +132,7 @@ object Round4Ops107 {
       |       CAST(ROUND(0.05 * r / m, 6) AS DOUBLE) AS bh_cutoff,
       |       rk.r <= kmax.k AS rejected
       |FROM rk CROSS JOIN kmax
-      |ORDER BY rank""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "orders").createOrReplaceTempView("graft_bh_orders")
-    Tables.load(spark, dir, "customer").createOrReplaceTempView("graft_bh_customer")
-    spark.sql(
-      """WITH o AS (
-        |  SELECT c.c_nationkey AS nat, o.o_orderstatus AS st
-        |  FROM graft_bh_orders o
-        |  JOIN graft_bh_customer c ON o.o_custkey = c.c_custkey),
-        |gdist AS (
-        |  SELECT st, COUNT(*) AS g FROM o GROUP BY st),
-        |gt AS (SELECT SUM(g) AS n FROM gdist),
-        |pern AS (
-        |  SELECT nat, st, COUNT(*) AS c FROM o GROUP BY nat, st),
-        |nt AS (SELECT nat, SUM(c) AS nn FROM pern GROUP BY nat),
-        |chi AS (
-        |  SELECT nt.nat,
-        |         CAST(SUM(CAST(ROUND(
-        |           POW(pern.c - nt.nn * (CAST(gdist.g AS DOUBLE) / gt.n), 2)
-        |             / (nt.nn * (CAST(gdist.g AS DOUBLE) / gt.n)), 10)
-        |           AS DECIMAL(28,10))) AS DOUBLE) AS x
-        |  FROM nt JOIN pern ON pern.nat = nt.nat
-        |  JOIN gdist ON gdist.st = pern.st CROSS JOIN gt
-        |  GROUP BY nt.nat),
-        |p AS (
-        |  SELECT nat, x, ROUND(EXP(-x / 2), 8) AS pval FROM chi),
-        |rk AS (
-        |  SELECT nat, x, pval,
-        |         ROW_NUMBER() OVER (ORDER BY pval, nat) AS r,
-        |         COUNT(*) OVER () AS m
-        |  FROM p),
-        |kmax AS (
-        |  SELECT COALESCE(MAX(CASE WHEN pval <= 0.05 * r / m THEN r END), 0) AS k
-        |  FROM rk)
-        |SELECT rk.nat AS nationkey, CAST(ROUND(x, 4) AS DOUBLE) AS chi2,
-        |       CAST(pval AS DOUBLE) AS pval, CAST(r AS INT) AS rank,
-        |       CAST(ROUND(0.05 * r / m, 6) AS DOUBLE) AS bh_cutoff,
-        |       rk.r <= kmax.k AS rejected
-        |FROM rk CROSS JOIN kmax
-        |ORDER BY rank""".stripMargin)
-  }
+      |ORDER BY rank""".stripMargin)
 
   val all: Seq[OpQuery] = Seq(priv_k_anonymity, priv_l_diversity, stat_bh_fdr)
 }

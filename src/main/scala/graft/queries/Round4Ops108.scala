@@ -108,8 +108,7 @@ object Round4Ops108 {
     * exact DECIMALs, then a one-way ANOVA F on the spreads from exact
     * power sums with quantized cross-group folds.
     */
-  val a87_levene_bf = OpQuery(
-    "a87_levene_bf",
+  val a87_levene_bf = OpQuery.sql("a87_levene_bf", "orders")(
     """WITH v AS (
       |  SELECT o_orderpriority AS g, CAST(o_totalprice AS DECIMAL(18,2)) AS x
       |  FROM orders),
@@ -147,48 +146,7 @@ object Round4Ops108 {
       |       CAST(ROUND(ssb, 2) AS DOUBLE) AS ssb,
       |       CAST(ROUND(ssw, 2) AS DOUBLE) AS ssw,
       |       CAST(ROUND((ssb / (k - 1)) / (ssw / (n - k)), 6) AS DOUBLE) AS f
-      |FROM parts""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "orders").createOrReplaceTempView("graft_bf_orders")
-    spark.sql(
-      """WITH v AS (
-        |  SELECT o_orderpriority AS g, CAST(o_totalprice AS DECIMAL(18,2)) AS x
-        |  FROM graft_bf_orders),
-        |rk AS (
-        |  SELECT g, x, ROW_NUMBER() OVER (PARTITION BY g ORDER BY x) AS r,
-        |         COUNT(*) OVER (PARTITION BY g) AS n
-        |  FROM v),
-        |med AS (
-        |  SELECT g, MAX(CASE WHEN r * 2 = n OR r * 2 = n + 1 THEN x END) AS m
-        |  FROM rk GROUP BY g),
-        |z AS (
-        |  SELECT v.g, CAST(ABS(v.x - med.m) AS DECIMAL(18,2)) AS z
-        |  FROM v JOIN med ON v.g = med.g),
-        |gs AS (
-        |  SELECT g, COUNT(*) AS n, SUM(z) AS s1 FROM z GROUP BY g),
-        |tt AS (
-        |  SELECT SUM(n) AS n, SUM(s1) AS s1, COUNT(*) AS k FROM gs),
-        |gm AS (
-        |  SELECT g, n, CAST(s1 AS DOUBLE) / n AS m FROM gs),
-        |ssbq AS (
-        |  SELECT CAST(SUM(CAST(ROUND(
-        |    gm.n * (gm.m - CAST(tt.s1 AS DOUBLE) / tt.n)
-        |         * (gm.m - CAST(tt.s1 AS DOUBLE) / tt.n), 6)
-        |    AS DECIMAL(38,6))) AS DOUBLE) AS ssb
-        |  FROM gm CROSS JOIN tt),
-        |sswq AS (
-        |  SELECT CAST(SUM(CAST(ROUND(
-        |    (CAST(z.z AS DOUBLE) - gm.m) * (CAST(z.z AS DOUBLE) - gm.m), 6)
-        |    AS DECIMAL(38,6))) AS DOUBLE) AS ssw
-        |  FROM z JOIN gm ON z.g = gm.g),
-        |parts AS (
-        |  SELECT ssbq.ssb, sswq.ssw, tt.n, tt.k
-        |  FROM ssbq CROSS JOIN sswq CROSS JOIN tt)
-        |SELECT CAST(k AS INT) AS k, CAST(n AS BIGINT) AS n,
-        |       CAST(ROUND(ssb, 2) AS DOUBLE) AS ssb,
-        |       CAST(ROUND(ssw, 2) AS DOUBLE) AS ssw,
-        |       CAST(ROUND((ssb / (k - 1)) / (ssw / (n - k)), 6) AS DOUBLE) AS f
-        |FROM parts""".stripMargin)
-  }
+      |FROM parts""".stripMargin)
 
   /** Durbin–Watson statistic on the residuals of the daily-revenue
     * OLS trend: slope/intercept from exact DECIMAL normal-equation
@@ -196,8 +154,7 @@ object Round4Ops108 {
     * residual sums quantized to DECIMAL so the fold order cannot move
     * the statistic. DW ≈ 2 means uncorrelated residuals.
     */
-  val a88_durbin_watson = OpQuery(
-    "a88_durbin_watson",
+  val a88_durbin_watson = OpQuery.sql("a88_durbin_watson", "orders")(
     """WITH daily AS (
       |  SELECT o_orderdate AS d, SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS y
       |  FROM orders GROUP BY 1),
@@ -231,44 +188,7 @@ object Round4Ops108 {
       |       CAST(ROUND(ab.b, 6) AS DOUBLE) AS slope,
       |       CAST(ROUND(ab.a, 4) AS DOUBLE) AS intercept,
       |       CAST(ROUND(dw.num / dw.den, 6) AS DOUBLE) AS dw
-      |FROM ab CROSS JOIN dw""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "orders").createOrReplaceTempView("graft_dw_orders")
-    spark.sql(
-      """WITH daily AS (
-        |  SELECT o_orderdate AS d, SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS y
-        |  FROM graft_dw_orders GROUP BY 1),
-        |idx AS (
-        |  SELECT y, CAST(ROW_NUMBER() OVER (ORDER BY d) AS BIGINT) AS t
-        |  FROM daily),
-        |s AS (
-        |  SELECT COUNT(*) AS n, SUM(t) AS st, SUM(t * t) AS stt,
-        |         SUM(y) AS sy, SUM(CAST(t AS DECIMAL(18,0)) * y) AS sty
-        |  FROM idx),
-        |fit AS (
-        |  SELECT n,
-        |         (n * CAST(sty AS DOUBLE) - CAST(st AS DOUBLE) * CAST(sy AS DOUBLE))
-        |           / (n * CAST(stt AS DOUBLE) - CAST(st AS DOUBLE) * st) AS b,
-        |         st, sy
-        |  FROM s),
-        |ab AS (
-        |  SELECT n, b, (CAST(sy AS DOUBLE) - b * st) / n AS a FROM fit),
-        |res AS (
-        |  SELECT idx.t, CAST(idx.y AS DOUBLE) - (ab.a + ab.b * idx.t) AS e
-        |  FROM idx CROSS JOIN ab),
-        |lagged AS (
-        |  SELECT e, LAG(e) OVER (ORDER BY t) AS ep FROM res),
-        |dw AS (
-        |  SELECT
-        |    CAST(SUM(CAST(ROUND((e - ep) * (e - ep), 6) AS DECIMAL(38,6)))
-        |      AS DOUBLE) AS num,
-        |    CAST(SUM(CAST(ROUND(e * e, 6) AS DECIMAL(38,6))) AS DOUBLE) AS den
-        |  FROM lagged WHERE ep IS NOT NULL)
-        |SELECT CAST(ab.n AS BIGINT) AS n_days,
-        |       CAST(ROUND(ab.b, 6) AS DOUBLE) AS slope,
-        |       CAST(ROUND(ab.a, 4) AS DOUBLE) AS intercept,
-        |       CAST(ROUND(dw.num / dw.den, 6) AS DOUBLE) AS dw
-        |FROM ab CROSS JOIN dw""".stripMargin)
-  }
+      |FROM ab CROSS JOIN dw""".stripMargin)
 
   val all: Seq[OpQuery] = Seq(a86_kruskal_wallis, a87_levene_bf,
     a88_durbin_watson)

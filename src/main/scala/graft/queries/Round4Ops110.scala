@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -107,8 +105,7 @@ object Round4Ops110 {
     * asymmetric sets). Engine-portable: flags instead of grouping_id
     * bitmasks, which differ in bit order across engines.
     */
-  val a85_grouping_sets = OpQuery(
-    "a85_grouping_sets",
+  val a85_grouping_sets = OpQuery.sql("a85_grouping_sets", "customer")(
     """SELECT COALESCE(CAST(c_nationkey AS VARCHAR), 'ALL') AS nation,
       |       COALESCE(c_mktsegment, 'ALL') AS segment,
       |       CAST(GROUPING(c_nationkey) AS INT) AS g_nation,
@@ -118,20 +115,8 @@ object Round4Ops110 {
       |FROM customer
       |GROUP BY GROUPING SETS ((c_nationkey, c_mktsegment), (c_nationkey),
       |                        (c_mktsegment), ())
-      |ORDER BY g_nation, g_segment, nation, segment""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "customer").createOrReplaceTempView("graft_gs_customer")
-    spark.sql(
-      """SELECT COALESCE(CAST(c_nationkey AS STRING), 'ALL') AS nation,
-        |       COALESCE(c_mktsegment, 'ALL') AS segment,
-        |       CAST(GROUPING(c_nationkey) AS INT) AS g_nation,
-        |       CAST(GROUPING(c_mktsegment) AS INT) AS g_segment,
-        |       COUNT(*) AS n,
-        |       CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS total_bal
-        |FROM graft_gs_customer
-        |GROUP BY GROUPING SETS ((c_nationkey, c_mktsegment), (c_nationkey),
-        |                        (c_mktsegment), ())
-        |ORDER BY g_nation, g_segment, nation, segment""".stripMargin)
-  }
+      |ORDER BY g_nation, g_segment, nation, segment""".stripMargin,
+    "VARCHAR" -> "STRING")
 
   val all: Seq[OpQuery] = Seq(s45_orc_roundtrip, f_roman, a85_grouping_sets)
 }

@@ -20,8 +20,7 @@ object Round4Ops111 {
     * inside double's exact-integer range on both engines; SSEs are
     * reported in scaled² units (pinned contract), means in currency.
     */
-  val ts_changepoint = OpQuery(
-    "ts_changepoint",
+  val ts_changepoint = OpQuery.sql("ts_changepoint", "orders")(
     """WITH daily AS (
       |  SELECT o_orderdate AS d, SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS y
       |  FROM orders GROUP BY 1),
@@ -57,46 +56,7 @@ object Round4Ops111 {
       |       CAST(ROUND(1 - sse / sse0, 6) AS DOUBLE) AS var_explained,
       |       CAST(ROUND(mean_left, 4) AS DOUBLE) AS mean_left,
       |       CAST(ROUND(mean_right, 4) AS DOUBLE) AS mean_right
-      |FROM best WHERE rk = 1""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "orders").createOrReplaceTempView("graft_cp_orders")
-    spark.sql(
-      """WITH daily AS (
-        |  SELECT o_orderdate AS d, SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS y
-        |  FROM graft_cp_orders GROUP BY 1),
-        |scaled AS (
-        |  SELECT d, CAST(y / 10000 AS DECIMAL(20,6)) AS y FROM daily),
-        |idx AS (
-        |  SELECT y, ROW_NUMBER() OVER (ORDER BY d) AS t,
-        |         COUNT(*) OVER () AS n,
-        |         SUM(y) OVER (ORDER BY d ROWS UNBOUNDED PRECEDING) AS p1,
-        |         SUM(CAST(y * y AS DECIMAL(38,12)))
-        |           OVER (ORDER BY d ROWS UNBOUNDED PRECEDING) AS p2,
-        |         SUM(y) OVER () AS tot1,
-        |         SUM(CAST(y * y AS DECIMAL(38,12))) OVER () AS tot2
-        |  FROM scaled),
-        |cost AS (
-        |  SELECT t, n,
-        |         ROUND((CAST(p2 AS DOUBLE) - CAST(p1 AS DOUBLE) * p1 / t) +
-        |               (CAST(tot2 - p2 AS DOUBLE)
-        |                - CAST(tot1 - p1 AS DOUBLE) * CAST(tot1 - p1 AS DOUBLE)
-        |                  / (n - t)), 4) AS sse,
-        |         ROUND(CAST(tot2 AS DOUBLE)
-        |               - CAST(tot1 AS DOUBLE) * tot1 / n, 4) AS sse0,
-        |         CAST(p1 AS DOUBLE) / t * 10000 AS mean_left,
-        |         CAST(tot1 - p1 AS DOUBLE) / (n - t) * 10000 AS mean_right
-        |  FROM idx WHERE t < n),
-        |best AS (
-        |  SELECT t, n, sse, sse0, mean_left, mean_right,
-        |         ROW_NUMBER() OVER (ORDER BY sse, t) AS rk
-        |  FROM cost)
-        |SELECT CAST(t AS BIGINT) AS split_t, CAST(n AS BIGINT) AS n_days,
-        |       CAST(sse AS DOUBLE) AS sse_split,
-        |       CAST(sse0 AS DOUBLE) AS sse_nosplit,
-        |       CAST(ROUND(1 - sse / sse0, 6) AS DOUBLE) AS var_explained,
-        |       CAST(ROUND(mean_left, 4) AS DOUBLE) AS mean_left,
-        |       CAST(ROUND(mean_right, 4) AS DOUBLE) AS mean_right
-        |FROM best WHERE rk = 1""".stripMargin)
-  }
+      |FROM best WHERE rk = 1""".stripMargin)
 
   /** Nelson–Aalen cumulative hazard for order→ship fulfilment times,
     * with returned items (l_returnflag = 'R') treated as censored at
@@ -106,8 +66,7 @@ object Round4Ops111 {
     * ordered window — the survival-analysis sibling of the
     * Kaplan–Meier gate.
     */
-  val surv_nelson_aalen = OpQuery(
-    "surv_nelson_aalen",
+  val surv_nelson_aalen = OpQuery.sql("surv_nelson_aalen", "lineitem", "orders")(
     """WITH obs AS (
       |  SELECT CAST(FLOOR(epoch(l.l_shipdate) / 86400)
       |           - FLOOR(epoch(o.o_orderdate) / 86400) AS INT) AS dur,
@@ -130,35 +89,9 @@ object Round4Ops111 {
       |SELECT CAST(dur AS INT) AS duration_days, CAST(d AS BIGINT) AS events,
       |       CAST(n_risk AS BIGINT) AS n_risk,
       |       CAST(h AS DOUBLE) / 10000000000 AS cum_hazard
-      |FROM haz ORDER BY duration_days""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "lineitem").createOrReplaceTempView("graft_na_lineitem")
-    Tables.load(spark, dir, "orders").createOrReplaceTempView("graft_na_orders")
-    spark.sql(
-      """WITH obs AS (
-        |  SELECT CAST(FLOOR(unix_timestamp(l.l_shipdate) / 86400)
-        |           - FLOOR(unix_timestamp(o.o_orderdate) / 86400) AS INT) AS dur,
-        |         CASE WHEN l.l_returnflag = 'R' THEN 0 ELSE 1 END AS ev
-        |  FROM graft_na_lineitem l
-        |  JOIN graft_na_orders o ON l.l_orderkey = o.o_orderkey),
-        |tot AS (SELECT COUNT(*) AS n FROM obs),
-        |at_t AS (
-        |  SELECT dur, SUM(ev) AS d, COUNT(*) AS c FROM obs GROUP BY dur),
-        |risk AS (
-        |  SELECT dur, d, c,
-        |         MAX(tot.n) - COALESCE(SUM(c) OVER (ORDER BY dur
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS n_risk
-        |  FROM at_t CROSS JOIN tot
-        |  GROUP BY dur, d, c),
-        |haz AS (
-        |  SELECT dur, d, n_risk,
-        |         SUM((CAST(d AS BIGINT) * 10000000000) DIV n_risk)
-        |           OVER (ORDER BY dur ROWS UNBOUNDED PRECEDING) AS h
-        |  FROM risk)
-        |SELECT CAST(dur AS INT) AS duration_days, CAST(d AS BIGINT) AS events,
-        |       CAST(n_risk AS BIGINT) AS n_risk,
-        |       CAST(h AS DOUBLE) / 10000000000 AS cum_hazard
-        |FROM haz ORDER BY duration_days""".stripMargin)
-  }
+      |FROM haz ORDER BY duration_days""".stripMargin,
+    "epoch(" -> "unix_timestamp(",
+    "//" -> "DIV")
 
   /** Good–Turing smoothing over the customer "vocabulary" (orders per
     * customer as token counts): the frequency-

@@ -19,8 +19,7 @@ object Round4Ops113 {
     * top-25 scoring pairs are the linkage review queue. Blocking keeps
     * the pair space linear in block sizes — never all-pairs.
     */
-  val dedup_fellegi_sunter = OpQuery(
-    "dedup_fellegi_sunter",
+  val dedup_fellegi_sunter = OpQuery.sql("dedup_fellegi_sunter", "customer")(
     """WITH c AS (
       |  SELECT c_custkey AS id, c_nationkey AS nat, c_mktsegment AS seg,
       |         CAST(FLOOR(CAST(c_acctbal AS DOUBLE) / 1000) AS INT) AS band,
@@ -54,44 +53,7 @@ object Round4Ops113 {
       |SELECT id1, id2, agree_seg, agree_tail, CAST(w AS DOUBLE) AS weight
       |FROM scored
       |ORDER BY w DESC, id1, id2
-      |LIMIT 25""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "customer").createOrReplaceTempView("graft_fs_customer")
-    spark.sql(
-      """WITH c AS (
-        |  SELECT c_custkey AS id, c_nationkey AS nat, c_mktsegment AS seg,
-        |         CAST(FLOOR(CAST(c_acctbal AS DOUBLE) / 1000) AS INT) AS band,
-        |         substr(c_name, -2) AS tail
-        |  FROM graft_fs_customer),
-        |useg AS (
-        |  SELECT CAST(SUM(CAST(ROUND(
-        |           POW(CAST(n AS DOUBLE) / (SELECT COUNT(*) FROM c), 2), 10)
-        |           AS DECIMAL(28,10))) AS DOUBLE) AS u
-        |  FROM (SELECT seg, COUNT(*) AS n FROM c GROUP BY seg)),
-        |utail AS (
-        |  SELECT CAST(SUM(CAST(ROUND(
-        |           POW(CAST(n AS DOUBLE) / (SELECT COUNT(*) FROM c), 2), 10)
-        |           AS DECIMAL(28,10))) AS DOUBLE) AS u
-        |  FROM (SELECT tail, COUNT(*) AS n FROM c GROUP BY tail)),
-        |pairs AS (
-        |  SELECT a.id AS id1, b.id AS id2,
-        |         CASE WHEN a.seg = b.seg THEN 1 ELSE 0 END AS agree_seg,
-        |         CASE WHEN a.tail = b.tail THEN 1 ELSE 0 END AS agree_tail
-        |  FROM c a JOIN c b
-        |    ON a.nat = b.nat AND a.band = b.band AND a.id < b.id),
-        |scored AS (
-        |  SELECT id1, id2, agree_seg, agree_tail,
-        |         ROUND(
-        |           CASE WHEN agree_seg = 1
-        |             THEN LN(0.95 / useg.u) ELSE LN(0.05 / (1 - useg.u)) END +
-        |           CASE WHEN agree_tail = 1
-        |             THEN LN(0.95 / utail.u) ELSE LN(0.05 / (1 - utail.u)) END,
-        |           6) AS w
-        |  FROM pairs CROSS JOIN useg CROSS JOIN utail)
-        |SELECT id1, id2, agree_seg, agree_tail, CAST(w AS DOUBLE) AS weight
-        |FROM scored
-        |ORDER BY w DESC, id1, id2
-        |LIMIT 25""".stripMargin)
-  }
+      |LIMIT 25""".stripMargin)
 
   /** Murphy decomposition of the Brier score — reliability −
     * resolution + uncertainty — for the pinned scorer with forecast
@@ -205,8 +167,7 @@ object Round4Ops113 {
     * quantized before their DECIMAL sum. Distribution distance as a
     * drift gate between two slices of the same fact table.
     */
-  val stat_hellinger = OpQuery(
-    "stat_hellinger",
+  val stat_hellinger = OpQuery.sql("stat_hellinger", "orders", "customer")(
     """WITH j AS (
       |  SELECT c.c_mktsegment AS seg, o.o_orderpriority AS pri
       |  FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
@@ -232,38 +193,7 @@ object Round4Ops113 {
       |SELECT CAST(ROUND(bc, 8) AS DOUBLE) AS bhattacharyya_coef,
       |       CAST(ROUND(SQRT(1 - bc), 8) AS DOUBLE) AS hellinger,
       |       CAST(ROUND(l1 / 2, 8) AS DOUBLE) AS total_variation
-      |FROM m""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "orders").createOrReplaceTempView("graft_hel_orders")
-    Tables.load(spark, dir, "customer").createOrReplaceTempView("graft_hel_customer")
-    spark.sql(
-      """WITH j AS (
-        |  SELECT c.c_mktsegment AS seg, o.o_orderpriority AS pri
-        |  FROM graft_hel_orders o
-        |  JOIN graft_hel_customer c ON o.o_custkey = c.c_custkey
-        |  WHERE c.c_mktsegment IN ('BUILDING', 'MACHINERY')),
-        |cnt AS (
-        |  SELECT seg, pri, COUNT(*) AS n FROM j GROUP BY seg, pri),
-        |st AS (SELECT seg, SUM(n) AS t FROM cnt GROUP BY seg),
-        |dist AS (
-        |  SELECT cnt.pri,
-        |         MAX(CASE WHEN cnt.seg = 'BUILDING'
-        |           THEN CAST(cnt.n AS DOUBLE) / st.t END) AS p,
-        |         MAX(CASE WHEN cnt.seg = 'MACHINERY'
-        |           THEN CAST(cnt.n AS DOUBLE) / st.t END) AS q
-        |  FROM cnt JOIN st ON cnt.seg = st.seg
-        |  GROUP BY cnt.pri),
-        |m AS (
-        |  SELECT
-        |    CAST(SUM(CAST(ROUND(SQRT(p * q), 10) AS DECIMAL(28,10)))
-        |      AS DOUBLE) AS bc,
-        |    CAST(SUM(CAST(ROUND(ABS(p - q), 10) AS DECIMAL(28,10)))
-        |      AS DOUBLE) AS l1
-        |  FROM dist)
-        |SELECT CAST(ROUND(bc, 8) AS DOUBLE) AS bhattacharyya_coef,
-        |       CAST(ROUND(SQRT(1 - bc), 8) AS DOUBLE) AS hellinger,
-        |       CAST(ROUND(l1 / 2, 8) AS DOUBLE) AS total_variation
-        |FROM m""".stripMargin)
-  }
+      |FROM m""".stripMargin)
 
   val all: Seq[OpQuery] = Seq(dedup_fellegi_sunter, eval_brier_decomp,
     stat_hellinger)

@@ -17,8 +17,7 @@ object Round4Ops114 {
     * day-to-day noise vs multi-day swings. Each level is one
     * conditional aggregate over pair ids: O(n) total, no FFT shuffle.
     */
-  val ts_haar = OpQuery(
-    "ts_haar",
+  val ts_haar = OpQuery.sql("ts_haar", "orders")(
     """WITH daily AS (
       |  SELECT o_orderdate AS d, SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS y
       |  FROM orders GROUP BY 1),
@@ -63,55 +62,8 @@ object Round4Ops114 {
       |       CAST(ROUND(energy, 6) AS DOUBLE) AS energy,
       |       CAST(ROUND(energy / tot.te, 6) AS DOUBLE) AS energy_share
       |FROM e CROSS JOIN tot
-      |ORDER BY level""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "orders").createOrReplaceTempView("graft_haar_orders")
-    spark.sql(
-      """WITH daily AS (
-        |  SELECT o_orderdate AS d, SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS y
-        |  FROM graft_haar_orders GROUP BY 1),
-        |base AS (
-        |  SELECT t, x FROM (
-        |    SELECT CAST(ROW_NUMBER() OVER (ORDER BY d) - 1 AS BIGINT) AS t,
-        |           CAST(y / 10000 AS DECIMAL(16,6)) AS x
-        |    FROM daily) q
-        |  WHERE t < 256),
-        |l1 AS (
-        |  SELECT t DIV 2 AS t2,
-        |         CAST(SUM(CASE WHEN t % 2 = 0 THEN x ELSE -x END)
-        |           AS DECIMAL(16,6)) AS det,
-        |         CAST(SUM(x) AS DECIMAL(16,6)) AS app
-        |  FROM base GROUP BY 1),
-        |l2 AS (
-        |  SELECT t2 DIV 2 AS t3,
-        |         CAST(SUM(CASE WHEN t2 % 2 = 0 THEN app ELSE -app END)
-        |           AS DECIMAL(16,6)) AS det,
-        |         CAST(SUM(app) AS DECIMAL(16,6)) AS app
-        |  FROM l1 GROUP BY 1),
-        |l3 AS (
-        |  SELECT t3 DIV 2 AS t4,
-        |         CAST(SUM(CASE WHEN t3 % 2 = 0 THEN app ELSE -app END)
-        |           AS DECIMAL(16,6)) AS det,
-        |         CAST(SUM(app) AS DECIMAL(16,6)) AS app
-        |  FROM l2 GROUP BY 1),
-        |e AS (
-        |  SELECT 1 AS level, COUNT(*) AS n_coeffs,
-        |         CAST(SUM(CAST(det * det AS DECIMAL(38,12))) AS DOUBLE) AS energy
-        |  FROM l1
-        |  UNION ALL
-        |  SELECT 2, COUNT(*),
-        |         CAST(SUM(CAST(det * det AS DECIMAL(38,12))) AS DOUBLE)
-        |  FROM l2
-        |  UNION ALL
-        |  SELECT 3, COUNT(*),
-        |         CAST(SUM(CAST(det * det AS DECIMAL(38,12))) AS DOUBLE)
-        |  FROM l3),
-        |tot AS (SELECT SUM(energy) AS te FROM e)
-        |SELECT CAST(level AS INT) AS level, CAST(n_coeffs AS BIGINT) AS n_coeffs,
-        |       CAST(ROUND(energy, 6) AS DOUBLE) AS energy,
-        |       CAST(ROUND(energy / tot.te, 6) AS DOUBLE) AS energy_share
-        |FROM e CROSS JOIN tot
-        |ORDER BY level""".stripMargin)
-  }
+      |ORDER BY level""".stripMargin,
+    "//" -> "DIV")
 
   /** Atkinson inequality index over positive account balances at two
     * inequality-aversion levels: ε = 0.5 (EDE from the mean of √x,

@@ -17,8 +17,7 @@ object Round4Ops116 {
     * before the DECIMAL fold. The last 60 days only, keeping (1−α)^k
     * above double underflow.
     */
-  val ts_ses = OpQuery(
-    "ts_ses",
+  val ts_ses = OpQuery.sql("ts_ses", "orders")(
     """WITH daily AS (
       |  SELECT o_orderdate AS d, SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS y
       |  FROM orders GROUP BY 1),
@@ -37,29 +36,7 @@ object Round4Ops116 {
       |  FROM idx)
       |SELECT CAST(n AS BIGINT) AS n_days,
       |       CAST(ROUND(smooth_part + base_part, 4) AS DOUBLE) AS ses_forecast
-      |FROM f""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "orders").createOrReplaceTempView("graft_ses_orders")
-    spark.sql(
-      """WITH daily AS (
-        |  SELECT o_orderdate AS d, SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS y
-        |  FROM graft_ses_orders GROUP BY 1),
-        |idx AS (
-        |  SELECT 61 - rev AS t, y FROM (
-        |    SELECT CAST(y AS DOUBLE) AS y,
-        |           ROW_NUMBER() OVER (ORDER BY d DESC) AS rev
-        |    FROM daily) q
-        |  WHERE rev <= 60),
-        |f AS (
-        |  SELECT COUNT(*) AS n,
-        |         CAST(SUM(CAST(ROUND(
-        |           0.2 * POW(0.8, 60 - t) * y, 6) AS DECIMAL(28,6))) AS DOUBLE)
-        |           AS smooth_part,
-        |         MAX(CASE WHEN t = 1 THEN POW(0.8, 59) * y END) AS base_part
-        |  FROM idx)
-        |SELECT CAST(n AS BIGINT) AS n_days,
-        |       CAST(ROUND(smooth_part + base_part, 4) AS DOUBLE) AS ses_forecast
-        |FROM f""".stripMargin)
-  }
+      |FROM f""".stripMargin)
 
   /** Cochran–Armitage trend test: does the share of high-value orders
     * rise monotonically across the five ordered priorities? Scores

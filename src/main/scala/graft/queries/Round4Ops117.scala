@@ -117,8 +117,7 @@ object Round4Ops117 {
     * strength in nats between two categorical columns, the feature-
     * selection primitive.
     */
-  val a95_mutual_information = OpQuery(
-    "a95_mutual_information",
+  val a95_mutual_information = OpQuery.sql("a95_mutual_information", "customer")(
     """WITH cell AS (
       |  SELECT c_nationkey AS a, c_mktsegment AS b, COUNT(*) AS c
       |  FROM customer GROUP BY 1, 2),
@@ -146,38 +145,7 @@ object Round4Ops117 {
       |       CAST(ROUND(ha.h, 8) AS DOUBLE) AS h_nation,
       |       CAST(ROUND(hb.h, 8) AS DOUBLE) AS h_segment,
       |       CAST(ROUND(mi.mi / SQRT(ha.h * hb.h), 8) AS DOUBLE) AS nmi
-      |FROM mi CROSS JOIN ha CROSS JOIN hb""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "customer").createOrReplaceTempView("graft_mi_customer")
-    spark.sql(
-      """WITH cell AS (
-        |  SELECT c_nationkey AS a, c_mktsegment AS b, COUNT(*) AS c
-        |  FROM graft_mi_customer GROUP BY 1, 2),
-        |ra AS (SELECT a, SUM(c) AS r FROM cell GROUP BY a),
-        |cb AS (SELECT b, SUM(c) AS s FROM cell GROUP BY b),
-        |nt AS (SELECT SUM(c) AS n FROM cell),
-        |mi AS (
-        |  SELECT CAST(SUM(CAST(ROUND(
-        |    (CAST(cell.c AS DOUBLE) / nt.n) *
-        |    LN(CAST(cell.c AS DOUBLE) * nt.n / (CAST(ra.r AS DOUBLE) * cb.s)),
-        |    10) AS DECIMAL(28,10))) AS DOUBLE) AS mi
-        |  FROM cell JOIN ra ON cell.a = ra.a JOIN cb ON cell.b = cb.b
-        |  CROSS JOIN nt),
-        |ha AS (
-        |  SELECT CAST(SUM(CAST(ROUND(
-        |    -(CAST(r AS DOUBLE) / nt.n) * LN(CAST(r AS DOUBLE) / nt.n),
-        |    10) AS DECIMAL(28,10))) AS DOUBLE) AS h
-        |  FROM ra CROSS JOIN nt),
-        |hb AS (
-        |  SELECT CAST(SUM(CAST(ROUND(
-        |    -(CAST(s AS DOUBLE) / nt.n) * LN(CAST(s AS DOUBLE) / nt.n),
-        |    10) AS DECIMAL(28,10))) AS DOUBLE) AS h
-        |  FROM cb CROSS JOIN nt)
-        |SELECT CAST(ROUND(mi.mi, 8) AS DOUBLE) AS mutual_info,
-        |       CAST(ROUND(ha.h, 8) AS DOUBLE) AS h_nation,
-        |       CAST(ROUND(hb.h, 8) AS DOUBLE) AS h_segment,
-        |       CAST(ROUND(mi.mi / SQRT(ha.h * hb.h), 8) AS DOUBLE) AS nmi
-        |FROM mi CROSS JOIN ha CROSS JOIN hb""".stripMargin)
-  }
+      |FROM mi CROSS JOIN ha CROSS JOIN hb""".stripMargin)
 
   /** Closeness centrality within 4 hops on the nation trade graph:
     * BFS levels unrolled as anti-joined CTEs (dist = first level a pair

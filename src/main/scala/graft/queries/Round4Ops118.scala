@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.functions._
-
 import graft.Tables
 
 /** Round-4 batch 118: Harrell's concordance index, an annuity
@@ -90,8 +88,7 @@ object Round4Ops118 {
     * the cent by rounding each closed-form value. The generator-table
     * pattern: rows exist only in the query.
     */
-  val fin_amortization = OpQuery(
-    "fin_amortization",
+  val fin_amortization = OpQuery.sql("fin_amortization")(
     """WITH p AS (
       |  SELECT CAST(100000 AS DOUBLE) AS principal,
       |         CAST(0.005 AS DOUBLE) AS r, 36 AS nper),
@@ -113,39 +110,15 @@ object Round4Ops118 {
       |       CAST(ROUND(pmt - (principal * POW(1 + r, t - 1)
       |           - pmt * (POW(1 + r, t - 1) - 1) / r) * r, 2) AS DOUBLE)
       |         AS principal_part
-      |FROM sched ORDER BY month""".stripMargin) { (spark, dir) =>
-    spark.sql(
-      """WITH p AS (
-        |  SELECT CAST(100000 AS DOUBLE) AS principal,
-        |         CAST(0.005 AS DOUBLE) AS r, 36 AS nper),
-        |pay AS (
-        |  SELECT principal, r, nper,
-        |         principal * r * POW(1 + r, nper) / (POW(1 + r, nper) - 1) AS pmt
-        |  FROM p),
-        |sched AS (
-        |  SELECT t, principal, r, pmt,
-        |         principal * POW(1 + r, t) - pmt * (POW(1 + r, t) - 1) / r
-        |           AS balance
-        |  FROM pay CROSS JOIN (SELECT explode(sequence(1, 36)) AS t) ts)
-        |SELECT CAST(t AS INT) AS month,
-        |       CAST(ROUND(pmt, 2) AS DOUBLE) AS payment,
-        |       CAST(ROUND(balance, 2) AS DOUBLE) AS balance,
-        |       CAST(ROUND((principal * POW(1 + r, t - 1)
-        |           - pmt * (POW(1 + r, t - 1) - 1) / r) * r, 2) AS DOUBLE)
-        |         AS interest_part,
-        |       CAST(ROUND(pmt - (principal * POW(1 + r, t - 1)
-        |           - pmt * (POW(1 + r, t - 1) - 1) / r) * r, 2) AS DOUBLE)
-        |         AS principal_part
-        |FROM sched ORDER BY month""".stripMargin)
-  }
+      |FROM sched ORDER BY month""".stripMargin,
+    "unnest(generate_series(" -> "explode(sequence(")
 
   /** Cross-field rule audit over lineitem: each business rule is a
     * boolean expression; the audit reports violations and violation
     * rate per rule in ONE scan (conditional aggregation — no per-rule
     * rescans), plus the first offending key as a repro pointer.
     */
-  val dq_crossfield_rules = OpQuery(
-    "dq_crossfield_rules",
+  val dq_crossfield_rules = OpQuery.sql("dq_crossfield_rules", "lineitem")(
     """WITH l AS (
       |  SELECT l_orderkey, l_linenumber,
       |         CASE WHEN l_discount < 0 OR l_discount > 0.1 THEN 1 ELSE 0 END
@@ -175,40 +148,7 @@ object Round4Ops118 {
       |         AS BIGINT) AS first_offender
       |FROM tall
       |GROUP BY rule
-      |ORDER BY rule""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "lineitem").createOrReplaceTempView("graft_dqx_li")
-    spark.sql(
-      """WITH l AS (
-        |  SELECT l_orderkey, l_linenumber,
-        |         CASE WHEN l_discount < 0 OR l_discount > 0.1 THEN 1 ELSE 0 END
-        |           AS v_discount_range,
-        |         CASE WHEN l_tax < 0 OR l_tax > 0.08 THEN 1 ELSE 0 END
-        |           AS v_tax_range,
-        |         CASE WHEN l_quantity <= 0 OR l_quantity > 50 THEN 1 ELSE 0 END
-        |           AS v_quantity_range,
-        |         CASE WHEN l_returnflag NOT IN ('A', 'N', 'R') THEN 1 ELSE 0 END
-        |           AS v_returnflag_domain
-        |  FROM graft_dqx_li),
-        |tall AS (
-        |  SELECT 'discount_range' AS rule, v_discount_range AS v,
-        |         l_orderkey, l_linenumber FROM l
-        |  UNION ALL
-        |  SELECT 'tax_range', v_tax_range, l_orderkey, l_linenumber FROM l
-        |  UNION ALL
-        |  SELECT 'quantity_range', v_quantity_range, l_orderkey, l_linenumber FROM l
-        |  UNION ALL
-        |  SELECT 'returnflag_domain', v_returnflag_domain, l_orderkey,
-        |         l_linenumber FROM l)
-        |SELECT rule, COUNT(*) AS n_rows,
-        |       CAST(SUM(v) AS BIGINT) AS n_violations,
-        |       CAST(ROUND(CAST(SUM(v) AS DOUBLE) / COUNT(*), 6) AS DOUBLE)
-        |         AS violation_rate,
-        |       CAST(MIN(CASE WHEN v = 1 THEN l_orderkey * 10 + l_linenumber END)
-        |         AS BIGINT) AS first_offender
-        |FROM tall
-        |GROUP BY rule
-        |ORDER BY rule""".stripMargin)
-  }
+      |ORDER BY rule""".stripMargin)
 
   val all: Seq[OpQuery] = Seq(a93_harrell_cindex, fin_amortization,
     dq_crossfield_rules)

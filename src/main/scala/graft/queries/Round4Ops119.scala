@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.functions._
-
 import graft.Tables
 
 /** Round-4 batch 119: partial autocorrelation via Durbin–Levinson,
@@ -16,8 +14,7 @@ object Round4Ops119 {
     * a fixed scalar formula. PACF(2)/PACF(3) tell you the true AR
     * order where the plain ACF can't.
     */
-  val ts_pacf3 = OpQuery(
-    "ts_pacf3",
+  val ts_pacf3 = OpQuery.sql("ts_pacf3", "orders")(
     """WITH daily AS (
       |  SELECT o_orderdate AS d, SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS y
       |  FROM orders GROUP BY 1),
@@ -52,45 +49,7 @@ object Round4Ops119 {
       |       CAST(ROUND(p22, 6) AS DOUBLE) AS pacf2,
       |       CAST(ROUND((r3 - p21 * r2 - p22 * r1)
       |         / (1 - p21 * r1 - p22 * r2), 6) AS DOUBLE) AS pacf3
-      |FROM dl2""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "orders").createOrReplaceTempView("graft_pacf_orders")
-    spark.sql(
-      """WITH daily AS (
-        |  SELECT o_orderdate AS d, SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS y
-        |  FROM graft_pacf_orders GROUP BY 1),
-        |idx AS (
-        |  SELECT CAST(y AS DOUBLE) AS y, ROW_NUMBER() OVER (ORDER BY d) AS t
-        |  FROM daily),
-        |mu AS (
-        |  SELECT CAST(SUM(y) AS DOUBLE) / COUNT(*) AS m FROM
-        |    (SELECT CAST(y AS DECIMAL(18,2)) AS y FROM daily)),
-        |lagd AS (
-        |  SELECT idx.t, idx.y - mu.m AS e,
-        |         LAG(idx.y, 1) OVER (ORDER BY idx.t) - mu.m AS e1,
-        |         LAG(idx.y, 2) OVER (ORDER BY idx.t) - mu.m AS e2,
-        |         LAG(idx.y, 3) OVER (ORDER BY idx.t) - mu.m AS e3
-        |  FROM idx CROSS JOIN mu),
-        |acv AS (
-        |  SELECT
-        |    CAST(SUM(CAST(ROUND(e * e, 6) AS DECIMAL(38,6))) AS DOUBLE) AS c0,
-        |    CAST(SUM(CAST(ROUND(e * e1, 6) AS DECIMAL(38,6))) AS DOUBLE) AS c1,
-        |    CAST(SUM(CAST(ROUND(e * e2, 6) AS DECIMAL(38,6))) AS DOUBLE) AS c2,
-        |    CAST(SUM(CAST(ROUND(e * e3, 6) AS DECIMAL(38,6))) AS DOUBLE) AS c3
-        |  FROM lagd),
-        |r AS (
-        |  SELECT c1 / c0 AS r1, c2 / c0 AS r2, c3 / c0 AS r3 FROM acv),
-        |dl AS (
-        |  SELECT r1, r2, r3,
-        |         (r2 - r1 * r1) / (1 - r1 * r1) AS p22
-        |  FROM r),
-        |dl2 AS (
-        |  SELECT r1, r2, r3, p22, r1 - p22 * r1 AS p21 FROM dl)
-        |SELECT CAST(ROUND(r1, 6) AS DOUBLE) AS pacf1,
-        |       CAST(ROUND(p22, 6) AS DOUBLE) AS pacf2,
-        |       CAST(ROUND((r3 - p21 * r2 - p22 * r1)
-        |         / (1 - p21 * r1 - p22 * r2), 6) AS DOUBLE) AS pacf3
-        |FROM dl2""".stripMargin)
-  }
+      |FROM dl2""".stripMargin)
 
   /** Hash-uniformity audit: md5-derived 32-bit values of the customer
     * keys, tested against Uniform(0,1) with the one-sample

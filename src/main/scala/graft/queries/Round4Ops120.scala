@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.functions._
-
 import graft.Tables
 
 /** Round-4 batch 120: hash-randomization permutation testing, a bigram
@@ -18,8 +16,7 @@ object Round4Ops120 {
     * permutation dimension, one grouped aggregate — resampling without
     * resampling.
     */
-  val a96_permutation_test = OpQuery(
-    "a96_permutation_test",
+  val a96_permutation_test = OpQuery.sql("a96_permutation_test", "customer")(
     """WITH base AS (
       |  SELECT c_custkey AS id, c_mktsegment AS seg,
       |         CAST(c_acctbal AS DECIMAL(15,2)) AS x
@@ -56,47 +53,9 @@ object Round4Ops120 {
       |       CAST(cmp.n_extreme AS BIGINT) AS n_extreme,
       |       CAST(ROUND(CAST(cmp.n_extreme + 1 AS DOUBLE) / (cmp.n_perm + 1), 6)
       |         AS DOUBLE) AS p_value
-      |FROM obs CROSS JOIN cmp""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "customer").createOrReplaceTempView("graft_pt_customer")
-    spark.sql(
-      """WITH base AS (
-        |  SELECT c_custkey AS id, c_mktsegment AS seg,
-        |         CAST(c_acctbal AS DECIMAL(15,2)) AS x
-        |  FROM graft_pt_customer
-        |  WHERE c_mktsegment IN ('AUTOMOBILE', 'FURNITURE')),
-        |obs AS (
-        |  SELECT CAST(SUM(CASE WHEN seg = 'AUTOMOBILE' THEN x END) AS DOUBLE)
-        |           / SUM(CASE WHEN seg = 'AUTOMOBILE' THEN 1 ELSE 0 END)
-        |         - CAST(SUM(CASE WHEN seg = 'FURNITURE' THEN x END) AS DOUBLE)
-        |           / SUM(CASE WHEN seg = 'FURNITURE' THEN 1 ELSE 0 END) AS d
-        |  FROM base),
-        |perms AS (SELECT explode(sequence(1, 50)) AS p),
-        |assigned AS (
-        |  SELECT perms.p, base.x,
-        |         CASE WHEN substr(md5(CAST(base.id AS STRING) || '_'
-        |                || CAST(perms.p AS STRING)), 1, 1)
-        |              IN ('0','1','2','3','4','5','6','7')
-        |           THEN 1 ELSE 0 END AS grp
-        |  FROM base CROSS JOIN perms),
-        |pd AS (
-        |  SELECT p,
-        |         CAST(SUM(CASE WHEN grp = 1 THEN x END) AS DOUBLE)
-        |           / SUM(CASE WHEN grp = 1 THEN 1 ELSE 0 END)
-        |         - CAST(SUM(CASE WHEN grp = 0 THEN x END) AS DOUBLE)
-        |           / SUM(CASE WHEN grp = 0 THEN 1 ELSE 0 END) AS d
-        |  FROM assigned GROUP BY p),
-        |cmp AS (
-        |  SELECT COUNT(*) AS n_perm,
-        |         SUM(CASE WHEN ROUND(ABS(pd.d), 8) >= ROUND(ABS(obs.d), 8)
-        |             THEN 1 ELSE 0 END) AS n_extreme
-        |  FROM pd CROSS JOIN obs)
-        |SELECT CAST(ROUND(obs.d, 4) AS DOUBLE) AS observed_diff,
-        |       CAST(cmp.n_perm AS BIGINT) AS n_permutations,
-        |       CAST(cmp.n_extreme AS BIGINT) AS n_extreme,
-        |       CAST(ROUND(CAST(cmp.n_extreme + 1 AS DOUBLE) / (cmp.n_perm + 1), 6)
-        |         AS DOUBLE) AS p_value
-        |FROM obs CROSS JOIN cmp""".stripMargin)
-  }
+      |FROM obs CROSS JOIN cmp""".stripMargin,
+    "unnest(generate_series(" -> "explode(sequence(",
+    "VARCHAR" -> "STRING")
 
   /** Bigram language model trained and evaluated IN SQL: bigrams from
     * zipping each document's token array with its own tail (no
@@ -189,8 +148,7 @@ object Round4Ops120 {
     * standard scalable shape for co-occurrence mining. Top 20 pairs
     * with support ≥ 3.
     */
-  val rec_item_cosine = OpQuery(
-    "rec_item_cosine",
+  val rec_item_cosine = OpQuery.sql("rec_item_cosine", "lineitem")(
     """WITH inc AS (
       |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
       |np AS (SELECT p, COUNT(*) AS n FROM inc GROUP BY p),
@@ -208,28 +166,7 @@ object Round4Ops120 {
       |       CAST(cosine AS DOUBLE) AS cosine
       |FROM sim
       |ORDER BY cosine DESC, part1, part2
-      |LIMIT 20""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "lineitem").createOrReplaceTempView("graft_rec_li")
-    spark.sql(
-      """WITH inc AS (
-        |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM graft_rec_li),
-        |np AS (SELECT p, COUNT(*) AS n FROM inc GROUP BY p),
-        |co AS (
-        |  SELECT a.p AS p1, b.p AS p2, COUNT(*) AS c
-        |  FROM inc a JOIN inc b ON a.o = b.o AND a.p < b.p
-        |  GROUP BY a.p, b.p
-        |  HAVING COUNT(*) >= 3),
-        |sim AS (
-        |  SELECT co.p1, co.p2, co.c,
-        |         ROUND(co.c / SQRT(CAST(n1.n AS DOUBLE) * n2.n), 6) AS cosine
-        |  FROM co JOIN np n1 ON n1.p = co.p1 JOIN np n2 ON n2.p = co.p2)
-        |SELECT CAST(p1 AS BIGINT) AS part1, CAST(p2 AS BIGINT) AS part2,
-        |       CAST(c AS BIGINT) AS co_orders,
-        |       CAST(cosine AS DOUBLE) AS cosine
-        |FROM sim
-        |ORDER BY cosine DESC, part1, part2
-        |LIMIT 20""".stripMargin)
-  }
+      |LIMIT 20""".stripMargin)
 
   val all: Seq[OpQuery] = Seq(a96_permutation_test, text_bigram_perplexity,
     rec_item_cosine)

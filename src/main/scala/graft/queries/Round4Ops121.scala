@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.functions._
-
 import graft.Tables
 
 /** Round-4 batch 121: a Count-Min frequency sketch the oracle can
@@ -76,8 +74,7 @@ object Round4Ops121 {
     * lagged series (sum-order-proof); the OLS algebra and the
     * standard error are scalar arithmetic on those exact sums.
     */
-  val ts_adf = OpQuery(
-    "ts_adf",
+  val ts_adf = OpQuery.sql("ts_adf", "orders")(
     """WITH daily AS (
       |  SELECT o_orderdate AS d, SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS y
       |  FROM orders GROUP BY 1),
@@ -111,44 +108,7 @@ object Round4Ops121 {
       |       CAST(ROUND(beta, 8) AS DOUBLE) AS beta,
       |       CAST(ROUND(1.0 + beta, 8) AS DOUBLE) AS rho,
       |       CAST(ROUND(beta / SQRT(s2 / cxx), 4) AS DOUBLE) AS df_stat
-      |FROM stat""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "orders").createOrReplaceTempView("graft_adf_orders")
-    spark.sql(
-      """WITH daily AS (
-        |  SELECT o_orderdate AS d, SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS y
-        |  FROM graft_adf_orders GROUP BY 1),
-        |idx AS (
-        |  SELECT CAST(y AS DOUBLE) AS y, ROW_NUMBER() OVER (ORDER BY d) AS t
-        |  FROM daily),
-        |lagd AS (
-        |  SELECT t, y, LAG(y) OVER (ORDER BY t) AS y1 FROM idx),
-        |pairs AS (
-        |  SELECT y1 AS x, y - y1 AS dy FROM lagd WHERE y1 IS NOT NULL),
-        |m AS (
-        |  SELECT COUNT(*) AS n,
-        |         CAST(SUM(CAST(ROUND(x, 6) AS DECIMAL(38,6))) AS DOUBLE) AS sx,
-        |         CAST(SUM(CAST(ROUND(dy, 6) AS DECIMAL(38,6))) AS DOUBLE) AS sy,
-        |         CAST(SUM(CAST(ROUND(x * dy, 4) AS DECIMAL(38,4))) AS DOUBLE) AS sxy,
-        |         CAST(SUM(CAST(ROUND(x * x, 4) AS DECIMAL(38,4))) AS DOUBLE) AS sxx,
-        |         CAST(SUM(CAST(ROUND(dy * dy, 4) AS DECIMAL(38,4))) AS DOUBLE) AS syy
-        |  FROM pairs),
-        |fit AS (
-        |  SELECT n,
-        |         (sxy - sx * sy / n) / (sxx - sx * sx / n) AS beta,
-        |         (sxx - sx * sx / n) AS cxx,
-        |         (syy - sy * sy / n) AS cyy,
-        |         (sxy - sx * sy / n) AS cxy
-        |  FROM m),
-        |stat AS (
-        |  SELECT n, beta,
-        |         (cyy - beta * cxy) / (n - 2) AS s2, cxx
-        |  FROM fit)
-        |SELECT CAST(n AS BIGINT) AS n_obs,
-        |       CAST(ROUND(beta, 8) AS DOUBLE) AS beta,
-        |       CAST(ROUND(1.0 + beta, 8) AS DOUBLE) AS rho,
-        |       CAST(ROUND(beta / SQRT(s2 / cxx), 4) AS DOUBLE) AS df_stat
-        |FROM stat""".stripMargin)
-  }
+      |FROM stat""".stripMargin)
 
   /** Two-group log-rank test: users are split into deterministic A/B
     * cohorts (user_id parity); lifetimes and censoring replay the

@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.functions._
-
 import graft.Tables
 
 /** Round-4 batch 123: Holt's linear-trend exponential smoothing via a
@@ -189,8 +187,7 @@ object Round4Ops123 {
     * scalable sparse-vector shape (work ∝ posting-list sizes, never
     * |docs|²) that underlies every semantic-dedup pass.
     */
-  val text_doc_cosine = OpQuery(
-    "text_doc_cosine",
+  val text_doc_cosine = OpQuery.sql("text_doc_cosine", "documents")(
     """WITH tf AS (
       |  SELECT doc_id, w, COUNT(*) AS tf FROM (
       |    SELECT doc_id, unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
@@ -223,43 +220,8 @@ object Round4Ops123 {
       |JOIN norms n1 ON n1.doc_id = d1
       |JOIN norms n2 ON n2.doc_id = d2
       |ORDER BY cosine DESC, d1, d2
-      |LIMIT 15""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "documents").createOrReplaceTempView("graft_cos_docs")
-    spark.sql(
-      """WITH tf AS (
-        |  SELECT doc_id, w, COUNT(*) AS tf FROM (
-        |    SELECT doc_id, explode(filter(split(lower(text), '[^a-z0-9]+'),
-        |                                  s -> length(s) >= 3)) AS w
-        |    FROM graft_cos_docs WHERE doc_id < 200) t
-        |  GROUP BY doc_id, w),
-        |nd AS (SELECT COUNT(DISTINCT doc_id) AS n FROM tf),
-        |df AS (SELECT w, COUNT(*) AS df FROM tf GROUP BY w),
-        |wts AS (
-        |  SELECT tf.doc_id, tf.w,
-        |         ROUND(tf.tf * LN(CAST(nd.n AS DOUBLE) / df.df), 6) AS wt
-        |  FROM tf JOIN df ON df.w = tf.w CROSS JOIN nd),
-        |norms AS (
-        |  SELECT doc_id,
-        |         SQRT(CAST(SUM(CAST(ROUND(wt * wt, 6) AS DECIMAL(38,6))) AS DOUBLE))
-        |           AS nrm
-        |  FROM wts GROUP BY doc_id),
-        |dots AS (
-        |  SELECT a.doc_id AS d1, b.doc_id AS d2,
-        |         CAST(SUM(CAST(ROUND(a.wt * b.wt, 6) AS DECIMAL(38,6))) AS DOUBLE)
-        |           AS dot,
-        |         COUNT(*) AS shared
-        |  FROM wts a JOIN wts b ON a.w = b.w AND a.doc_id < b.doc_id
-        |  GROUP BY a.doc_id, b.doc_id
-        |  HAVING COUNT(*) >= 3)
-        |SELECT CAST(d1 AS BIGINT) AS d1, CAST(d2 AS BIGINT) AS d2,
-        |       CAST(shared AS BIGINT) AS shared_terms,
-        |       CAST(ROUND(dot / (n1.nrm * n2.nrm), 6) AS DOUBLE) AS cosine
-        |FROM dots
-        |JOIN norms n1 ON n1.doc_id = d1
-        |JOIN norms n2 ON n2.doc_id = d2
-        |ORDER BY cosine DESC, d1, d2
-        |LIMIT 15""".stripMargin)
-  }
+      |LIMIT 15""".stripMargin,
+    "unnest(list_filter(string_split_regex(" -> "explode(filter(split(")
 
   val all: Seq[OpQuery] = Seq(ts_holt, fin_irr, text_doc_cosine)
 }

@@ -205,8 +205,7 @@ object Round4Ops124 {
     * Every intermediate is an integer count, so the statistic needs no
     * quantization at all — pure exact arithmetic at any scale.
     */
-  val stat_fleiss_kappa = OpQuery(
-    "stat_fleiss_kappa",
+  val stat_fleiss_kappa = OpQuery.sql("stat_fleiss_kappa", "lineitem")(
     """WITH sized AS (
       |  SELECT l_orderkey AS o FROM lineitem GROUP BY l_orderkey
       |  HAVING COUNT(*) = 4),
@@ -231,35 +230,7 @@ object Round4Ops124 {
       |       CAST(ROUND(pbar.pbar, 6) AS DOUBLE) AS p_observed,
       |       CAST(ROUND(pe.pe, 6) AS DOUBLE) AS p_expected,
       |       CAST(ROUND((pbar.pbar - pe.pe) / (1 - pe.pe), 6) AS DOUBLE) AS kappa
-      |FROM pbar CROSS JOIN pe""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "lineitem").createOrReplaceTempView("graft_fk_li")
-    spark.sql(
-      """WITH sized AS (
-        |  SELECT l_orderkey AS o FROM graft_fk_li GROUP BY l_orderkey
-        |  HAVING COUNT(*) = 4),
-        |cells AS (
-        |  SELECT l.l_orderkey AS o, l.l_returnflag AS j, COUNT(*) AS nij
-        |  FROM graft_fk_li l JOIN sized ON sized.o = l.l_orderkey
-        |  GROUP BY l.l_orderkey, l.l_returnflag),
-        |per_subj AS (
-        |  SELECT o, SUM(nij * nij) AS ss FROM cells GROUP BY o),
-        |pbar AS (
-        |  SELECT COUNT(*) AS n_subj,
-        |         CAST(SUM(ss - 4) AS DOUBLE) / (COUNT(*) * 12) AS pbar
-        |  FROM per_subj),
-        |cat AS (
-        |  SELECT j, SUM(nij) AS cj FROM cells GROUP BY j),
-        |pe AS (
-        |  SELECT CAST(SUM(CAST(ROUND(POW(CAST(cj AS DOUBLE)
-        |           / (SELECT n_subj * 4 FROM pbar), 2), 12) AS DECIMAL(28,12)))
-        |         AS DOUBLE) AS pe
-        |  FROM cat)
-        |SELECT CAST(pbar.n_subj AS BIGINT) AS n_subjects,
-        |       CAST(ROUND(pbar.pbar, 6) AS DOUBLE) AS p_observed,
-        |       CAST(ROUND(pe.pe, 6) AS DOUBLE) AS p_expected,
-        |       CAST(ROUND((pbar.pbar - pe.pe) / (1 - pe.pe), 6) AS DOUBLE) AS kappa
-        |FROM pbar CROSS JOIN pe""".stripMargin)
-  }
+      |FROM pbar CROSS JOIN pe""".stripMargin)
 
   val all: Seq[OpQuery] = Seq(priv_t_closeness, graph_modularity, stat_fleiss_kappa)
 }

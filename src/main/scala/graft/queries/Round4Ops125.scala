@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.functions._
-
 import graft.Tables
 
 /** Round-4 batch 125: DBSCAN core/border/noise labeling via tile
@@ -113,8 +111,7 @@ object Round4Ops125 {
     * One aggregation pass computes every moment; the test itself is
     * scalar algebra.
     */
-  val ts_granger = OpQuery(
-    "ts_granger",
+  val ts_granger = OpQuery.sql("ts_granger", "orders", "customer")(
     """WITH rev AS (
       |  SELECT o.o_orderdate AS d, c.c_mktsegment AS seg,
       |         SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) AS r
@@ -164,62 +161,7 @@ object Round4Ops125 {
       |       CAST(ROUND(sse_r / 1e9, 4) AS DOUBLE) AS sse_restricted_bn,
       |       CAST(ROUND(sse_u / 1e9, 4) AS DOUBLE) AS sse_unrestricted_bn,
       |       CAST(ROUND((sse_r - sse_u) / (sse_u / (n - 3)), 4) AS DOUBLE) AS f_stat
-      |FROM fit""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "orders").createOrReplaceTempView("graft_gr_orders")
-    Tables.load(spark, dir, "customer").createOrReplaceTempView("graft_gr_customer")
-    spark.sql(
-      """WITH rev AS (
-        |  SELECT o.o_orderdate AS d, c.c_mktsegment AS seg,
-        |         SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) AS r
-        |  FROM graft_gr_orders o
-        |  JOIN graft_gr_customer c ON c.c_custkey = o.o_custkey
-        |  WHERE c.c_mktsegment IN ('BUILDING', 'MACHINERY')
-        |  GROUP BY 1, 2),
-        |wide AS (
-        |  SELECT d,
-        |         CAST(MAX(CASE WHEN seg = 'BUILDING' THEN r END)
-        |           AS DECIMAL(18,2)) AS yv,
-        |         CAST(MAX(CASE WHEN seg = 'MACHINERY' THEN r END)
-        |           AS DECIMAL(18,2)) AS xv
-        |  FROM rev GROUP BY d
-        |  HAVING MAX(CASE WHEN seg = 'BUILDING' THEN r END) IS NOT NULL
-        |     AND MAX(CASE WHEN seg = 'MACHINERY' THEN r END) IS NOT NULL),
-        |lagd AS (
-        |  SELECT yv AS y,
-        |         LAG(yv) OVER (ORDER BY d) AS u,
-        |         LAG(xv) OVER (ORDER BY d) AS w
-        |  FROM wide),
-        |rows_ok AS (SELECT y, u, w FROM lagd WHERE u IS NOT NULL),
-        |m AS (
-        |  SELECT COUNT(*) AS n,
-        |         CAST(SUM(u) AS DOUBLE) AS su,
-        |         CAST(SUM(w) AS DOUBLE) AS sw,
-        |         CAST(SUM(y) AS DOUBLE) AS sy,
-        |         CAST(SUM(u * u) AS DOUBLE) AS suu,
-        |         CAST(SUM(u * w) AS DOUBLE) AS suw,
-        |         CAST(SUM(w * w) AS DOUBLE) AS sww,
-        |         CAST(SUM(u * y) AS DOUBLE) AS suy,
-        |         CAST(SUM(w * y) AS DOUBLE) AS swy,
-        |         CAST(SUM(y * y) AS DOUBLE) AS syy
-        |  FROM rows_ok),
-        |c AS (
-        |  SELECT n,
-        |         suu - su * su / n AS cuu, suw - su * sw / n AS cuw,
-        |         sww - sw * sw / n AS cww, suy - su * sy / n AS cuy,
-        |         swy - sw * sy / n AS cwy, syy - sy * sy / n AS cyy
-        |  FROM m),
-        |fit AS (
-        |  SELECT n, cyy,
-        |         cyy - (cuy * cww - cwy * cuw) / (cuu * cww - cuw * cuw) * cuy
-        |             - (cwy * cuu - cuy * cuw) / (cuu * cww - cuw * cuw) * cwy AS sse_u,
-        |         cyy - cuy * cuy / cuu AS sse_r
-        |  FROM c)
-        |SELECT CAST(n AS BIGINT) AS n_obs,
-        |       CAST(ROUND(sse_r / 1e9, 4) AS DOUBLE) AS sse_restricted_bn,
-        |       CAST(ROUND(sse_u / 1e9, 4) AS DOUBLE) AS sse_unrestricted_bn,
-        |       CAST(ROUND((sse_r - sse_u) / (sse_u / (n - 3)), 4) AS DOUBLE) AS f_stat
-        |FROM fit""".stripMargin)
-  }
+      |FROM fit""".stripMargin)
 
   /** Annualized Sharpe ratio per market segment from month-over-month
     * log revenue growth: LAG over the monthly series, quantized folds
@@ -227,8 +169,7 @@ object Round4Ops125 {
     * the absolute level — is what a portfolio-style comparison of
     * segment stability reads off.
     */
-  val fin_sharpe = OpQuery(
-    "fin_sharpe",
+  val fin_sharpe = OpQuery.sql("fin_sharpe", "orders", "customer")(
     """WITH monthly AS (
       |  SELECT c.c_mktsegment AS seg, strftime(o.o_orderdate, '%Y-%m') AS mth,
       |         SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) AS r
@@ -252,36 +193,9 @@ object Round4Ops125 {
       |       CAST(ROUND(s1 / n / SQRT((s2 - s1 * s1 / n) / (n - 1)) * SQRT(12.0), 4)
       |         AS DOUBLE) AS sharpe_annual
       |FROM agg
-      |ORDER BY seg""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "orders").createOrReplaceTempView("graft_sh_orders")
-    Tables.load(spark, dir, "customer").createOrReplaceTempView("graft_sh_customer")
-    spark.sql(
-      """WITH monthly AS (
-        |  SELECT c.c_mktsegment AS seg, date_format(o.o_orderdate, 'yyyy-MM') AS mth,
-        |         SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) AS r
-        |  FROM graft_sh_orders o
-        |  JOIN graft_sh_customer c ON c.c_custkey = o.o_custkey
-        |  GROUP BY 1, 2),
-        |rets AS (
-        |  SELECT seg,
-        |         ROUND(LN(CAST(r AS DOUBLE)
-        |               / LAG(CAST(r AS DOUBLE)) OVER (PARTITION BY seg ORDER BY mth)),
-        |               8) AS ret
-        |  FROM monthly),
-        |ok AS (SELECT seg, ret FROM rets WHERE ret IS NOT NULL),
-        |agg AS (
-        |  SELECT seg, COUNT(*) AS n,
-        |         CAST(SUM(CAST(ret AS DECIMAL(28,8))) AS DOUBLE) AS s1,
-        |         CAST(SUM(CAST(ROUND(ret * ret, 10) AS DECIMAL(28,10))) AS DOUBLE) AS s2
-        |  FROM ok GROUP BY seg)
-        |SELECT seg AS segment, CAST(n AS BIGINT) AS n_months,
-        |       CAST(ROUND(s1 / n, 6) AS DOUBLE) AS mean_ret,
-        |       CAST(ROUND(SQRT((s2 - s1 * s1 / n) / (n - 1)), 6) AS DOUBLE) AS vol,
-        |       CAST(ROUND(s1 / n / SQRT((s2 - s1 * s1 / n) / (n - 1)) * SQRT(12.0), 4)
-        |         AS DOUBLE) AS sharpe_annual
-        |FROM agg
-        |ORDER BY seg""".stripMargin)
-  }
+      |ORDER BY seg""".stripMargin,
+    "strftime(" -> "date_format(",
+    "'%Y-%m'" -> "'yyyy-MM'")
 
   val all: Seq[OpQuery] = Seq(cluster_dbscan_core, ts_granger, fin_sharpe)
 }

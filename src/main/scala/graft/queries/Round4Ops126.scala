@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.functions._
-
 import graft.Tables
 
 /** Round-4 batch 126: Engle–Granger cointegration, farthest-first
@@ -17,8 +15,7 @@ object Round4Ops126 {
     * negative t-stat means the spread mean-reverts — the two series
     * move together. Pure moment algebra over one lag-joined pass.
     */
-  val stat_engle_granger = OpQuery(
-    "stat_engle_granger",
+  val stat_engle_granger = OpQuery.sql("stat_engle_granger", "orders", "customer")(
     """WITH rev AS (
       |  SELECT o.o_orderdate AS d, c.c_mktsegment AS seg,
       |         SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) AS r
@@ -64,58 +61,7 @@ object Round4Ops126 {
       |       (SELECT CAST(b AS DOUBLE) FROM fit) AS hedge_ratio,
       |       CAST(ROUND(beta, 8) AS DOUBLE) AS df_beta,
       |       CAST(ROUND(beta / SQRT(var_b), 4) AS DOUBLE) AS eg_tstat
-      |FROM stat""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "orders").createOrReplaceTempView("graft_eg_orders")
-    Tables.load(spark, dir, "customer").createOrReplaceTempView("graft_eg_customer")
-    spark.sql(
-      """WITH rev AS (
-        |  SELECT o.o_orderdate AS d, c.c_mktsegment AS seg,
-        |         SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) AS r
-        |  FROM graft_eg_orders o
-        |  JOIN graft_eg_customer c ON c.c_custkey = o.o_custkey
-        |  WHERE c.c_mktsegment IN ('BUILDING', 'MACHINERY')
-        |  GROUP BY 1, 2),
-        |wide AS (
-        |  SELECT d,
-        |         CAST(MAX(CASE WHEN seg = 'BUILDING' THEN r END) AS DOUBLE) AS y,
-        |         CAST(MAX(CASE WHEN seg = 'MACHINERY' THEN r END) AS DOUBLE) AS x
-        |  FROM rev GROUP BY d
-        |  HAVING MAX(CASE WHEN seg = 'BUILDING' THEN r END) IS NOT NULL
-        |     AND MAX(CASE WHEN seg = 'MACHINERY' THEN r END) IS NOT NULL),
-        |m AS (
-        |  SELECT COUNT(*) AS n,
-        |         CAST(SUM(CAST(ROUND(x, 2) AS DECIMAL(38,2))) AS DOUBLE) AS sx,
-        |         CAST(SUM(CAST(ROUND(y, 2) AS DECIMAL(38,2))) AS DOUBLE) AS sy,
-        |         CAST(SUM(CAST(ROUND(x * y, 2) AS DECIMAL(38,2))) AS DOUBLE) AS sxy,
-        |         CAST(SUM(CAST(ROUND(x * x, 2) AS DECIMAL(38,2))) AS DOUBLE) AS sxx
-        |  FROM wide),
-        |fit AS (
-        |  SELECT ROUND((sxy - sx * sy / n) / (sxx - sx * sx / n), 8) AS b,
-        |         ROUND(sy / n - (sxy - sx * sy / n) / (sxx - sx * sx / n) * sx / n, 4)
-        |           AS a
-        |  FROM m),
-        |resid AS (
-        |  SELECT wide.d, wide.y - fit.a - fit.b * wide.x AS e
-        |  FROM wide CROSS JOIN fit),
-        |lagd AS (
-        |  SELECT e, LAG(e) OVER (ORDER BY d) AS e1 FROM resid),
-        |pairs AS (SELECT e1, e - e1 AS de FROM lagd WHERE e1 IS NOT NULL),
-        |df AS (
-        |  SELECT COUNT(*) AS n,
-        |         CAST(SUM(CAST(ROUND(e1 * de, 2) AS DECIMAL(38,2))) AS DOUBLE) AS sed,
-        |         CAST(SUM(CAST(ROUND(e1 * e1, 2) AS DECIMAL(38,2))) AS DOUBLE) AS see,
-        |         CAST(SUM(CAST(ROUND(de * de, 2) AS DECIMAL(38,2))) AS DOUBLE) AS sdd
-        |  FROM pairs),
-        |stat AS (
-        |  SELECT n, sed / see AS beta,
-        |         (sdd - sed * sed / see) / (n - 1) / see AS var_b
-        |  FROM df)
-        |SELECT CAST(n AS BIGINT) AS n_obs,
-        |       (SELECT CAST(b AS DOUBLE) FROM fit) AS hedge_ratio,
-        |       CAST(ROUND(beta, 8) AS DOUBLE) AS df_beta,
-        |       CAST(ROUND(beta / SQRT(var_b), 4) AS DOUBLE) AS eg_tstat
-        |FROM stat""".stripMargin)
-  }
+      |FROM stat""".stripMargin)
 
   /** Farthest-first traversal (Gonzalez k-center seeding) on the
     * first four embedding dimensions: start from the lowest vec_id,

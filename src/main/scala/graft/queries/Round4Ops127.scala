@@ -115,8 +115,7 @@ object Round4Ops127 {
     * the question A/B platforms actually need for "no-regression"
     * launches. One grouped moment pass, scalar algebra after.
     */
-  val stat_tost_equivalence = OpQuery(
-    "stat_tost_equivalence",
+  val stat_tost_equivalence = OpQuery.sql("stat_tost_equivalence", "customer")(
     """WITH g AS (
       |  SELECT c_mktsegment AS seg,
       |         CAST(c_acctbal AS DOUBLE) AS x
@@ -145,40 +144,7 @@ object Round4Ops127 {
       |       CAST(ROUND((d - 50) / se, 4) AS DOUBLE) AS t_upper,
       |       CAST(CASE WHEN (d + 50) / se > 1.645 AND (d - 50) / se < -1.645
       |            THEN 1 ELSE 0 END AS INT) AS equivalent
-      |FROM calc""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "customer").createOrReplaceTempView("graft_tost_customer")
-    spark.sql(
-      """WITH g AS (
-        |  SELECT c_mktsegment AS seg,
-        |         CAST(c_acctbal AS DOUBLE) AS x
-        |  FROM graft_tost_customer
-        |  WHERE c_mktsegment IN ('AUTOMOBILE', 'FURNITURE')),
-        |mom AS (
-        |  SELECT seg, COUNT(*) AS n,
-        |         CAST(SUM(CAST(ROUND(x, 2) AS DECIMAL(38,2))) AS DOUBLE) AS s1,
-        |         CAST(SUM(CAST(ROUND(x * x, 2) AS DECIMAL(38,2))) AS DOUBLE) AS s2
-        |  FROM g GROUP BY seg),
-        |wide AS (
-        |  SELECT MAX(CASE WHEN seg = 'AUTOMOBILE' THEN n END) AS n1,
-        |         MAX(CASE WHEN seg = 'AUTOMOBILE' THEN s1 END) AS a1,
-        |         MAX(CASE WHEN seg = 'AUTOMOBILE' THEN s2 END) AS a2,
-        |         MAX(CASE WHEN seg = 'FURNITURE' THEN n END) AS n2,
-        |         MAX(CASE WHEN seg = 'FURNITURE' THEN s1 END) AS f1,
-        |         MAX(CASE WHEN seg = 'FURNITURE' THEN s2 END) AS f2
-        |  FROM mom),
-        |calc AS (
-        |  SELECT a1 / n1 - f1 / n2 AS d,
-        |         SQRT((a2 - a1 * a1 / n1) / (n1 - 1) / n1
-        |            + (f2 - f1 * f1 / n2) / (n2 - 1) / n2) AS se
-        |  FROM wide)
-        |SELECT CAST(ROUND(d, 4) AS DOUBLE) AS mean_diff,
-        |       CAST(ROUND(se, 4) AS DOUBLE) AS std_err,
-        |       CAST(ROUND((d + 50) / se, 4) AS DOUBLE) AS t_lower,
-        |       CAST(ROUND((d - 50) / se, 4) AS DOUBLE) AS t_upper,
-        |       CAST(CASE WHEN (d + 50) / se > 1.645 AND (d - 50) / se < -1.645
-        |            THEN 1 ELSE 0 END AS INT) AS equivalent
-        |FROM calc""".stripMargin)
-  }
+      |FROM calc""".stripMargin)
 
   /** Trend and seasonality strength (the STL diagnostics): a 7-day
     * centered moving average is the trend, weekday means of the
@@ -188,8 +154,7 @@ object Round4Ops127 {
     * structure or noise. Windows + two grouped passes, all variances
     * by quantized folds.
     */
-  val ts_strengths = OpQuery(
-    "ts_strengths",
+  val ts_strengths = OpQuery.sql("ts_strengths", "orders")(
     """WITH daily AS (
       |  SELECT CAST(FLOOR(epoch(o_orderdate) / 86400) AS BIGINT) AS e,
       |         CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS y
@@ -227,49 +192,8 @@ object Round4Ops127 {
       |         6) AS DOUBLE) AS seasonal_strength,
       |       CAST(ROUND(GREATEST(0.0, 1.0 - (srr - sr * sr / n) / (sss - ss * ss / n)),
       |         6) AS DOUBLE) AS trend_strength
-      |FROM vv""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "orders").createOrReplaceTempView("graft_sts_orders")
-    spark.sql(
-      """WITH daily AS (
-        |  SELECT CAST(FLOOR(unix_timestamp(CAST(o_orderdate AS TIMESTAMP)) / 86400)
-        |           AS BIGINT) AS e,
-        |         CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS y
-        |  FROM graft_sts_orders GROUP BY 1),
-        |ma AS (
-        |  SELECT e, y,
-        |         AVG(y) OVER (ORDER BY e ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)
-        |           AS trend,
-        |         COUNT(*) OVER (ORDER BY e ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)
-        |           AS wn
-        |  FROM daily),
-        |det AS (
-        |  SELECT e, (e + 3) % 7 AS dow, y, trend, y - trend AS detr
-        |  FROM ma WHERE wn = 7),
-        |seas AS (
-        |  SELECT dow,
-        |         CAST(SUM(CAST(ROUND(detr, 4) AS DECIMAL(38,4))) AS DOUBLE) / COUNT(*)
-        |           AS s
-        |  FROM det GROUP BY dow),
-        |parts AS (
-        |  SELECT det.detr - seas.s AS rem, det.detr, det.y - seas.s AS deseas
-        |  FROM det JOIN seas ON seas.dow = det.dow),
-        |vv AS (
-        |  SELECT COUNT(*) AS n,
-        |         CAST(SUM(CAST(ROUND(rem, 4) AS DECIMAL(38,4))) AS DOUBLE) AS sr,
-        |         CAST(SUM(CAST(ROUND(rem * rem, 2) AS DECIMAL(38,2))) AS DOUBLE) AS srr,
-        |         CAST(SUM(CAST(ROUND(detr, 4) AS DECIMAL(38,4))) AS DOUBLE) AS sd,
-        |         CAST(SUM(CAST(ROUND(detr * detr, 2) AS DECIMAL(38,2))) AS DOUBLE) AS sdd,
-        |         CAST(SUM(CAST(ROUND(deseas, 4) AS DECIMAL(38,4))) AS DOUBLE) AS ss,
-        |         CAST(SUM(CAST(ROUND(deseas * deseas, 2) AS DECIMAL(38,2))) AS DOUBLE)
-        |           AS sss
-        |  FROM parts)
-        |SELECT CAST(n AS BIGINT) AS n_days,
-        |       CAST(ROUND(GREATEST(0.0, 1.0 - (srr - sr * sr / n) / (sdd - sd * sd / n)),
-        |         6) AS DOUBLE) AS seasonal_strength,
-        |       CAST(ROUND(GREATEST(0.0, 1.0 - (srr - sr * sr / n) / (sss - ss * ss / n)),
-        |         6) AS DOUBLE) AS trend_strength
-        |FROM vv""".stripMargin)
-  }
+      |FROM vv""".stripMargin,
+    "epoch(o_orderdate)" -> "unix_timestamp(CAST(o_orderdate AS TIMESTAMP))")
 
   val all: Seq[OpQuery] = Seq(stat_qq_normal, stat_tost_equivalence, ts_strengths)
 }

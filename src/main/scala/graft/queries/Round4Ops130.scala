@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.functions._
-
 import graft.Tables
 
 /** Round-4 batch 130: time-windowed funnel depth (the windowFunnel
@@ -19,8 +17,7 @@ object Round4Ops130 {
     * and the step-to-step conversion. The session-window analytics
     * ClickHouse ships as a builtin, as three joins.
     */
-  val event_window_funnel = OpQuery(
-    "event_window_funnel",
+  val event_window_funnel = OpQuery.sql("event_window_funnel", "events")(
     """WITH v AS (SELECT user_id, ts FROM events WHERE event_type = 'view'),
       |c AS (SELECT user_id, ts FROM events WHERE event_type = 'click'),
       |p AS (SELECT user_id, ts FROM events WHERE event_type = 'purchase'),
@@ -43,35 +40,8 @@ object Round4Ops130 {
       |       CAST(d3 AS BIGINT) AS depth3_users,
       |       CAST(ROUND(CAST(d2 AS DOUBLE) / d1, 6) AS DOUBLE) AS conv_1_2,
       |       CAST(ROUND(CAST(d3 AS DOUBLE) / d2, 6) AS DOUBLE) AS conv_2_3
-      |FROM counts""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "events").createOrReplaceTempView("graft_wf_events")
-    spark.sql(
-      """WITH v AS (SELECT user_id, ts FROM graft_wf_events WHERE event_type = 'view'),
-        |c AS (SELECT user_id, ts FROM graft_wf_events WHERE event_type = 'click'),
-        |p AS (SELECT user_id, ts FROM graft_wf_events
-        |      WHERE event_type = 'purchase'),
-        |l2 AS (
-        |  SELECT DISTINCT v.user_id
-        |  FROM v JOIN c ON c.user_id = v.user_id
-        |   AND c.ts > v.ts
-        |   AND unix_timestamp(c.ts) - unix_timestamp(v.ts) <= 3600),
-        |l3 AS (
-        |  SELECT DISTINCT v.user_id
-        |  FROM v
-        |  JOIN c ON c.user_id = v.user_id AND c.ts > v.ts
-        |  JOIN p ON p.user_id = v.user_id AND p.ts > c.ts
-        |   AND unix_timestamp(p.ts) - unix_timestamp(v.ts) <= 3600),
-        |counts AS (
-        |  SELECT (SELECT COUNT(DISTINCT user_id) FROM v) AS d1,
-        |         (SELECT COUNT(*) FROM l2) AS d2,
-        |         (SELECT COUNT(*) FROM l3) AS d3)
-        |SELECT CAST(d1 AS BIGINT) AS depth1_users,
-        |       CAST(d2 AS BIGINT) AS depth2_users,
-        |       CAST(d3 AS BIGINT) AS depth3_users,
-        |       CAST(ROUND(CAST(d2 AS DOUBLE) / d1, 6) AS DOUBLE) AS conv_1_2,
-        |       CAST(ROUND(CAST(d3 AS DOUBLE) / d2, 6) AS DOUBLE) AS conv_2_3
-        |FROM counts""".stripMargin)
-  }
+      |FROM counts""".stripMargin,
+    "epoch(" -> "unix_timestamp(")
 
   /** 1-D Kalman local-level filter over the last 60 days of revenue:
     * predict/update recursion (Q = 1e8, R = 1e9) as a recursive CTE,
@@ -153,8 +123,7 @@ object Round4Ops130 {
     * ratios. The difference vs proportional allocation is reported —
     * the rows a survey designer actually compares.
     */
-  val sample_neyman = OpQuery(
-    "sample_neyman",
+  val sample_neyman = OpQuery.sql("sample_neyman", "orders", "customer")(
     """WITH mom AS (
       |  SELECT c.c_mktsegment AS seg, COUNT(*) AS nh,
       |         CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS s1,
@@ -176,34 +145,7 @@ object Round4Ops130 {
       |       CAST(ROUND(1000 * sig.nh * sig.sd / tot.z, 2) AS DOUBLE) AS neyman_n,
       |       CAST(ROUND(1000.0 * sig.nh / tot.n_all, 2) AS DOUBLE) AS proportional_n
       |FROM sig CROSS JOIN tot
-      |ORDER BY segment""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "orders").createOrReplaceTempView("graft_ny_orders")
-    Tables.load(spark, dir, "customer").createOrReplaceTempView("graft_ny_customer")
-    spark.sql(
-      """WITH mom AS (
-        |  SELECT c.c_mktsegment AS seg, COUNT(*) AS nh,
-        |         CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS s1,
-        |         CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2))
-        |                  * CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS s2
-        |  FROM graft_ny_orders o
-        |  JOIN graft_ny_customer c ON c.c_custkey = o.o_custkey
-        |  GROUP BY 1),
-        |sig AS (
-        |  SELECT seg, nh,
-        |         SQRT((s2 - s1 * s1 / nh) / (nh - 1)) AS sd
-        |  FROM mom),
-        |tot AS (
-        |  SELECT CAST(SUM(CAST(ROUND(nh * sd, 4) AS DECIMAL(38,4))) AS DOUBLE) AS z,
-        |         SUM(nh) AS n_all
-        |  FROM sig)
-        |SELECT sig.seg AS segment, CAST(sig.nh AS BIGINT) AS stratum_n,
-        |       CAST(ROUND(sig.sd, 2) AS DOUBLE) AS stratum_sd,
-        |       CAST(ROUND(sig.nh * sig.sd / tot.z, 6) AS DOUBLE) AS neyman_share,
-        |       CAST(ROUND(1000 * sig.nh * sig.sd / tot.z, 2) AS DOUBLE) AS neyman_n,
-        |       CAST(ROUND(1000.0 * sig.nh / tot.n_all, 2) AS DOUBLE) AS proportional_n
-        |FROM sig CROSS JOIN tot
-        |ORDER BY segment""".stripMargin)
-  }
+      |ORDER BY segment""".stripMargin)
 
   val all: Seq[OpQuery] = Seq(event_window_funnel, ts_kalman_level, sample_neyman)
 }

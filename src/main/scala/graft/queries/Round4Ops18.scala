@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
 import graft.Tables
 
 /** Round-4 batch 18: SQL-defined functions (Catalyst-inlined — the
@@ -47,23 +45,13 @@ object Round4Ops18 {
   /** GROUP BY ALL: every non-aggregate select item becomes a grouping
     * key — identical SQL text on both engines.
     */
-  val a24_group_by_all = OpQuery(
-    "a24_group_by_all",
+  val a24_group_by_all = OpQuery.sql("a24_group_by_all", "lineitem")(
     """SELECT l_returnflag, l_linestatus,
       |       CAST(COUNT(*) AS BIGINT) AS n,
       |       CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS qty
       |FROM lineitem
       |GROUP BY ALL
-      |ORDER BY l_returnflag, l_linestatus""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "lineitem").createOrReplaceTempView("graft_gba_lineitem")
-    spark.sql(
-      """SELECT l_returnflag, l_linestatus,
-        |       CAST(COUNT(*) AS BIGINT) AS n,
-        |       CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS qty
-        |FROM graft_gba_lineitem
-        |GROUP BY ALL
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin)
-  }
+      |ORDER BY l_returnflag, l_linestatus""".stripMargin)
 
   val all: Seq[OpQuery] = Seq(f_sql_udf, a24_group_by_all)
 }

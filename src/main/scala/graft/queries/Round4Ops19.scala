@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
 import graft.Tables
 
 /** Round-4 batch 19: URL handling (parse + canonicalization dedup —
@@ -53,24 +51,15 @@ object Round4Ops19 {
     * deterministic under any partitioning — an unordered collect would
     * hash differently run to run.
     */
-  val a25_string_agg = OpQuery(
-    "a25_string_agg",
+  val a25_string_agg = OpQuery.sql("a25_string_agg", "nation", "region")(
     """SELECT r_name,
       |       string_agg(n_name, ',' ORDER BY n_name) AS nations,
       |       CAST(COUNT(*) AS BIGINT) AS n
       |FROM nation JOIN region ON n_regionkey = r_regionkey
       |GROUP BY r_name
-      |ORDER BY r_name""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "nation").createOrReplaceTempView("graft_sa_nation")
-    Tables.load(spark, dir, "region").createOrReplaceTempView("graft_sa_region")
-    spark.sql(
-      """SELECT r_name,
-        |       listagg(n_name, ',') WITHIN GROUP (ORDER BY n_name) AS nations,
-        |       CAST(COUNT(*) AS BIGINT) AS n
-        |FROM graft_sa_nation JOIN graft_sa_region ON n_regionkey = r_regionkey
-        |GROUP BY r_name
-        |ORDER BY r_name""".stripMargin)
-  }
+      |ORDER BY r_name""".stripMargin,
+    "string_agg(n_name, ',' ORDER BY n_name)" ->
+      "listagg(n_name, ',') WITHIN GROUP (ORDER BY n_name)")
 
   /** Gaps-and-islands: per-user consecutive-active-day streaks. The
     * classic (day_index - row_number) island key needs only ONE shuffle
@@ -78,8 +67,7 @@ object Round4Ops19 {
     * self-join, no per-day driver loop; at 100 TB the shuffle key is
     * the uniform user id.
     */
-  val ts_islands = OpQuery(
-    "ts_islands",
+  val ts_islands = OpQuery.sql("ts_islands", "events")(
     """WITH days AS (
       |  SELECT DISTINCT user_id, CAST(ts AS DATE) AS d FROM events),
       |idx AS (
@@ -95,26 +83,9 @@ object Round4Ops19 {
       |       CAST(SUM(len) AS BIGINT) AS active_days
       |FROM streaks
       |GROUP BY user_id
-      |ORDER BY user_id""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "events").createOrReplaceTempView("graft_isl_events")
-    spark.sql(
-      """WITH days AS (
-        |  SELECT DISTINCT user_id, CAST(ts AS DATE) AS d FROM graft_isl_events),
-        |idx AS (
-        |  SELECT user_id, d,
-        |         CAST(datediff(d, DATE '2024-01-01') AS BIGINT)
-        |           - ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY d) AS island
-        |  FROM days),
-        |streaks AS (
-        |  SELECT user_id, island, COUNT(*) AS len FROM idx GROUP BY user_id, island)
-        |SELECT user_id,
-        |       CAST(COUNT(*) AS BIGINT) AS n_streaks,
-        |       CAST(MAX(len) AS BIGINT) AS max_streak,
-        |       CAST(SUM(len) AS BIGINT) AS active_days
-        |FROM streaks
-        |GROUP BY user_id
-        |ORDER BY user_id""".stripMargin)
-  }
+      |ORDER BY user_id""".stripMargin,
+    "date_diff('day', DATE '2024-01-01', d)" ->
+      "CAST(datediff(d, DATE '2024-01-01') AS BIGINT)")
 
   /** URL canonicalization dedup — the first pass of any web-crawl
     * pipeline: lowercase, strip fragments, strip utm_* tracking

@@ -163,8 +163,7 @@ object Round4Ops2 {
     * nation, stated as a lateral subquery (the SQL-standard form of
     * top-k-per-group). Identical SQL text runs on both engines.
     */
-  val j13_lateral = OpQuery(
-    "j13_lateral",
+  val j13_lateral = OpQuery.sql("j13_lateral", "nation", "customer")(
     """SELECT n_name, c_custkey, bal
       |FROM nation, LATERAL (
       |  SELECT c_custkey, CAST(CAST(c_acctbal AS DECIMAL(12,2)) AS DOUBLE) AS bal
@@ -173,20 +172,7 @@ object Round4Ops2 {
       |  ORDER BY bal DESC, c_custkey
       |  LIMIT 3
       |) t
-      |ORDER BY n_name, bal DESC, c_custkey""".stripMargin) { (spark, dir) =>
-    t(spark, dir, "nation").createOrReplaceTempView("graft_lat_nation")
-    t(spark, dir, "customer").createOrReplaceTempView("graft_lat_customer")
-    spark.sql(
-      """SELECT n_name, c_custkey, bal
-        |FROM graft_lat_nation, LATERAL (
-        |  SELECT c_custkey, CAST(CAST(c_acctbal AS DECIMAL(12,2)) AS DOUBLE) AS bal
-        |  FROM graft_lat_customer
-        |  WHERE c_nationkey = n_nationkey
-        |  ORDER BY bal DESC, c_custkey
-        |  LIMIT 3
-        |)
-        |ORDER BY n_name, bal DESC, c_custkey""".stripMargin)
-  }
+      |ORDER BY n_name, bal DESC, c_custkey""".stripMargin)
 
   /** KMV distinct sketch ([[KmvSketch]]): per-group estimate vs exact,
     * with the relative error in the output. Rows-only gate — xxhash64

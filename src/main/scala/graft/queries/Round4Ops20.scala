@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
 import graft.Tables
 
 /** Round-4 batch 20: categorical feature engineering (mode, one-hot,
@@ -15,8 +13,7 @@ object Round4Ops20 {
     * per-(group,value) count is map-side combined before the window
     * ever sees it, so the window input is dimension-sized.
     */
-  val a26_mode = OpQuery(
-    "a26_mode",
+  val a26_mode = OpQuery.sql("a26_mode", "documents")(
     """WITH counts AS (
       |  SELECT source, lang, COUNT(*) AS cnt FROM documents GROUP BY source, lang),
       |ranked AS (
@@ -25,26 +22,13 @@ object Round4Ops20 {
       |  FROM counts)
       |SELECT source, lang AS mode_lang, CAST(cnt AS BIGINT) AS n
       |FROM ranked WHERE rn = 1
-      |ORDER BY source""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "documents").createOrReplaceTempView("graft_mode_docs")
-    spark.sql(
-      """WITH counts AS (
-        |  SELECT source, lang, COUNT(*) AS cnt FROM graft_mode_docs GROUP BY source, lang),
-        |ranked AS (
-        |  SELECT source, lang, cnt,
-        |         ROW_NUMBER() OVER (PARTITION BY source ORDER BY cnt DESC, lang) AS rn
-        |  FROM counts)
-        |SELECT source, lang AS mode_lang, CAST(cnt AS BIGINT) AS n
-        |FROM ranked WHERE rn = 1
-        |ORDER BY source""".stripMargin)
-  }
+      |ORDER BY source""".stripMargin)
 
   /** One-hot encoding of a low-cardinality categorical (the classical
     * ML-feature expansion). Fixed vocabulary, map-only codegen CASE
     * chain — no shuffle at all; identical SQL both engines.
     */
-  val feature_onehot = OpQuery(
-    "feature_onehot",
+  val feature_onehot = OpQuery.sql("feature_onehot", "documents")(
     """SELECT doc_id,
       |       CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS lang_en,
       |       CASE WHEN lang = 'de' THEN 1 ELSE 0 END AS lang_de,
@@ -52,18 +36,7 @@ object Round4Ops20 {
       |       CASE WHEN lang = 'fr' THEN 1 ELSE 0 END AS lang_fr,
       |       CASE WHEN lang = 'zh' THEN 1 ELSE 0 END AS lang_zh
       |FROM documents
-      |ORDER BY doc_id""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "documents").createOrReplaceTempView("graft_oh_docs")
-    spark.sql(
-      """SELECT doc_id,
-        |       CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS lang_en,
-        |       CASE WHEN lang = 'de' THEN 1 ELSE 0 END AS lang_de,
-        |       CASE WHEN lang = 'es' THEN 1 ELSE 0 END AS lang_es,
-        |       CASE WHEN lang = 'fr' THEN 1 ELSE 0 END AS lang_fr,
-        |       CASE WHEN lang = 'zh' THEN 1 ELSE 0 END AS lang_zh
-        |FROM graft_oh_docs
-        |ORDER BY doc_id""".stripMargin)
-  }
+      |ORDER BY doc_id""".stripMargin)
 
   /** Smoothed mean target encoding: encode(seg) = (sum_y + m·µ)/(n + m)
     * with prior weight m=20 — the leakage-safe categorical encoder for
@@ -71,8 +44,7 @@ object Round4Ops20 {
     * final division; the category table is dimension-sized so every
     * stage after the first aggregate is broadcast-scale.
     */
-  val feature_target_encode = OpQuery(
-    "feature_target_encode",
+  val feature_target_encode = OpQuery.sql("feature_target_encode", "orders", "customer")(
     """WITH joined AS (
       |  SELECT c_mktsegment AS seg, CAST(o_totalprice AS DECIMAL(18,2)) AS y
       |  FROM orders JOIN customer ON o_custkey = c_custkey),
@@ -83,22 +55,7 @@ object Round4Ops20 {
       |SELECT seg, CAST(n AS BIGINT) AS n,
       |       CAST(ROUND((CAST(s AS DOUBLE) + 20.0 * mu) / (n + 20.0), 4) AS DOUBLE) AS seg_encoded
       |FROM stats, overall
-      |ORDER BY seg""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "orders").createOrReplaceTempView("graft_te_orders")
-    Tables.load(spark, dir, "customer").createOrReplaceTempView("graft_te_customer")
-    spark.sql(
-      """WITH joined AS (
-        |  SELECT c_mktsegment AS seg, CAST(o_totalprice AS DECIMAL(18,2)) AS y
-        |  FROM graft_te_orders JOIN graft_te_customer ON o_custkey = c_custkey),
-        |stats AS (
-        |  SELECT seg, COUNT(*) AS n, SUM(y) AS s FROM joined GROUP BY seg),
-        |overall AS (
-        |  SELECT CAST(SUM(s) AS DOUBLE) / SUM(n) AS mu FROM stats)
-        |SELECT seg, CAST(n AS BIGINT) AS n,
-        |       CAST(ROUND((CAST(s AS DOUBLE) + 20.0 * mu) / (n + 20.0), 4) AS DOUBLE) AS seg_encoded
-        |FROM stats, overall
-        |ORDER BY seg""".stripMargin)
-  }
+      |ORDER BY seg""".stripMargin)
 
   /** Class-balanced downsampling: every label keeps exactly
     * min-class-count rows, selected by a content-stable md5 order (so
@@ -107,8 +64,7 @@ object Round4Ops20 {
     * partition on the label key; the class-size floor is a broadcast
     * scalar.
     */
-  val sample_balanced = OpQuery(
-    "sample_balanced",
+  val sample_balanced = OpQuery.sql("sample_balanced", "embeddings")(
     """WITH sizes AS (
       |  SELECT label, COUNT(*) AS cnt FROM embeddings GROUP BY label),
       |k AS (SELECT MIN(cnt) AS k FROM sizes),
@@ -119,29 +75,15 @@ object Round4Ops20 {
       |  FROM embeddings)
       |SELECT CAST(vec_id AS BIGINT) AS vec_id, CAST(label AS INT) AS label
       |FROM ranked, k WHERE rn <= k
-      |ORDER BY label, vec_id""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "embeddings").createOrReplaceTempView("graft_bal_emb")
-    spark.sql(
-      """WITH sizes AS (
-        |  SELECT label, COUNT(*) AS cnt FROM graft_bal_emb GROUP BY label),
-        |k AS (SELECT MIN(cnt) AS k FROM sizes),
-        |ranked AS (
-        |  SELECT vec_id, label,
-        |         ROW_NUMBER() OVER (PARTITION BY label
-        |           ORDER BY md5(CAST(vec_id AS STRING)), vec_id) AS rn
-        |  FROM graft_bal_emb)
-        |SELECT CAST(vec_id AS BIGINT) AS vec_id, CAST(label AS INT) AS label
-        |FROM ranked, k WHERE rn <= k
-        |ORDER BY label, vec_id""".stripMargin)
-  }
+      |ORDER BY label, vec_id""".stripMargin,
+    "VARCHAR" -> "STRING")
 
   /** Bipartite degree distribution (part ↔ supplier from lineitem):
     * per-part distinct-supplier degree, then the degree histogram.
     * Two aggregations, each map-side combined on a uniform key; the
     * histogram input is already dimension-sized.
     */
-  val graph_degree_dist = OpQuery(
-    "graph_degree_dist",
+  val graph_degree_dist = OpQuery.sql("graph_degree_dist", "lineitem")(
     """WITH deg AS (
       |  SELECT l_partkey, COUNT(DISTINCT l_suppkey) AS degree
       |  FROM lineitem GROUP BY l_partkey)
@@ -149,18 +91,7 @@ object Round4Ops20 {
       |       CAST(COUNT(*) AS BIGINT) AS n_parts
       |FROM deg
       |GROUP BY degree
-      |ORDER BY degree""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "lineitem").createOrReplaceTempView("graft_deg_lineitem")
-    spark.sql(
-      """WITH deg AS (
-        |  SELECT l_partkey, COUNT(DISTINCT l_suppkey) AS degree
-        |  FROM graft_deg_lineitem GROUP BY l_partkey)
-        |SELECT CAST(degree AS BIGINT) AS degree,
-        |       CAST(COUNT(*) AS BIGINT) AS n_parts
-        |FROM deg
-        |GROUP BY degree
-        |ORDER BY degree""".stripMargin)
-  }
+      |ORDER BY degree""".stripMargin)
 
   /** Map-typed column family: map_from_entries over the per-user
     * event-type counts, map_filter to the frequent entries, rendered

@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
 import graft.Tables
 
 /** Round-4 batch 21: the TPC-H Q8 market-share join shape, referential-
@@ -149,8 +147,7 @@ object Round4Ops21 {
     * the regression runs over 100 rows. Slope rounds to 3 decimals —
     * the two engines' covariance accumulation orders differ at ~1e-13.
     */
-  val text_zipf = OpQuery(
-    "text_zipf",
+  val text_zipf = OpQuery.sql("text_zipf", "documents")(
     """WITH toks AS (
       |  SELECT unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS term FROM documents),
       |freqs AS (
@@ -164,24 +161,9 @@ object Round4Ops21 {
       |SELECT rank, term, CAST(freq AS BIGINT) AS freq,
       |       CAST(ROUND((SELECT k FROM slope), 3) AS DOUBLE) AS zipf_slope
       |FROM top100 WHERE rank <= 30
-      |ORDER BY rank""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "documents").createOrReplaceTempView("graft_zipf_docs")
-    spark.sql(
-      """WITH toks AS (
-        |  SELECT explode(split(lower(trim(text)), '\\s+')) AS term FROM graft_zipf_docs),
-        |freqs AS (
-        |  SELECT term, COUNT(*) AS freq FROM toks WHERE term <> '' GROUP BY term),
-        |ranked AS (
-        |  SELECT term, freq, ROW_NUMBER() OVER (ORDER BY freq DESC, term) AS rank
-        |  FROM freqs),
-        |top100 AS (SELECT * FROM ranked WHERE rank <= 100),
-        |slope AS (
-        |  SELECT regr_slope(ln(freq), ln(rank)) AS k FROM top100)
-        |SELECT rank, term, CAST(freq AS BIGINT) AS freq,
-        |       CAST(ROUND((SELECT k FROM slope), 3) AS DOUBLE) AS zipf_slope
-        |FROM top100 WHERE rank <= 30
-        |ORDER BY rank""".stripMargin)
-  }
+      |ORDER BY rank""".stripMargin,
+    "unnest(regexp_split_to_array(" -> "explode(split(",
+    """'\s+'""" -> """'\\s+'""")
 
   /** Johnson-Lindenstrauss random projection 64→8 dims with a
     * deterministic ±1 sign matrix derived from md5(i_j) — reproducible

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -62,8 +61,7 @@ object Round4Ops22 {
     * so it shuffles once on the uniform user key; per-purchase credit
     * counting is a window over purchase-sized partitions.
     */
-  val event_attribution = OpQuery(
-    "event_attribution",
+  val event_attribution = OpQuery.sql("event_attribution", "events")(
     """WITH touches AS (
       |  SELECT user_id, ts, event_type FROM events WHERE event_type IN ('view','click')),
       |purchases AS (
@@ -82,29 +80,8 @@ object Round4Ops22 {
       |       CAST(COUNT(*) AS BIGINT) AS n_credits
       |FROM counted
       |GROUP BY touch_type
-      |ORDER BY touch_type""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "events").createOrReplaceTempView("graft_attr_events")
-    spark.sql(
-      """WITH touches AS (
-        |  SELECT user_id, ts, event_type FROM graft_attr_events WHERE event_type IN ('view','click')),
-        |purchases AS (
-        |  SELECT event_id, user_id, ts, CAST(ROUND(value * 100) AS BIGINT) AS cents
-        |  FROM graft_attr_events WHERE event_type = 'purchase'),
-        |pairs AS (
-        |  SELECT p.event_id, p.cents, t.event_type AS touch_type
-        |  FROM purchases p JOIN touches t
-        |    ON p.user_id = t.user_id AND t.ts <= p.ts AND t.ts > p.ts - INTERVAL 24 HOUR),
-        |counted AS (
-        |  SELECT event_id, cents, touch_type,
-        |         COUNT(*) OVER (PARTITION BY event_id) AS n_touch
-        |  FROM pairs)
-        |SELECT touch_type,
-        |       CAST(SUM(cents DIV n_touch) AS BIGINT) AS attributed_cents,
-        |       CAST(COUNT(*) AS BIGINT) AS n_credits
-        |FROM counted
-        |GROUP BY touch_type
-        |ORDER BY touch_type""".stripMargin)
-  }
+      |ORDER BY touch_type""".stripMargin,
+    "//" -> "DIV")
 
   /** CUSUM changepoint detection per event type, entirely in integer
     * arithmetic: with daily counts c_i, total T over N days, the scaled
@@ -112,8 +89,7 @@ object Round4Ops22 {
     * both engines; its extremum marks the day the rate regime shifts.
     * One window per event type over day-sized partitions.
     */
-  val ts_cusum = OpQuery(
-    "ts_cusum",
+  val ts_cusum = OpQuery.sql("ts_cusum", "events")(
     """WITH daily AS (
       |  SELECT event_type, CAST(ts AS DATE) AS d, COUNT(*) AS c
       |  FROM events GROUP BY event_type, CAST(ts AS DATE)),
@@ -132,29 +108,9 @@ object Round4Ops22 {
       |SELECT event_type, strftime(d, '%Y-%m-%d') AS changepoint_day,
       |       CAST(cusum AS BIGINT) AS peak_cusum
       |FROM ranked WHERE rn = 1
-      |ORDER BY event_type""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "events").createOrReplaceTempView("graft_cusum_events")
-    spark.sql(
-      """WITH daily AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS d, COUNT(*) AS c
-        |  FROM graft_cusum_events GROUP BY event_type, CAST(ts AS DATE)),
-        |tot AS (
-        |  SELECT event_type, SUM(c) AS t, COUNT(*) AS nd FROM daily GROUP BY event_type),
-        |cus AS (
-        |  SELECT daily.event_type, daily.d,
-        |         SUM(daily.c * tot.nd - tot.t)
-        |           OVER (PARTITION BY daily.event_type ORDER BY daily.d) AS cusum
-        |  FROM daily JOIN tot ON daily.event_type = tot.event_type),
-        |ranked AS (
-        |  SELECT event_type, d, cusum,
-        |         ROW_NUMBER() OVER (PARTITION BY event_type
-        |           ORDER BY abs(cusum) DESC, d) AS rn
-        |  FROM cus)
-        |SELECT event_type, date_format(d, 'yyyy-MM-dd') AS changepoint_day,
-        |       CAST(cusum AS BIGINT) AS peak_cusum
-        |FROM ranked WHERE rn = 1
-        |ORDER BY event_type""".stripMargin)
-  }
+      |ORDER BY event_type""".stripMargin,
+    "strftime(" -> "date_format(",
+    "'%Y-%m-%d'" -> "'yyyy-MM-dd'")
 
   /** XPath extraction over XML fragments (the xpath_* scalar family —
     * the semi-structured long tail beyond JSON/VARIANT). The oracle

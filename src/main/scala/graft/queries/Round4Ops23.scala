@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
 import graft.Tables
@@ -18,8 +17,7 @@ object Round4Ops23 {
     * definition-free and order-free; the one float expression at the end
     * is written identically on both sides.
     */
-  val a27_moments = OpQuery(
-    "a27_moments",
+  val a27_moments = OpQuery.sql("a27_moments", "orders")(
     """WITH base AS (
       |  SELECT o_orderpriority AS pri, CAST(ROUND(o_totalprice) AS BIGINT) AS x
       |  FROM orders),
@@ -43,34 +41,7 @@ object Round4Ops23 {
       |       CAST(ROUND((m4 - 4 * mu * m3 + 6 * mu * mu * m2 - 3 * mu * mu * mu * mu)
       |                  / pow(m2 - mu * mu, 2) - 3, 6) AS DOUBLE) AS excess_kurtosis
       |FROM f
-      |ORDER BY pri""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "orders").createOrReplaceTempView("graft_mom_orders")
-    spark.sql(
-      """WITH base AS (
-        |  SELECT o_orderpriority AS pri, CAST(ROUND(o_totalprice) AS BIGINT) AS x
-        |  FROM graft_mom_orders),
-        |m AS (
-        |  SELECT pri, COUNT(*) AS n,
-        |         SUM(CAST(x AS DECIMAL(38,0))) AS s1,
-        |         SUM(CAST(x AS DECIMAL(38,0)) * x) AS s2,
-        |         SUM(CAST(x AS DECIMAL(38,0)) * x * x) AS s3,
-        |         SUM(CAST(x AS DECIMAL(38,0)) * x * x * x) AS s4
-        |  FROM base GROUP BY pri),
-        |f AS (
-        |  SELECT pri, n,
-        |         CAST(s1 AS DOUBLE) / n AS mu,
-        |         CAST(s2 AS DOUBLE) / n AS m2,
-        |         CAST(s3 AS DOUBLE) / n AS m3,
-        |         CAST(s4 AS DOUBLE) / n AS m4
-        |  FROM m)
-        |SELECT pri, CAST(n AS BIGINT) AS n,
-        |       CAST(ROUND((m3 - 3 * mu * m2 + 2 * mu * mu * mu)
-        |                  / pow(m2 - mu * mu, 1.5), 6) AS DOUBLE) AS skew,
-        |       CAST(ROUND((m4 - 4 * mu * m3 + 6 * mu * mu * m2 - 3 * mu * mu * mu * mu)
-        |                  / pow(m2 - mu * mu, 2) - 3, 6) AS DOUBLE) AS excess_kurtosis
-        |FROM f
-        |ORDER BY pri""".stripMargin)
-  }
+      |ORDER BY pri""".stripMargin)
 
   /** Flesch-style readability from integer counts: words (whitespace
     * tokens), sentences (terminal punctuation runs), syllables (vowel
@@ -115,8 +86,7 @@ object Round4Ops23 {
     * tokenization drift). The curation filter that keeps source files
     * out of a prose corpus — map-only codegen.
     */
-  val text_code_detect = OpQuery(
-    "text_code_detect",
+  val text_code_detect = OpQuery.sql("text_code_detect", "documents")(
     """WITH feat AS (
       |  SELECT doc_id,
       |         length(text) AS n,
@@ -128,22 +98,9 @@ object Round4Ops23 {
       |       CAST(digits AS BIGINT) AS digits,
       |       CAST(code_chars * 20 >= n OR digits * 5 >= n AS BOOLEAN) AS looks_like_code
       |FROM feat
-      |ORDER BY doc_id""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "documents").createOrReplaceTempView("graft_code_docs")
-    spark.sql(
-      """WITH feat AS (
-        |  SELECT doc_id,
-        |         length(text) AS n,
-        |         length(text) - length(regexp_replace(text, '[{};=()<>#\\[\\]]', '')) AS code_chars,
-        |         length(text) - length(regexp_replace(text, '[0-9]', '')) AS digits
-        |  FROM graft_code_docs WHERE length(text) > 0)
-        |SELECT doc_id, CAST(n AS BIGINT) AS n,
-        |       CAST(code_chars AS BIGINT) AS code_chars,
-        |       CAST(digits AS BIGINT) AS digits,
-        |       CAST(code_chars * 20 >= n OR digits * 5 >= n AS BOOLEAN) AS looks_like_code
-        |FROM feat
-        |ORDER BY doc_id""".stripMargin)
-  }
+      |ORDER BY doc_id""".stripMargin,
+    """'[{};=()<>#\[\]]'""" -> """'[{};=()<>#\\[\\]]'""",
+    ", 'g')" -> ")")
 
   /** Hive-style partition discovery: write partitioned by a low-
     * cardinality column, read the directory tree back (partition column

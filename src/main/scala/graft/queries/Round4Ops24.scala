@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
 import graft.Tables
 
 /** Round-4 batch 24: seasonal decomposition, timezone conversion,
@@ -85,8 +83,7 @@ object Round4Ops24 {
     * value is BIT-EXACT — no accumulation-order variance, no rounding
     * tolerance needed. One day-ordered window partition-wide.
     */
-  val ts_ewma = OpQuery(
-    "ts_ewma",
+  val ts_ewma = OpQuery.sql("ts_ewma", "events")(
     """WITH daily AS (
       |  SELECT CAST(ts AS DATE) AS d,
       |         SUM(CAST(ROUND(value * 100) AS BIGINT)) AS cents
@@ -105,29 +102,9 @@ object Round4Ops24 {
       |SELECT strftime(d, '%Y-%m-%d') AS day, CAST(cents AS BIGINT) AS cents,
       |       CAST(ewma AS DOUBLE) AS ewma_cents
       |FROM w
-      |ORDER BY d""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "events").createOrReplaceTempView("graft_ewma_events")
-    spark.sql(
-      """WITH daily AS (
-        |  SELECT CAST(ts AS DATE) AS d,
-        |         SUM(CAST(ROUND(value * 100) AS BIGINT)) AS cents
-        |  FROM graft_ewma_events WHERE event_type = 'purchase' GROUP BY CAST(ts AS DATE)),
-        |w AS (
-        |  SELECT d, cents,
-        |         cents
-        |         + coalesce(lag(cents, 1) OVER (ORDER BY d), 0) * 0.5
-        |         + coalesce(lag(cents, 2) OVER (ORDER BY d), 0) * 0.25
-        |         + coalesce(lag(cents, 3) OVER (ORDER BY d), 0) * 0.125
-        |         + coalesce(lag(cents, 4) OVER (ORDER BY d), 0) * 0.0625
-        |         + coalesce(lag(cents, 5) OVER (ORDER BY d), 0) * 0.03125
-        |         + coalesce(lag(cents, 6) OVER (ORDER BY d), 0) * 0.015625
-        |         + coalesce(lag(cents, 7) OVER (ORDER BY d), 0) * 0.0078125 AS ewma
-        |  FROM daily)
-        |SELECT date_format(d, 'yyyy-MM-dd') AS day, CAST(cents AS BIGINT) AS cents,
-        |       CAST(ewma AS DOUBLE) AS ewma_cents
-        |FROM w
-        |ORDER BY d""".stripMargin)
-  }
+      |ORDER BY d""".stripMargin,
+    "strftime(" -> "date_format(",
+    "'%Y-%m-%d'" -> "'yyyy-MM-dd'")
 
   /** Triangle counting on the co-supply graph (suppliers sharing a
     * part), with the standard super-node exclusion: parts supplied by
@@ -137,8 +114,7 @@ object Round4Ops24 {
     * otherwise quadruples the edge list. Edges are oriented (u < v) so
     * each triangle counts once via the two-hop wedge join.
     */
-  val graph_triangles = OpQuery(
-    "graph_triangles",
+  val graph_triangles = OpQuery.sql("graph_triangles", "lineitem")(
     """WITH eligible AS (
       |  SELECT l_partkey FROM lineitem GROUP BY l_partkey
       |  HAVING COUNT(DISTINCT l_suppkey) <= 4),
@@ -151,23 +127,7 @@ object Round4Ops24 {
       |       CAST(COUNT(*) AS BIGINT) AS n_triangles
       |FROM edges e1
       |JOIN edges e2 ON e2.u = e1.v
-      |JOIN edges e3 ON e3.u = e1.u AND e3.v = e2.v""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "lineitem").createOrReplaceTempView("graft_tri_lineitem")
-    spark.sql(
-      """WITH eligible AS (
-        |  SELECT l_partkey FROM graft_tri_lineitem GROUP BY l_partkey
-        |  HAVING COUNT(DISTINCT l_suppkey) <= 4),
-        |edges AS (
-        |  SELECT DISTINCT a.l_suppkey AS u, b.l_suppkey AS v
-        |  FROM graft_tri_lineitem a
-        |  JOIN eligible e ON a.l_partkey = e.l_partkey
-        |  JOIN graft_tri_lineitem b ON a.l_partkey = b.l_partkey AND a.l_suppkey < b.l_suppkey)
-        |SELECT CAST((SELECT COUNT(*) FROM edges) AS BIGINT) AS n_edges,
-        |       CAST(COUNT(*) AS BIGINT) AS n_triangles
-        |FROM edges e1
-        |JOIN edges e2 ON e2.u = e1.v
-        |JOIN edges e3 ON e3.u = e1.u AND e3.v = e2.v""".stripMargin)
-  }
+      |JOIN edges e3 ON e3.u = e1.u AND e3.v = e2.v""".stripMargin)
 
   /** Outer generators: explode_outer keeps the parent row (as a null
     * element) when its array is empty — the LEFT JOIN of the generator

@@ -1,8 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-
 import graft.Tables
 import graft.operators.Multimodal
 
@@ -17,8 +14,7 @@ object Round4Ops26 {
     * from. Token counts are exact integers; shares divide by the same
     * broadcast total on both engines.
     */
-  val corpus_mixture = OpQuery(
-    "corpus_mixture",
+  val corpus_mixture = OpQuery.sql("corpus_mixture", "documents")(
     """WITH per AS (
       |  SELECT lang, source, COUNT(*) AS docs,
       |         SUM(len(regexp_extract_all(trim(text), '\S+'))) AS tokens
@@ -28,20 +24,9 @@ object Round4Ops26 {
       |       CAST(tokens AS BIGINT) AS tokens,
       |       CAST(ROUND(CAST(tokens AS DOUBLE) / t, 6) AS DOUBLE) AS token_share
       |FROM per, tot
-      |ORDER BY lang, source""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "documents").createOrReplaceTempView("graft_mix_docs")
-    spark.sql(
-      """WITH per AS (
-        |  SELECT lang, source, COUNT(*) AS docs,
-        |         SUM(size(regexp_extract_all(trim(text), '\\S+', 0))) AS tokens
-        |  FROM graft_mix_docs GROUP BY lang, source),
-        |tot AS (SELECT SUM(tokens) AS t FROM per)
-        |SELECT lang, source, CAST(docs AS BIGINT) AS docs,
-        |       CAST(tokens AS BIGINT) AS tokens,
-        |       CAST(ROUND(CAST(tokens AS DOUBLE) / t, 6) AS DOUBLE) AS token_share
-        |FROM per, tot
-        |ORDER BY lang, source""".stripMargin)
-  }
+      |ORDER BY lang, source""".stripMargin,
+    """len(regexp_extract_all(trim(text), '\S+'))""" ->
+      """size(regexp_extract_all(trim(text), '\\S+', 0))""")
 
   /** Time-to-convert: first view → first purchase latency per user in
     * whole seconds, summarized as exact interpolated quartiles plus the
@@ -139,8 +124,7 @@ object Round4Ops26 {
     * list every BM25/TF-IDF deployment precomputes. One distinct-doc
     * aggregate on the uniform term key.
     */
-  val text_stopword_discovery = OpQuery(
-    "text_stopword_discovery",
+  val text_stopword_discovery = OpQuery.sql("text_stopword_discovery", "documents")(
     """WITH toks AS (
       |  SELECT DISTINCT doc_id, term FROM (
       |    SELECT doc_id, unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS term
@@ -151,21 +135,9 @@ object Round4Ops26 {
       |       CAST(ROUND(CAST(doc_freq AS DOUBLE) / n_docs, 4) AS DOUBLE) AS doc_share
       |FROM df, n
       |WHERE doc_freq * 10 >= n_docs * 6
-      |ORDER BY doc_freq DESC, term""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "documents").createOrReplaceTempView("graft_stop_docs")
-    spark.sql(
-      """WITH toks AS (
-        |  SELECT DISTINCT doc_id, term FROM (
-        |    SELECT doc_id, explode(split(lower(trim(text)), '\\s+')) AS term
-        |    FROM graft_stop_docs)),
-        |n AS (SELECT COUNT(*) AS n_docs FROM graft_stop_docs),
-        |df AS (SELECT term, COUNT(*) AS doc_freq FROM toks WHERE term <> '' GROUP BY term)
-        |SELECT term, CAST(doc_freq AS BIGINT) AS doc_freq,
-        |       CAST(ROUND(CAST(doc_freq AS DOUBLE) / n_docs, 4) AS DOUBLE) AS doc_share
-        |FROM df, n
-        |WHERE doc_freq * 10 >= n_docs * 6
-        |ORDER BY doc_freq DESC, term""".stripMargin)
-  }
+      |ORDER BY doc_freq DESC, term""".stripMargin,
+    "unnest(regexp_split_to_array(" -> "explode(split(",
+    """'\s+'""" -> """'\\s+'""")
 
   val all: Seq[OpQuery] = Seq(
     corpus_mixture, event_time_to_convert, mm_audio_windows,

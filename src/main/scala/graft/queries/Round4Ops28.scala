@@ -1,9 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
-import graft.Tables
-
 /** Round-4 batch 28: the remaining famous TPC-H query SHAPES, adapted to
   * this schema (no partsupp/phone/comment columns) — each exercises a
   * distinct planner pattern: aggregate-reuse with a global threshold
@@ -16,8 +12,7 @@ object Round4Ops28 {
     * the aggregate computed once per part, then re-aggregated for the
     * broadcast scalar; the HAVING comparison reuses, not recomputes.
     */
-  val tpch_q11_shape = OpQuery(
-    "tpch_q11_shape",
+  val tpch_q11_shape = OpQuery.sql("tpch_q11_shape", "lineitem")(
     """WITH value_per_part AS (
       |  SELECT l_partkey,
       |         SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS v
@@ -25,25 +20,13 @@ object Round4Ops28 {
       |SELECT l_partkey, CAST(v AS DOUBLE) AS part_value
       |FROM value_per_part
       |WHERE v > (SELECT SUM(v) * 0.0005 FROM value_per_part)
-      |ORDER BY part_value DESC, l_partkey""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "lineitem").createOrReplaceTempView("graft_q11_lineitem")
-    spark.sql(
-      """WITH value_per_part AS (
-        |  SELECT l_partkey,
-        |         SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS v
-        |  FROM graft_q11_lineitem GROUP BY l_partkey)
-        |SELECT l_partkey, CAST(v AS DOUBLE) AS part_value
-        |FROM value_per_part
-        |WHERE v > (SELECT SUM(v) * 0.0005 FROM value_per_part)
-        |ORDER BY part_value DESC, l_partkey""".stripMargin)
-  }
+      |ORDER BY part_value DESC, l_partkey""".stripMargin)
 
   /** Q13 shape: orders-per-customer distribution INCLUDING zero-order
     * customers — the left join whose null side must survive two
     * aggregation levels.
     */
-  val tpch_q13_shape = OpQuery(
-    "tpch_q13_shape",
+  val tpch_q13_shape = OpQuery.sql("tpch_q13_shape", "customer", "orders")(
     """WITH per_cust AS (
       |  SELECT c.c_custkey, COUNT(o.o_orderkey) AS n_orders
       |  FROM customer c
@@ -54,29 +37,13 @@ object Round4Ops28 {
       |       CAST(COUNT(*) AS BIGINT) AS n_customers
       |FROM per_cust
       |GROUP BY n_orders
-      |ORDER BY n_customers DESC, n_orders DESC""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "customer").createOrReplaceTempView("graft_q13_customer")
-    Tables.load(spark, dir, "orders").createOrReplaceTempView("graft_q13_orders")
-    spark.sql(
-      """WITH per_cust AS (
-        |  SELECT c.c_custkey, COUNT(o.o_orderkey) AS n_orders
-        |  FROM graft_q13_customer c
-        |  LEFT JOIN graft_q13_orders o
-        |    ON c.c_custkey = o.o_custkey AND o.o_orderpriority <> '1-URGENT'
-        |  GROUP BY c.c_custkey)
-        |SELECT CAST(n_orders AS BIGINT) AS n_orders,
-        |       CAST(COUNT(*) AS BIGINT) AS n_customers
-        |FROM per_cust
-        |GROUP BY n_orders
-        |ORDER BY n_customers DESC, n_orders DESC""".stripMargin)
-  }
+      |ORDER BY n_customers DESC, n_orders DESC""".stripMargin)
 
   /** Q15 shape: top revenue supplier(s) via equality with the MAX of the
     * same derived view — ties must ALL surface (the reason Q15 is a
     * correctness trap for argmax shortcuts).
     */
-  val tpch_q15_shape = OpQuery(
-    "tpch_q15_shape",
+  val tpch_q15_shape = OpQuery.sql("tpch_q15_shape", "lineitem", "supplier")(
     """WITH revenue AS (
       |  SELECT l_suppkey,
       |         SUM(CAST(l_extendedprice AS DECIMAL(18,2))
@@ -88,30 +55,13 @@ object Round4Ops28 {
       |SELECT s.s_suppkey, s.s_name, CAST(r.total AS DOUBLE) AS total_revenue
       |FROM supplier s JOIN revenue r ON s.s_suppkey = r.l_suppkey
       |WHERE r.total = (SELECT MAX(total) FROM revenue)
-      |ORDER BY s.s_suppkey""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "lineitem").createOrReplaceTempView("graft_q15_lineitem")
-    Tables.load(spark, dir, "supplier").createOrReplaceTempView("graft_q15_supplier")
-    spark.sql(
-      """WITH revenue AS (
-        |  SELECT l_suppkey,
-        |         SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-        |             * (1 - CAST(l_discount AS DECIMAL(4,2)))) AS total
-        |  FROM graft_q15_lineitem
-        |  WHERE l_shipdate >= TIMESTAMP '1998-01-01'
-        |    AND l_shipdate < TIMESTAMP '1997-07-01'
-        |  GROUP BY l_suppkey)
-        |SELECT s.s_suppkey, s.s_name, CAST(r.total AS DOUBLE) AS total_revenue
-        |FROM graft_q15_supplier s JOIN revenue r ON s.s_suppkey = r.l_suppkey
-        |WHERE r.total = (SELECT MAX(total) FROM revenue)
-        |ORDER BY s.s_suppkey""".stripMargin)
-  }
+      |ORDER BY s.s_suppkey""".stripMargin)
 
   /** Q18 shape: large-volume orders — the IN over a grouped-HAVING
     * subquery on the same fact (semi-join against an aggregate of
     * yourself), then the customer spine join.
     */
-  val tpch_q18_shape = OpQuery(
-    "tpch_q18_shape",
+  val tpch_q18_shape = OpQuery.sql("tpch_q18_shape", "customer", "orders", "lineitem")(
     """SELECT c.c_custkey, o.o_orderkey,
       |       strftime(o.o_orderdate, '%Y-%m-%d') AS order_date,
       |       CAST(SUM(CAST(l.l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS total_qty
@@ -122,30 +72,15 @@ object Round4Ops28 {
       |  SELECT l_orderkey FROM lineitem
       |  GROUP BY l_orderkey HAVING SUM(CAST(l_quantity AS DECIMAL(18,2))) > 250)
       |GROUP BY c.c_custkey, o.o_orderkey, o.o_orderdate
-      |ORDER BY total_qty DESC, o.o_orderkey""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "customer").createOrReplaceTempView("graft_q18_customer")
-    Tables.load(spark, dir, "orders").createOrReplaceTempView("graft_q18_orders")
-    Tables.load(spark, dir, "lineitem").createOrReplaceTempView("graft_q18_lineitem")
-    spark.sql(
-      """SELECT c.c_custkey, o.o_orderkey,
-        |       date_format(o.o_orderdate, 'yyyy-MM-dd') AS order_date,
-        |       CAST(SUM(CAST(l.l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS total_qty
-        |FROM graft_q18_customer c
-        |JOIN graft_q18_orders o ON c.c_custkey = o.o_custkey
-        |JOIN graft_q18_lineitem l ON o.o_orderkey = l.l_orderkey
-        |WHERE o.o_orderkey IN (
-        |  SELECT l_orderkey FROM graft_q18_lineitem
-        |  GROUP BY l_orderkey HAVING SUM(CAST(l_quantity AS DECIMAL(18,2))) > 250)
-        |GROUP BY c.c_custkey, o.o_orderkey, o.o_orderdate
-        |ORDER BY total_qty DESC, o.o_orderkey""".stripMargin)
-  }
+      |ORDER BY total_qty DESC, o.o_orderkey""".stripMargin,
+    "strftime(" -> "date_format(",
+    "'%Y-%m-%d'" -> "'yyyy-MM-dd'")
 
   /** Q22 shape: above-average-balance customers with NO orders, grouped
     * by nation band — scalar-average subquery + anti-join, the
     * "dormant high-value accounts" report.
     */
-  val tpch_q22_shape = OpQuery(
-    "tpch_q22_shape",
+  val tpch_q22_shape = OpQuery.sql("tpch_q22_shape", "customer", "orders")(
     """WITH avg_bal AS (
       |  SELECT AVG(c_acctbal) AS a FROM customer WHERE c_acctbal > 0),
       |dormant AS (
@@ -159,25 +94,7 @@ object Round4Ops28 {
       |       CAST(ROUND(SUM(CAST(c_acctbal AS DECIMAL(18,2))), 2) AS DOUBLE) AS total_bal
       |FROM dormant
       |GROUP BY nation_band
-      |ORDER BY nation_band""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "customer").createOrReplaceTempView("graft_q22_customer")
-    Tables.load(spark, dir, "orders").createOrReplaceTempView("graft_q22_orders")
-    spark.sql(
-      """WITH avg_bal AS (
-        |  SELECT AVG(c_acctbal) AS a FROM graft_q22_customer WHERE c_acctbal > 0),
-        |dormant AS (
-        |  SELECT c.c_nationkey % 5 AS nation_band, c.c_acctbal
-        |  FROM graft_q22_customer c, avg_bal
-        |  WHERE c.c_acctbal > avg_bal.a
-        |    AND NOT EXISTS (SELECT 1 FROM graft_q22_orders o WHERE o.o_custkey = c.c_custkey
-        |      AND o.o_orderdate >= TIMESTAMP '1998-01-01'))
-        |SELECT CAST(nation_band AS INT) AS nation_band,
-        |       CAST(COUNT(*) AS BIGINT) AS n_custs,
-        |       CAST(ROUND(SUM(CAST(c_acctbal AS DECIMAL(18,2))), 2) AS DOUBLE) AS total_bal
-        |FROM dormant
-        |GROUP BY nation_band
-        |ORDER BY nation_band""".stripMargin)
-  }
+      |ORDER BY nation_band""".stripMargin)
 
   val all: Seq[OpQuery] = Seq(
     tpch_q11_shape, tpch_q13_shape, tpch_q15_shape, tpch_q18_shape,

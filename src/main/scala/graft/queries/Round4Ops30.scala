@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
 import graft.Tables
 
 /** Round-4 batch 30: slug normalization, PSI distribution drift,
@@ -13,23 +11,16 @@ object Round4Ops30 {
     * pair every content pipeline carries. Map-only codegen regexes,
     * identical semantics both engines.
     */
-  val f_slugify = OpQuery(
-    "f_slugify",
+  val f_slugify = OpQuery.sql("f_slugify", "documents")(
     """SELECT doc_id,
       |       trim(regexp_replace(lower(concat(source, ' ', lang, ' doc ', CAST(doc_id AS VARCHAR))),
       |                          '[^a-z0-9]+', '-', 'g'), '-') AS slug,
       |       split_part(source, 'c', 2) AS src_num
       |FROM documents
-      |ORDER BY doc_id""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "documents").createOrReplaceTempView("graft_slug_docs")
-    spark.sql(
-      """SELECT doc_id,
-        |       trim(BOTH '-' FROM regexp_replace(lower(concat(source, ' ', lang, ' doc ', CAST(doc_id AS STRING))),
-        |                          '[^a-z0-9]+', '-')) AS slug,
-        |       split_part(source, 'c', 2) AS src_num
-        |FROM graft_slug_docs
-        |ORDER BY doc_id""".stripMargin)
-  }
+      |ORDER BY doc_id""".stripMargin,
+    "trim(regexp_replace(" -> "trim(BOTH '-' FROM regexp_replace(",
+    "'-', 'g'), '-')" -> "'-'))",
+    "VARCHAR" -> "STRING")
 
   /** Population stability index between the first and second half of the
     * event stream, per value band — the drift metric every deployed
@@ -83,8 +74,7 @@ object Round4Ops30 {
     * Two aggregates on the user key sharing one shuffle, then a
     * day-keyed rollup.
     */
-  val event_new_returning = OpQuery(
-    "event_new_returning",
+  val event_new_returning = OpQuery.sql("event_new_returning", "events")(
     """WITH active AS (
       |  SELECT DISTINCT user_id, CAST(ts AS DATE) AS d FROM events),
       |firsts AS (
@@ -94,43 +84,22 @@ object Round4Ops30 {
       |       CAST(SUM(CASE WHEN a.d > f.first_day THEN 1 ELSE 0 END) AS BIGINT) AS returning_users
       |FROM active a JOIN firsts f ON a.user_id = f.user_id
       |GROUP BY a.d
-      |ORDER BY a.d""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "events").createOrReplaceTempView("graft_nr_events")
-    spark.sql(
-      """WITH active AS (
-        |  SELECT DISTINCT user_id, CAST(ts AS DATE) AS d FROM graft_nr_events),
-        |firsts AS (
-        |  SELECT user_id, MIN(d) AS first_day FROM active GROUP BY user_id)
-        |SELECT date_format(a.d, 'yyyy-MM-dd') AS day,
-        |       CAST(SUM(CASE WHEN a.d = f.first_day THEN 1 ELSE 0 END) AS BIGINT) AS new_users,
-        |       CAST(SUM(CASE WHEN a.d > f.first_day THEN 1 ELSE 0 END) AS BIGINT) AS returning_users
-        |FROM active a JOIN firsts f ON a.user_id = f.user_id
-        |GROUP BY a.d
-        |ORDER BY a.d""".stripMargin)
-  }
+      |ORDER BY a.d""".stripMargin,
+    "strftime(" -> "date_format(",
+    "'%Y-%m-%d'" -> "'yyyy-MM-dd'")
 
   /** Day-of-week × hour activity heatmap — the grid behind every usage
     * dashboard. One aggregate on the (dow, hour) key.
     */
-  val event_heatmap = OpQuery(
-    "event_heatmap",
+  val event_heatmap = OpQuery.sql("event_heatmap", "events")(
     """SELECT CAST(dayofweek(CAST(ts AS DATE)) AS INT) AS dow,
       |       CAST(hour(ts) AS INT) AS hr,
       |       CAST(COUNT(*) AS BIGINT) AS n,
       |       CAST(COUNT(DISTINCT user_id) AS BIGINT) AS users
       |FROM events
       |GROUP BY dayofweek(CAST(ts AS DATE)), hour(ts)
-      |ORDER BY dow, hr""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "events").createOrReplaceTempView("graft_hm_events")
-    spark.sql(
-      """SELECT CAST(dayofweek(CAST(ts AS DATE)) - 1 AS INT) AS dow,
-        |       CAST(hour(ts) AS INT) AS hr,
-        |       CAST(COUNT(*) AS BIGINT) AS n,
-        |       CAST(COUNT(DISTINCT user_id) AS BIGINT) AS users
-        |FROM graft_hm_events
-        |GROUP BY dayofweek(CAST(ts AS DATE)) - 1, hour(ts)
-        |ORDER BY dow, hr""".stripMargin)
-  }
+      |ORDER BY dow, hr""".stripMargin,
+    "dayofweek(CAST(ts AS DATE))" -> "dayofweek(CAST(ts AS DATE)) - 1")
 
   val all: Seq[OpQuery] = Seq(
     f_slugify, dq_psi_drift, event_new_returning, event_heatmap)

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -107,8 +106,7 @@ object Round4Ops31 {
     * approximation). Exact integer numerators; the closed-form bound is
     * one shared float expression (z = 1.96).
     */
-  val a32_wilson_ci = OpQuery(
-    "a32_wilson_ci",
+  val a32_wilson_ci = OpQuery.sql("a32_wilson_ci", "events")(
     """WITH per AS (
       |  SELECT user_id % 10 AS cohort,
       |         SUM(hv) AS views,
@@ -132,42 +130,14 @@ object Round4Ops31 {
       |                   + 1.96 * sqrt((p * (1 - p) + z2 / (4 * views)) / views))
       |                  / (1 + z2 / views), 6) AS DOUBLE) AS wilson_hi
       |FROM ci
-      |ORDER BY cohort""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "events").createOrReplaceTempView("graft_wci_events")
-    spark.sql(
-      """WITH per AS (
-        |  SELECT user_id % 10 AS cohort,
-        |         SUM(hv) AS views,
-        |         SUM(hv * hb) AS buys
-        |  FROM (SELECT user_id,
-        |               MAX(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS hv,
-        |               MAX(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS hb
-        |        FROM graft_wci_events GROUP BY user_id)
-        |  GROUP BY user_id % 10),
-        |ci AS (
-        |  SELECT cohort, views, buys,
-        |         CAST(buys AS DOUBLE) / views AS p,
-        |         1.96 * 1.96 AS z2
-        |  FROM per WHERE views > 0)
-        |SELECT CAST(cohort AS BIGINT) AS cohort,
-        |       CAST(views AS BIGINT) AS views, CAST(buys AS BIGINT) AS buys,
-        |       CAST(ROUND((p + z2 / (2 * views)
-        |                   - 1.96 * sqrt((p * (1 - p) + z2 / (4 * views)) / views))
-        |                  / (1 + z2 / views), 6) AS DOUBLE) AS wilson_lo,
-        |       CAST(ROUND((p + z2 / (2 * views)
-        |                   + 1.96 * sqrt((p * (1 - p) + z2 / (4 * views)) / views))
-        |                  / (1 + z2 / views), 6) AS DOUBLE) AS wilson_hi
-        |FROM ci
-        |ORDER BY cohort""".stripMargin)
-  }
+      |ORDER BY cohort""".stripMargin)
 
   /** Variance / stddev from exact DECIMAL moments — population and
     * sample variants from the same Σx, Σx² (definition-free, order-free;
     * the one place engines' var_samp/var_pop built-ins are bypassed so
     * the gate is about the math, not the accumulator).
     */
-  val a31_variance = OpQuery(
-    "a31_variance",
+  val a31_variance = OpQuery.sql("a31_variance", "lineitem")(
     """WITH m AS (
       |  SELECT l_returnflag AS grp, COUNT(*) AS n,
       |         SUM(CAST(CAST(ROUND(l_extendedprice) AS BIGINT) AS DECIMAL(38,0))) AS s1,
@@ -179,22 +149,7 @@ object Round4Ops31 {
       |       CAST(ROUND((CAST(s2 AS DOUBLE) - CAST(s1 AS DOUBLE) * s1 / n) / (n - 1), 4) AS DOUBLE) AS var_samp,
       |       CAST(ROUND(sqrt((CAST(s2 AS DOUBLE) - CAST(s1 AS DOUBLE) * s1 / n) / n), 4) AS DOUBLE) AS stddev_pop
       |FROM m
-      |ORDER BY grp""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "lineitem").createOrReplaceTempView("graft_var_lineitem")
-    spark.sql(
-      """WITH m AS (
-        |  SELECT l_returnflag AS grp, COUNT(*) AS n,
-        |         SUM(CAST(CAST(ROUND(l_extendedprice) AS BIGINT) AS DECIMAL(38,0))) AS s1,
-        |         SUM(CAST(CAST(ROUND(l_extendedprice) AS BIGINT) AS DECIMAL(38,0))
-        |             * CAST(ROUND(l_extendedprice) AS BIGINT)) AS s2
-        |  FROM graft_var_lineitem GROUP BY l_returnflag)
-        |SELECT grp, CAST(n AS BIGINT) AS n,
-        |       CAST(ROUND((CAST(s2 AS DOUBLE) - CAST(s1 AS DOUBLE) * s1 / n) / n, 4) AS DOUBLE) AS var_pop,
-        |       CAST(ROUND((CAST(s2 AS DOUBLE) - CAST(s1 AS DOUBLE) * s1 / n) / (n - 1), 4) AS DOUBLE) AS var_samp,
-        |       CAST(ROUND(sqrt((CAST(s2 AS DOUBLE) - CAST(s1 AS DOUBLE) * s1 / n) / n), 4) AS DOUBLE) AS stddev_pop
-        |FROM m
-        |ORDER BY grp""".stripMargin)
-  }
+      |ORDER BY grp""".stripMargin)
 
   val all: Seq[OpQuery] = Seq(
     ivm_join_refresh, ts_forecast_snaive, a32_wilson_ci, a31_variance)

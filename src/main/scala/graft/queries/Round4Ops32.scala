@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -85,8 +84,7 @@ object Round4Ops32 {
     * (equi on the uniform user key, so one shuffle), aggregated to a
     * per-day abandonment rate.
     */
-  val event_abandonment = OpQuery(
-    "event_abandonment",
+  val event_abandonment = OpQuery.sql("event_abandonment", "events")(
     """WITH views AS (
       |  SELECT event_id, user_id, ts FROM events WHERE event_type = 'view'),
       |abandoned AS (
@@ -100,45 +98,23 @@ object Round4Ops32 {
       |       CAST(COUNT(*) AS BIGINT) AS abandoned_views
       |FROM abandoned
       |GROUP BY CAST(ts AS DATE)
-      |ORDER BY day""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "events").createOrReplaceTempView("graft_ab_events")
-    spark.sql(
-      """WITH views AS (
-        |  SELECT event_id, user_id, ts FROM graft_ab_events WHERE event_type = 'view'),
-        |abandoned AS (
-        |  SELECT v.event_id, v.ts
-        |  FROM views v
-        |  WHERE NOT EXISTS (
-        |    SELECT 1 FROM graft_ab_events p
-        |    WHERE p.event_type = 'purchase' AND p.user_id = v.user_id
-        |      AND p.ts >= v.ts AND p.ts < v.ts + INTERVAL 24 HOUR))
-        |SELECT date_format(CAST(ts AS DATE), 'yyyy-MM-dd') AS day,
-        |       CAST(COUNT(*) AS BIGINT) AS abandoned_views
-        |FROM abandoned
-        |GROUP BY CAST(ts AS DATE)
-        |ORDER BY day""".stripMargin)
-  }
+      |ORDER BY day""".stripMargin,
+    "strftime(" -> "date_format(",
+    "'%Y-%m-%d'" -> "'yyyy-MM-dd'")
 
   /** Format-string parity: thousands-separated numbers, zero-padded
     * ids, printf composition — the report-rendering long tail.
     */
-  val f_format = OpQuery(
-    "f_format",
+  val f_format = OpQuery.sql("f_format", "orders")(
     """SELECT o_orderkey,
       |       format('{:,}', CAST(ROUND(o_totalprice) AS BIGINT)) AS pretty_total,
       |       lpad(CAST(o_orderkey AS VARCHAR), 10, '0') AS padded_id,
       |       printf('%s/%d', o_orderstatus, CAST(year(o_orderdate) AS INT)) AS status_year
       |FROM orders
-      |ORDER BY o_orderkey""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "orders").createOrReplaceTempView("graft_fmt_orders")
-    spark.sql(
-      """SELECT o_orderkey,
-        |       format_number(CAST(ROUND(o_totalprice) AS BIGINT), 0) AS pretty_total,
-        |       lpad(CAST(o_orderkey AS STRING), 10, '0') AS padded_id,
-        |       printf('%s/%d', o_orderstatus, CAST(year(o_orderdate) AS INT)) AS status_year
-        |FROM graft_fmt_orders
-        |ORDER BY o_orderkey""".stripMargin)
-  }
+      |ORDER BY o_orderkey""".stripMargin,
+    "format('{:,}', CAST(ROUND(o_totalprice) AS BIGINT))" ->
+      "format_number(CAST(ROUND(o_totalprice) AS BIGINT), 0)",
+    "VARCHAR" -> "STRING")
 
   val all: Seq[OpQuery] = Seq(
     mm_image_tiles, s28_recursive_lookup, event_abandonment, f_format)

@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
 import graft.Tables
 
 /** Round-4 batch 34: preference-pair (DPO) assembly, tokenizer
@@ -15,8 +13,7 @@ object Round4Ops34 {
     * a preference trainer ingests. Byte-identical serialization is
     * hash-pinned; ranking windows run per (lang, source) partition.
     */
-  val format_dpo_pairs = OpQuery(
-    "format_dpo_pairs",
+  val format_dpo_pairs = OpQuery.sql("format_dpo_pairs", "documents")(
     """WITH ranked AS (
       |  SELECT lang, source, doc_id, text,
       |         ROW_NUMBER() OVER (PARTITION BY lang, source ORDER BY n_chars DESC, doc_id) AS best,
@@ -31,33 +28,15 @@ object Round4Ops34 {
       |              ',"rejected_len":', CAST(length(r.rejected) AS VARCHAR), '}') AS pair_json
       |FROM chosen c JOIN rejected r ON c.lang = r.lang AND c.source = r.source
       |WHERE c.chosen_id <> r.rejected_id
-      |ORDER BY c.lang, c.source""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "documents").createOrReplaceTempView("graft_dpo_docs")
-    spark.sql(
-      """WITH ranked AS (
-        |  SELECT lang, source, doc_id, text,
-        |         ROW_NUMBER() OVER (PARTITION BY lang, source ORDER BY n_chars DESC, doc_id) AS best,
-        |         ROW_NUMBER() OVER (PARTITION BY lang, source ORDER BY n_chars ASC, doc_id) AS worst
-        |  FROM graft_dpo_docs),
-        |chosen AS (SELECT lang, source, doc_id AS chosen_id, text AS chosen FROM ranked WHERE best = 1),
-        |rejected AS (SELECT lang, source, doc_id AS rejected_id, text AS rejected FROM ranked WHERE worst = 1)
-        |SELECT c.lang, c.source,
-        |       concat('{"chosen_id":', CAST(c.chosen_id AS STRING),
-        |              ',"rejected_id":', CAST(r.rejected_id AS STRING),
-        |              ',"chosen_len":', CAST(length(c.chosen) AS STRING),
-        |              ',"rejected_len":', CAST(length(r.rejected) AS STRING), '}') AS pair_json
-        |FROM chosen c JOIN rejected r ON c.lang = r.lang AND c.source = r.source
-        |WHERE c.chosen_id <> r.rejected_id
-        |ORDER BY c.lang, c.source""".stripMargin)
-  }
+      |ORDER BY c.lang, c.source""".stripMargin,
+    "VARCHAR" -> "STRING")
 
   /** Tokenizer fertility: BPE-ish subword count over whitespace words
     * per language — the metric that decides whether a tokenizer wastes
     * budget on a language. Both counts are exact regex counts; one
     * aggregate on the lang key.
     */
-  val text_fertility = OpQuery(
-    "text_fertility",
+  val text_fertility = OpQuery.sql("text_fertility", "documents")(
     """WITH per AS (
       |  SELECT lang,
       |         SUM(len(regexp_extract_all(trim(text), '\S+'))) AS words,
@@ -67,20 +46,11 @@ object Round4Ops34 {
       |       CAST(subwords AS BIGINT) AS subwords,
       |       CAST(ROUND(CAST(subwords AS DOUBLE) / words, 4) AS DOUBLE) AS fertility
       |FROM per
-      |ORDER BY lang""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "documents").createOrReplaceTempView("graft_fert_docs")
-    spark.sql(
-      """WITH per AS (
-        |  SELECT lang,
-        |         SUM(size(regexp_extract_all(trim(text), '\\S+', 0))) AS words,
-        |         SUM(size(regexp_extract_all(text, '[A-Za-z0-9]+|[^A-Za-z0-9\\s]', 0))) AS subwords
-        |  FROM graft_fert_docs GROUP BY lang)
-        |SELECT lang, CAST(words AS BIGINT) AS words,
-        |       CAST(subwords AS BIGINT) AS subwords,
-        |       CAST(ROUND(CAST(subwords AS DOUBLE) / words, 4) AS DOUBLE) AS fertility
-        |FROM per
-        |ORDER BY lang""".stripMargin)
-  }
+      |ORDER BY lang""".stripMargin,
+    """len(regexp_extract_all(trim(text), '\S+'))""" ->
+      """size(regexp_extract_all(trim(text), '\\S+', 0))""",
+    """len(regexp_extract_all(text, '[A-Za-z0-9]+|[^A-Za-z0-9\s]'))""" ->
+      """size(regexp_extract_all(text, '[A-Za-z0-9]+|[^A-Za-z0-9\\s]', 0))""")
 
   /** VARIANT array explosion (Spark 4): a JSON array parsed to variant
     * and exploded to typed rows — the semi-structured fan-out path. The

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -51,8 +50,7 @@ object Round4Ops35 {
     * single-pass accumulators for the definition itself, like
     * a31_variance does for variance.
     */
-  val a33_corr = OpQuery(
-    "a33_corr",
+  val a33_corr = OpQuery.sql("a33_corr", "lineitem")(
     """WITH b AS (
       |  SELECT l_returnflag AS grp,
       |         CAST(ROUND(l_extendedprice) AS BIGINT) AS x,
@@ -71,29 +69,7 @@ object Round4Ops35 {
       |            / (sqrt(CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * sx / n)
       |               * sqrt(CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * sy / n)), 6) AS DOUBLE) AS corr
       |FROM m
-      |ORDER BY grp""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "lineitem").createOrReplaceTempView("graft_corr_lineitem")
-    spark.sql(
-      """WITH b AS (
-        |  SELECT l_returnflag AS grp,
-        |         CAST(ROUND(l_extendedprice) AS BIGINT) AS x,
-        |         CAST(l_quantity AS BIGINT) AS y
-        |  FROM graft_corr_lineitem),
-        |m AS (
-        |  SELECT grp, COUNT(*) AS n,
-        |         SUM(CAST(x AS DECIMAL(38,0))) AS sx, SUM(CAST(y AS DECIMAL(38,0))) AS sy,
-        |         SUM(CAST(x AS DECIMAL(38,0)) * y) AS sxy,
-        |         SUM(CAST(x AS DECIMAL(38,0)) * x) AS sxx,
-        |         SUM(CAST(y AS DECIMAL(38,0)) * y) AS syy
-        |  FROM b GROUP BY grp)
-        |SELECT grp, CAST(n AS BIGINT) AS n,
-        |       CAST(ROUND((CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * sy / n) / n, 4) AS DOUBLE) AS covar_pop,
-        |       CAST(ROUND((CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * sy / n)
-        |            / (sqrt(CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * sx / n)
-        |               * sqrt(CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * sy / n)), 6) AS DOUBLE) AS corr
-        |FROM m
-        |ORDER BY grp""".stripMargin)
-  }
+      |ORDER BY grp""".stripMargin)
 
   /** JSONL WRITE round-trip: the export side of the SFT/DPO formatters —
     * df.write.json then read back with an explicit schema must be
@@ -117,8 +93,7 @@ object Round4Ops35 {
     * vs the log10(1+1/d) expectation, exact integer counts plus one
     * shared float expression per digit.
     */
-  val dq_benford = OpQuery(
-    "dq_benford",
+  val dq_benford = OpQuery.sql("dq_benford", "orders")(
     """WITH digits AS (
       |  SELECT CAST(substr(CAST(CAST(ROUND(o_totalprice) AS BIGINT) AS VARCHAR), 1, 1) AS INT) AS d
       |  FROM orders WHERE o_totalprice >= 1),
@@ -128,20 +103,9 @@ object Round4Ops35 {
       |       CAST(ROUND(CAST(n AS DOUBLE) / t, 6) AS DOUBLE) AS observed,
       |       CAST(ROUND(log10(1 + 1.0 / d), 6) AS DOUBLE) AS benford_expected
       |FROM counts, tot
-      |ORDER BY first_digit""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "orders").createOrReplaceTempView("graft_ben_orders")
-    spark.sql(
-      """WITH digits AS (
-        |  SELECT CAST(substring(CAST(CAST(ROUND(o_totalprice) AS BIGINT) AS STRING), 1, 1) AS INT) AS d
-        |  FROM graft_ben_orders WHERE o_totalprice >= 1),
-        |counts AS (SELECT d, COUNT(*) AS n FROM digits GROUP BY d),
-        |tot AS (SELECT SUM(n) AS t FROM counts)
-        |SELECT CAST(d AS INT) AS first_digit, CAST(n AS BIGINT) AS n,
-        |       CAST(ROUND(CAST(n AS DOUBLE) / t, 6) AS DOUBLE) AS observed,
-        |       CAST(ROUND(log10(1 + 1.0 / d), 6) AS DOUBLE) AS benford_expected
-        |FROM counts, tot
-        |ORDER BY first_digit""".stripMargin)
-  }
+      |ORDER BY first_digit""".stripMargin,
+    "substr(" -> "substring(",
+    "VARCHAR" -> "STRING")
 
   val all: Seq[OpQuery] = Seq(
     f_array_extra, a33_corr, s31_jsonl_write, dq_benford)

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -15,8 +14,7 @@ object Round4Ops36 {
     * gap) — the decomposition every growth team reports. One user-keyed
     * window (lag over active weeks) feeding a week-keyed rollup.
     */
-  val event_growth_accounting = OpQuery(
-    "event_growth_accounting",
+  val event_growth_accounting = OpQuery.sql("event_growth_accounting", "events")(
     """WITH weeks AS (
       |  SELECT DISTINCT user_id,
       |         date_diff('day', DATE '2024-01-01', CAST(ts AS DATE)) // 7 AS wk
@@ -31,25 +29,9 @@ object Round4Ops36 {
       |       CAST(SUM(CASE WHEN prev_wk < wk - 1 THEN 1 ELSE 0 END) AS BIGINT) AS resurrected
       |FROM flagged
       |GROUP BY wk
-      |ORDER BY wk""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "events").createOrReplaceTempView("graft_ga_events")
-    spark.sql(
-      """WITH weeks AS (
-        |  SELECT DISTINCT user_id,
-        |         CAST(datediff(CAST(ts AS DATE), DATE '2024-01-01') AS BIGINT) DIV 7 AS wk
-        |  FROM graft_ga_events),
-        |flagged AS (
-        |  SELECT user_id, wk,
-        |         LAG(wk) OVER (PARTITION BY user_id ORDER BY wk) AS prev_wk
-        |  FROM weeks)
-        |SELECT CAST(wk AS BIGINT) AS wk,
-        |       CAST(SUM(CASE WHEN prev_wk IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS new_users,
-        |       CAST(SUM(CASE WHEN prev_wk = wk - 1 THEN 1 ELSE 0 END) AS BIGINT) AS retained,
-        |       CAST(SUM(CASE WHEN prev_wk < wk - 1 THEN 1 ELSE 0 END) AS BIGINT) AS resurrected
-        |FROM flagged
-        |GROUP BY wk
-        |ORDER BY wk""".stripMargin)
-  }
+      |ORDER BY wk""".stripMargin,
+    "date_diff('day', DATE '2024-01-01', CAST(ts AS DATE)) // 7" ->
+      "CAST(datediff(CAST(ts AS DATE), DATE '2024-01-01') AS BIGINT) DIV 7")
 
   /** Pointwise mutual information for adjacent word pairs — the
     * collocation detector ("strongly associated bigrams") behind phrase

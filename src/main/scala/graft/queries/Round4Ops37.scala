@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
 import graft.Tables
 
 /** Round-4 batch 37: running distinct counts (the windows-can't-
@@ -16,8 +14,7 @@ object Round4Ops37 {
     * the same user partitioning, no extra shuffle. Emitted at each
     * user's last event of every day to keep the gate bounded.
     */
-  val w8_running_distinct = OpQuery(
-    "w8_running_distinct",
+  val w8_running_distinct = OpQuery.sql("w8_running_distinct", "events")(
     """WITH ordered AS (
       |  SELECT user_id, event_id, event_type, ts, CAST(ts AS DATE) AS d,
       |         CASE WHEN ROW_NUMBER() OVER (PARTITION BY user_id, event_type
@@ -34,27 +31,9 @@ object Round4Ops37 {
       |SELECT user_id, strftime(d, '%Y-%m-%d') AS day,
       |       CAST(distinct_types_so_far AS BIGINT) AS distinct_types_so_far
       |FROM running WHERE rn_day = 1
-      |ORDER BY user_id, day""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "events").createOrReplaceTempView("graft_rd_events")
-    spark.sql(
-      """WITH ordered AS (
-        |  SELECT user_id, event_id, event_type, ts, CAST(ts AS DATE) AS d,
-        |         CASE WHEN ROW_NUMBER() OVER (PARTITION BY user_id, event_type
-        |                                      ORDER BY ts, event_id) = 1
-        |              THEN 1 ELSE 0 END AS first_of_type
-        |  FROM graft_rd_events),
-        |running AS (
-        |  SELECT user_id, event_id, d,
-        |         SUM(first_of_type) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS distinct_types_so_far,
-        |         ROW_NUMBER() OVER (PARTITION BY user_id, CAST(ts AS DATE)
-        |                            ORDER BY ts DESC, event_id DESC) AS rn_day
-        |  FROM ordered)
-        |SELECT user_id, date_format(d, 'yyyy-MM-dd') AS day,
-        |       CAST(distinct_types_so_far AS BIGINT) AS distinct_types_so_far
-        |FROM running WHERE rn_day = 1
-        |ORDER BY user_id, day""".stripMargin)
-  }
+      |ORDER BY user_id, day""".stripMargin,
+    "strftime(" -> "date_format(",
+    "'%Y-%m-%d'" -> "'yyyy-MM-dd'")
 
   /** Inter-event gap statistics per user: lag the event stream once,
     * then exact-interpolated gap quartiles — the cadence profile that
@@ -96,8 +75,7 @@ object Round4Ops37 {
     * physical dimension serves several foreign keys. Both legs are
     * broadcast-sized.
     */
-  val j20_role_playing = OpQuery(
-    "j20_role_playing",
+  val j20_role_playing = OpQuery.sql("j20_role_playing", "lineitem", "orders")(
     """WITH yearspine AS (
       |  SELECT y.y AS yr, concat('FY', CAST(y.y AS VARCHAR)) AS label
       |  FROM (SELECT unnest(generate_series(1995, 2001)) AS y) y),
@@ -111,25 +89,9 @@ object Round4Ops37 {
       |JOIN yearspine od ON f.oy = od.yr
       |JOIN yearspine sd ON f.sy = sd.yr
       |GROUP BY od.label, sd.label
-      |ORDER BY ordered_in, shipped_in""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "lineitem").createOrReplaceTempView("graft_rp_lineitem")
-    Tables.load(spark, dir, "orders").createOrReplaceTempView("graft_rp_orders")
-    spark.sql(
-      """WITH yearspine AS (
-        |  SELECT y.y AS yr, concat('FY', CAST(y.y AS STRING)) AS label
-        |  FROM (SELECT explode(sequence(1995, 2001)) AS y) y),
-        |f AS (
-        |  SELECT l.l_orderkey, l.l_linenumber,
-        |         year(o.o_orderdate) AS oy, year(l.l_shipdate) AS sy
-        |  FROM graft_rp_lineitem l JOIN graft_rp_orders o ON l.l_orderkey = o.o_orderkey)
-        |SELECT od.label AS ordered_in, sd.label AS shipped_in,
-        |       CAST(COUNT(*) AS BIGINT) AS n
-        |FROM f
-        |JOIN yearspine od ON f.oy = od.yr
-        |JOIN yearspine sd ON f.sy = sd.yr
-        |GROUP BY od.label, sd.label
-        |ORDER BY ordered_in, shipped_in""".stripMargin)
-  }
+      |ORDER BY ordered_in, shipped_in""".stripMargin,
+    "VARCHAR" -> "STRING",
+    "unnest(generate_series(" -> "explode(sequence(")
 
   val all: Seq[OpQuery] = Seq(
     w8_running_distinct, event_gap_stats, j20_role_playing)

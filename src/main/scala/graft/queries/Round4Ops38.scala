@@ -1,8 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-
 import graft.Tables
 
 /** Round-4 batch 38: CTAS into the session catalog, width_bucket
@@ -121,8 +118,7 @@ object Round4Ops38 {
     * at one uniform-key shuffle (planted duplicates make the gate
     * non-vacuous — random vectors alone never collide).
     */
-  val emb_dedup_exact = OpQuery(
-    "emb_dedup_exact",
+  val emb_dedup_exact = OpQuery.sql("emb_dedup_exact", "embeddings")(
     """WITH corpus AS (
       |  SELECT vec_id, embedding FROM embeddings
       |  UNION ALL
@@ -138,26 +134,10 @@ object Round4Ops38 {
       |FROM fp
       |GROUP BY f
       |HAVING COUNT(*) > 1
-      |ORDER BY fingerprint""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "embeddings").createOrReplaceTempView("graft_ede_emb")
-    spark.sql(
-      """WITH corpus AS (
-        |  SELECT vec_id, embedding FROM graft_ede_emb
-        |  UNION ALL
-        |  SELECT vec_id + 100000, embedding FROM graft_ede_emb WHERE vec_id % 50 = 0),
-        |fp AS (
-        |  SELECT vec_id,
-        |         md5(array_join(transform(embedding,
-        |               x -> CAST(CAST(x AS DOUBLE) * 1000000 AS BIGINT)), ',')) AS f
-        |  FROM corpus)
-        |SELECT f AS fingerprint,
-        |       CAST(COUNT(*) AS BIGINT) AS n_copies,
-        |       CAST(MIN(vec_id) AS BIGINT) AS keeper
-        |FROM fp
-        |GROUP BY f
-        |HAVING COUNT(*) > 1
-        |ORDER BY fingerprint""".stripMargin)
-  }
+      |ORDER BY fingerprint""".stripMargin,
+    "array_to_string(list_transform(" -> "array_join(transform(",
+    "CAST(TRUNC(CAST(x AS DOUBLE) * 1000000) AS BIGINT)" ->
+      "CAST(CAST(x AS DOUBLE) * 1000000 AS BIGINT)")
 
   val all: Seq[OpQuery] = Seq(s33_ctas, f_width_bucket, ts_twap, emb_dedup_exact)
 }

@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
 import graft.Tables
 
 /** Round-4 batch 42: velocity flags (RANGE-frame-on-epoch windows),
@@ -15,8 +13,7 @@ object Round4Ops42 {
     * ROWS frames precisely when bursts share timestamps, which is what
     * the flag detects; all arithmetic integer.
     */
-  val event_velocity_flags = OpQuery(
-    "event_velocity_flags",
+  val event_velocity_flags = OpQuery.sql("event_velocity_flags", "events")(
     """WITH seq AS (
       |  SELECT user_id, event_id,
       |         TRUNC(epoch(ts))::BIGINT AS t
@@ -29,23 +26,8 @@ object Round4Ops42 {
       |SELECT user_id, event_id, CAST(burst AS BIGINT) AS burst
       |FROM counted
       |WHERE burst >= 3
-      |ORDER BY user_id, event_id""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "events").createOrReplaceTempView("graft_vel_events")
-    spark.sql(
-      """WITH seq AS (
-        |  SELECT user_id, event_id,
-        |         unix_timestamp(ts) AS t
-        |  FROM graft_vel_events),
-        |counted AS (
-        |  SELECT user_id, event_id, t,
-        |         COUNT(*) OVER (PARTITION BY user_id ORDER BY t
-        |                        RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW) AS burst
-        |  FROM seq)
-        |SELECT user_id, event_id, CAST(burst AS BIGINT) AS burst
-        |FROM counted
-        |WHERE burst >= 3
-        |ORDER BY user_id, event_id""".stripMargin)
-  }
+      |ORDER BY user_id, event_id""".stripMargin,
+    "TRUNC(epoch(ts))::BIGINT" -> "unix_timestamp(ts)")
 
   /** Decile lift table: rank customers into spend deciles, then each
     * decile's share of total spend vs its 10% population share — the

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -61,19 +60,11 @@ object Round4Ops43 {
     * API parity, and OFFSET pushdown (GlobalLimit with skip) is its own
     * plan shape.
     */
-  val o6_offset_fetch = OpQuery(
-    "o6_offset_fetch",
+  val o6_offset_fetch = OpQuery.sql("o6_offset_fetch", "orders")(
     """SELECT o_orderkey, CAST(o_totalprice AS DOUBLE) AS total
       |FROM orders
       |ORDER BY o_orderkey
-      |LIMIT 15 OFFSET 30""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "orders").createOrReplaceTempView("graft_off_orders")
-    spark.sql(
-      """SELECT o_orderkey, CAST(o_totalprice AS DOUBLE) AS total
-        |FROM graft_off_orders
-        |ORDER BY o_orderkey
-        |LIMIT 15 OFFSET 30""".stripMargin)
-  }
+      |LIMIT 15 OFFSET 30""".stripMargin)
 
   /** SQL scripting (Spark 4): BEGIN/DECLARE/SET/IF control flow whose
     * final statement yields the result — procedural orchestration

@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
 import graft.Tables
 
 /** Round-4 batch 44: temporal train/test splitting, DISTINCT ordered
@@ -52,21 +50,14 @@ object Round4Ops44 {
   /** DISTINCT ordered string aggregation: the dedup variant of listagg —
     * repeated values collapse before joining.
     */
-  val a37_string_agg_distinct = OpQuery(
-    "a37_string_agg_distinct",
+  val a37_string_agg_distinct = OpQuery.sql("a37_string_agg_distinct", "events")(
     """SELECT user_id % 10 AS cohort,
       |       string_agg(DISTINCT event_type, '|' ORDER BY event_type) AS types
       |FROM events
       |GROUP BY user_id % 10
-      |ORDER BY cohort""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "events").createOrReplaceTempView("graft_sad_events")
-    spark.sql(
-      """SELECT user_id % 10 AS cohort,
-        |       listagg(DISTINCT event_type, '|') WITHIN GROUP (ORDER BY event_type) AS types
-        |FROM graft_sad_events
-        |GROUP BY user_id % 10
-        |ORDER BY cohort""".stripMargin)
-  }
+      |ORDER BY cohort""".stripMargin,
+    "string_agg(DISTINCT event_type, '|' ORDER BY event_type)" ->
+      "listagg(DISTINCT event_type, '|') WITHIN GROUP (ORDER BY event_type)")
 
   /** Jensen-Shannon divergence between two sources' term distributions
     * over their shared top vocabulary — the symmetric, bounded corpus
@@ -74,8 +65,7 @@ object Round4Ops44 {
     * divergence is one shared log expression per term, summed after
     * rounding-stable DOUBLE division by exact totals.
     */
-  val text_js_divergence = OpQuery(
-    "text_js_divergence",
+  val text_js_divergence = OpQuery.sql("text_js_divergence", "documents")(
     """WITH toks AS (
       |  SELECT source, unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS term
       |  FROM documents WHERE source IN ('src1', 'src2')),
@@ -93,28 +83,9 @@ object Round4Ops44 {
       |SELECT CAST(COUNT(*) AS BIGINT) AS shared_terms,
       |       CAST(ROUND(SUM(0.5 * p * ln(2 * p / (p + q))
       |                      + 0.5 * q * ln(2 * q / (p + q))) / ln(2), 6) AS DOUBLE) AS jsd_bits
-      |FROM terms""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "documents").createOrReplaceTempView("graft_jsd_docs")
-    spark.sql(
-      """WITH toks AS (
-        |  SELECT source, explode(split(lower(trim(text)), '\\s+')) AS term
-        |  FROM graft_jsd_docs WHERE source IN ('src1', 'src2')),
-        |counts AS (
-        |  SELECT source, term, COUNT(*) AS n FROM toks WHERE term <> '' GROUP BY source, term),
-        |wide AS (
-        |  SELECT term,
-        |         SUM(CASE WHEN source = 'src1' THEN n ELSE 0 END) AS n1,
-        |         SUM(CASE WHEN source = 'src2' THEN n ELSE 0 END) AS n2
-        |  FROM counts GROUP BY term HAVING MIN(n) > 0 AND COUNT(*) = 2),
-        |tot AS (SELECT SUM(n1) AS t1, SUM(n2) AS t2 FROM wide),
-        |terms AS (
-        |  SELECT CAST(n1 AS DOUBLE) / t1 AS p, CAST(n2 AS DOUBLE) / t2 AS q
-        |  FROM wide, tot)
-        |SELECT CAST(COUNT(*) AS BIGINT) AS shared_terms,
-        |       CAST(ROUND(SUM(0.5 * p * ln(2 * p / (p + q))
-        |                      + 0.5 * q * ln(2 * q / (p + q))) / ln(2), 6) AS DOUBLE) AS jsd_bits
-        |FROM terms""".stripMargin)
-  }
+      |FROM terms""".stripMargin,
+    "unnest(regexp_split_to_array(" -> "explode(split(",
+    """'\s+'""" -> """'\\s+'""")
 
   val all: Seq[OpQuery] = Seq(
     data_split_temporal, a37_string_agg_distinct, text_js_divergence)

@@ -1,17 +1,12 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
-import graft.Tables
-
 /** Round-4 batch 45: multiset set operations (INTERSECT ALL /
   * EXCEPT ALL) — bag semantics with multiplicities, the variant the
   * DISTINCT set-ops gate (j11) does not exercise.
   */
 object Round4Ops45 {
 
-  val j23_set_ops_all = OpQuery(
-    "j23_set_ops_all",
+  val j23_set_ops_all = OpQuery.sql("j23_set_ops_all", "lineitem")(
     """WITH a AS (SELECT CAST(l_quantity AS BIGINT) AS v FROM lineitem WHERE l_returnflag = 'R'),
       |b AS (SELECT CAST(l_quantity AS BIGINT) AS v FROM lineitem WHERE l_returnflag = 'A')
       |SELECT op, CAST(v AS BIGINT) AS v, CAST(COUNT(*) AS BIGINT) AS mult
@@ -20,19 +15,7 @@ object Round4Ops45 {
       |  UNION ALL
       |  SELECT 'except_all' AS op, v FROM (SELECT v FROM a EXCEPT ALL SELECT v FROM b))
       |GROUP BY op, v
-      |ORDER BY op, v""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "lineitem").createOrReplaceTempView("graft_soa_lineitem")
-    spark.sql(
-      """WITH a AS (SELECT CAST(l_quantity AS BIGINT) AS v FROM graft_soa_lineitem WHERE l_returnflag = 'R'),
-        |b AS (SELECT CAST(l_quantity AS BIGINT) AS v FROM graft_soa_lineitem WHERE l_returnflag = 'A')
-        |SELECT op, CAST(v AS BIGINT) AS v, CAST(COUNT(*) AS BIGINT) AS mult
-        |FROM (
-        |  SELECT 'intersect_all' AS op, v FROM (SELECT v FROM a INTERSECT ALL SELECT v FROM b)
-        |  UNION ALL
-        |  SELECT 'except_all' AS op, v FROM (SELECT v FROM a EXCEPT ALL SELECT v FROM b))
-        |GROUP BY op, v
-        |ORDER BY op, v""".stripMargin)
-  }
+      |ORDER BY op, v""".stripMargin)
 
   val all: Seq[OpQuery] = Seq(j23_set_ops_all)
 }

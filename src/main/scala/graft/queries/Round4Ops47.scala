@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
 import graft.Tables
 
 /** Round-4 batch 47: TPC-H Q10/Q12/Q14 shapes — returned-item revenue
@@ -48,8 +46,7 @@ object Round4Ops47 {
   /** Q12 shape: priority classification by ship bucket — the CASE-
     * conditional double aggregation over one fact⋈fact join.
     */
-  val tpch_q12_shape = OpQuery(
-    "tpch_q12_shape",
+  val tpch_q12_shape = OpQuery.sql("tpch_q12_shape", "lineitem", "orders")(
     """SELECT l.l_linestatus,
       |       CAST(SUM(CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
       |                     THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
@@ -59,27 +56,12 @@ object Round4Ops47 {
       |WHERE l.l_shipdate >= TIMESTAMP '1997-01-01'
       |  AND l.l_shipdate < TIMESTAMP '1998-01-01'
       |GROUP BY l.l_linestatus
-      |ORDER BY l.l_linestatus""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "lineitem").createOrReplaceTempView("graft_q12_lineitem")
-    Tables.load(spark, dir, "orders").createOrReplaceTempView("graft_q12_orders")
-    spark.sql(
-      """SELECT l.l_linestatus,
-        |       CAST(SUM(CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
-        |                     THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-        |       CAST(SUM(CASE WHEN o.o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
-        |                     THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
-        |FROM graft_q12_lineitem l JOIN graft_q12_orders o ON l.l_orderkey = o.o_orderkey
-        |WHERE l.l_shipdate >= TIMESTAMP '1997-01-01'
-        |  AND l.l_shipdate < TIMESTAMP '1998-01-01'
-        |GROUP BY l.l_linestatus
-        |ORDER BY l.l_linestatus""".stripMargin)
-  }
+      |ORDER BY l.l_linestatus""".stripMargin)
 
   /** Q14 shape: promo revenue share — conditional-aggregate ratio over
     * a broadcast part join, DECIMAL until the final division.
     */
-  val tpch_q14_shape = OpQuery(
-    "tpch_q14_shape",
+  val tpch_q14_shape = OpQuery.sql("tpch_q14_shape", "lineitem", "part")(
     """WITH j AS (
       |  SELECT p.p_type,
       |         CAST(l.l_extendedprice AS DECIMAL(18,2))
@@ -90,22 +72,7 @@ object Round4Ops47 {
       |SELECT CAST(ROUND(100.0 * CAST(SUM(CASE WHEN p_type = 'PROMO' THEN rev ELSE 0 END) AS DOUBLE)
       |                  / CAST(SUM(rev) AS DOUBLE), 6) AS DOUBLE) AS promo_share_pct,
       |       CAST(COUNT(*) AS BIGINT) AS n_lines
-      |FROM j""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "lineitem").createOrReplaceTempView("graft_q14_lineitem")
-    Tables.load(spark, dir, "part").createOrReplaceTempView("graft_q14_part")
-    spark.sql(
-      """WITH j AS (
-        |  SELECT p.p_type,
-        |         CAST(l.l_extendedprice AS DECIMAL(18,2))
-        |           * (1 - CAST(l.l_discount AS DECIMAL(4,2))) AS rev
-        |  FROM graft_q14_lineitem l JOIN graft_q14_part p ON l.l_partkey = p.p_partkey
-        |  WHERE l.l_shipdate >= TIMESTAMP '1997-03-01'
-        |    AND l.l_shipdate < TIMESTAMP '1997-04-01')
-        |SELECT CAST(ROUND(100.0 * CAST(SUM(CASE WHEN p_type = 'PROMO' THEN rev ELSE 0 END) AS DOUBLE)
-        |                  / CAST(SUM(rev) AS DOUBLE), 6) AS DOUBLE) AS promo_share_pct,
-        |       CAST(COUNT(*) AS BIGINT) AS n_lines
-        |FROM j""".stripMargin)
-  }
+      |FROM j""".stripMargin)
 
   val all: Seq[OpQuery] = Seq(tpch_q10_shape, tpch_q12_shape, tpch_q14_shape)
 }

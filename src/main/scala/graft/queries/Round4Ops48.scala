@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
 import graft.Tables
 
 /** Round-4 batch 48: discrete percentiles, composite bot scoring, and
@@ -38,8 +36,7 @@ object Round4Ops48 {
     * engagement metric. One user-keyed window plus one user aggregate
     * on the same shuffle key.
     */
-  val event_bot_score = OpQuery(
-    "event_bot_score",
+  val event_bot_score = OpQuery.sql("event_bot_score", "events")(
     """WITH seq AS (
       |  SELECT user_id, TRUNC(epoch(ts))::BIGINT AS t FROM events),
       |counted AS (
@@ -56,51 +53,21 @@ object Round4Ops48 {
       |       CAST(m.errors AS BIGINT) AS errors, CAST(m.n AS BIGINT) AS n,
       |       CAST(b.max_burst >= 5 OR m.errors * 5 > m.n * 2 AS BOOLEAN) AS bot_suspect
       |FROM mix m JOIN burst_per_user b ON m.user_id = b.user_id
-      |ORDER BY m.user_id""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "events").createOrReplaceTempView("graft_bot_events")
-    spark.sql(
-      """WITH seq AS (
-        |  SELECT user_id, unix_timestamp(ts) AS t FROM graft_bot_events),
-        |counted AS (
-        |  SELECT user_id,
-        |         COUNT(*) OVER (PARTITION BY user_id ORDER BY t
-        |                        RANGE BETWEEN 60 PRECEDING AND CURRENT ROW) AS burst
-        |  FROM seq),
-        |burst_per_user AS (SELECT user_id, MAX(burst) AS max_burst FROM counted GROUP BY user_id),
-        |mix AS (
-        |  SELECT user_id, COUNT(*) AS n,
-        |         SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS errors
-        |  FROM graft_bot_events GROUP BY user_id)
-        |SELECT m.user_id, CAST(b.max_burst AS BIGINT) AS max_burst,
-        |       CAST(m.errors AS BIGINT) AS errors, CAST(m.n AS BIGINT) AS n,
-        |       CAST(b.max_burst >= 5 OR m.errors * 5 > m.n * 2 AS BOOLEAN) AS bot_suspect
-        |FROM mix m JOIN burst_per_user b ON m.user_id = b.user_id
-        |ORDER BY m.user_id""".stripMargin)
-  }
+      |ORDER BY m.user_id""".stripMargin,
+    "TRUNC(epoch(ts))::BIGINT" -> "unix_timestamp(ts)")
 
   /** greatest/least null semantics: both engines skip NULL arguments
     * (returning NULL only when every argument is) — the non-obvious
     * cross-engine agreement pinned explicitly.
     */
-  val f_greatest_least = OpQuery(
-    "f_greatest_least",
+  val f_greatest_least = OpQuery.sql("f_greatest_least", "orders")(
     """SELECT o_orderkey,
       |       CAST(greatest(o_totalprice,
       |                     CASE WHEN o_orderstatus = 'F' THEN NULL ELSE 100000.0 END) AS DOUBLE) AS g,
       |       CAST(least(o_totalprice,
       |                  CASE WHEN o_orderstatus = 'F' THEN NULL ELSE 100000.0 END) AS DOUBLE) AS l
       |FROM orders
-      |ORDER BY o_orderkey""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "orders").createOrReplaceTempView("graft_gl_orders")
-    spark.sql(
-      """SELECT o_orderkey,
-        |       CAST(greatest(o_totalprice,
-        |                     CASE WHEN o_orderstatus = 'F' THEN NULL ELSE 100000.0 END) AS DOUBLE) AS g,
-        |       CAST(least(o_totalprice,
-        |                  CASE WHEN o_orderstatus = 'F' THEN NULL ELSE 100000.0 END) AS DOUBLE) AS l
-        |FROM graft_gl_orders
-        |ORDER BY o_orderkey""".stripMargin)
-  }
+      |ORDER BY o_orderkey""".stripMargin)
 
   val all: Seq[OpQuery] = Seq(a38_percentile_disc, event_bot_score, f_greatest_least)
 }

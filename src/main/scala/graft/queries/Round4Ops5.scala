@@ -108,8 +108,7 @@ object Round4Ops5 {
     * engines, Catalyst planning all three as joins (no per-row
     * re-execution anywhere).
     */
-  val j14_subqueries = OpQuery(
-    "j14_subqueries",
+  val j14_subqueries = OpQuery.sql("j14_subqueries", "orders", "lineitem", "customer")(
     """SELECT o_orderpriority,
       |       CAST(COUNT(*) AS BIGINT) AS n_orders,
       |       CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
@@ -120,23 +119,7 @@ object Round4Ops5 {
       |  AND o_custkey IN (SELECT c_custkey FROM customer
       |                    WHERE c_mktsegment = 'BUILDING')
       |GROUP BY o_orderpriority
-      |ORDER BY o_orderpriority""".stripMargin) { (spark, dir) =>
-    t(spark, dir, "orders").createOrReplaceTempView("graft_sq_orders")
-    t(spark, dir, "lineitem").createOrReplaceTempView("graft_sq_lineitem")
-    t(spark, dir, "customer").createOrReplaceTempView("graft_sq_customer")
-    spark.sql(
-      """SELECT o_orderpriority,
-        |       CAST(COUNT(*) AS BIGINT) AS n_orders,
-        |       CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-        |FROM graft_sq_orders o
-        |WHERE o_totalprice > (SELECT AVG(o_totalprice) FROM graft_sq_orders)
-        |  AND EXISTS (SELECT 1 FROM graft_sq_lineitem l
-        |              WHERE l.l_orderkey = o.o_orderkey AND l.l_returnflag = 'R')
-        |  AND o_custkey IN (SELECT c_custkey FROM graft_sq_customer
-        |                    WHERE c_mktsegment = 'BUILDING')
-        |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin)
-  }
+      |ORDER BY o_orderpriority""".stripMargin)
 
   /** Daily resample + linear interpolation
     * ([[TimeSeries.resampleDailyInterpolate]]): per-user daily totals in

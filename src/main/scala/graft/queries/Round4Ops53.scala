@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
 import graft.Tables
 
 /** Round-4 batch 53: embedded-CSV parsing, JSON struct round-trips,
@@ -102,8 +100,7 @@ object Round4Ops53 {
     * separates natural prose from template spam. Exact integer counts,
     * map-only plus one per-doc aggregate.
     */
-  val text_ttr = OpQuery(
-    "text_ttr",
+  val text_ttr = OpQuery.sql("text_ttr", "documents")(
     """WITH toks AS (
       |  SELECT doc_id, unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS w
       |  FROM documents),
@@ -113,20 +110,9 @@ object Round4Ops53 {
       |SELECT doc_id, CAST(words AS BIGINT) AS words, CAST(types AS BIGINT) AS types,
       |       CAST(ROUND(CAST(types AS DOUBLE) / words, 4) AS DOUBLE) AS ttr
       |FROM per WHERE words > 0
-      |ORDER BY doc_id""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "documents").createOrReplaceTempView("graft_ttr_docs")
-    spark.sql(
-      """WITH toks AS (
-        |  SELECT doc_id, explode(split(lower(trim(text)), '\\s+')) AS w
-        |  FROM graft_ttr_docs),
-        |per AS (
-        |  SELECT doc_id, COUNT(*) AS words, COUNT(DISTINCT w) AS types
-        |  FROM toks WHERE w <> '' GROUP BY doc_id)
-        |SELECT doc_id, CAST(words AS BIGINT) AS words, CAST(types AS BIGINT) AS types,
-        |       CAST(ROUND(CAST(types AS DOUBLE) / words, 4) AS DOUBLE) AS ttr
-        |FROM per WHERE words > 0
-        |ORDER BY doc_id""".stripMargin)
-  }
+      |ORDER BY doc_id""".stripMargin,
+    "unnest(regexp_split_to_array(" -> "explode(split(",
+    """'\s+'""" -> """'\\s+'""")
 
   val all: Seq[OpQuery] = Seq(
     p19_from_csv, p20_json_roundtrip, sim_threshold_curve, text_ttr)

@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
 import graft.Tables
 
 /** Round-4 batch 54: A/B analysis with Welch's t, id-gap integrity, and
@@ -76,8 +74,7 @@ object Round4Ops54 {
     * sequence — one lag window, gap rows only (the sequence-audit query
     * every CDC consumer runs on resume).
     */
-  val dq_id_gaps = OpQuery(
-    "dq_id_gaps",
+  val dq_id_gaps = OpQuery.sql("dq_id_gaps", "documents")(
     """WITH ids AS (SELECT DISTINCT doc_id * 2 AS id FROM documents),
       |gaps AS (
       |  SELECT LAG(id) OVER (ORDER BY id) AS prev_id, id
@@ -88,28 +85,13 @@ object Round4Ops54 {
       |FROM gaps
       |WHERE prev_id IS NOT NULL AND id - prev_id > 1
       |ORDER BY gap_after
-      |LIMIT 50""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "documents").createOrReplaceTempView("graft_gapid_docs")
-    spark.sql(
-      """WITH ids AS (SELECT DISTINCT doc_id * 2 AS id FROM graft_gapid_docs),
-        |gaps AS (
-        |  SELECT LAG(id) OVER (ORDER BY id) AS prev_id, id
-        |  FROM ids)
-        |SELECT CAST(prev_id AS BIGINT) AS gap_after,
-        |       CAST(id AS BIGINT) AS resumes_at,
-        |       CAST(id - prev_id - 1 AS BIGINT) AS missing
-        |FROM gaps
-        |WHERE prev_id IS NOT NULL AND id - prev_id > 1
-        |ORDER BY gap_after
-        |LIMIT 50""".stripMargin)
-  }
+      |LIMIT 50""".stripMargin)
 
   /** Per-source duplication report: the share of each source's
     * documents that are prefix-fingerprint duplicates — the provenance
     * scorecard that decides which feeds get renegotiated.
     */
-  val dedup_source_report = OpQuery(
-    "dedup_source_report",
+  val dedup_source_report = OpQuery.sql("dedup_source_report", "documents")(
     """WITH fp AS (
       |  SELECT doc_id, source, md5(substr(text, 1, 64)) AS f FROM documents),
       |dup_fps AS (SELECT f FROM fp GROUP BY f HAVING COUNT(*) > 1)
@@ -118,19 +100,8 @@ object Round4Ops54 {
       |       CAST(SUM(CASE WHEN d.f IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS dup_docs
       |FROM fp LEFT JOIN dup_fps d ON fp.f = d.f
       |GROUP BY fp.source
-      |ORDER BY fp.source""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "documents").createOrReplaceTempView("graft_srcrep_docs")
-    spark.sql(
-      """WITH fp AS (
-        |  SELECT doc_id, source, md5(substring(text, 1, 64)) AS f FROM graft_srcrep_docs),
-        |dup_fps AS (SELECT f FROM fp GROUP BY f HAVING COUNT(*) > 1)
-        |SELECT fp.source,
-        |       CAST(COUNT(*) AS BIGINT) AS docs,
-        |       CAST(SUM(CASE WHEN d.f IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS dup_docs
-        |FROM fp LEFT JOIN dup_fps d ON fp.f = d.f
-        |GROUP BY fp.source
-        |ORDER BY fp.source""".stripMargin)
-  }
+      |ORDER BY fp.source""".stripMargin,
+    "substr(" -> "substring(")
 
   val all: Seq[OpQuery] = Seq(ab_test_analysis, dq_id_gaps, dedup_source_report)
 }

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -65,8 +64,7 @@ object Round4Ops58 {
     * feeds republish each other. Fingerprint shuffle + a self-join
     * inside duplicate-sized groups only.
     */
-  val dedup_syndication = OpQuery(
-    "dedup_syndication",
+  val dedup_syndication = OpQuery.sql("dedup_syndication", "documents")(
     """WITH fp AS (
       |  SELECT doc_id, source, md5(substr(text, 1, 64)) AS f FROM documents),
       |pairs AS (
@@ -75,19 +73,8 @@ object Round4Ops58 {
       |SELECT src_a, src_b, CAST(COUNT(*) AS BIGINT) AS shared_fingerprints
       |FROM pairs
       |GROUP BY src_a, src_b
-      |ORDER BY src_a, src_b""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "documents").createOrReplaceTempView("graft_synd_docs")
-    spark.sql(
-      """WITH fp AS (
-        |  SELECT doc_id, source, md5(substring(text, 1, 64)) AS f FROM graft_synd_docs),
-        |pairs AS (
-        |  SELECT DISTINCT a.f, a.source AS src_a, b.source AS src_b
-        |  FROM fp a JOIN fp b ON a.f = b.f AND a.source < b.source)
-        |SELECT src_a, src_b, CAST(COUNT(*) AS BIGINT) AS shared_fingerprints
-        |FROM pairs
-        |GROUP BY src_a, src_b
-        |ORDER BY src_a, src_b""".stripMargin)
-  }
+      |ORDER BY src_a, src_b""".stripMargin,
+    "substr(" -> "substring(")
 
   /** Gini coefficient of customer spend — the inequality measure behind
     * "N% of revenue from the top M%": Σ(2i−n−1)·x₍ᵢ₎ / (n·Σx) over the

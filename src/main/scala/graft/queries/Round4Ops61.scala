@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
 import graft.Tables
 
 /** Round-4 batch 61: URL percent-encoding, trimmed means, and p-chart
@@ -40,31 +38,21 @@ object Round4Ops61 {
     * Bounds are exact interpolated percentiles broadcast back; the
     * trimmed sum stays DECIMAL.
     */
-  val a44_trimmed_mean = OpQuery(
-    "a44_trimmed_mean",
+  val a44_trimmed_mean = OpQuery.sql("a44_trimmed_mean", "orders")(
     """WITH v AS (SELECT CAST(ROUND(o_totalprice) AS BIGINT) AS x FROM orders),
       |b AS (SELECT quantile_cont(x, 0.1) AS lo, quantile_cont(x, 0.9) AS hi FROM v)
       |SELECT CAST(COUNT(*) AS BIGINT) AS n_kept,
       |       CAST(ROUND(CAST(SUM(x) AS DOUBLE) / COUNT(*), 4) AS DOUBLE) AS trimmed_mean
       |FROM v, b
-      |WHERE x >= b.lo AND x <= b.hi""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "orders").createOrReplaceTempView("graft_tm_orders")
-    spark.sql(
-      """WITH v AS (SELECT CAST(ROUND(o_totalprice) AS BIGINT) AS x FROM graft_tm_orders),
-        |b AS (SELECT percentile(x, 0.1) AS lo, percentile(x, 0.9) AS hi FROM v)
-        |SELECT CAST(COUNT(*) AS BIGINT) AS n_kept,
-        |       CAST(ROUND(CAST(SUM(x) AS DOUBLE) / COUNT(*), 4) AS DOUBLE) AS trimmed_mean
-        |FROM v, b
-        |WHERE x >= b.lo AND x <= b.hi""".stripMargin)
-  }
+      |WHERE x >= b.lo AND x <= b.hi""".stripMargin,
+    "quantile_cont(" -> "percentile(")
 
   /** p-chart: daily error PROPORTION against 3σ binomial control limits
     * around the corpus-wide rate — statistical process control for the
     * pipeline's own health stream. Exact counts; the limit expression
     * is shared; out-of-control days are the output.
     */
-  val dq_p_chart = OpQuery(
-    "dq_p_chart",
+  val dq_p_chart = OpQuery.sql("dq_p_chart", "events")(
     """WITH daily AS (
       |  SELECT CAST(ts AS DATE) AS d, COUNT(*) AS n,
       |         SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS errs
@@ -77,23 +65,9 @@ object Round4Ops61 {
       |       (abs(CAST(errs AS DOUBLE) / n - p) > 3 * sqrt(p * (1 - p) / n))
       |         AS out_of_control
       |FROM daily, pbar
-      |ORDER BY day""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "events").createOrReplaceTempView("graft_pc_events")
-    spark.sql(
-      """WITH daily AS (
-        |  SELECT CAST(ts AS DATE) AS d, COUNT(*) AS n,
-        |         SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS errs
-        |  FROM graft_pc_events GROUP BY CAST(ts AS DATE)),
-        |pbar AS (SELECT CAST(SUM(errs) AS DOUBLE) / SUM(n) AS p FROM daily)
-        |SELECT date_format(d, 'yyyy-MM-dd') AS day,
-        |       CAST(errs AS BIGINT) AS errs, CAST(n AS BIGINT) AS n,
-        |       CAST(ROUND(p - 3 * sqrt(p * (1 - p) / n), 6) AS DOUBLE) AS lcl,
-        |       CAST(ROUND(p + 3 * sqrt(p * (1 - p) / n), 6) AS DOUBLE) AS ucl,
-        |       (abs(CAST(errs AS DOUBLE) / n - p) > 3 * sqrt(p * (1 - p) / n))
-        |         AS out_of_control
-        |FROM daily, pbar
-        |ORDER BY day""".stripMargin)
-  }
+      |ORDER BY day""".stripMargin,
+    "strftime(" -> "date_format(",
+    "'%Y-%m-%d'" -> "'yyyy-MM-dd'")
 
   val all: Seq[OpQuery] = Seq(f_url_codec, a44_trimmed_mean, dq_p_chart)
 }

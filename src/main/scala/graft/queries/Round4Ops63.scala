@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
 import graft.Tables
 
 /** Round-4 batch 63: JSON array paths and the duplicate-cluster size
@@ -42,8 +40,7 @@ object Round4Ops63 {
     * pairs or a few mega-clusters (and therefore which removal strategy
     * to run). Two aggregates, both map-combined.
     */
-  val dedup_cluster_sizes = OpQuery(
-    "dedup_cluster_sizes",
+  val dedup_cluster_sizes = OpQuery.sql("dedup_cluster_sizes", "documents")(
     """WITH fp AS (
       |  SELECT md5(substr(text, 1, 64)) AS f FROM documents),
       |clusters AS (
@@ -52,19 +49,8 @@ object Round4Ops63 {
       |       CAST(COUNT(*) AS BIGINT) AS n_clusters
       |FROM clusters
       |GROUP BY sz
-      |ORDER BY cluster_size""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "documents").createOrReplaceTempView("graft_csz_docs")
-    spark.sql(
-      """WITH fp AS (
-        |  SELECT md5(substring(text, 1, 64)) AS f FROM graft_csz_docs),
-        |clusters AS (
-        |  SELECT f, COUNT(*) AS sz FROM fp GROUP BY f HAVING COUNT(*) > 1)
-        |SELECT CAST(sz AS BIGINT) AS cluster_size,
-        |       CAST(COUNT(*) AS BIGINT) AS n_clusters
-        |FROM clusters
-        |GROUP BY sz
-        |ORDER BY cluster_size""".stripMargin)
-  }
+      |ORDER BY cluster_size""".stripMargin,
+    "substr(" -> "substring(")
 
   val all: Seq[OpQuery] = Seq(f_json_array, dedup_cluster_sizes)
 }

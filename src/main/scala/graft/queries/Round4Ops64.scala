@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -38,8 +37,7 @@ object Round4Ops64 {
     * data-quality review looks at every week (same docs every run, on
     * any cluster, until the data itself changes).
     */
-  val dq_sample_inspection = OpQuery(
-    "dq_sample_inspection",
+  val dq_sample_inspection = OpQuery.sql("dq_sample_inspection", "documents")(
     """WITH ranked AS (
       |  SELECT lang, doc_id, substr(text, 1, 40) AS preview,
       |         ROW_NUMBER() OVER (PARTITION BY lang
@@ -47,18 +45,9 @@ object Round4Ops64 {
       |  FROM documents)
       |SELECT lang, CAST(rn AS INT) AS rn, doc_id, preview
       |FROM ranked WHERE rn <= 3
-      |ORDER BY lang, rn""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "documents").createOrReplaceTempView("graft_insp_docs")
-    spark.sql(
-      """WITH ranked AS (
-        |  SELECT lang, doc_id, substring(text, 1, 40) AS preview,
-        |         ROW_NUMBER() OVER (PARTITION BY lang
-        |           ORDER BY md5(CAST(doc_id AS STRING)), doc_id) AS rn
-        |  FROM graft_insp_docs)
-        |SELECT lang, CAST(rn AS INT) AS rn, doc_id, preview
-        |FROM ranked WHERE rn <= 3
-        |ORDER BY lang, rn""".stripMargin)
-  }
+      |ORDER BY lang, rn""".stripMargin,
+    "substr(" -> "substring(",
+    "VARCHAR" -> "STRING")
 
   val all: Seq[OpQuery] = Seq(mm_modality_mix, dq_sample_inspection)
 }

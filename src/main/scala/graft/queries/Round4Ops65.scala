@@ -91,8 +91,7 @@ object Round4Ops65 {
     * reciprocity probe is a self-join on a tiny distinct edge set
     * (|event_types|² upper bound — broadcast at any scale).
     */
-  val graph_reciprocity = OpQuery(
-    "graph_reciprocity",
+  val graph_reciprocity = OpQuery.sql("graph_reciprocity", "events")(
     """WITH seq AS (
       |  SELECT event_type AS u,
       |         LEAD(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS v
@@ -106,24 +105,7 @@ object Round4Ops65 {
       |SELECT CAST(n_edges AS BIGINT) AS n_edges,
       |       CAST(reciprocated AS BIGINT) AS reciprocated,
       |       CAST(ROUND(CAST(reciprocated AS DOUBLE) / n_edges, 6) AS DOUBLE) AS reciprocity
-      |FROM m""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "events").createOrReplaceTempView("graft_recip_events")
-    spark.sql(
-      """WITH seq AS (
-        |  SELECT event_type AS u,
-        |         LEAD(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS v
-        |  FROM graft_recip_events),
-        |edges AS (
-        |  SELECT DISTINCT u, v FROM seq WHERE v IS NOT NULL AND u <> v),
-        |m AS (
-        |  SELECT COUNT(*) AS n_edges,
-        |         SUM(CASE WHEN r.u IS NOT NULL THEN 1 ELSE 0 END) AS reciprocated
-        |  FROM edges e LEFT JOIN edges r ON e.u = r.v AND e.v = r.u)
-        |SELECT CAST(n_edges AS BIGINT) AS n_edges,
-        |       CAST(reciprocated AS BIGINT) AS reciprocated,
-        |       CAST(ROUND(CAST(reciprocated AS DOUBLE) / n_edges, 6) AS DOUBLE) AS reciprocity
-        |FROM m""".stripMargin)
-  }
+      |FROM m""".stripMargin)
 
   val all: Seq[OpQuery] = Seq(ts_ohlc, ts_peaks, graph_reciprocity)
 }

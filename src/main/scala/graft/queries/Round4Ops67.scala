@@ -148,8 +148,7 @@ object Round4Ops67 {
     * 12 decimals and summed as DECIMAL so the cross-partition sum is
     * order-independent and libm ulp differences are quantized away.
     */
-  val a47_theil = OpQuery(
-    "a47_theil",
+  val a47_theil = OpQuery.sql("a47_theil", "orders")(
     """WITH spend AS (
       |  SELECT o_custkey, CAST(ROUND(SUM(o_totalprice)) AS BIGINT) AS s
       |  FROM orders GROUP BY o_custkey),
@@ -160,21 +159,8 @@ object Round4Ops67 {
       |  FROM spend, m WHERE s > 0)
       |SELECT CAST(MAX(n) AS BIGINT) AS n_customers,
       |       CAST(ROUND(CAST(SUM(term) AS DOUBLE) / MAX(n), 6) AS DOUBLE) AS theil
-      |FROM terms""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "orders").createOrReplaceTempView("graft_theil_orders")
-    spark.sql(
-      """WITH spend AS (
-        |  SELECT o_custkey, CAST(ROUND(SUM(o_totalprice)) AS BIGINT) AS s
-        |  FROM graft_theil_orders GROUP BY o_custkey),
-        |m AS (SELECT COUNT(*) AS n, SUM(s) AS t FROM spend),
-        |terms AS (
-        |  SELECT CAST(ROUND((CAST(s AS DOUBLE) * n / t) * ln(CAST(s AS DOUBLE) * n / t), 12)
-        |              AS DECIMAL(28,12)) AS term, n
-        |  FROM spend CROSS JOIN m WHERE s > 0)
-        |SELECT CAST(MAX(n) AS BIGINT) AS n_customers,
-        |       CAST(ROUND(CAST(SUM(term) AS DOUBLE) / MAX(n), 6) AS DOUBLE) AS theil
-        |FROM terms""".stripMargin)
-  }
+      |FROM terms""".stripMargin,
+    "FROM spend, m" -> "FROM spend CROSS JOIN m")
 
   val all: Seq[OpQuery] = Seq(graph_link_prediction, a46_hhi, a47_theil)
 }

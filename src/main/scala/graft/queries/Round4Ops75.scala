@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.functions._
-
 import graft.Tables
 
 /** Round-4 batch 75: Tukey-fence outlier detection, pro-rata interval
@@ -15,8 +13,7 @@ object Round4Ops75 {
     * intermediate an existing double; two window passes share one
     * shuffle on event_type.
     */
-  val a53_tukey_fences = OpQuery(
-    "a53_tukey_fences",
+  val a53_tukey_fences = OpQuery.sql("a53_tukey_fences", "events")(
     """WITH ranked AS (
       |  SELECT event_type, value,
       |         ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY value, event_id) AS r,
@@ -43,37 +40,7 @@ object Round4Ops75 {
       |         AS max_outlier
       |FROM fenced
       |GROUP BY event_type
-      |ORDER BY event_type""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "events").createOrReplaceTempView("graft_tukey_events")
-    spark.sql(
-      """WITH ranked AS (
-        |  SELECT event_type, value,
-        |         ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY value, event_id) AS r,
-        |         COUNT(*) OVER (PARTITION BY event_type) AS n
-        |  FROM graft_tukey_events),
-        |quarts AS (
-        |  SELECT event_type,
-        |         MAX(CASE WHEN r = CAST(CEIL(n * 0.25) AS BIGINT) THEN value END) AS q1,
-        |         MAX(CASE WHEN r = CAST(CEIL(n * 0.75) AS BIGINT) THEN value END) AS q3,
-        |         MAX(n) AS n
-        |  FROM ranked GROUP BY event_type),
-        |fenced AS (
-        |  SELECT r.event_type, r.value, q.q1, q.q3, q.n,
-        |         q.q1 - 1.5 * (q.q3 - q.q1) AS lo,
-        |         q.q3 + 1.5 * (q.q3 - q.q1) AS hi
-        |  FROM ranked r JOIN quarts q ON r.event_type = q.event_type)
-        |SELECT event_type, CAST(MAX(n) AS BIGINT) AS n,
-        |       CAST(MAX(q1) AS DOUBLE) AS q1, CAST(MAX(q3) AS DOUBLE) AS q3,
-        |       CAST(SUM(CASE WHEN value < lo OR value > hi THEN 1 ELSE 0 END) AS BIGINT)
-        |         AS n_outliers,
-        |       CAST(MIN(CASE WHEN value < lo OR value > hi THEN value END) AS DOUBLE)
-        |         AS min_outlier,
-        |       CAST(MAX(CASE WHEN value < lo OR value > hi THEN value END) AS DOUBLE)
-        |         AS max_outlier
-        |FROM fenced
-        |GROUP BY event_type
-        |ORDER BY event_type""".stripMargin)
-  }
+      |ORDER BY event_type""".stripMargin)
 
   /** Pro-rata allocation of a line item's value across the calendar
     * months its ship→receipt span touches — the revenue-recognition /

@@ -47,8 +47,7 @@ object Round4Ops76 {
     * self-join on week+1; at scale both sides of that join are already
     * aggregates, not raw events.
     */
-  val event_week_overlap = OpQuery(
-    "event_week_overlap",
+  val event_week_overlap = OpQuery.sql("event_week_overlap", "events")(
     """WITH wk AS (
       |  SELECT DISTINCT CAST(FLOOR(epoch(ts) / 604800) AS BIGINT) AS w, user_id
       |  FROM events),
@@ -68,30 +67,8 @@ object Round4Ops76 {
       |FROM pairs p
       |JOIN sizes s0 ON p.w0 = s0.w
       |JOIN sizes s1 ON p.w0 + 1 = s1.w
-      |ORDER BY p.w0""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "events").createOrReplaceTempView("graft_wk_events")
-    spark.sql(
-      """WITH wk AS (
-        |  SELECT DISTINCT CAST(FLOOR(unix_timestamp(ts) / 604800) AS BIGINT) AS w, user_id
-        |  FROM graft_wk_events),
-        |pairs AS (
-        |  SELECT a.w AS w0,
-        |         COUNT(*) FILTER (WHERE b.user_id IS NOT NULL) AS retained,
-        |         COUNT(*) FILTER (WHERE b.user_id IS NULL) AS churned
-        |  FROM wk a LEFT JOIN wk b ON b.w = a.w + 1 AND b.user_id = a.user_id
-        |  GROUP BY a.w),
-        |sizes AS (SELECT w, COUNT(*) AS n FROM wk GROUP BY w)
-        |SELECT p.w0, CAST(s0.n AS BIGINT) AS n_week, CAST(s1.n AS BIGINT) AS n_next,
-        |       CAST(p.retained AS BIGINT) AS retained,
-        |       CAST(p.churned AS BIGINT) AS churned,
-        |       CAST(s1.n - p.retained AS BIGINT) AS new_users,
-        |       CAST(ROUND(CAST(p.retained AS DOUBLE) /
-        |            (s0.n + s1.n - p.retained), 6) AS DOUBLE) AS jaccard
-        |FROM pairs p
-        |JOIN sizes s0 ON p.w0 = s0.w
-        |JOIN sizes s1 ON p.w0 + 1 = s1.w
-        |ORDER BY p.w0""".stripMargin)
-  }
+      |ORDER BY p.w0""".stripMargin,
+    "epoch(" -> "unix_timestamp(")
 
   /** Quoted-CSV round trip: document previews — which contain commas,
     * quotes, and newlines — written through Spark's CSV writer with

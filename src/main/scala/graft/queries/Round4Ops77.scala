@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.functions._
-
 import graft.Tables
 
 /** Round-4 batch 77: one label-propagation round, the Hodges–Lehmann
@@ -16,8 +14,7 @@ object Round4Ops77 {
     * round = one edge-join + one grouped argmax, both plain shuffles
     * that scale linearly in |E|.
     */
-  val graph_label_propagation = OpQuery(
-    "graph_label_propagation",
+  val graph_label_propagation = OpQuery.sql("graph_label_propagation", "lineitem")(
     """WITH eligible AS (
       |  SELECT l_partkey FROM (
       |    SELECT l_partkey, COUNT(DISTINCT l_suppkey) AS ns
@@ -48,41 +45,8 @@ object Round4Ops77 {
       |  WHERE rk = 1)
       |SELECT node, label AS new_label
       |FROM picked
-      |ORDER BY node""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "lineitem").createOrReplaceTempView("graft_lpa_lineitem")
-    spark.sql(
-      """WITH eligible AS (
-        |  SELECT l_partkey FROM (
-        |    SELECT l_partkey, COUNT(DISTINCT l_suppkey) AS ns
-        |    FROM graft_lpa_lineitem GROUP BY l_partkey) t
-        |  ORDER BY ns, l_partkey LIMIT 200),
-        |supp AS (
-        |  SELECT l_partkey, l_suppkey FROM (
-        |    SELECT d.l_partkey, d.l_suppkey,
-        |           ROW_NUMBER() OVER (PARTITION BY d.l_partkey
-        |             ORDER BY d.l_suppkey) AS rk
-        |    FROM (SELECT DISTINCT l.l_partkey, l.l_suppkey
-        |          FROM graft_lpa_lineitem l JOIN eligible e ON l.l_partkey = e.l_partkey) d) r
-        |  WHERE rk <= 8),
-        |edges AS (
-        |  SELECT DISTINCT a.l_suppkey AS u, b.l_suppkey AS v
-        |  FROM supp a JOIN supp b
-        |    ON a.l_partkey = b.l_partkey AND a.l_suppkey < b.l_suppkey),
-        |adj AS (
-        |  SELECT u AS node, v AS nb FROM edges
-        |  UNION ALL SELECT v AS node, u AS nb FROM edges),
-        |votes AS (
-        |  SELECT node, nb AS label, COUNT(*) AS c FROM adj GROUP BY node, nb),
-        |picked AS (
-        |  SELECT node, label FROM (
-        |    SELECT node, label,
-        |           ROW_NUMBER() OVER (PARTITION BY node ORDER BY c DESC, label) AS rk
-        |    FROM votes) t
-        |  WHERE rk = 1)
-        |SELECT node, label AS new_label
-        |FROM picked
-        |ORDER BY node""".stripMargin)
-  }
+      |ORDER BY node""".stripMargin,
+    "SELECT v, u FROM edges" -> "SELECT v AS node, u AS nb FROM edges")
 
   /** Hodges–Lehmann pseudo-median of customer balances per nation: the
     * median of all Walsh averages (xᵢ+xⱼ)/2, i ≤ j. Pairwise sums stay
@@ -92,8 +56,7 @@ object Round4Ops77 {
     * as the exact-jaccard family; the scale path is the MAD/trimmed
     * estimators already gated.
     */
-  val a54_hodges_lehmann = OpQuery(
-    "a54_hodges_lehmann",
+  val a54_hodges_lehmann = OpQuery.sql("a54_hodges_lehmann", "customer")(
     """WITH vals AS (
       |  SELECT c_nationkey AS nation,
       |         CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT) AS c,
@@ -113,30 +76,7 @@ object Round4Ops77 {
       |         / 200 AS hl_estimate
       |FROM ranked
       |GROUP BY nation
-      |ORDER BY nation""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "customer").createOrReplaceTempView("graft_hl_customer")
-    spark.sql(
-      """WITH vals AS (
-        |  SELECT c_nationkey AS nation,
-        |         CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT) AS c,
-        |         ROW_NUMBER() OVER (PARTITION BY c_nationkey
-        |           ORDER BY c_acctbal, c_custkey) AS i
-        |  FROM graft_hl_customer),
-        |walsh AS (
-        |  SELECT a.nation, a.c + b.c AS s2
-        |  FROM vals a JOIN vals b ON a.nation = b.nation AND a.i <= b.i),
-        |ranked AS (
-        |  SELECT nation, s2,
-        |         ROW_NUMBER() OVER (PARTITION BY nation ORDER BY s2) AS r,
-        |         COUNT(*) OVER (PARTITION BY nation) AS n
-        |  FROM walsh)
-        |SELECT nation, CAST(MAX(n) AS BIGINT) AS n_pairs,
-        |       CAST(MAX(CASE WHEN r = CAST(FLOOR((n + 1) / 2) AS BIGINT) THEN s2 END) AS DOUBLE)
-        |         / 200 AS hl_estimate
-        |FROM ranked
-        |GROUP BY nation
-        |ORDER BY nation""".stripMargin)
-  }
+      |ORDER BY nation""".stripMargin)
 
   /** HTML stripping for web-corpus cleaning: tags removed with one
     * regex pass, the five standard entities decoded with a replace

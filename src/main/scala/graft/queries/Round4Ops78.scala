@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.functions._
-
 import graft.Tables
 
 /** Round-4 batch 78: product-quantization ANN (encode + asymmetric
@@ -101,8 +99,7 @@ object Round4Ops78 {
     * streaming-drift primitive next to CUSUM with a confidence drift
     * margin built in.
     */
-  val ts_page_hinkley = OpQuery(
-    "ts_page_hinkley",
+  val ts_page_hinkley = OpQuery.sql("ts_page_hinkley", "events")(
     """WITH daily AS (
       |  SELECT strftime(CAST(ts AS DATE), '%Y-%m-%d') AS day,
       |         CAST(SUM(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS c,
@@ -133,41 +130,8 @@ object Round4Ops78 {
       |       CAST(ROUND(CAST(stat AS DOUBLE), 6) AS DOUBLE) AS ph,
       |       CAST(stat AS DOUBLE) > 2.0 AS alarm
       |FROM ph
-      |ORDER BY day""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "events").createOrReplaceTempView("graft_ph_events")
-    spark.sql(
-      """WITH daily AS (
-        |  SELECT date_format(to_date(ts), 'yyyy-MM-dd') AS day,
-        |         CAST(SUM(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS c,
-        |         COUNT(*) AS k
-        |  FROM graft_ph_events WHERE event_type = 'purchase' GROUP BY 1),
-        |seq AS (
-        |  SELECT day,
-        |         CAST(c AS DOUBLE) / k / 100 AS x,
-        |         CAST(SUM(c) OVER w AS DOUBLE) / SUM(k) OVER w / 100 AS mean_t
-        |  FROM daily
-        |  WINDOW w AS (ORDER BY day ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        |terms AS (
-        |  SELECT day, x, mean_t,
-        |         CAST(ROUND(x - mean_t - 0.005, 12) AS DECIMAL(28,12)) AS t
-        |  FROM seq),
-        |walked AS (
-        |  SELECT day, x,
-        |         SUM(t) OVER (ORDER BY day
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS m
-        |  FROM terms),
-        |ph AS (
-        |  SELECT day, x, m,
-        |         MAX(m) OVER (ORDER BY day
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - m AS stat
-        |  FROM walked)
-        |SELECT day, CAST(ROUND(x, 4) AS DOUBLE) AS mean_value,
-        |       CAST(ROUND(CAST(m AS DOUBLE), 6) AS DOUBLE) AS m,
-        |       CAST(ROUND(CAST(stat AS DOUBLE), 6) AS DOUBLE) AS ph,
-        |       CAST(stat AS DOUBLE) > 2.0 AS alarm
-        |FROM ph
-        |ORDER BY day""".stripMargin)
-  }
+      |ORDER BY day""".stripMargin,
+    "strftime(CAST(ts AS DATE), '%Y-%m-%d')" -> "date_format(to_date(ts), 'yyyy-MM-dd')")
 
   val all: Seq[OpQuery] = Seq(sim_ann_pq, ts_page_hinkley)
 }

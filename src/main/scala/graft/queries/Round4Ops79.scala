@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.functions._
-
 import graft.Tables
 
 /** Round-4 batch 79: pinball (quantile) loss for forecast evaluation,
@@ -85,8 +83,7 @@ object Round4Ops79 {
     * part names; matches compare an escaped literal-% pattern, an
     * unescaped (wildcard) form, and a single-char _ probe.
     */
-  val p25_like_escape = OpQuery(
-    "p25_like_escape",
+  val p25_like_escape = OpQuery.sql("p25_like_escape", "part")(
     """WITH s AS (
       |  SELECT p_partkey,
       |         replace(replace(p_name, 'a', '%'), 'o', '_') AS tricky
@@ -97,21 +94,7 @@ object Round4Ops79 {
       |       tricky LIKE '%%' AS wild_any,
       |       tricky LIKE 's_r%' AS positional
       |FROM s
-      |ORDER BY p_partkey""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "part").createOrReplaceTempView("graft_like_part")
-    spark.sql(
-      """WITH s AS (
-        |  SELECT p_partkey,
-        |         replace(replace(p_name, 'a', '%'), 'o', '_') AS tricky
-        |  FROM graft_like_part WHERE p_partkey < 300)
-        |SELECT p_partkey, tricky,
-        |       tricky LIKE '%!%%' ESCAPE '!' AS has_literal_pct,
-        |       tricky LIKE '%!_%' ESCAPE '!' AS has_literal_us,
-        |       tricky LIKE '%%' AS wild_any,
-        |       tricky LIKE 's_r%' AS positional
-        |FROM s
-        |ORDER BY p_partkey""".stripMargin)
-  }
+      |ORDER BY p_partkey""".stripMargin)
 
   val all: Seq[OpQuery] = Seq(eval_pinball_loss, f_mask_builtin, p25_like_escape)
 }

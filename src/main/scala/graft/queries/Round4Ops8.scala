@@ -87,26 +87,14 @@ object Round4Ops8 {
     * decorrelated by Catalyst into aggregate-then-join (no per-row
     * re-execution). Identical SQL text on both engines.
     */
-  val j16_correlated_select = OpQuery(
-    "j16_correlated_select",
+  val j16_correlated_select = OpQuery.sql("j16_correlated_select", "orders", "customer")(
     """SELECT c_custkey,
       |       (SELECT CAST(COUNT(*) AS BIGINT) FROM orders o
       |        WHERE o.o_custkey = c.c_custkey) AS n_orders,
       |       (SELECT CAST(MAX(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
       |        FROM orders o WHERE o.o_custkey = c.c_custkey) AS max_price
       |FROM customer c
-      |ORDER BY c_custkey""".stripMargin) { (spark, dir) =>
-    t(spark, dir, "orders").createOrReplaceTempView("graft_cs_orders")
-    t(spark, dir, "customer").createOrReplaceTempView("graft_cs_customer")
-    spark.sql(
-      """SELECT c_custkey,
-        |       (SELECT CAST(COUNT(*) AS BIGINT) FROM graft_cs_orders o
-        |        WHERE o.o_custkey = c.c_custkey) AS n_orders,
-        |       (SELECT CAST(MAX(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-        |        FROM graft_cs_orders o WHERE o.o_custkey = c.c_custkey) AS max_price
-        |FROM graft_cs_customer c
-        |ORDER BY c_custkey""".stripMargin)
-  }
+      |ORDER BY c_custkey""".stripMargin)
 
   /** NOT IN vs a null-bearing subquery — the classic three-valued-logic
     * trap: one NULL in the set makes `x NOT IN (...)` never true, so the
@@ -114,8 +102,7 @@ object Round4Ops8 {
     * rows. Both engines must implement the same (correct, surprising)
     * semantics.
     */
-  val j17_not_in_nulls = OpQuery(
-    "j17_not_in_nulls",
+  val j17_not_in_nulls = OpQuery.sql("j17_not_in_nulls", "orders", "customer")(
     """SELECT
       |  (SELECT CAST(COUNT(*) AS BIGINT) FROM orders
       |   WHERE o_custkey NOT IN
@@ -123,19 +110,7 @@ object Round4Ops8 {
       |  (SELECT CAST(COUNT(*) AS BIGINT) FROM orders
       |   WHERE o_custkey NOT IN
       |     (SELECT NULLIF(c_custkey, 3) FROM customer
-      |      WHERE c_custkey >= 100 OR c_custkey = 3)) AS n_with_null""".stripMargin) { (spark, dir) =>
-    t(spark, dir, "orders").createOrReplaceTempView("graft_ni_orders")
-    t(spark, dir, "customer").createOrReplaceTempView("graft_ni_customer")
-    spark.sql(
-      """SELECT
-        |  (SELECT CAST(COUNT(*) AS BIGINT) FROM graft_ni_orders
-        |   WHERE o_custkey NOT IN
-        |     (SELECT c_custkey FROM graft_ni_customer WHERE c_custkey >= 100)) AS n_without_null,
-        |  (SELECT CAST(COUNT(*) AS BIGINT) FROM graft_ni_orders
-        |   WHERE o_custkey NOT IN
-        |     (SELECT NULLIF(c_custkey, 3) FROM graft_ni_customer
-        |      WHERE c_custkey >= 100 OR c_custkey = 3)) AS n_with_null""".stripMargin)
-  }
+      |      WHERE c_custkey >= 100 OR c_custkey = 3)) AS n_with_null""".stripMargin)
 
   val all: Seq[OpQuery] = Seq(
     s21_precombine_merge, f_try, j16_correlated_select, j17_not_in_nulls)

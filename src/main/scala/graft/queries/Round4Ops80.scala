@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.functions._
-
 import graft.Tables
 
 /** Round-4 batch 80: 1-D Wasserstein (earth mover's) drift distance,
@@ -92,8 +90,7 @@ object Round4Ops80 {
     * cohort pay back" view. First-order assignment is one min-aggregate;
     * the curve is a cumulative window over exact DECIMAL revenue.
     */
-  val event_cohort_ltv = OpQuery(
-    "event_cohort_ltv",
+  val event_cohort_ltv = OpQuery.sql("event_cohort_ltv", "orders")(
     """WITH firsts AS (
       |  SELECT o_custkey, MIN(EXTRACT(year FROM o_orderdate)) AS cohort
       |  FROM orders GROUP BY o_custkey),
@@ -110,27 +107,7 @@ object Round4Ops80 {
       |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE)
       |         AS cum_revenue
       |FROM rev
-      |ORDER BY cohort, age""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "orders").createOrReplaceTempView("graft_ltv_orders")
-    spark.sql(
-      """WITH firsts AS (
-        |  SELECT o_custkey, MIN(EXTRACT(year FROM o_orderdate)) AS cohort
-        |  FROM graft_ltv_orders GROUP BY o_custkey),
-        |rev AS (
-        |  SELECT f.cohort,
-        |         EXTRACT(year FROM o.o_orderdate) - f.cohort AS age,
-        |         SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) AS r,
-        |         COUNT(DISTINCT o.o_custkey) AS buyers
-        |  FROM graft_ltv_orders o JOIN firsts f ON o.o_custkey = f.o_custkey
-        |  GROUP BY f.cohort, EXTRACT(year FROM o.o_orderdate) - f.cohort)
-        |SELECT CAST(cohort AS INT) AS cohort, CAST(age AS INT) AS age,
-        |       CAST(buyers AS BIGINT) AS buyers,
-        |       CAST(SUM(r) OVER (PARTITION BY cohort ORDER BY age
-        |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE)
-        |         AS cum_revenue
-        |FROM rev
-        |ORDER BY cohort, age""".stripMargin)
-  }
+      |ORDER BY cohort, age""".stripMargin)
 
   /** G-test (log-likelihood ratio) of independence between market
     * segment and order priority — the chi-square alternative that is
@@ -138,8 +115,7 @@ object Round4Ops80 {
     * quantized to DECIMAL(28,12) so the statistic is engine-exact, and
     * the contingency table is one grouped pass plus broadcast marginals.
     */
-  val a55_g_test = OpQuery(
-    "a55_g_test",
+  val a55_g_test = OpQuery.sql("a55_g_test", "orders", "customer")(
     """WITH joined AS (
       |  SELECT c.c_mktsegment AS seg, o.o_orderpriority AS pri
       |  FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey),
@@ -159,31 +135,7 @@ object Round4Ops80 {
       |SELECT CAST(ROUND(CAST(SUM(t) AS DOUBLE), 6) AS DOUBLE) AS g_stat,
       |       CAST((SELECT COUNT(*) FROM margins) AS BIGINT) AS n_segments,
       |       CAST((SELECT COUNT(*) FROM cols) AS BIGINT) AS n_priorities
-      |FROM terms""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "orders").createOrReplaceTempView("graft_g_orders")
-    Tables.load(spark, dir, "customer").createOrReplaceTempView("graft_g_customer")
-    spark.sql(
-      """WITH joined AS (
-        |  SELECT c.c_mktsegment AS seg, o.o_orderpriority AS pri
-        |  FROM graft_g_orders o JOIN graft_g_customer c ON o.o_custkey = c.c_custkey),
-        |cells AS (SELECT seg, pri, COUNT(*) AS o FROM joined GROUP BY seg, pri),
-        |margins AS (
-        |  SELECT seg, SUM(o) AS rs FROM cells GROUP BY seg),
-        |cols AS (SELECT pri, SUM(o) AS cs FROM cells GROUP BY pri),
-        |tot AS (SELECT SUM(o) AS n FROM cells),
-        |terms AS (
-        |  SELECT CAST(ROUND(2.0 * c.o *
-        |           ln(CAST(c.o AS DOUBLE) * t.n / (m.rs * cl.cs)), 12)
-        |           AS DECIMAL(28,12)) AS t
-        |  FROM cells c
-        |  JOIN margins m ON c.seg = m.seg
-        |  JOIN cols cl ON c.pri = cl.pri
-        |  CROSS JOIN tot t)
-        |SELECT CAST(ROUND(CAST(SUM(t) AS DOUBLE), 6) AS DOUBLE) AS g_stat,
-        |       CAST((SELECT COUNT(*) FROM margins) AS BIGINT) AS n_segments,
-        |       CAST((SELECT COUNT(*) FROM cols) AS BIGINT) AS n_priorities
-        |FROM terms""".stripMargin)
-  }
+      |FROM terms""".stripMargin)
 
   val all: Seq[OpQuery] = Seq(ts_emd_drift, event_cohort_ltv, a55_g_test)
 }

@@ -15,8 +15,7 @@ object Round4Ops81 {
     * decimals and summed as DECIMAL, so all four means are
     * order-independent — one grouped pass produces the whole family.
     */
-  val a56_mean_family = OpQuery(
-    "a56_mean_family",
+  val a56_mean_family = OpQuery.sql("a56_mean_family", "customer")(
     """WITH base AS (
       |  SELECT c_mktsegment AS seg,
       |         CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT) AS c
@@ -35,29 +34,7 @@ object Round4Ops81 {
       |       CAST(ROUND(n / CAST(sinv AS DOUBLE), 4) AS DOUBLE) AS mean_harm,
       |       CAST(ROUND(sqrt(CAST(sq AS DOUBLE) / n) / 100, 4) AS DOUBLE) AS mean_rms
       |FROM m
-      |ORDER BY seg""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "customer").createOrReplaceTempView("graft_mf_customer")
-    spark.sql(
-      """WITH base AS (
-        |  SELECT c_mktsegment AS seg,
-        |         CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT) AS c
-        |  FROM graft_mf_customer WHERE c_acctbal > 0),
-        |m AS (
-        |  SELECT seg, COUNT(*) AS n,
-        |         SUM(c) AS s,
-        |         SUM(CAST(c AS DECIMAL(38,0)) * CAST(c AS DECIMAL(38,0))) AS sq,
-        |         SUM(CAST(ROUND(ln(CAST(c AS DOUBLE) / 100), 12) AS DECIMAL(28,12)))
-        |           AS sln,
-        |         SUM(CAST(ROUND(100.0 / c, 12) AS DECIMAL(28,12))) AS sinv
-        |  FROM base GROUP BY seg)
-        |SELECT seg, CAST(n AS BIGINT) AS n,
-        |       CAST(ROUND(CAST(s AS DOUBLE) / n / 100, 4) AS DOUBLE) AS mean_arith,
-        |       CAST(ROUND(exp(CAST(sln AS DOUBLE) / n), 4) AS DOUBLE) AS mean_geo,
-        |       CAST(ROUND(n / CAST(sinv AS DOUBLE), 4) AS DOUBLE) AS mean_harm,
-        |       CAST(ROUND(sqrt(CAST(sq AS DOUBLE) / n) / 100, 4) AS DOUBLE) AS mean_rms
-        |FROM m
-        |ORDER BY seg""".stripMargin)
-  }
+      |ORDER BY seg""".stripMargin)
 
   /** Bridge-table attribution: order revenue allocated to suppliers
     * pro-rata by line quantity — the many-to-many dimensional-modeling

@@ -100,8 +100,7 @@ object Round4Ops83 {
     * every full-window day is emitted with its ratio and flag. Both window means come from exact integer cents over one sorted
     * pass; only full windows are compared.
     */
-  val ts_level_shift = OpQuery(
-    "ts_level_shift",
+  val ts_level_shift = OpQuery.sql("ts_level_shift", "events")(
     """WITH daily AS (
       |  SELECT strftime(CAST(ts AS DATE), '%Y-%m-%d') AS day,
       |         CAST(SUM(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS c
@@ -122,31 +121,8 @@ object Round4Ops83 {
       |        OR CAST(sa AS DOUBLE) * nb * 1.25 < CAST(sb AS DOUBLE) * na) AS shifted
       |FROM framed
       |WHERE nb = 7 AND na = 7
-      |ORDER BY day""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "events").createOrReplaceTempView("graft_ls_events")
-    spark.sql(
-      """WITH daily AS (
-        |  SELECT date_format(to_date(ts), 'yyyy-MM-dd') AS day,
-        |         CAST(SUM(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS c
-        |  FROM graft_ls_events WHERE event_type = 'purchase' GROUP BY 1),
-        |framed AS (
-        |  SELECT day, c,
-        |         SUM(c) OVER (ORDER BY day ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING) AS sb,
-        |         COUNT(*) OVER (ORDER BY day ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING) AS nb,
-        |         SUM(c) OVER (ORDER BY day ROWS BETWEEN CURRENT ROW AND 6 FOLLOWING) AS sa,
-        |         COUNT(*) OVER (ORDER BY day ROWS BETWEEN CURRENT ROW AND 6 FOLLOWING) AS na
-        |  FROM daily)
-        |SELECT day,
-        |       CAST(ROUND(CAST(sb AS DOUBLE) / nb / 100, 2) AS DOUBLE) AS mean_before,
-        |       CAST(ROUND(CAST(sa AS DOUBLE) / na / 100, 2) AS DOUBLE) AS mean_after,
-        |       CAST(ROUND(CAST(sa AS DOUBLE) * nb / (CAST(sb AS DOUBLE) * na), 4)
-        |            AS DOUBLE) AS shift_ratio,
-        |       (CAST(sa AS DOUBLE) * nb > 1.25 * CAST(sb AS DOUBLE) * na
-        |        OR CAST(sa AS DOUBLE) * nb * 1.25 < CAST(sb AS DOUBLE) * na) AS shifted
-        |FROM framed
-        |WHERE nb = 7 AND na = 7
-        |ORDER BY day""".stripMargin)
-  }
+      |ORDER BY day""".stripMargin,
+    "strftime(CAST(ts AS DATE), '%Y-%m-%d')" -> "date_format(to_date(ts), 'yyyy-MM-dd')")
 
   val all: Seq[OpQuery] = Seq(ml_feature_backfill, dq_double_charge, ts_level_shift)
 }

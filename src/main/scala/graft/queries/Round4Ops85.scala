@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.functions._
-
 import graft.Tables
 
 /** Round-4 batch 85: running mode over an event stream, the
@@ -16,8 +14,7 @@ object Round4Ops85 {
     * into one integer, so two windows over the same (user, time) sort
     * do all the work — no per-row re-aggregation.
     */
-  val w9_running_mode = OpQuery(
-    "w9_running_mode",
+  val w9_running_mode = OpQuery.sql("w9_running_mode", "events")(
     """WITH typed AS (
       |  SELECT user_id, event_id, ts,
       |         CASE event_type WHEN 'view' THEN 0 WHEN 'click' THEN 1
@@ -37,30 +34,7 @@ object Round4Ops85 {
       |       CAST(FLOOR(code / 10) AS BIGINT) AS mode_count,
       |       CAST(9 - code % 10 AS INT) AS mode_type_rank
       |FROM encoded
-      |ORDER BY user_id, event_id""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "events").createOrReplaceTempView("graft_rm_events")
-    spark.sql(
-      """WITH typed AS (
-        |  SELECT user_id, event_id, ts,
-        |         CASE event_type WHEN 'view' THEN 0 WHEN 'click' THEN 1
-        |              WHEN 'purchase' THEN 2 WHEN 'error' THEN 3 ELSE 4 END AS tr
-        |  FROM graft_rm_events WHERE user_id < 20),
-        |counted AS (
-        |  SELECT user_id, event_id, ts, tr,
-        |         COUNT(*) OVER (PARTITION BY user_id, tr ORDER BY ts, event_id
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS c
-        |  FROM typed),
-        |encoded AS (
-        |  SELECT user_id, event_id, ts,
-        |         MAX(c * 10 + (9 - tr)) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS code
-        |  FROM counted)
-        |SELECT user_id, event_id,
-        |       CAST(FLOOR(code / 10) AS BIGINT) AS mode_count,
-        |       CAST(9 - code % 10 AS INT) AS mode_type_rank
-        |FROM encoded
-        |ORDER BY user_id, event_id""".stripMargin)
-  }
+      |ORDER BY user_id, event_id""".stripMargin)
 
   /** Nearest-centroid (Rocchio) classifier evaluated on its own
     * training set: per-label centroids from quantized DECIMAL component

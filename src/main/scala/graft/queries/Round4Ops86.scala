@@ -64,8 +64,7 @@ object Round4Ops86 {
     * one pass. The epidemiology-style readout behind "are power users
     * likelier to hit errors?".
     */
-  val a59_odds_ratio = OpQuery(
-    "a59_odds_ratio",
+  val a59_odds_ratio = OpQuery.sql("a59_odds_ratio", "events")(
     """WITH users AS (
       |  SELECT user_id, COUNT(*) AS n,
       |         SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS errs
@@ -82,27 +81,7 @@ object Round4Ops86 {
       |         AS odds_ratio,
       |       CAST(ROUND(sqrt(1.0 / a + 1.0 / b + 1.0 / c + 1.0 / d), 6) AS DOUBLE)
       |         AS log_or_se
-      |FROM cells""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "events").createOrReplaceTempView("graft_or_events")
-    spark.sql(
-      """WITH users AS (
-        |  SELECT user_id, COUNT(*) AS n,
-        |         SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS errs
-        |  FROM graft_or_events GROUP BY user_id),
-        |cells AS (
-        |  SELECT SUM(CASE WHEN n >= 70 AND errs * 100 >= 10 * n THEN 1 ELSE 0 END) AS a,
-        |         SUM(CASE WHEN n >= 70 AND errs * 100 < 10 * n THEN 1 ELSE 0 END) AS b,
-        |         SUM(CASE WHEN n < 70 AND errs * 100 >= 10 * n THEN 1 ELSE 0 END) AS c,
-        |         SUM(CASE WHEN n < 70 AND errs * 100 < 10 * n THEN 1 ELSE 0 END) AS d
-        |  FROM users)
-        |SELECT CAST(a AS BIGINT) AS high_heavy, CAST(b AS BIGINT) AS low_heavy,
-        |       CAST(c AS BIGINT) AS high_light, CAST(d AS BIGINT) AS low_light,
-        |       CAST(ROUND(CAST(a AS DOUBLE) * d / (CAST(b AS DOUBLE) * c), 6) AS DOUBLE)
-        |         AS odds_ratio,
-        |       CAST(ROUND(sqrt(1.0 / a + 1.0 / b + 1.0 / c + 1.0 / d), 6) AS DOUBLE)
-        |         AS log_or_se
-        |FROM cells""".stripMargin)
-  }
+      |FROM cells""".stripMargin)
 
   /** Per-user running purchase totals — the BATCH contract of the
     * streaming transformWithState operator (graft.streaming

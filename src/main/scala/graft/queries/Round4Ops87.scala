@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.functions._
-
 import graft.Tables
 
 /** Round-4 batch 87: the Hill diversity profile, cross-lingual
@@ -17,8 +15,7 @@ object Round4Ops87 {
     * before their DECIMAL sums so the profile is engine-exact; one
     * grouped pass over (lang, source) counts feeds all three.
     */
-  val a60_hill_diversity = OpQuery(
-    "a60_hill_diversity",
+  val a60_hill_diversity = OpQuery.sql("a60_hill_diversity", "documents")(
     """WITH cells AS (
       |  SELECT lang, source, COUNT(*) AS n FROM documents GROUP BY lang, source),
       |tot AS (SELECT lang, SUM(n) AS t FROM cells GROUP BY lang),
@@ -36,28 +33,7 @@ object Round4Ops87 {
       |       CAST(ROUND(1.0 / CAST(SUM(sterm) AS DOUBLE), 6) AS DOUBLE) AS hill_q2
       |FROM terms
       |GROUP BY lang
-      |ORDER BY lang""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "documents").createOrReplaceTempView("graft_hill_docs")
-    spark.sql(
-      """WITH cells AS (
-        |  SELECT lang, source, COUNT(*) AS n FROM graft_hill_docs GROUP BY lang, source),
-        |tot AS (SELECT lang, SUM(n) AS t FROM cells GROUP BY lang),
-        |terms AS (
-        |  SELECT c.lang,
-        |         CAST(ROUND(-(CAST(c.n AS DOUBLE) / t.t) *
-        |                    ln(CAST(c.n AS DOUBLE) / t.t), 12) AS DECIMAL(28,12))
-        |           AS hterm,
-        |         CAST(ROUND(POW(CAST(c.n AS DOUBLE) / t.t, 2), 12) AS DECIMAL(28,12))
-        |           AS sterm
-        |  FROM cells c JOIN tot t ON c.lang = t.lang)
-        |SELECT lang,
-        |       CAST(COUNT(*) AS BIGINT) AS hill_q0,
-        |       CAST(ROUND(exp(CAST(SUM(hterm) AS DOUBLE)), 6) AS DOUBLE) AS hill_q1,
-        |       CAST(ROUND(1.0 / CAST(SUM(sterm) AS DOUBLE), 6) AS DOUBLE) AS hill_q2
-        |FROM terms
-        |GROUP BY lang
-        |ORDER BY lang""".stripMargin)
-  }
+      |ORDER BY lang""".stripMargin)
 
   /** Cross-lingual near-duplicate leakage: the top-20 highest-cosine embedding
     * pairs whose documents carry DIFFERENT language tags — translated or
@@ -122,8 +98,7 @@ object Round4Ops87 {
     * inner join on user sets; the estimator data teams use to size
     * what they cannot enumerate.
     */
-  val a61_capture_recapture = OpQuery(
-    "a61_capture_recapture",
+  val a61_capture_recapture = OpQuery.sql("a61_capture_recapture", "events")(
     """WITH s1 AS (SELECT DISTINCT user_id FROM events WHERE event_type = 'purchase'),
       |s2 AS (SELECT DISTINCT user_id FROM events WHERE event_type = 'error'),
       |m AS (
@@ -136,24 +111,7 @@ object Round4Ops87 {
       |         AS lincoln_petersen,
       |       CAST(ROUND((CAST(n1 + 1 AS DOUBLE)) * (n2 + 1) / (overlap + 1) - 1, 4)
       |            AS DOUBLE) AS chapman
-      |FROM m""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "events").createOrReplaceTempView("graft_cr_events")
-    spark.sql(
-      """WITH s1 AS (SELECT DISTINCT user_id FROM graft_cr_events
-        |            WHERE event_type = 'purchase'),
-        |s2 AS (SELECT DISTINCT user_id FROM graft_cr_events WHERE event_type = 'error'),
-        |m AS (
-        |  SELECT (SELECT COUNT(*) FROM s1) AS n1,
-        |         (SELECT COUNT(*) FROM s2) AS n2,
-        |         (SELECT COUNT(*) FROM s1 JOIN s2 USING (user_id)) AS overlap)
-        |SELECT CAST(n1 AS BIGINT) AS n_purchasers, CAST(n2 AS BIGINT) AS n_errorers,
-        |       CAST(overlap AS BIGINT) AS overlap,
-        |       CAST(ROUND(CAST(n1 AS DOUBLE) * n2 / overlap, 4) AS DOUBLE)
-        |         AS lincoln_petersen,
-        |       CAST(ROUND((CAST(n1 + 1 AS DOUBLE)) * (n2 + 1) / (overlap + 1) - 1, 4)
-        |            AS DOUBLE) AS chapman
-        |FROM m""".stripMargin)
-  }
+      |FROM m""".stripMargin)
 
   val all: Seq[OpQuery] = Seq(a60_hill_diversity, dedup_cross_lingual, a61_capture_recapture)
 }

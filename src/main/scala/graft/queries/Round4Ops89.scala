@@ -56,8 +56,7 @@ object Round4Ops89 {
     * consecutive-side counter is a window over sign runs, all
     * engine-exact.
     */
-  val ts_western_electric = OpQuery(
-    "ts_western_electric",
+  val ts_western_electric = OpQuery.sql("ts_western_electric", "events")(
     """WITH daily AS (
       |  SELECT strftime(CAST(ts AS DATE), '%Y-%m-%d') AS day,
       |         CAST(SUM(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS c
@@ -86,39 +85,8 @@ object Round4Ops89 {
       |       (streak >= 8) AS rule4_eight_one_side,
       |       CAST(streak AS INT) AS streak
       |FROM streaks
-      |ORDER BY day""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "events").createOrReplaceTempView("graft_we_events")
-    spark.sql(
-      """WITH daily AS (
-        |  SELECT date_format(to_date(ts), 'yyyy-MM-dd') AS day,
-        |         CAST(SUM(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS c
-        |  FROM graft_we_events WHERE event_type = 'purchase' GROUP BY 1),
-        |m AS (
-        |  SELECT COUNT(*) AS n, SUM(c) AS s,
-        |         SUM(CAST(c AS DECIMAL(38,0)) * CAST(c AS DECIMAL(38,0))) AS sq
-        |  FROM daily),
-        |scored AS (
-        |  SELECT day, c,
-        |         (c - CAST(s AS DOUBLE) / n) /
-        |           sqrt(CAST(sq AS DOUBLE) / n - POW(CAST(s AS DOUBLE) / n, 2)) AS z,
-        |         CASE WHEN c > CAST(s AS DOUBLE) / n THEN 1 ELSE 0 END AS side
-        |  FROM daily CROSS JOIN m),
-        |runs AS (
-        |  SELECT day, z, side,
-        |         ROW_NUMBER() OVER (ORDER BY day) -
-        |           ROW_NUMBER() OVER (PARTITION BY side ORDER BY day) AS grp
-        |  FROM scored),
-        |streaks AS (
-        |  SELECT day, z, side,
-        |         ROW_NUMBER() OVER (PARTITION BY side, grp ORDER BY day) AS streak
-        |  FROM runs)
-        |SELECT day, CAST(ROUND(z, 4) AS DOUBLE) AS z,
-        |       (ABS(z) > 3) AS rule1_beyond_3sigma,
-        |       (streak >= 8) AS rule4_eight_one_side,
-        |       CAST(streak AS INT) AS streak
-        |FROM streaks
-        |ORDER BY day""".stripMargin)
-  }
+      |ORDER BY day""".stripMargin,
+    "strftime(CAST(ts AS DATE), '%Y-%m-%d')" -> "date_format(to_date(ts), 'yyyy-MM-dd')")
 
   /** Ljung–Box whiteness statistic over lags 1–5 of the daily purchase
     * series: n(n+2)·Σ ρₖ²/(n−k) — "is there ANY autocorrelation left?"
@@ -126,8 +94,7 @@ object Round4Ops89 {
     * over the self-joined day series; the five quantized terms sum as
     * DECIMAL.
     */
-  val a63_ljung_box = OpQuery(
-    "a63_ljung_box",
+  val a63_ljung_box = OpQuery.sql("a63_ljung_box", "events")(
     """WITH daily AS (
       |  SELECT CAST(FLOOR(epoch(ts) / 86400) AS BIGINT) AS d,
       |         CAST(SUM(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS x
@@ -154,37 +121,9 @@ object Round4Ops89 {
       |SELECT CAST(MAX(n) AS BIGINT) AS n_days,
       |       CAST(ROUND(MAX(n) * (MAX(n) + 2.0) * CAST(SUM(t) AS DOUBLE), 6) AS DOUBLE)
       |         AS ljung_box_q
-      |FROM terms""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "events").createOrReplaceTempView("graft_lb_events")
-    spark.sql(
-      """WITH daily AS (
-        |  SELECT CAST(FLOOR(unix_timestamp(ts) / 86400) AS BIGINT) AS d,
-        |         CAST(SUM(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS x
-        |  FROM graft_lb_events WHERE event_type = 'purchase' GROUP BY 1),
-        |m AS (
-        |  SELECT COUNT(*) AS n, SUM(x) AS s,
-        |         SUM(CAST(x AS DECIMAL(38,0)) * CAST(x AS DECIMAL(38,0))) AS sq
-        |  FROM daily),
-        |lags AS (SELECT explode(sequence(1, 5)) AS k),
-        |rhos AS (
-        |  SELECT l.k,
-        |         SUM((a.x - CAST(m.s AS DOUBLE) / m.n) *
-        |             (b.x - CAST(m.s AS DOUBLE) / m.n)) /
-        |           MAX(CAST(m.sq AS DOUBLE) - CAST(m.s AS DOUBLE) * m.s / m.n) AS rho,
-        |         MAX(m.n) AS n
-        |  FROM lags l
-        |  JOIN daily a ON TRUE
-        |  JOIN daily b ON b.d = a.d + l.k
-        |  CROSS JOIN m
-        |  GROUP BY l.k),
-        |terms AS (
-        |  SELECT n, CAST(ROUND(rho * rho / (n - k), 12) AS DECIMAL(28,12)) AS t
-        |  FROM rhos)
-        |SELECT CAST(MAX(n) AS BIGINT) AS n_days,
-        |       CAST(ROUND(MAX(n) * (MAX(n) + 2.0) * CAST(SUM(t) AS DOUBLE), 6) AS DOUBLE)
-        |         AS ljung_box_q
-        |FROM terms""".stripMargin)
-  }
+      |FROM terms""".stripMargin,
+    "epoch(" -> "unix_timestamp(",
+    "unnest(range(1, 6))" -> "explode(sequence(1, 5))")
 
   val all: Seq[OpQuery] = Seq(s43_json_array_read, ts_western_electric, a63_ljung_box)
 }

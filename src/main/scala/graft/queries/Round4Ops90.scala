@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.functions._
-
 import graft.Tables
 
 /** Round-4 batch 90: Spearman and Kendall rank correlations and
@@ -84,8 +82,7 @@ object Round4Ops90 {
     * join is the documented quadratic ground-truth quarantine (the
     * scale path is Spearman above — one sort instead of n² pairs).
     */
-  val a65_kendall_tau = OpQuery(
-    "a65_kendall_tau",
+  val a65_kendall_tau = OpQuery.sql("a65_kendall_tau", "orders", "customer")(
     """WITH spend AS (
       |  SELECT o_custkey, CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT)
       |           AS cents
@@ -103,29 +100,7 @@ object Round4Ops90 {
       |SELECT CAST(c AS BIGINT) AS concordant, CAST(d AS BIGINT) AS discordant,
       |       CAST(np AS BIGINT) AS n_pairs,
       |       CAST(ROUND(CAST(c - d AS DOUBLE) / np, 6) AS DOUBLE) AS kendall_tau
-      |FROM m""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "orders").createOrReplaceTempView("graft_kt_orders")
-    Tables.load(spark, dir, "customer").createOrReplaceTempView("graft_kt_customer")
-    spark.sql(
-      """WITH spend AS (
-        |  SELECT o_custkey, CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT)
-        |           AS cents
-        |  FROM graft_kt_orders GROUP BY o_custkey),
-        |joined AS (
-        |  SELECT c.c_custkey, CAST(CAST(c.c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT)
-        |           AS bal, s.cents
-        |  FROM graft_kt_customer c JOIN spend s ON c.c_custkey = s.o_custkey
-        |  WHERE c.c_custkey < 200),
-        |pairs AS (
-        |  SELECT CASE WHEN (a.bal - b.bal) * (a.cents - b.cents) > 0 THEN 1 ELSE 0 END AS conc,
-        |         CASE WHEN (a.bal - b.bal) * (a.cents - b.cents) < 0 THEN 1 ELSE 0 END AS disc
-        |  FROM joined a JOIN joined b ON a.c_custkey < b.c_custkey),
-        |m AS (SELECT SUM(conc) AS c, SUM(disc) AS d, COUNT(*) AS np FROM pairs)
-        |SELECT CAST(c AS BIGINT) AS concordant, CAST(d AS BIGINT) AS discordant,
-        |       CAST(np AS BIGINT) AS n_pairs,
-        |       CAST(ROUND(CAST(c - d AS DOUBLE) / np, 6) AS DOUBLE) AS kendall_tau
-        |FROM m""".stripMargin)
-  }
+      |FROM m""".stripMargin)
 
   /** Human-readable byte formatting: a pinned CASE ladder (B / KiB /
     * MiB / GiB with one decimal, half-up on an exact integer-scaled

@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.functions._
-
 import graft.Tables
 
 /** Round-4 batch 91: audience overlap matrix, Snowflake-style id
@@ -15,8 +13,7 @@ object Round4Ops91 {
     * self-join; at 100 TB the join sides are aggregates, never raw
     * events.
     */
-  val event_audience_overlap = OpQuery(
-    "event_audience_overlap",
+  val event_audience_overlap = OpQuery.sql("event_audience_overlap", "events")(
     """WITH au AS (SELECT DISTINCT event_type, user_id FROM events),
       |sizes AS (SELECT event_type, COUNT(*) AS n FROM au GROUP BY event_type),
       |shared AS (
@@ -31,25 +28,7 @@ object Round4Ops91 {
       |FROM shared s
       |JOIN sizes n1 ON s.t1 = n1.event_type
       |JOIN sizes n2 ON s.t2 = n2.event_type
-      |ORDER BY s.t1, s.t2""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "events").createOrReplaceTempView("graft_ao_events")
-    spark.sql(
-      """WITH au AS (SELECT DISTINCT event_type, user_id FROM graft_ao_events),
-        |sizes AS (SELECT event_type, COUNT(*) AS n FROM au GROUP BY event_type),
-        |shared AS (
-        |  SELECT a.event_type AS t1, b.event_type AS t2, COUNT(*) AS both_users
-        |  FROM au a JOIN au b
-        |    ON a.user_id = b.user_id AND a.event_type < b.event_type
-        |  GROUP BY a.event_type, b.event_type)
-        |SELECT s.t1, s.t2, CAST(s.both_users AS BIGINT) AS shared_users,
-        |       CAST(n1.n AS BIGINT) AS n_t1, CAST(n2.n AS BIGINT) AS n_t2,
-        |       CAST(ROUND(CAST(s.both_users AS DOUBLE) /
-        |            (n1.n + n2.n - s.both_users), 6) AS DOUBLE) AS jaccard
-        |FROM shared s
-        |JOIN sizes n1 ON s.t1 = n1.event_type
-        |JOIN sizes n2 ON s.t2 = n2.event_type
-        |ORDER BY s.t1, s.t2""".stripMargin)
-  }
+      |ORDER BY s.t1, s.t2""".stripMargin)
 
   /** Snowflake-style distributed id codec: compose 64-bit ids as
     * (millis << 22) | (worker << 12) | seq from event fields, then

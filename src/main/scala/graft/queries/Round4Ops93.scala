@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.functions._
-
 import graft.Tables
 
 /** Round-4 batch 93: the sketch family replayed in the oracle —
@@ -83,8 +81,7 @@ object Round4Ops93 {
     * the mergeable sketch whose accuracy claim the oracle can now
     * CHECK, not just trust.
     */
-  val a68_kmv_md5 = OpQuery(
-    "a68_kmv_md5",
+  val a68_kmv_md5 = OpQuery.sql("a68_kmv_md5", "events")(
     """WITH ids AS (SELECT DISTINCT user_id FROM events),
       |hashed AS (
       |  SELECT user_id,
@@ -99,26 +96,9 @@ object Round4Ops93 {
       |         AS kmv_estimate,
       |       CAST(ROUND(ABS(31.0 / (CAST(kth.h AS DOUBLE) / 4294967296.0) - truth.n)
       |                  / truth.n, 4) AS DOUBLE) AS rel_error
-      |FROM kth CROSS JOIN truth""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "events").createOrReplaceTempView("graft_kmv_events")
-    spark.sql(
-      """WITH ids AS (SELECT DISTINCT user_id FROM graft_kmv_events),
-        |hashed AS (
-        |  SELECT user_id,
-        |         CAST(conv(substr(md5(CAST(user_id AS STRING)), 1, 8), 16, 10) AS BIGINT)
-        |           AS h
-        |  FROM ids),
-        |ranked AS (
-        |  SELECT h, ROW_NUMBER() OVER (ORDER BY h, user_id) AS r FROM hashed),
-        |kth AS (SELECT h FROM ranked WHERE r = 32),
-        |truth AS (SELECT COUNT(*) AS n FROM ids)
-        |SELECT CAST(truth.n AS BIGINT) AS true_distinct,
-        |       CAST(ROUND(31.0 / (CAST(kth.h AS DOUBLE) / 4294967296.0), 4) AS DOUBLE)
-        |         AS kmv_estimate,
-        |       CAST(ROUND(ABS(31.0 / (CAST(kth.h AS DOUBLE) / 4294967296.0) - truth.n)
-        |                  / truth.n, 4) AS DOUBLE) AS rel_error
-        |FROM kth CROSS JOIN truth""".stripMargin)
-  }
+      |FROM kth CROSS JOIN truth""".stripMargin,
+    "('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 8))" ->
+      "conv(substr(md5(CAST(user_id AS STRING)), 1, 8), 16, 10)")
 
   /** HyperLogLog with md5 hashes, m=16 buckets: bucket on the top 4
     * bits, register = leading-zero rank of the remaining 28 (via

@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.functions._
-
 import graft.Tables
 
 /** Round-4 batch 94: slippy-map tile addressing, deterministic
@@ -16,8 +14,7 @@ object Round4Ops94 {
     * arithmetic. Same synthetic supplier coordinates as the haversine
     * gate.
     */
-  val f_geo_tile = OpQuery(
-    "f_geo_tile",
+  val f_geo_tile = OpQuery.sql("f_geo_tile", "supplier")(
     """WITH pts AS (
       |  SELECT s_suppkey,
       |         CAST(s_suppkey % 160 AS DOUBLE) - 80 + 0.25 AS lat,
@@ -28,21 +25,7 @@ object Round4Ops94 {
       |       CAST(FLOOR(ROUND((1 - ln(tan(radians(lat)) + 1 / cos(radians(lat)))
       |                         / pi()) / 2 * 64, 9)) AS INT) AS tile_y
       |FROM pts
-      |ORDER BY s_suppkey""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "supplier").createOrReplaceTempView("graft_tile_supp")
-    spark.sql(
-      """WITH pts AS (
-        |  SELECT s_suppkey,
-        |         CAST(s_suppkey % 160 AS DOUBLE) - 80 + 0.25 AS lat,
-        |         CAST((s_suppkey * 7) % 360 AS DOUBLE) - 180 + 0.5 AS lon
-        |  FROM graft_tile_supp)
-        |SELECT s_suppkey, lat, lon,
-        |       CAST(FLOOR(ROUND((lon + 180) / 360 * 64, 9)) AS INT) AS tile_x,
-        |       CAST(FLOOR(ROUND((1 - ln(tan(radians(lat)) + 1 / cos(radians(lat)))
-        |                         / pi()) / 2 * 64, 9)) AS INT) AS tile_y
-        |FROM pts
-        |ORDER BY s_suppkey""".stripMargin)
-  }
+      |ORDER BY s_suppkey""".stripMargin)
 
   /** Deterministic negative sampling for recommendation training: for
     * each observed (customer, part) purchase, three LCG-drawn candidate
@@ -101,8 +84,7 @@ object Round4Ops94 {
     * shares come from integer counts; the fit runs over quantized ln
     * terms.
     */
-  val event_retention_curve = OpQuery(
-    "event_retention_curve",
+  val event_retention_curve = OpQuery.sql("event_retention_curve", "events")(
     """WITH firsts AS (
       |  SELECT user_id, MIN(CAST(FLOOR(epoch(ts) / 86400) AS BIGINT)) AS d0
       |  FROM events GROUP BY user_id),
@@ -127,35 +109,8 @@ object Round4Ops94 {
       |         AS decay_slope,
       |       CAST(ROUND((sy - (k * sxy - sx * sy) / (k * sxx - sx * sx) * sx) / k, 6)
       |            AS DOUBLE) AS intercept
-      |FROM fit""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "events").createOrReplaceTempView("graft_rc_events")
-    spark.sql(
-      """WITH firsts AS (
-        |  SELECT user_id, MIN(CAST(FLOOR(unix_timestamp(ts) / 86400) AS BIGINT)) AS d0
-        |  FROM graft_rc_events GROUP BY user_id),
-        |activity AS (
-        |  SELECT DISTINCT e.user_id,
-        |         CAST(FLOOR(unix_timestamp(e.ts) / 86400) AS BIGINT) - f.d0 AS age
-        |  FROM graft_rc_events e JOIN firsts f ON e.user_id = f.user_id),
-        |pop AS (SELECT COUNT(*) AS n FROM firsts),
-        |curve AS (
-        |  SELECT age, COUNT(*) AS active FROM activity
-        |  WHERE age BETWEEN 1 AND 14 GROUP BY age),
-        |terms AS (
-        |  SELECT CAST(c.age AS DOUBLE) AS x,
-        |         ln(CAST(c.active AS DOUBLE) / p.n) AS y
-        |  FROM curve c CROSS JOIN pop p),
-        |fit AS (
-        |  SELECT COUNT(*) AS k, SUM(x) AS sx, SUM(y) AS sy,
-        |         SUM(x * y) AS sxy, SUM(x * x) AS sxx
-        |  FROM terms)
-        |SELECT CAST(k AS BIGINT) AS n_ages,
-        |       CAST(ROUND((k * sxy - sx * sy) / (k * sxx - sx * sx), 6) AS DOUBLE)
-        |         AS decay_slope,
-        |       CAST(ROUND((sy - (k * sxy - sx * sy) / (k * sxx - sx * sx) * sx) / k, 6)
-        |            AS DOUBLE) AS intercept
-        |FROM fit""".stripMargin)
-  }
+      |FROM fit""".stripMargin,
+    "epoch(" -> "unix_timestamp(")
 
   val all: Seq[OpQuery] = Seq(f_geo_tile, ml_negative_sampling, event_retention_curve)
 }

@@ -15,8 +15,7 @@ object Round4Ops95 {
     * next-event model's loss). Joint and marginal counts come from one
     * grouped pass; each p·ln term is quantized before the DECIMAL sum.
     */
-  val a71_entropy_rate = OpQuery(
-    "a71_entropy_rate",
+  val a71_entropy_rate = OpQuery.sql("a71_entropy_rate", "events")(
     """WITH seq AS (
       |  SELECT event_type AS w1,
       |         LEAD(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS w2
@@ -31,25 +30,7 @@ object Round4Ops95 {
       |  FROM joint j JOIN marg mg ON j.w1 = mg.w1 CROSS JOIN tot t)
       |SELECT CAST((SELECT t FROM tot) AS BIGINT) AS n_transitions,
       |       CAST(ROUND(CAST(SUM(h) AS DOUBLE), 6) AS DOUBLE) AS entropy_rate_nats
-      |FROM terms""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "events").createOrReplaceTempView("graft_er_events")
-    spark.sql(
-      """WITH seq AS (
-        |  SELECT event_type AS w1,
-        |         LEAD(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS w2
-        |  FROM graft_er_events),
-        |joint AS (
-        |  SELECT w1, w2, COUNT(*) AS c FROM seq WHERE w2 IS NOT NULL GROUP BY w1, w2),
-        |tot AS (SELECT SUM(c) AS t FROM joint),
-        |marg AS (SELECT w1, SUM(c) AS m FROM joint GROUP BY w1),
-        |terms AS (
-        |  SELECT CAST(ROUND(-(CAST(j.c AS DOUBLE) / t.t) *
-        |                    ln(CAST(j.c AS DOUBLE) / mg.m), 12) AS DECIMAL(28,12)) AS h
-        |  FROM joint j JOIN marg mg ON j.w1 = mg.w1 CROSS JOIN tot t)
-        |SELECT CAST((SELECT t FROM tot) AS BIGINT) AS n_transitions,
-        |       CAST(ROUND(CAST(SUM(h) AS DOUBLE), 6) AS DOUBLE) AS entropy_rate_nats
-        |FROM terms""".stripMargin)
-  }
+      |FROM terms""".stripMargin)
 
   /** Weibull shape/scale fit of inter-purchase gaps by median-rank
     * regression: sort the gaps, F̂ᵢ = (i−0.3)/(n+0.4), regress
@@ -124,8 +105,7 @@ object Round4Ops95 {
     * yields an all-true column, not an empty report — the audit that catches backfills stamped
     * with stale clocks.
     */
-  val dq_monotonic_audit = OpQuery(
-    "dq_monotonic_audit",
+  val dq_monotonic_audit = OpQuery.sql("dq_monotonic_audit", "events")(
     """WITH seq AS (
       |  SELECT user_id, event_id,
       |         LAG(event_id) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_id
@@ -139,24 +119,7 @@ object Round4Ops95 {
       |       (SUM(inv) = 0) AS is_monotonic
       |FROM flags
       |GROUP BY user_id
-      |ORDER BY user_id""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "events").createOrReplaceTempView("graft_mono_events")
-    spark.sql(
-      """WITH seq AS (
-        |  SELECT user_id, event_id,
-        |         LAG(event_id) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_id
-        |  FROM graft_mono_events),
-        |flags AS (
-        |  SELECT user_id,
-        |         CASE WHEN prev_id IS NOT NULL AND event_id < prev_id THEN 1 ELSE 0 END AS inv
-        |  FROM seq)
-        |SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_events,
-        |       CAST(SUM(inv) AS BIGINT) AS inversions,
-        |       (SUM(inv) = 0) AS is_monotonic
-        |FROM flags
-        |GROUP BY user_id
-        |ORDER BY user_id""".stripMargin)
-  }
+      |ORDER BY user_id""".stripMargin)
 
   val all: Seq[OpQuery] = Seq(a71_entropy_rate, a72_weibull_fit, dq_monotonic_audit)
 }

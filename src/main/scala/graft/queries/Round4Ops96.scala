@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -15,8 +14,7 @@ object Round4Ops96 {
     * small-sample types from screaming. Closed-form arithmetic over
     * integer counts; one grouped pass.
     */
-  val a73_beta_binomial = OpQuery(
-    "a73_beta_binomial",
+  val a73_beta_binomial = OpQuery.sql("a73_beta_binomial", "events")(
     """WITH daily AS (
       |  SELECT event_type, CAST(ts AS DATE) AS d, COUNT(*) AS n,
       |         SUM(CASE WHEN value > 100 THEN 1 ELSE 0 END) AS hits
@@ -34,28 +32,8 @@ object Round4Ops96 {
       |       CAST(ROUND(mean - 1.96 * sd, 6) AS DOUBLE) AS ci_lo,
       |       CAST(ROUND(mean + 1.96 * sd, 6) AS DOUBLE) AS ci_hi
       |FROM post
-      |ORDER BY event_type""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "events").createOrReplaceTempView("graft_bb_events")
-    spark.sql(
-      """WITH daily AS (
-        |  SELECT event_type, to_date(ts) AS d, COUNT(*) AS n,
-        |         SUM(CASE WHEN value > 100 THEN 1 ELSE 0 END) AS hits
-        |  FROM graft_bb_events GROUP BY event_type, to_date(ts)),
-        |agg AS (
-        |  SELECT event_type, SUM(n) AS n, SUM(hits) AS h FROM daily GROUP BY event_type),
-        |post AS (
-        |  SELECT event_type, n, h,
-        |         (CAST(h AS DOUBLE) + 1) / (n + 2) AS mean,
-        |         sqrt((CAST(h AS DOUBLE) + 1) * (n - h + 1) /
-        |              (POW(CAST(n AS DOUBLE) + 2, 2) * (n + 3))) AS sd
-        |  FROM agg)
-        |SELECT event_type, CAST(n AS BIGINT) AS n, CAST(h AS BIGINT) AS hits,
-        |       CAST(ROUND(mean, 6) AS DOUBLE) AS posterior_mean,
-        |       CAST(ROUND(mean - 1.96 * sd, 6) AS DOUBLE) AS ci_lo,
-        |       CAST(ROUND(mean + 1.96 * sd, 6) AS DOUBLE) AS ci_hi
-        |FROM post
-        |ORDER BY event_type""".stripMargin)
-  }
+      |ORDER BY event_type""".stripMargin,
+    "CAST(ts AS DATE)" -> "to_date(ts)")
 
   /** Schema-on-read projection: the parquet scan driven by an EXPLICIT
     * narrower schema (three of eleven lineitem columns, with

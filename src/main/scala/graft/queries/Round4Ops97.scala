@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.functions._
-
 import graft.Tables
 
 /** Round-4 batch 97: dedup blocking-quality comparison, semantic
@@ -122,8 +120,7 @@ object Round4Ops97 {
     * with a binomial z — the guardrail that must pass before ANY A/B
     * readout is believed. Counts exact, one aggregate.
     */
-  val a74_srm_check = OpQuery(
-    "a74_srm_check",
+  val a74_srm_check = OpQuery.sql("a74_srm_check", "events")(
     """WITH assigned AS (
       |  SELECT CASE WHEN CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 8))
       |                    AS BIGINT) % 2 = 0 THEN 'A' ELSE 'B' END AS arm
@@ -135,22 +132,9 @@ object Round4Ops97 {
       |SELECT CAST(a AS BIGINT) AS arm_a, CAST(n - a AS BIGINT) AS arm_b,
       |       CAST(ROUND((a - n * 0.5) / sqrt(n * 0.25), 6) AS DOUBLE) AS srm_z,
       |       (ABS((a - n * 0.5) / sqrt(n * 0.25)) < 3) AS ratio_ok
-      |FROM m""".stripMargin) { (spark, dir) =>
-    Tables.load(spark, dir, "events").createOrReplaceTempView("graft_srm_events")
-    spark.sql(
-      """WITH assigned AS (
-        |  SELECT CASE WHEN CAST(conv(substr(md5(CAST(user_id AS STRING)), 1, 8), 16, 10)
-        |                    AS BIGINT) % 2 = 0 THEN 'A' ELSE 'B' END AS arm
-        |  FROM (SELECT DISTINCT user_id FROM graft_srm_events) u),
-        |m AS (
-        |  SELECT SUM(CASE WHEN arm = 'A' THEN 1 ELSE 0 END) AS a,
-        |         COUNT(*) AS n
-        |  FROM assigned)
-        |SELECT CAST(a AS BIGINT) AS arm_a, CAST(n - a AS BIGINT) AS arm_b,
-        |       CAST(ROUND((a - n * 0.5) / sqrt(n * 0.25), 6) AS DOUBLE) AS srm_z,
-        |       (ABS((a - n * 0.5) / sqrt(n * 0.25)) < 3) AS ratio_ok
-        |FROM m""".stripMargin)
-  }
+      |FROM m""".stripMargin,
+    "('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 8))" ->
+      "conv(substr(md5(CAST(user_id AS STRING)), 1, 8), 16, 10)")
 
   val all: Seq[OpQuery] = Seq(dedup_blocking_quality, f_semver_compare, a74_srm_check)
 }
