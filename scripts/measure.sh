@@ -1,22 +1,15 @@
 #!/bin/bash
-# One-sided isolated measurement of a gate subset on the CURRENT build.
-# Usage: measure.sh <gates-csv> [reps] [cpus] [outfile]
+# One-sided isolated measurement of a gate subset on the CURRENT build
+# (launched through bench.sh). A relative outfile is relative to the
+# checkout root.
+# Usage: measure.sh <gates-csv> [reps] [cpus (default: nproc)] [outfile]
 set -e
-GATES=$1; REPS=${2:-3}; CPUS=${3:-32}; OUT=${4:-/tmp/measure.json}
+GATES=$1; REPS=${2:-3}; CPUS=${3:-$(nproc)}; OUT=${4:-/tmp/measure.json}
 SF=${SF:-/root/testdata/sf0.1}
-OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic \
-         sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-cd /root/repo
-SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_CPUS="$CPUS" SPARK_GRAFT_ONLY="$GATES" \
-SPARK_GRAFT_REPS="$REPS" SPARK_GRAFT_DETAIL_PATH="$OUT" \
-SPARK_GRAFT_SUMMARY_PATH=/tmp/measure_summary.json \
-java $OPENS -Xmx"${SPARK_DRIVER_MEM:-8g}" \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "target/scala-2.13/classes:/opt/spark/jars/*" graft.Bench >/dev/null 2>&1
+cd "$(dirname "$0")/.."
+SPARK_GRAFT_ONLY="$GATES" SPARK_GRAFT_REPS="$REPS" \
+SPARK_GRAFT_DETAIL_PATH="$OUT" SPARK_GRAFT_SUMMARY_PATH=/tmp/measure_summary.json \
+  scripts/bench.sh "$SF" "$CPUS" >/dev/null 2>&1
 python3 -c "
 import json,sys
 d=json.load(open('$OUT'))

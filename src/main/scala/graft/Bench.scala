@@ -83,43 +83,25 @@ object Bench {
     }
   } catch { case _: Throwable => Map.empty }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.builder("graft-bench", cpus.toInt)
+  private def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+
+  /** The session gates are timed, verified and probed in: the
+    * GraftSession defaults (AQE, UTC, nanosAsLong, ...) with ANSI on, the
+    * driver default the queries are written for, unlike the
+    * reference-parity pipeline.
+    */
+  private[graft] def session(appName: String): SparkSession = {
+    val spark = GraftSession.builder(appName, cpus.toInt)
       .config("spark.sql.ansi.enabled", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     GraftSession.quietBoundedWindowWarn()
-    // Suite-interference instrumentation (VERDICT r11 item 5: 8 gates
-    // flagged >1.5x in-suite, 0 reproduced isolated or cold — adjudged
-    // statistically, with no named mechanism). A task-metrics listener
-    // accumulates the residue candidates per gate: executor GC time,
-    // shuffle bytes written/read, memory+disk spill, plus the
-    // persistent-RDD count after the gate (localCheckpoint(true) blocks
-    // linger until the ContextCleaner runs — block-manager pressure is
-    // the leading suspect). bench_detail.json carries the per-gate
-    // deltas so a flag adjudication can point at a cause, not a p-value.
-    val mGc = new java.util.concurrent.atomic.AtomicLong
-    val mSw = new java.util.concurrent.atomic.AtomicLong
-    val mSr = new java.util.concurrent.atomic.AtomicLong
-    val mSp = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val tm = e.taskMetrics
-          if (tm != null) {
-            mGc.addAndGet(tm.jvmGCTime)
-            mSw.addAndGet(tm.shuffleWriteMetrics.bytesWritten)
-            mSr.addAndGet(tm.shuffleReadMetrics.localBytesRead +
-              tm.shuffleReadMetrics.remoteBytesRead)
-            mSp.addAndGet(tm.memoryBytesSpilled + tm.diskBytesSpilled)
-          }
-        }
-      })
-    def residueSnapshot(): (Long, Long, Long, Long) =
-      (mGc.get(), mSw.get(), mSr.get(), mSp.get())
+    spark
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = session("graft-bench")
     // warmup: JIT + codegen + parquet footer caches, so the first timed
     // query doesn't absorb session start-up
     try {
@@ -195,17 +177,22 @@ object Bench {
     val queries = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
     val fnByName = queries.toMap
-    val residue =
-      scala.collection.mutable.Map.empty[String, (Long, Long, Long, Long, Int)]
+    // Suite-interference instrumentation (VERDICT r11 item 5: 8 gates
+    // flagged >1.5x in-suite, 0 reproduced isolated or cold — adjudged
+    // statistically, with no named mechanism). Per gate, the residue
+    // candidates: executor GC time, shuffle bytes written/read,
+    // memory+disk spill over the tasks of the gate's own jobs (Probe's
+    // counters), plus the persistent-RDD count after the gate
+    // (localCheckpoint(true) blocks linger until the ContextCleaner runs
+    // — block-manager pressure is the leading suspect). bench_detail.json
+    // carries them so a flag adjudication can point at a cause, not a
+    // p-value.
+    val residue = scala.collection.mutable.Map.empty[String, (graft.tools.Probe.Counters, Int)]
     val timed: Seq[(String, (Double, (Double, Double), Seq[Double]))] =
       queries.map { case (name, fn) =>
-        val before = residueSnapshot()
-        val t = timeGate(name, fn)
-        val after = residueSnapshot()
+        val (t, recording) = graft.tools.Probe.record(spark, name)(timeGate(name, fn))
         // rdds = what THIS gate left persisted (localCheckpoint blocks)…
-        residue(name) = (after._1 - before._1, after._2 - before._2,
-          after._3 - before._3, after._4 - before._4,
-          spark.sparkContext.getPersistentRDDs.size)
+        residue(name) = (recording.total, spark.sparkContext.getPersistentRDDs.size)
         // …then release them: round-12 residue data measured the live
         // count climbing 2 → ~23 across the suite with GC time
         // concentrating in late heavy gates (graph_modularity spent
@@ -446,11 +433,11 @@ object Bench {
     // persistent-RDD count AFTER the gate — a monotone climb names the
     // lingering-checkpoint mechanism, a flat line exonerates it)
     val residueJson = residue.toSeq.sortBy(_._1).map {
-      case (k, (gc, sw, sr, sp, rdds)) =>
-        s"\"" + k + "\":{\"gc_ms\":" + gc +
-          ",\"shuffle_write_mb\":" + fmt(sw / 1e6) +
-          ",\"shuffle_read_mb\":" + fmt(sr / 1e6) +
-          ",\"spill_mb\":" + fmt(sp / 1e6) +
+      case (k, (c, rdds)) =>
+        s"\"" + k + "\":{\"gc_ms\":" + c.gcMs +
+          ",\"shuffle_write_mb\":" + fmt(c.shuffleWriteBytes / 1e6) +
+          ",\"shuffle_read_mb\":" + fmt(c.shuffleReadBytes / 1e6) +
+          ",\"spill_mb\":" + fmt(c.spillBytes / 1e6) +
           ",\"rdds\":" + rdds + "}"
     }.mkString("{", ",", "}")
     val coldJson = coldVerdicts.sortBy(_._1).map {

@@ -87,9 +87,10 @@ object IncrementalJoin {
       refreshFrame(store, viewTable, aTable, aFrom, aTo, bTable, bFrom, bTo, keys))
 
   /** The refreshed view as an unexecuted frame — what [[refresh]] writes.
-    * Exposed for plan evidence (tools.IvmRefreshProbe) and tests.
+    * Its executed plan is the `command` action of the `ivm_join_refresh`
+    * gate in `graft.tools.Probe --plans`.
     */
-  private[graft] def refreshFrame(
+  private def refreshFrame(
       store: TableStore,
       viewTable: String,
       aTable: String, aFrom: Int, aTo: Int,

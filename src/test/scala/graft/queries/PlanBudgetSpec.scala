@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.SparkSpec
-import graft.tools.PlanBudget
+import graft.tools.Probe
 
 /** Plan-COST regression guard for the most expensive registry gates:
   * round 6 proved a correctness patch can silently buy exchanges and
@@ -12,7 +12,9 @@ import graft.tools.PlanBudget
   * fails a TEST, not a judge review.
   *
   * Budgets are the values measured at commit time at sf0.001
-  * (regenerate with `runMain graft.tools.PlanBudget`), with +2 jobs
+  * (regenerate with `SPARK_GRAFT_CPUS=4 runMain graft.tools.Probe
+  * <sf0.001 dir> <gates-csv>`: each gate line's `shuffles`,
+  * `broadcasts` and `group_jobs`), with +2 jobs
   * of headroom for AQE jitter. They are CEILINGS: getting cheaper is
   * always fine — re-pin downward when a fix lands.
   */
@@ -222,7 +224,7 @@ class PlanBudgetSpec extends SparkSpec {
 
   budgets.toSeq.sortBy(_._1).foreach { case (gate, b) =>
     test(s"$gate stays within its plan-cost budget") {
-      val c = PlanBudget.measure(spark, sf, gate)
+      val c = Probe.measure(spark, sf, gate).cost
       assert(c.shuffles <= b.shuffles + exchangeHeadroom,
         s"$gate shuffle exchanges grew: $c vs budget $b — a repartition " +
           "was added; fix the plan or consciously re-pin the budget")
