@@ -12,18 +12,13 @@ import graft.SparkSpec
   * SCD1-refresh the dims — including the reference's deliberate quirk
   * that `dim_countries.athlete_count` reflects ONLY the latest processed
   * year after an incremental run (SURVEY §7.4, 04b:344-350).
+  * Landing data and its row/division facts come from `LandingData`.
   */
 class IncrementalPipelineSpec extends SparkSpec {
 
-  private val dataDir = "/root/reference/ironman_scraper/Data"
-  private val files2324 = Seq(
-    LandingFile(s"$dataDir/2023_men.csv", 2023, "M"),
-    LandingFile(s"$dataDir/2023_women.csv", 2023, "F"),
-    LandingFile(s"$dataDir/ironman_kona_2024_men_complete_results.csv", 2024, "M"),
-    LandingFile(s"$dataDir/ironman_kona_2024_women_complete_results.csv", 2024, "F"))
-  private val files25 = Seq(
-    LandingFile(s"$dataDir/ironman_kona_2025_men_complete_results.csv", 2025, "M"),
-    LandingFile(s"$dataDir/ironman_kona_2025_women_complete_results.csv", 2025, "F"))
+  private val data = LandingData.current
+  private val files2324 = LandingData.files(2023, 2024)
+  private val files25 = LandingData.files(2025)
 
   private val clock = Some(Timestamp.valueOf("2026-01-01 00:00:00"))
 
@@ -35,15 +30,15 @@ class IncrementalPipelineSpec extends SparkSpec {
     val factBefore = store.read(PipelineConfig.tables.fact).count()
     val countsBefore = store.read(PipelineConfig.tables.dimCountries)
       .select(sum(col("athlete_count"))).head().getLong(0)
-    assert(factBefore == 12526 - 2535 - 1673) // 2025 rows absent
+    assert(factBefore == data.rows - data.rows2025) // 2025 rows absent
 
     // incremental 2025
     Pipeline.run(spark,
       PipelineConfig(PipelineConfig.Incremental, Some(2025), files25, wh), clock)
 
     val fact = store.read(PipelineConfig.tables.fact)
-    assert(fact.count() == 12526)
-    assert(fact.filter(col("year") === 2025).count() == 2535 + 1673)
+    assert(fact.count() == data.rows)
+    assert(fact.filter(col("year") === 2025).count() == data.rows2025)
     // insert-only: pre-existing fact rows unchanged (same fact_key set for 2023/24)
     assert(fact.groupBy("row_key").count().filter(col("count") > 1).count() == 0)
 
@@ -56,10 +51,13 @@ class IncrementalPipelineSpec extends SparkSpec {
 
     // dims keep their keys stable for unchanged members
     val divisions = store.read(PipelineConfig.tables.dimDivisions)
-    assert(divisions.count() >= 32 - 5) // 2025-only divisions merged in, none lost
+    assert(divisions.count() >= data.divisionsFloor) // 2025-only divisions merged in, none lost
     // rerun same incremental: fully idempotent
     Pipeline.run(spark,
       PipelineConfig(PipelineConfig.Incremental, Some(2025), files25, wh), clock)
-    assert(store.read(PipelineConfig.tables.fact).count() == 12526)
+    assert(store.read(PipelineConfig.tables.fact).count() == data.rows)
+    // insert-only holds per layer: silver's merge would absorb a bronze append
+    assert(store.read(PipelineConfig.tables.bronze).count() == data.rows)
+    assert(store.read(PipelineConfig.tables.silver).count() == data.rows)
   }
 }

@@ -29,13 +29,15 @@ class PipelineConfigSpec extends AnyFunSuite {
   }
 
   test("validateFiles raises FileNotFoundException listing missing paths") {
-    val cfg = PipelineConfig(PipelineConfig.FullLoad, None,
-      Seq(file, LandingFile("/root/reference/ironman_scraper/Data/2023_men.csv", 2023, "M")),
-      "/tmp/wh")
-    val e = intercept[java.io.FileNotFoundException] {
-      PipelineConfig.validateFiles(cfg)
-    }
-    assert(e.getMessage.contains("/tmp/nope.csv"))
-    assert(!e.getMessage.contains("2023_men"))
+    val present = java.nio.file.Files.createTempFile("graft-landing-", ".csv")
+    try {
+      val cfg = PipelineConfig(PipelineConfig.FullLoad, None,
+        Seq(file, LandingFile(present.toString, 2023, "M")), "/tmp/wh")
+      val e = intercept[java.io.FileNotFoundException] {
+        PipelineConfig.validateFiles(cfg)
+      }
+      assert(e.getMessage.contains("/tmp/nope.csv"))
+      assert(!e.getMessage.contains(present.toString))
+    } finally java.nio.file.Files.delete(present)
   }
 }

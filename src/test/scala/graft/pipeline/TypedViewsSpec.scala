@@ -8,7 +8,7 @@ import org.apache.spark.sql.DataFrame
 import graft.SparkSpec
 
 /** Typed Column-API view builders produce exactly the rows of their SQL
-  * view definitions over the real pipeline output.
+  * view definitions over the pipeline output of `LandingData`'s landing set.
   */
 class TypedViewsSpec extends SparkSpec {
 
@@ -16,7 +16,7 @@ class TypedViewsSpec extends SparkSpec {
     val wh = Files.createTempDirectory("graft-tv-").toString
     Pipeline.run(spark,
       PipelineConfig(PipelineConfig.FullLoad, None,
-        RunPipeline.referenceFiles("/root/reference/ironman_scraper/Data"), wh),
+        LandingData.files(), wh),
       Some(Timestamp.valueOf("2026-01-01 00:00:00")))
   }
 

@@ -9,7 +9,8 @@ import graft.SparkSpec
 
 /** Cross-view invariants: the 15 dashboard views must agree with each
   * other (they are all projections of one fact table) — catching any
-  * view definition that silently drifts from the rest.
+  * view definition that silently drifts from the rest. Landing data and
+  * its row count come from `LandingData`.
   */
 class ViewInvariantsSpec extends SparkSpec {
 
@@ -17,7 +18,7 @@ class ViewInvariantsSpec extends SparkSpec {
     val wh = Files.createTempDirectory("graft-vi-").toString
     val s = Pipeline.run(spark,
       PipelineConfig(PipelineConfig.FullLoad, None,
-        RunPipeline.referenceFiles("/root/reference/ironman_scraper/Data"), wh),
+        LandingData.files(), wh),
       Some(Timestamp.valueOf("2026-01-01 00:00:00")))
     Views.registerAll(spark, s)
     s
@@ -33,7 +34,7 @@ class ViewInvariantsSpec extends SparkSpec {
       .agg(sum("athletes")).head().getLong(0)
     val dnf = spark.table("vw_dnf_analysis")
       .agg(sum("total_athletes")).head().getLong(0)
-    assert(kpiTotal == 12526)
+    assert(kpiTotal == LandingData.current.rows)
     assert(byYear == kpiTotal && byGender == kpiTotal && dnf == kpiTotal)
   }
 
@@ -86,7 +87,7 @@ class ViewInvariantsSpec extends SparkSpec {
     // shared catalog: a brand-new session of this context sees the views
     // WITHOUT any restore call — the Unity-Catalog-like behavior
     val other = spark.newSession()
-    assert(other.table("vw_kpi_metrics").head().getLong(0) == 12526)
+    assert(other.table("vw_kpi_metrics").head().getLong(0) == LandingData.current.rows)
     // joins through the external dim tables resolve with real rows
     assert(other.table("vw_top_countries").count() > 0)
   }
