@@ -8,6 +8,22 @@ import org.apache.spark.sql.SparkSession
   * to cores (not the 200 default), AQE enabled so skewed joins and
   * too-small/too-large partitions re-plan at runtime exactly as they
   * would on a 1000-executor cluster.
+  *
+  * The generated-code cache is sized to the engine's working set. Spark
+  * keeps compiled classes in an LRU cache of
+  * `spark.sql.codegen.cache.maxEntries` entries (default 100) and sizes it
+  * once per JVM, when `CodeGenerator` first initializes, so the setting
+  * sits on the builder every entry point starts from. Measured at 4 cores
+  * with `CodegenMetrics.METRIC_COMPILATION_TIME` deltas: a perfbench
+  * `gate_mix` pass touches about 250 distinct classes and a
+  * `medallion_refresh` set-up plus one unit about 460, so with 100
+  * entries every class was evicted before its next use and each warm pass
+  * ran Janino again on the same source (202–208 compilations per
+  * `gate_mix` pass, 418–426 per medallion unit, third pass as first).
+  * With 1000 a warm `gate_mix` pass compiles nothing and a medallion unit
+  * about 163, its merge path's first run, which set-up never warms. The
+  * fixture refresh CodegenCacheSpec repeats compiles 209–211 classes per
+  * run with 100 entries, and none on its third run with 1000.
   */
 object GraftSession {
 
@@ -65,6 +81,9 @@ object GraftSession {
       // wall-clock values match what DuckDB's oracle reads).
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.ui.enabled", "false")
+      // static, read once per JVM: holds the ~460-class medallion and
+      // ~250-class gate_mix working sets with about 2x headroom (see above)
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
   }
 
   def defaultCores: Int =

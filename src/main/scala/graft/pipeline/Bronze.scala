@@ -110,9 +110,6 @@ object Bronze {
       spark: SparkSession,
       store: TableStore,
       config: PipelineConfig,
-      clock: Option[java.sql.Timestamp] = None): DataFrame = {
-    val bronze = build(spark, config.files, clock)
-    write(store, config, bronze)
-    store.read(PipelineConfig.tables.bronze)
-  }
+      clock: Option[java.sql.Timestamp] = None): Unit =
+    write(store, config, build(spark, config.files, clock))
 }

@@ -84,7 +84,7 @@ object Fact {
       Merge.insertOnlyPartitionAligned(store, table, fact, Seq("row_key"), "year")
   }
 
-  def run(spark: SparkSession, store: TableStore, config: PipelineConfig): DataFrame = {
+  def run(spark: SparkSession, store: TableStore, config: PipelineConfig): Unit = {
     val silverAll = store.read(PipelineConfig.tables.silver)
     val silver =
       if (config.isIncremental)
@@ -96,6 +96,5 @@ object Fact {
       store.read(PipelineConfig.tables.dimDivisions),
       store.read(PipelineConfig.tables.dimCountries))
     write(store, config, fact)
-    store.read(PipelineConfig.tables.fact)
   }
 }

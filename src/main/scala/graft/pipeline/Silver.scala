@@ -127,12 +127,11 @@ object Silver {
       Merge.insertOnlyPartitionAligned(store, table, silver, Seq("row_key"), "year")
   }
 
-  def run(spark: SparkSession, store: TableStore, config: PipelineConfig): DataFrame = {
+  def run(spark: SparkSession, store: TableStore, config: PipelineConfig): Unit = {
     val bronze = store.read(PipelineConfig.tables.bronze)
     // zero-row guard, ref: 03_silver.ipynb:344-347 (cell-8)
     val silver = build(bronze, if (config.isIncremental) config.processYear else None)
     require(!silver.isEmpty, "silver input is empty")
     write(store, config, silver)
-    store.read(PipelineConfig.tables.silver)
   }
 }

@@ -8,6 +8,7 @@ import scala.collection.mutable
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart,
   SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, ProbeAccess, SparkSession}
@@ -23,14 +24,17 @@ import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd,
   * action the gate issues: the eager materializations inside operators
   * (checkpoints, table writes, counts, collects) and, last, `result`, the
   * execution of the returned frame. Per gate it adds build and execution
-  * seconds and [[Probe.Cost]], the budget PlanBudgetSpec pins.
+  * seconds, [[Probe.Cost]], the budget PlanBudgetSpec pins, and the
+  * number of classes Janino compiled while the gate built and ran.
   *
   * Scoping: the gate runs under a job group of its own, whose id is also
   * a job tag. A thread the gate starts inherits the tag even when it sets
   * a job group of its own (a streaming query's micro-batch thread does),
   * so a job or SQL execution is the gate's when it carries either. Gates
   * measured in parallel in one JVM never see each other's jobs. The
-  * listener is attached per call and removed afterwards.
+  * listener is attached per call and removed afterwards. The compile
+  * count is the exception: Spark keeps one process-wide counter, so it
+  * also counts what other threads compiled in the same window.
   *
   *   runMain graft.tools.Probe <sfDir> <gates-csv> [--reps N] [--plans DIR]
   *
@@ -80,8 +84,12 @@ object Probe {
     override def toString = s"Cost(shuffles=$shuffles, broadcasts=$broadcasts, jobs=$jobs)"
   }
 
+  /** `compiles`: whole-stage and expression classes Janino compiled,
+    * process-wide, from the start of the build to the end of execution;
+    * 0 when every class came from Spark's generated-code cache.
+    */
   final case class Profile(gate: String, buildS: Double, execS: Double,
-      recording: Recording, cost: Cost) {
+      recording: Recording, cost: Cost, compiles: Long) {
     def actions: Seq[Action] = recording.actions
   }
 
@@ -99,17 +107,22 @@ object Probe {
   /** [[measure]] over any gate body. */
   def run(spark: SparkSession, gate: String, plans: Boolean = false)(
       build: => DataFrame): Profile = {
-    val ((buildS, execS, plan), rec) = record(spark, gate, plans) {
+    val ((buildS, execS, compiles, plan), rec) = record(spark, gate, plans) {
+      val c0 = compilations
       val t0 = System.nanoTime()
       val df = build
       val t1 = System.nanoTime()
       execute(df)
       val t2 = System.nanoTime()
-      ((t1 - t0) / 1e9, (t2 - t1) / 1e9, df.queryExecution.executedPlan.toString)
+      ((t1 - t0) / 1e9, (t2 - t1) / 1e9, compilations - c0,
+        df.queryExecution.executedPlan.toString)
     }
     Profile(gate, buildS, execS, rec, Cost(ShuffleExchange.findAllIn(plan).size,
-      "BroadcastExchange".r.findAllIn(plan).size, rec.groupJobs))
+      "BroadcastExchange".r.findAllIn(plan).size, rec.groupJobs), compiles)
   }
+
+  /** Janino compilations so far in this JVM (all threads, all sessions). */
+  def compilations: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** Runs the frame's own plan with the jobs `collect()` runs, but
     * without bringing its rows to the driver. (`count()` would run a
@@ -251,7 +264,8 @@ object Probe {
         planFiles.lift(i).map(f => "plan" -> f.toString)
     } :+ (id ++ ListMap("build_s" -> p.buildS, "exec_s" -> p.execS,
       "actions" -> p.actions.size, "shuffles" -> p.cost.shuffles,
-      "broadcasts" -> p.cost.broadcasts, "group_jobs" -> p.cost.jobs) ++
+      "broadcasts" -> p.cost.broadcasts, "group_jobs" -> p.cost.jobs,
+      "codegen_compiles" -> p.compiles) ++
       counterFields(p.recording.total))
   }.map(mapper.writeValueAsString)
 

@@ -11,7 +11,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.ListenerBusPeek
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, ProbeAccess}
-import org.apache.spark.sql.functions.{col, lit, raise_error}
+import org.apache.spark.sql.functions.{col, lit, max, raise_error}
 
 import graft.SparkSpec
 
@@ -145,6 +145,16 @@ class ProbeSpec extends SparkSpec {
     assert(shape(pb) == soloB)
     assert(soloA._2.toSet == Set("localCheckpoint", "result"))
     assert(soloB._2.toSet == Set("command", "result"))
+  }
+
+  test("a gate measured twice compiles nothing the second time") {
+    // the literal is inlined into the generated code, so no earlier test compiled this class
+    def gate = t.groupBy("g").agg(max(col("id") * 7919L))
+    val first = Probe.run(spark, "compiles")(gate)
+    val second = Probe.run(spark, "compiles")(gate)
+    assert(first.compiles > 0)
+    assert(second.compiles == 0)
+    assert(Probe.jsonLines(second, 1, Nil).last.contains("\"codegen_compiles\":0"))
   }
 
   test("--plans writes one file per recorded action") {
