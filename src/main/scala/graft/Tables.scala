@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
 import org.apache.spark.sql.types.LongType
 
+import graft.operators.TableStore
+
 /** Loader for the driver-generated synthetic tables (see TESTDATA.md).
   *
   * One parquet file per table under the scale-factor directory. All
@@ -23,7 +25,7 @@ object Tables {
     * precision — Spark's native resolution).
     */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = TableStore.readParquet(spark, Seq(s"$dir/$name.parquet"))
     if (name == "events") normalizeEventTs(df) else df
   }
 

@@ -264,21 +264,20 @@ object Merge {
     store.withTableLock(table) {
       def aligned(t: DataFrame): (DataFrame, DataFrame) =
         if (evolve) alignSchemas(t, source) else (t, source)
-      def widens: Boolean = {
-        val tableCols = store.read(table).columns.map(_.toLowerCase).toSet
-        !source.columns.forall(c => tableCols.contains(c.toLowerCase))
-      }
       if (!store.exists(table)) {
         store.overwrite(table, initial, partitionBy = Seq(partCol))
-      } else if (evolve && widens) {
-        val (t, s) = aligned(store.read(table))
-        store.overwrite(table, merge(t, s), partitionBy = Seq(partCol))
       } else {
-        val values = source.select(col(partCol)).distinct()
-          .collect().map(_.get(0)).toSeq
-        val (t, s) = aligned(store.read(table)
-          .filter(col(partCol).isInCollection(values)))
-        store.overwritePartitions(table, merge(t, s), partCol, values)
+        val current = store.read(table)
+        val tableCols = current.columns.map(_.toLowerCase).toSet
+        if (evolve && !source.columns.forall(c => tableCols.contains(c.toLowerCase))) {
+          val (t, s) = aligned(current)
+          store.overwrite(table, merge(t, s), partitionBy = Seq(partCol))
+        } else {
+          val values = source.select(col(partCol)).distinct()
+            .collect().map(_.get(0)).toSeq
+          val (t, s) = aligned(current.filter(col(partCol).isInCollection(values)))
+          store.overwritePartitions(table, merge(t, s), partCol, values)
+        }
       }
     }
 

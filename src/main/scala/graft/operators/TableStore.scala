@@ -5,9 +5,12 @@ import java.util.Comparator
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.{Path => HadoopPath}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.execution.datasources.parquet.FooterSchema
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Parquet-backed warehouse with Delta-like table semantics (SURVEY.md
   * §7.3): the local Spark has no Delta jars, so full-load overwrite,
@@ -32,6 +35,19 @@ import org.apache.spark.sql.functions.col
   * hardlinked snapshot is O(file count), not O(bytes)). `read(table,
   * asOf)` reads any retained generation; `retainVersions` bounds history
   * growth and [[vacuumVersions]] prunes explicitly.
+  *
+  * Read path: every read of the store's own parquet goes through
+  * [[TableStore.readParquet]], which takes the data schema from ONE data
+  * file's footer on the driver (where Delta would take it from its log)
+  * instead of letting Spark run a job to read that footer. It picks the
+  * file Spark's inference picks with `mergeSchema` off (the smallest full
+  * path), so a read resolves to the same schema as before. One file
+  * stands for all under the one-schema invariant: every data file of a
+  * generation has the same column names and types. The write paths keep
+  * it — a full swap rewrites every file; [[append]] requires an equal
+  * schema; a partition overwrite ([[overwritePartitions]], the
+  * partition-aligned merges, [[replaceWhere]], OCC partition commits)
+  * requires its staged files' schema to equal the table's.
   *
   * @param retainVersions historical generations kept per table after
   *                       each write (the current generation is always
@@ -70,7 +86,7 @@ final class TableStore(val spark: SparkSession, val root: String,
         val known = tables()
         if (known.isEmpty) "" else known.mkString(" (known tables: ", ", ", ")")
       })
-    spark.read.parquet(dir(table).toString)
+    TableStore.readParquet(spark, Seq(dir(table).toString))
   }
 
   /** Flat table names at the warehouse root (nested `catalog.schema.*`
@@ -377,7 +393,7 @@ final class TableStore(val spark: SparkSession, val root: String,
       require(Files.exists(d),
         s"version $asOf of $table is not retained; available: " +
           versions(table).mkString("[", ", ", "]"))
-      spark.read.parquet(d.toString)
+      TableStore.readParquet(spark, Seq(d.toString))
     }
 
   /** Change-data-feed analog over retained generations (Delta's
@@ -410,25 +426,12 @@ final class TableStore(val spark: SparkSession, val root: String,
     def genDir(v: Int): Path =
       if (exists(table) && v == currentVersion(table)) dir(table)
       else historyDir(table).resolve(versionDirName(v))
-    // relative-path → size map of every data file, recursing through
-    // partition dirs (skipping _manifest/_strstats sidecars and hidden
-    // entries at every level)
-    def dataFilesRec(root0: Path): Option[Map[String, Long]] = {
-      if (!Files.isDirectory(root0)) return None
-      def walk(d: Path): List[Path] = {
-        val s = Files.list(d)
-        val entries = try s.iterator().asScala.toList finally s.close()
-        entries.flatMap { p =>
-          val n = p.getFileName.toString
-          if (n.startsWith("_") || n.startsWith(".")) Nil
-          else if (Files.isDirectory(p)) walk(p)
-          else if (Files.isRegularFile(p) && n.endsWith(".parquet")) List(p)
-          else Nil
-        }
-      }
-      Some(walk(root0)
+    // relative-path → size map of every data file, partition dirs
+    // included ([[TableStore.dataFiles]])
+    def dataFilesRec(root0: Path): Option[Map[String, Long]] =
+      if (!Files.isDirectory(root0)) None
+      else Some(TableStore.dataFiles(root0)
         .map(p => root0.relativize(p).toString -> Files.size(p)).toMap)
-    }
     val fast = for {
       before <- dataFilesRec(genDir(fromVersion))
       after <- dataFilesRec(genDir(toVersion))
@@ -438,11 +441,9 @@ final class TableStore(val spark: SparkSession, val root: String,
         .map(n => genDir(toVersion).resolve(n).toString)
       if (added.isEmpty)
         read(table, toVersion).limit(0).withColumn("_change_type", lit("insert"))
-      else spark.read
-        // basePath resolves partition columns from the added files'
-        // dir components, so partitioned deltas carry them like a scan
-        .option("basePath", genDir(toVersion).toString)
-        .parquet(added: _*)
+      // basePath resolves partition columns from the added files'
+      // dir components, so partitioned deltas carry them like a scan
+      else TableStore.readParquet(spark, added, Some(genDir(toVersion).toString))
         .withColumn("_change_type", lit("insert"))
     }
     fast.getOrElse {
@@ -465,12 +466,7 @@ final class TableStore(val spark: SparkSession, val root: String,
       val d =
         if (exists(table) && v == currentVersion(table)) dir(table)
         else historyDir(table).resolve(versionDirName(v))
-      val files = {
-        val s = Files.walk(d)
-        try s.iterator().asScala.filter(p =>
-          Files.isRegularFile(p) && p.getFileName.toString.endsWith(".parquet")).toSeq
-        finally s.close()
-      }
+      val files = TableStore.dataFiles(d).toSeq
       (v, exists(table) && v == currentVersion(table), files.size,
         files.map(Files.size).sum,
         new java.sql.Timestamp(Files.getLastModifiedTime(d).toMillis))
@@ -849,20 +845,12 @@ final class TableStore(val spark: SparkSession, val root: String,
     // appended rows) plus the staged files under collision-free names
     val gen = Paths.get(root, s".tmp-append-${flat(table)}-${System.nanoTime()}")
     Files.createDirectories(gen)
-    def dataFiles(d: Path) = {
-      val s = Files.list(d)
-      try s.iterator().asScala.filter { p =>
-        val n = p.getFileName.toString
-        Files.isRegularFile(p) && !n.startsWith("_") && !n.startsWith(".")
-      }.toList
-      finally s.close()
-    }
-    dataFiles(dir(table)).foreach { p =>
+    TableStore.dataFiles(dir(table)).foreach { p =>
       try Files.createLink(gen.resolve(p.getFileName.toString), p)
       catch { case _: UnsupportedOperationException =>
         Files.copy(p, gen.resolve(p.getFileName.toString)) }
     }
-    dataFiles(tmp).foreach { p =>
+    TableStore.dataFiles(tmp).toList.foreach { p =>
       Files.move(p, gen.resolve(
         s"append-${System.nanoTime()}-${p.getFileName.toString}"))
     }
@@ -898,6 +886,22 @@ final class TableStore(val spark: SparkSession, val root: String,
   private[operators] def applyStagedPartitions(
       table: String, tmp: Path, partCol: String, values: Seq[Any],
       allowEmpty: Boolean = false): Unit = {
+    // the one-schema invariant reads rely on (class doc): moving in
+    // partitions of another schema would leave a generation whose
+    // schema depends on which file a read picks
+    def types(p: String): Map[String, DataType] =
+      TableStore.dataSchema(spark, Seq(p))
+        .fold(Map.empty[String, DataType])(_.fields.map(f => f.name -> f.dataType).toMap)
+    val staged = types(tmp.toString)
+    val current = types(path(table))
+    if (staged.nonEmpty && current.nonEmpty && staged != current) {
+      deleteRecursively(tmp)
+      def show(m: Map[String, DataType]) = m.toSeq.sortBy(_._1)
+        .map { case (n, t) => s"$n:${t.simpleString}" }.mkString(",")
+      throw new IllegalArgumentException(
+        s"partition overwrite schema mismatch for '$table': table has " +
+          s"${show(current)}, staged partitions have ${show(staged)}")
+    }
     snapshotCurrent(table) // hardlink snapshot AFTER staging succeeds
     crashHook("opart:snapshotted")
     // in-flight intent marker: the partition loop below mutates the
@@ -990,7 +994,7 @@ final class TableStore(val spark: SparkSession, val root: String,
     * directory, so it time-travels and swaps atomically with its data.
     */
   private def writeManifest(staged: Path, cols: Seq[String]): Unit = {
-    val df = spark.read.parquet(staged.toString)
+    val df = TableStore.readParquet(spark, Seq(staged.toString))
     val aggs = cols.flatMap(c =>
       Seq(org.apache.spark.sql.functions.min(col(c).cast("double")),
         org.apache.spark.sql.functions.max(col(c).cast("double"))))
@@ -1035,7 +1039,7 @@ final class TableStore(val spark: SparkSession, val root: String,
       else None
     }
     if (keep.isEmpty) read(table).filter(predicate).limit(0)
-    else spark.read.parquet(keep: _*).filter(predicate)
+    else readFiles(table, keep).filter(predicate)
   }
 
   /** Files the manifest would schedule for `column ∈ [lo, hi]` — the
@@ -1113,7 +1117,7 @@ final class TableStore(val spark: SparkSession, val root: String,
     * surfaces the partition columns a full-table read would.
     */
   private def readFiles(table: String, keep: Seq[String]): DataFrame =
-    spark.read.option("basePath", dir(table).toString).parquet(keep: _*)
+    TableStore.readParquet(spark, keep, Some(dir(table).toString))
 
   private def b64(s: String): String = java.util.Base64.getEncoder
     .encodeToString(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -1433,6 +1437,55 @@ final class TableStore(val spark: SparkSession, val root: String,
 }
 
 object TableStore {
+
+  /** Opens parquet that graft wrote — a table directory, a generation, a
+    * staged write or a set of its data files — without the Spark job
+    * Spark's schema inference runs to read one footer: the data schema
+    * comes from [[dataSchema]] on the driver and is handed to the reader,
+    * which still finds the partition columns from the `col=value`
+    * directory names (under `basePath` when given). Where there is no
+    * data file the reader infers as before and fails with Spark's own
+    * "Unable to infer schema" error.
+    */
+  def readParquet(spark: SparkSession, paths: Seq[String],
+      basePath: Option[String] = None): DataFrame = {
+    val reader = basePath.fold(spark.read)(spark.read.option("basePath", _))
+    dataSchema(spark, paths).fold(reader)(reader.schema).parquet(paths: _*)
+  }
+
+  /** The data schema (partition columns excluded) of the first data file
+    * under `paths` by full path — the file Spark's parquet inference reads
+    * with `mergeSchema` off — read from its footer under `spark`'s confs
+    * ([[FooterSchema.of]]); `None` when there is no data file. One file
+    * stands for all: see the one-schema invariant on the class.
+    */
+  private[operators] def dataSchema(spark: SparkSession, paths: Seq[String]): Option[StructType] =
+    paths.flatMap(p => dataFiles(Paths.get(p).toAbsolutePath).nextOption())
+      .minByOption(_.toString)
+      .map(f => FooterSchema.of(spark, new HadoopPath(f.toUri)))
+
+  /** The data files under `p` (itself one when it is a file), listed
+    * lazily in full-path order. As in Spark's listing, a data file is a
+    * regular file and entries whose names start with `_` or `.` are
+    * skipped (the store's sidecars, history and staging, checksums);
+    * every other directory is searched, `col=value` partitions included.
+    */
+  private[operators] def dataFiles(p: Path): Iterator[Path] =
+    if (Files.isRegularFile(p)) Iterator.single(p)
+    else if (!Files.isDirectory(p)) Iterator.empty
+    else {
+      val s = Files.list(p)
+      val children = try s.iterator().asScala.toList finally s.close()
+      children
+        .filterNot { c =>
+          val n = c.getFileName.toString
+          n.startsWith("_") || n.startsWith(".")
+        }
+        // a directory sorts as `name/`, where every path under it sorts
+        // among its siblings' full paths
+        .sortBy(c => c.getFileName.toString + (if (Files.isDirectory(c)) "/" else ""))
+        .iterator.flatMap(dataFiles)
+    }
 
   /** Single daemon thread draining deferred `.gc-` deletions
     * ([[TableStore.deferDelete]]) — serialized so concurrent commits

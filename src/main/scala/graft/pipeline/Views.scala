@@ -232,7 +232,7 @@ object Views {
     */
   def registerAll(spark: SparkSession, store: TableStore): Unit = {
     baseTables.foreach { case (alias, table) =>
-      spark.read.parquet(store.path(table)).createOrReplaceTempView(alias)
+      TableStore.readParquet(spark, Seq(store.path(table))).createOrReplaceTempView(alias)
     }
     definitions.zipWithIndex.foreach { case ((name, sql), i) =>
       store.saveView(name, sql, i)
@@ -247,7 +247,7 @@ object Views {
     */
   def restore(spark: SparkSession, store: TableStore): Unit = {
     baseTables.foreach { case (alias, table) =>
-      spark.read.parquet(store.path(table)).createOrReplaceTempView(alias)
+      TableStore.readParquet(spark, Seq(store.path(table))).createOrReplaceTempView(alias)
     }
     store.restoreViewsInto(spark)
   }
