@@ -1,7 +1,9 @@
 #!/bin/bash
 # Local correctness loop: run Verify at sf0.01 then the DuckDB oracle compare.
+# Builds and runs the sources of this script's checkout.
+# Usage: check.sh [sfDir] [outDir]
 set -e
-cd /root/repo
+cd "$(dirname "$0")/.."
 SF=${1:-/root/testdata/sf0.01}
 OUT=${2:-/tmp/verify_out}
 rm -rf "$OUT"

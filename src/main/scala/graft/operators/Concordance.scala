@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
   * replacement for the O(n²) pair join that Harrell's C, Kendall/
   * Mann–Kendall S, and every other "count pairs with x_a < x_b and
   * compare y" statistic is usually written as (e.g. the deliberately
-  * bounded ground-truth gate `a93_harrell_cindex`,
-  * Round4Ops118.scala:20 — whose scaladoc names this operator's
+  * bounded ground-truth gate `a93_harrell_cindex` in
+  * StatTestsGates — whose scaladoc names this operator's
   * bucket-first decomposition as the scale path).
   *
   * Decomposition: bucket x and y into `buckets` VALUE-RANGE buckets

@@ -117,35 +117,6 @@ object Merge {
     updated.unionByName(survivors).unionByName(inserts)
   }
 
-  /** The src freeze above erases catalyst stats (a checkpointed
-    * LogicalRDD reports the "unknown = huge" default), so a source
-    * projection the planner would have BROADCAST turns into a
-    * sort-merge join on the frozen form — measured on
-    * `s21_precombine_merge`: 0.38 → 0.65 s, the survivors anti-join
-    * lost its build side (r14-opt; the same no-stats-after-checkpoint
-    * mechanism as the pageRank loop join). Recover the decision the
-    * planner would have made anyway: estimate each branch's PROJECTED
-    * (column-pruned, as the planner sees it under the join) unfrozen
-    * plan — driver-side only, no job, so the duplicate-key raise still
-    * fires at first action (MergeSpec pins it) — and re-apply the
-    * broadcast hint iff the estimate clears the session's own
-    * autoBroadcastJoinThreshold. On a huge load batch the estimate
-    * exceeds the threshold and the hint stays off — exactly the
-    * unfrozen planner behavior at 100 TB.
-    */
-  private def preFreezeBroadcastHint(guarded: DataFrame)
-      : Seq[String] => DataFrame => DataFrame = { projCols =>
-    val fits =
-      try {
-        val thresh =
-          guarded.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-        thresh > 0 &&
-          guarded.select(projCols.map(col): _*)
-            .queryExecution.optimizedPlan.stats.sizeInBytes <= thresh
-      } catch { case _: Throwable => false }
-    if (fits) broadcast _ else identity
-  }
-
   /** Partition-aligned insert-only MERGE: only the partitions present in
     * the source are read and rewritten; every other partition's files
     * stay untouched on disk. At 100 TB an incremental year-load touches
@@ -378,6 +349,36 @@ object Merge {
       .select(target.columns.toSeq.map(col): _*)
     val untouched = cur.join(ckHint(changedKeys), keys, "left_anti")
     hist.unionByName(untouched).unionByName(closeouts).unionByName(newVersions)
+  }
+
+  /** scd2 freezes its guarded source and its changed-key set with lazy
+    * `localCheckpoint`s, and a checkpointed LogicalRDD reports the
+    * "unknown = huge" size default: a join side the planner would have
+    * BROADCAST from the unfrozen plan turns into a sort-merge join on
+    * the frozen form (the no-stats-after-checkpoint mechanism of the
+    * pageRank loop join; when scd1 still froze its source it cost
+    * `s21_precombine_merge` 0.38 → 0.65 s, r14-opt). Recover the
+    * decision the planner would have made: estimate the PROJECTED
+    * (column-pruned, as the planner sees it under the join) unfrozen
+    * `guarded` plan — driver-side only, no job, so the duplicate-key
+    * raise still fires at first action (MergeSpec pins it) — and return
+    * a hint that applies `broadcast` iff the estimate clears the
+    * session's own autoBroadcastJoinThreshold. The changed-key set is a
+    * subset of the source's keys, so the same estimate bounds it. On a
+    * huge load batch the estimate exceeds the threshold and the hint
+    * stays off — exactly the unfrozen planner behavior at 100 TB.
+    */
+  private def preFreezeBroadcastHint(guarded: DataFrame)
+      : Seq[String] => DataFrame => DataFrame = { projCols =>
+    val fits =
+      try {
+        val thresh =
+          guarded.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+        thresh > 0 &&
+          guarded.select(projCols.map(col): _*)
+            .queryExecution.optimizedPlan.stats.sizeInBytes <= thresh
+      } catch { case _: Throwable => false }
+    if (fits) broadcast _ else identity
   }
 
   /** Full-sync MERGE — the `WHEN NOT MATCHED BY SOURCE THEN DELETE`

@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * expression, ONE corpus scan, zero shuffle, zero UDF. At 100 TB this
   * is the cheapest possible operator shape; the downstream win is
   * every later shuffle moving k/d of the bytes. The engine's earlier
-  * `emb_random_projection` gate (Round4Ops21) states the same algebra
+  * `emb_random_projection` gate (VectorsGates) states the same algebra
   * as an explode + (vec, out-dim)-keyed aggregate — n·d·k rows through
   * a shuffle; this operator exists because that shuffle is pure waste
   * when k·d literals fit in a codegen'd expression (they do until both

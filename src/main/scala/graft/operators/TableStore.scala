@@ -789,12 +789,6 @@ final class TableStore(val spark: SparkSession, val root: String,
     } catch { case _: Throwable => deleteRecursively(p) }
   }
 
-  /** Partition-level overwrite: replace ONLY the listed `partCol=value`
-    * subdirectories with `df`'s data (df must contain exactly those
-    * partition values). Untouched partitions keep their files byte-for-
-    * byte — the partition-aligned copy-on-write that makes incremental
-    * merges O(touched data) instead of O(table).
-    */
   /** Blind APPEND: add `df`'s rows as new parquet files beside the
     * current generation's — O(new data) regardless of table size, the
     * streaming-sink primitive ([[graft.operators.AnnIndex.serveStream]],
@@ -859,6 +853,12 @@ final class TableStore(val spark: SparkSession, val root: String,
     swapIn(table, gen) // marker, history archive, ONE atomic move
   }
 
+  /** Partition-level overwrite: replace ONLY the listed `partCol=value`
+    * subdirectories with `df`'s data (df must contain exactly those
+    * partition values). Untouched partitions keep their files byte-for-
+    * byte — the partition-aligned copy-on-write that makes incremental
+    * merges O(touched data) instead of O(table).
+    */
   def overwritePartitions(
       table: String, df: DataFrame, partCol: String, values: Seq[Any],
       allowEmpty: Boolean = false): Unit =

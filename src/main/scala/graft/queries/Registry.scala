@@ -1,200 +1,45 @@
 package graft.queries
 
 /** The full operator inventory exposed to the driver via
-  * [[graft.SparkEntry]]. Sub-objects group SURVEY.md §2 families.
-  *
-  * Grouped as a Seq-of-Seqs and flattened: a single varargs apply keeps
-  * the typer happy where 100+ chained `++` calls overflow the compiler
-  * stack.
+  * [[graft.SparkEntry]], one entry per gate family. A family's key names
+  * what its gates test; its object holds the gates and their `all` list.
   */
 object Registry {
-  val flagship: OpQuery = Relational.q1_agg
+  val families: Seq[(String, Seq[OpQuery])] = Seq(
+    "relational" -> RelationalGates.all,
+    "tpch" -> TpchGates.all,
+    "data_quality" -> DataQualityGates.all,
+    "stats" -> StatsGates.all,
+    "stat_tests" -> StatTestsGates.all,
+    "timeseries" -> TimeSeriesGates.all,
+    "functions" -> FunctionsGates.all,
+    "formats" -> FormatsGates.all,
+    "tables" -> TablesGates.all,
+    "medallion" -> MedallionGates.all,
+    "text" -> TextGates.all,
+    "dedup" -> DedupGates.all,
+    "vectors" -> VectorsGates.all,
+    "ml" -> MlGates.all,
+    "graph" -> GraphGates.all,
+    "multimodal" -> MultimodalGates.all,
+    "events" -> EventsGates.all,
+    "streaming" -> StreamingGates.all)
 
-  private val groups: Seq[Seq[OpQuery]] = Seq(
-    Relational.all,
-    Scalars.all,
-    MergeQueries.all,
-    ScaleOps.all,
-    StreamingQueries.all,
-    MultimodalQueries.all,
-    AsOfQueries.all,
-    ScaleExtras.all,
-    Extended.all,
-    RangeQueries.all,
-    CsvQueries.all,
-    CurationPipeline.all,
-    JdbcQueries.all,
-    TrainingDataOps.all,
-    Round4Ops.all,
-    Round4Ops2.all,
-    Round4Ops3.all,
-    Round4Ops4.all,
-    Round4Ops5.all,
-    Round4Ops6.all,
-    Round4Ops7.all,
-    Round4Ops8.all,
-    Round4Ops9.all,
-    Round4Ops10.all,
-    Round4Ops11.all,
-    Round4Ops12.all,
-    Round4Ops13.all,
-    Round4Ops14.all,
-    Round4Ops15.all,
-    Round4Ops16.all,
-    Round4Ops17.all,
-    Round4Ops18.all,
-    Round4Ops19.all,
-    Round4Ops20.all,
-    Round4Ops21.all,
-    Round4Ops22.all,
-    Round4Ops23.all,
-    Round4Ops24.all,
-    Round4Ops25.all,
-    Round4Ops26.all,
-    Round4Ops27.all,
-    Round4Ops28.all,
-    Round4Ops29.all,
-    Round4Ops30.all,
-    Round4Ops31.all,
-    Round4Ops32.all,
-    Round4Ops33.all,
-    Round4Ops34.all,
-    Round4Ops35.all,
-    Round4Ops36.all,
-    Round4Ops37.all,
-    Round4Ops38.all,
-    Round4Ops39.all,
-    Round4Ops40.all,
-    Round4Ops41.all,
-    Round4Ops42.all,
-    Round4Ops43.all,
-    Round4Ops44.all,
-    Round4Ops45.all,
-    Round4Ops46.all,
-    Round4Ops47.all,
-    Round4Ops48.all,
-    Round4Ops49.all,
-    Round4Ops50.all,
-    Round4Ops51.all,
-    Round4Ops52.all,
-    Round4Ops53.all,
-    Round4Ops54.all,
-    Round4Ops55.all,
-    Round4Ops56.all,
-    Round4Ops57.all,
-    Round4Ops58.all,
-    Round4Ops59.all,
-    Round4Ops60.all,
-    Round4Ops61.all,
-    Round4Ops62.all,
-    Round4Ops63.all,
-    Round4Ops64.all,
-    Round4Ops65.all,
-    Round4Ops66.all,
-    Round4Ops67.all,
-    Round4Ops68.all,
-    Round4Ops69.all,
-    Round4Ops70.all,
-    Round4Ops71.all,
-    Round4Ops72.all,
-    Round4Ops73.all,
-    Round4Ops74.all,
-    Round4Ops75.all,
-    Round4Ops76.all,
-    Round4Ops77.all,
-    Round4Ops78.all,
-    Round4Ops79.all,
-    Round4Ops80.all,
-    Round4Ops81.all,
-    Round4Ops82.all,
-    Round4Ops83.all,
-    Round4Ops85.all,
-    Round4Ops86.all,
-    Round4Ops87.all,
-    Round4Ops88.all,
-    Round4Ops89.all,
-    Round4Ops90.all,
-    Round4Ops91.all,
-    Round4Ops92.all,
-    Round4Ops93.all,
-    Round4Ops94.all,
-    Round4Ops95.all,
-    Round4Ops96.all,
-    Round4Ops97.all,
-    Round4Ops98.all,
-    Round4Ops99.all,
-    Round4Ops100.all,
-    Round4Ops101.all,
-    Round4Ops102.all,
-    Round4Ops103.all,
-    Round4Ops104.all,
-    Round4Ops105.all,
-    Round4Ops106.all,
-    Round4Ops107.all,
-    Round4Ops108.all,
-    Round4Ops109.all,
-    Round4Ops110.all,
-    Round4Ops111.all,
-    Round4Ops112.all,
-    Round4Ops113.all,
-    Round4Ops114.all,
-    Round4Ops115.all,
-    Round4Ops116.all,
-    Round4Ops117.all,
-    Round4Ops118.all,
-    Round4Ops119.all,
-    Round4Ops120.all,
-    Round4Ops121.all,
-    Round4Ops122.all,
-    Round4Ops123.all,
-    Round4Ops124.all,
-    Round4Ops125.all,
-    Round4Ops126.all,
-    Round4Ops127.all,
-    Round4Ops128.all,
-    Round4Ops129.all,
-    Round4Ops130.all,
-    Round4Ops131.all,
-    Round5Ops1.all,
-    Round6Ops1.all,
-    Round6Ops2.all,
-    Round6Ops3.all,
-    Round6Ops4.all,
-    Round6Ops5.all,
-    Round6Ops6.all,
-    Round6Ops7.all,
-    Round6Ops8.all,
-    Round6Ops9.all,
-    Round6Ops10.all,
-    Round6Ops11.all,
-    Round7Ops1.all,
-    Round7Ops2.all,
-    Round7Ops3.all,
-    Round7Ops4.all,
-    Round7Ops5.all,
-    Round7Ops6.all,
-    Round8Ops1.all,
-    Round8Ops2.all,
-    Round8Ops3.all,
-    Round9Ops1.all,
-    Round9Ops2.all,
-    Round9Ops3.all,
-    Round10Ops1.all,
-    Round10Ops2.all,
-    Round11Ops1.all,
-    Round11Ops2.all,
-    Round11Ops3.all,
-    Round12Ops1.all,
-    Round12Fuzz.all,
-    Round13Ops1.all)
+  val flagship: OpQuery = RelationalGates.q1_agg
 
-  def all: Seq[OpQuery] = {
-    val qs = groups.flatten
+  val all: Seq[OpQuery] = {
+    val qs = families.flatMap(_._2)
     // SparkEntry builds a Map from these — a duplicate name would let a
-    // later batch silently SHADOW an earlier gate (nearly happened in
+    // later family silently SHADOW an earlier gate (nearly happened in
     // round 6: a second "graph_triangles"). Fail the build instead.
     val dups = qs.groupBy(_.name).collect { case (n, g) if g.size > 1 => n }
     require(dups.isEmpty, s"duplicate gate names: ${dups.mkString(", ")}")
     qs
   }
+
+  private val familyByGate: Map[String, String] =
+    families.flatMap { case (f, qs) => qs.map(_.name -> f) }.toMap
+
+  /** The family key of the gate called `name`, if there is one. */
+  def familyOf(name: String): Option[String] = familyByGate.get(name)
 }

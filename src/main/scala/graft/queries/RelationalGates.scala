@@ -1,0 +1,2440 @@
+package graft.queries
+
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+
+import graft.Tables
+import graft.expressions.VectorExprs
+import graft.operators.{AsOfJoin, DenseIds, EventAnalytics, RangeJoin,
+  Sampling, Skew, SpatialJoin, TotalOrder}
+import graft.queries.FuzzShapes.{duckSql, shapes, sparkSql, tbl}
+
+/** Relational operators: projection, filters, joins (equi, semi/anti,
+  * star, as-of, range, spatial, skewed), windows, ordering and paging,
+  * pivots, subqueries, recursive CTEs, SQL-surface features, dense ids,
+  * sampling and train/test splits, plus the seeded relational fuzz gate.
+  */
+object RelationalGates {
+
+  private def t(spark: SparkSession, dir: String, name: String): DataFrame =
+    Tables.load(spark, dir, name)
+
+  private def dec(c: Column): Column = c.cast("decimal(18,2)")
+
+  private def $(name: String): Column = col(name)
+
+  // ---------------------------------------------------------------------
+  // Aggregations (SURVEY §2.4)
+  // ---------------------------------------------------------------------
+
+  /** Flagship: pricing-summary full-table hash aggregate with conditional
+    * and plain aggregates — the reference's A2/A5 audit-aggregate shape
+    * (02_bronze.ipynb:345-352, 05_dashboard_queries.ipynb:49-105) on
+    * lineitem. Map-side partial aggregation + single shuffle on the
+    * 2-column group key; at 100 TB this stays a two-stage agg with no
+    * join, the optimal plan.
+    */
+  val q1_agg = OpQuery(
+    "q1_agg",
+    """SELECT l_returnflag, l_linestatus,
+      |       CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
+      |       CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
+      |       CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,2))) AS DOUBLE) AS sum_disc_price,
+      |       CAST(COUNT(*) AS BIGINT) AS count_order
+      |FROM lineitem
+      |GROUP BY l_returnflag, l_linestatus
+      |ORDER BY l_returnflag, l_linestatus""".stripMargin) { (spark, dir) =>
+    t(spark, dir, "lineitem")
+      .groupBy($("l_returnflag"), $("l_linestatus"))
+      .agg(
+        sum(dec(col("l_quantity"))).cast("double").as("sum_qty"),
+        sum(dec(col("l_extendedprice"))).cast("double").as("sum_base_price"),
+        sum(dec(col("l_extendedprice")) * dec(lit(1) - col("l_discount")))
+          .cast("double").as("sum_disc_price"),
+        count(lit(1)).as("count_order"))
+      .orderBy($("l_returnflag"), $("l_linestatus"))
+  }
+
+  // ---------------------------------------------------------------------
+  // Projection / filter / predicates (SURVEY §2.2)
+  // ---------------------------------------------------------------------
+
+  /** P1/P2/P3 projection with column add + drop (03_silver.ipynb:581-608),
+    * P4 equality filter (03_silver.ipynb:103). Filter + pruning reach the
+    * parquet scan (PushedFilters in explain).
+    */
+  val p1_project_filter = OpQuery(
+    "p1_project_filter",
+    """SELECT o_orderkey, o_custkey,
+      |       CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS DOUBLE) AS total_dec
+      |FROM orders
+      |WHERE o_orderstatus = 'F'
+      |ORDER BY o_orderkey""".stripMargin) { (spark, dir) =>
+    // DECIMAL internally; DOUBLE in the final schema — raw DECIMAL output
+    // columns diverge at the driver's hash layer (DuckDB client coerces
+    // DECIMAL -> float64, so '100.50' vs '100.5').
+    t(spark, dir, "orders")
+      .filter($("o_orderstatus") === "F")
+      .withColumn("total_dec", dec($("o_totalprice")).cast("double"))
+      .select($("o_orderkey"), $("o_custkey"), $("total_dec"))
+      .orderBy($("o_orderkey"))
+  }
+
+  /** P7 null-sentinel normalization: value -> NULL via when/otherwise
+    * folded over columns (02_bronze.ipynb:139-143), plus P5 null
+    * predicates on the result.
+    */
+  val p7_null_sentinel = OpQuery(
+    "p7_null_sentinel",
+    """WITH norm AS (
+      |  SELECT o_orderkey,
+      |         CASE WHEN o_orderpriority = '1-URGENT' THEN NULL ELSE o_orderpriority END AS priority_n
+      |  FROM orders
+      |)
+      |SELECT
+      |  CAST(SUM(CASE WHEN priority_n IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null,
+      |  CAST(SUM(CASE WHEN priority_n IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_set
+      |FROM norm""".stripMargin) { (spark, dir) =>
+    val norm = Seq("o_orderpriority").foldLeft(t(spark, dir, "orders")) { (df, c) =>
+      df.withColumn(
+        "priority_n",
+        when(col(c) === "1-URGENT", lit(null)).otherwise(col(c)))
+    }
+    norm.agg(
+      sum(when($("priority_n").isNull, 1).otherwise(0)).as("n_null"),
+      sum(when($("priority_n").isNotNull, 1).otherwise(0)).as("n_set"))
+  }
+
+  /** P6/P8 compound boolean predicates mixing AND/OR/comparison
+    * (03_silver.ipynb:466-480, view WHEREs 05:440).
+    */
+  val p8_compound_predicates = OpQuery(
+    "p8_compound_predicates",
+    """SELECT l_orderkey, l_linenumber
+      |FROM lineitem
+      |WHERE (l_returnflag = 'R' AND l_quantity > 45)
+      |   OR (l_discount > 0.09 AND l_tax < 0.02)
+      |ORDER BY l_orderkey, l_linenumber""".stripMargin) { (spark, dir) =>
+    t(spark, dir, "lineitem")
+      .filter(
+        ($("l_returnflag") === "R" && $("l_quantity") > 45) ||
+          ($("l_discount") > 0.09 && $("l_tax") < 0.02))
+      .select($("l_orderkey"), $("l_linenumber"))
+      .orderBy($("l_orderkey"), $("l_linenumber"))
+  }
+
+  // ---------------------------------------------------------------------
+  // Joins (SURVEY §2.3)
+  // ---------------------------------------------------------------------
+
+  /** J1/J2 left join to a small mapping table — auto-broadcast
+    * (04b_gold_dim_countries.ipynb:258-267). nation (25 rows) broadcasts;
+    * no shuffle of customer at any scale.
+    */
+  val j1_left_join_broadcast = OpQuery(
+    "j1_left_join_broadcast",
+    """SELECT c.c_custkey, n.n_name
+      |FROM customer c
+      |LEFT JOIN nation n ON c.c_nationkey = n.n_nationkey
+      |ORDER BY c.c_custkey""".stripMargin) { (spark, dir) =>
+    val c = t(spark, dir, "customer")
+    val n = t(spark, dir, "nation")
+    c.join(broadcast(n), c("c_nationkey") === n("n_nationkey"), "left")
+      .select(c("c_custkey"), n("n_name"))
+      .orderBy($("c_custkey"))
+  }
+
+  /** J3–J6 star-schema fact->dims multi-join with per-dim aggregation
+    * (04d_gold_fact_race_results.ipynb:178-224, 460-478). Dims broadcast;
+    * the single shuffle is the final group-by.
+    */
+  val j3_star_join = OpQuery(
+    "j3_star_join",
+    """SELECT n.n_name, r.r_name,
+      |       CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l.l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
+      |       CAST(COUNT(*) AS BIGINT) AS n_lines
+      |FROM lineitem l
+      |JOIN orders o   ON l.l_orderkey = o.o_orderkey
+      |JOIN customer c ON o.o_custkey = c.c_custkey
+      |JOIN nation n   ON c.c_nationkey = n.n_nationkey
+      |JOIN region r   ON n.n_regionkey = r.r_regionkey
+      |GROUP BY n.n_name, r.r_name
+      |ORDER BY n.n_name, r.r_name""".stripMargin) { (spark, dir) =>
+    val l = t(spark, dir, "lineitem")
+    val o = t(spark, dir, "orders")
+    val c = t(spark, dir, "customer")
+    val n = t(spark, dir, "nation")
+    val r = t(spark, dir, "region")
+    l.join(o, l("l_orderkey") === o("o_orderkey"))
+      .join(broadcast(c), o("o_custkey") === c("c_custkey"))
+      .join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
+      .join(broadcast(r), n("n_regionkey") === r("r_regionkey"))
+      .groupBy(n("n_name"), r("r_name"))
+      .agg(
+        sum(dec(l("l_extendedprice")) * dec(lit(1) - l("l_discount")))
+          .cast("double").as("revenue"),
+        count(lit(1)).as("n_lines"))
+      .orderBy($("n_name"), $("r_name"))
+  }
+
+  /** J8 year-over-year offset self-join (05_dashboard_queries
+    * .ipynb:674-702), implemented as the reference's literal
+    * `curr.year = prev.year + 1` self-join over the per-year aggregate
+    * (tiny — broadcast, no meaningful cost). NB lag() over an ordered
+    * window is NOT substituted here: it diverges when a year is missing
+    * from the domain (lag reads the previous existing row; the self-join
+    * reads year-1 or NULL).
+    */
+  val j8_yoy_lag = OpQuery(
+    "j8_yoy_lag",
+    """WITH yearly AS (
+      |  SELECT CAST(EXTRACT(year FROM o_orderdate) AS INT) AS order_year,
+      |         CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_value,
+      |         CAST(COUNT(*) AS BIGINT) AS n_orders
+      |  FROM orders GROUP BY 1
+      |)
+      |SELECT curr.order_year, curr.total_value, curr.n_orders,
+      |       prev.total_value AS prev_value,
+      |       CAST(ROUND(COALESCE((curr.total_value - prev.total_value) * 100.0
+      |            / NULLIF(prev.total_value, 0), 0), 4) AS DOUBLE) AS yoy_pct
+      |FROM yearly curr LEFT JOIN yearly prev ON curr.order_year = prev.order_year + 1
+      |ORDER BY curr.order_year""".stripMargin) { (spark, dir) =>
+    val yearly = t(spark, dir, "orders")
+      .groupBy(year($("o_orderdate")).as("order_year"))
+      .agg(
+        sum(dec($("o_totalprice"))).cast("double").as("total_value"),
+        count(lit(1)).as("n_orders"))
+    val prev = yearly.select(
+      ($("order_year") + 1).as("order_year"),
+      $("total_value").as("prev_value"))
+    yearly
+      .join(broadcast(prev), Seq("order_year"), "left")
+      .withColumn(
+        "yoy_pct",
+        round(
+          coalesce(
+            ($("total_value") - $("prev_value")) * 100.0 /
+              nullif($("prev_value"), lit(0)),
+            lit(0)),
+          4).cast("double"))
+      .select($("order_year"), $("total_value"), $("n_orders"),
+        $("prev_value"), $("yoy_pct"))
+      .orderBy($("order_year"))
+  }
+
+  /** J9 vertical union with schema drift — unionByName(allowMissing)
+    * (02_bronze.ipynb:184-186). One slice lacks a column; it resurfaces
+    * as NULL, exactly the reference's stacking semantics.
+    */
+  val j9_union_by_name = OpQuery(
+    "j9_union_by_name",
+    """SELECT o_orderkey, o_orderstatus, o_orderpriority
+      |FROM (
+      |  SELECT o_orderkey, o_orderstatus, o_orderpriority FROM orders WHERE o_orderstatus = 'F'
+      |  UNION ALL
+      |  SELECT o_orderkey, o_orderstatus, NULL AS o_orderpriority FROM orders WHERE o_orderstatus <> 'F'
+      |)
+      |ORDER BY o_orderkey""".stripMargin) { (spark, dir) =>
+    val o = t(spark, dir, "orders")
+    val withPriority = o.filter($("o_orderstatus") === "F")
+      .select($("o_orderkey"), $("o_orderstatus"), $("o_orderpriority"))
+    val missingCol = o.filter($("o_orderstatus") =!= "F")
+      .select($("o_orderkey"), $("o_orderstatus"))
+    Seq(withPriority, missingCol)
+      .reduce(_.unionByName(_, allowMissingColumns = true))
+      .orderBy($("o_orderkey"))
+  }
+
+  /** Semi/anti joins — the building blocks of the Delta-MERGE emulation
+    * (SURVEY §7.3): EXISTS / NOT EXISTS as left_semi / left_anti.
+    */
+  val j10_semi_anti = OpQuery(
+    "j10_semi_anti",
+    """SELECT c_custkey, has_order FROM (
+      |  SELECT c_custkey, TRUE AS has_order FROM customer c
+      |  WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
+      |  UNION ALL
+      |  SELECT c_custkey, FALSE AS has_order FROM customer c
+      |  WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
+      |)
+      |ORDER BY c_custkey""".stripMargin) { (spark, dir) =>
+    val c = t(spark, dir, "customer")
+    val o = t(spark, dir, "orders").select($("o_custkey").as("c_custkey"))
+    val semi = c.join(o, Seq("c_custkey"), "left_semi")
+      .select($("c_custkey"), lit(true).as("has_order"))
+    val anti = c.join(o, Seq("c_custkey"), "left_anti")
+      .select($("c_custkey"), lit(false).as("has_order"))
+    semi.unionByName(anti).orderBy($("c_custkey"))
+  }
+
+  // ---------------------------------------------------------------------
+  // Windows (SURVEY §2.5)
+  // ---------------------------------------------------------------------
+
+  /** W1 dedup-rank row_number with null-aware ordering
+    * (02_bronze.ipynb:210-218): row_number() OVER (PARTITION BY ...
+    * ORDER BY x ASC NULLS LAST, y ASC).
+    */
+  val w1_row_number = OpQuery(
+    "w1_row_number",
+    """SELECT o_orderkey, rn FROM (
+      |  SELECT o_orderkey,
+      |         CAST(ROW_NUMBER() OVER (PARTITION BY o_custkey
+      |              ORDER BY o_orderdate ASC NULLS LAST, o_orderkey ASC) AS INT) AS rn
+      |  FROM orders
+      |)
+      |WHERE rn <= 2
+      |ORDER BY o_orderkey""".stripMargin) { (spark, dir) =>
+    val w = Window.partitionBy($("o_custkey"))
+      .orderBy($("o_orderdate").asc_nulls_last, $("o_orderkey").asc)
+    t(spark, dir, "orders")
+      .withColumn("rn", row_number().over(w))
+      .filter($("rn") <= 2)
+      .select($("o_orderkey"), $("rn"))
+      .orderBy($("o_orderkey"))
+  }
+
+  /** W2 latest-record-per-key pick — the canonical top-1-per-group dedup
+    * (04a_gold_dim_athletes.ipynb:159-170): rank then keep rn == 1.
+    */
+  val w2_top1_per_group = OpQuery(
+    "w2_top1_per_group",
+    """SELECT o_custkey, o_orderkey AS latest_order, strftime(o_orderdate, '%Y-%m-%d') AS latest_date
+      |FROM (
+      |  SELECT o_custkey, o_orderkey, o_orderdate,
+      |         ROW_NUMBER() OVER (PARTITION BY o_custkey
+      |              ORDER BY o_orderdate DESC NULLS LAST, o_orderkey DESC) AS rn
+      |  FROM orders
+      |)
+      |WHERE rn = 1
+      |ORDER BY o_custkey""".stripMargin) { (spark, dir) =>
+    val w = Window.partitionBy($("o_custkey"))
+      .orderBy($("o_orderdate").desc_nulls_last, $("o_orderkey").desc)
+    t(spark, dir, "orders")
+      .withColumn("rn", row_number().over(w))
+      .filter($("rn") === 1)
+      .select(
+        $("o_custkey"),
+        $("o_orderkey").as("latest_order"),
+        date_format($("o_orderdate"), "yyyy-MM-dd").as("latest_date"))
+      .orderBy($("o_custkey"))
+  }
+
+  /** W3 windowed share-of-total: aggregate first, then SUM() OVER a
+    * partition of the aggregate (05_dashboard_queries.ipynb:228, 375).
+    */
+  val w3_share_of_total = OpQuery(
+    "w3_share_of_total",
+    """SELECT order_year, o_orderstatus, n_orders,
+      |       CAST(ROUND(n_orders * 100.0 / SUM(n_orders) OVER (PARTITION BY order_year), 4) AS DOUBLE) AS pct_of_year
+      |FROM (
+      |  SELECT CAST(EXTRACT(year FROM o_orderdate) AS INT) AS order_year, o_orderstatus,
+      |         CAST(COUNT(*) AS BIGINT) AS n_orders
+      |  FROM orders GROUP BY 1, 2
+      |)
+      |ORDER BY order_year, o_orderstatus""".stripMargin) { (spark, dir) =>
+    val agged = t(spark, dir, "orders")
+      .groupBy(
+        year($("o_orderdate")).as("order_year"),
+        $("o_orderstatus"))
+      .agg(count(lit(1)).as("n_orders"))
+    val w = Window.partitionBy($("order_year"))
+    agged
+      .withColumn(
+        "pct_of_year",
+        round($("n_orders") * 100.0 / sum($("n_orders")).over(w), 4)
+          .cast("double"))
+      .orderBy($("order_year"), $("o_orderstatus"))
+  }
+
+  // ---------------------------------------------------------------------
+  // Sorts / limits / top-k (SURVEY §2.6)
+  // ---------------------------------------------------------------------
+
+  /** O1/O2 multi-column order-by + limit — Spark plans
+    * TakeOrderedAndProject, the scalable top-k (no full sort at scale).
+    * Tie-broken to a total order so the oracle matches.
+    */
+  val o2_topk = OpQuery(
+    "o2_topk",
+    """SELECT o_orderkey, CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS DOUBLE) AS price
+      |FROM orders
+      |ORDER BY o_totalprice DESC, o_orderkey ASC
+      |LIMIT 10""".stripMargin) { (spark, dir) =>
+    t(spark, dir, "orders")
+      .select($("o_orderkey"), dec($("o_totalprice")).cast("double").as("price"), $("o_totalprice"))
+      .orderBy($("o_totalprice").desc, $("o_orderkey").asc)
+      .limit(10)
+      .select($("o_orderkey"), $("price"))
+  }
+
+  /** Per-group uniform cap: 5 events per user by md5 priority — bottom-k
+    * hash sampling on the bounded-heap aggregate (no window), reproduced
+    * exactly by the oracle's ROW_NUMBER over the same md5 arithmetic.
+    */
+  val sample_per_group = OpQuery(
+    "sample_per_group",
+    """WITH ranked AS (
+      |  SELECT user_id, event_id,
+      |         ROW_NUMBER() OVER (PARTITION BY user_id
+      |           ORDER BY CAST(('0x' || substr(md5(CAST(event_id AS VARCHAR)), 1, 8)) AS BIGINT),
+      |                    event_id) AS rn
+      |  FROM events
+      |)
+      |SELECT user_id, event_id FROM ranked WHERE rn <= 5
+      |ORDER BY user_id, event_id""".stripMargin) { (spark, dir) =>
+    graft.operators.Sampling.uniformPerGroup(
+        t(spark, dir, "events"), "user_id", "event_id", k = 5)
+      .orderBy(col("user_id"), col("event_id"))
+  }
+
+  /** Content-stable train/val/test split (80/10/10) + stratified
+    * sampling by language — membership reproduced exactly by the oracle
+    * via the same md5-bucket arithmetic.
+    */
+  val data_split = OpQuery(
+    "data_split",
+    """WITH bucketed AS (
+      |  SELECT doc_id, lang,
+      |         CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 100 AS b,
+      |         CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR) || '|' || lang), 1, 8)) AS BIGINT) % 100 AS sb
+      |  FROM documents
+      |)
+      |SELECT doc_id, lang,
+      |       CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val' ELSE 'test' END AS split,
+      |       sb < CASE WHEN lang = 'en' THEN 50 WHEN lang = 'es' THEN 25 ELSE 0 END AS in_stratified_sample
+      |FROM bucketed
+      |ORDER BY doc_id""".stripMargin) { (spark, dir) =>
+    val docs = t(spark, dir, "documents")
+    val split = graft.operators.Sampling.deterministicSplit(
+      docs.select(col("doc_id"), col("lang")), "doc_id",
+      Seq("train" -> 80, "val" -> 10, "test" -> 10))
+    val sampled = graft.operators.Sampling.stratifiedSample(
+      docs.select(col("doc_id"), col("lang")), "doc_id", "lang",
+      Map("en" -> 50, "es" -> 25))
+    // membership flag via left-semi-style join against the sample
+    split
+      .join(sampled.select(col("doc_id"), lit(true).as("in_stratified_sample")),
+        Seq("doc_id"), "left")
+      .withColumn("in_stratified_sample",
+        coalesce(col("in_stratified_sample"), lit(false)))
+      .select("doc_id", "lang", "split", "in_stratified_sample")
+      .orderBy(col("doc_id"))
+  }
+
+  val asof_join = OpQuery(
+    "asof_join",
+    """WITH l AS (
+      |  SELECT event_id, user_id, epoch_us(ts) AS t_us
+      |  FROM events WHERE event_type = 'purchase'
+      |), r AS (
+      |  SELECT event_id AS signup_id, user_id, epoch_us(ts) AS signup_us
+      |  FROM events WHERE event_type = 'signup'
+      |)
+      |SELECT l.event_id, l.user_id, l.t_us,
+      |       r.signup_id AS asof_signup_id, r.signup_us AS asof_signup_us
+      |FROM l ASOF LEFT JOIN r
+      |  ON l.user_id = r.user_id AND l.t_us >= r.signup_us
+      |ORDER BY l.event_id""".stripMargin) { (spark, dir) =>
+    val events = Tables.load(spark, dir, "events")
+    val purchases = events.filter(col("event_type") === "purchase")
+      .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("t_us"))
+    val signups = events.filter(col("event_type") === "signup")
+      .select(col("event_id").as("signup_id"), col("user_id"),
+        unix_micros(col("ts")).as("signup_us"))
+    AsOfJoin.asOf(purchases, signups, keys = Seq("user_id"),
+        leftTime = "t_us", rightTime = "signup_us")
+      .select(col("event_id"), col("user_id"), col("t_us"),
+        col("asof_signup_id"), col("asof_signup_us"))
+      .orderBy(col("event_id"))
+  }
+
+  /** Tolerance variant: only signups within the last 3 days count. */
+  val asof_join_tolerance = OpQuery(
+    "asof_join_tolerance",
+    """WITH l AS (
+      |  SELECT event_id, user_id, epoch_us(ts) AS t_us
+      |  FROM events WHERE event_type = 'purchase'
+      |), r AS (
+      |  SELECT event_id AS signup_id, user_id, epoch_us(ts) AS signup_us
+      |  FROM events WHERE event_type = 'signup'
+      |), matched AS (
+      |  SELECT l.event_id, l.user_id, l.t_us, r.signup_id, r.signup_us
+      |  FROM l ASOF LEFT JOIN r
+      |    ON l.user_id = r.user_id AND l.t_us >= r.signup_us
+      |)
+      |SELECT event_id, user_id, t_us,
+      |       CASE WHEN signup_us >= t_us - 259200000000 THEN signup_id END AS asof_signup_id
+      |FROM matched
+      |ORDER BY event_id""".stripMargin) { (spark, dir) =>
+    val events = Tables.load(spark, dir, "events")
+    val purchases = events.filter(col("event_type") === "purchase")
+      .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("t_us"))
+    val signups = events.filter(col("event_type") === "signup")
+      .select(col("event_id").as("signup_id"), col("user_id"),
+        unix_micros(col("ts")).as("signup_us"))
+    AsOfJoin.asOf(purchases, signups, keys = Seq("user_id"),
+        leftTime = "t_us", rightTime = "signup_us",
+        tolerance = Some(lit(259200000000L))) // 3 days in µs
+      .select(col("event_id"), col("user_id"), col("t_us"),
+        col("asof_signup_id"))
+      .orderBy(col("event_id"))
+  }
+
+  /** Forward direction: each click's NEXT purchase at-or-after it per
+    * user (fill-forward's mirror) — oracled against DuckDB's native
+    * forward ASOF (`<=` inequality).
+    */
+  val asof_join_forward = OpQuery(
+    "asof_join_forward",
+    """WITH l AS (
+      |  SELECT event_id, user_id, epoch_us(ts) AS t_us
+      |  FROM events WHERE event_type = 'click'
+      |), r AS (
+      |  SELECT event_id AS purchase_id, user_id, epoch_us(ts) AS purchase_us
+      |  FROM events WHERE event_type = 'purchase'
+      |)
+      |SELECT l.event_id, l.user_id, l.t_us,
+      |       r.purchase_id AS asof_purchase_id, r.purchase_us AS asof_purchase_us
+      |FROM l ASOF LEFT JOIN r
+      |  ON l.user_id = r.user_id AND l.t_us <= r.purchase_us
+      |ORDER BY l.event_id""".stripMargin) { (spark, dir) =>
+    val events = Tables.load(spark, dir, "events")
+    val clicks = events.filter(col("event_type") === "click")
+      .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("t_us"))
+    val purchases = events.filter(col("event_type") === "purchase")
+      .select(col("event_id").as("purchase_id"), col("user_id"),
+        unix_micros(col("ts")).as("purchase_us"))
+    AsOfJoin.asOfForward(clicks, purchases, keys = Seq("user_id"),
+        leftTime = "t_us", rightTime = "purchase_us")
+      .select(col("event_id"), col("user_id"), col("t_us"),
+        col("asof_purchase_id"), col("asof_purchase_us"))
+      .orderBy(col("event_id"))
+  }
+
+  /** Salted two-phase aggregation — must equal the direct groupBy. */
+  val skew_salted_agg = OpQuery(
+    "skew_salted_agg",
+    """SELECT o_custkey,
+      |       CAST(COUNT(*) AS BIGINT) AS n_rows,
+      |       CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_value
+      |FROM orders
+      |GROUP BY o_custkey
+      |ORDER BY o_custkey""".stripMargin) { (spark, dir) =>
+    Skew.saltedCountSum(t(spark, dir, "orders"), "o_custkey", "o_totalprice",
+        saltBuckets = 8)
+      .orderBy(col("o_custkey"))
+  }
+
+  /** Salted join — must equal the plain equi-join row-for-row. */
+  val skew_salted_join = OpQuery(
+    "skew_salted_join",
+    """SELECT o.o_orderkey, c.c_name
+      |FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
+      |ORDER BY o.o_orderkey""".stripMargin) { (spark, dir) =>
+    val orders = t(spark, dir, "orders")
+      .select(col("o_orderkey"), col("o_custkey").as("c_custkey"))
+    val customer = t(spark, dir, "customer").select(col("c_custkey"), col("c_name"))
+    Skew.saltedJoin(orders, customer, Seq("c_custkey"), saltBuckets = 4)
+      .select(col("o_orderkey"), col("c_name"))
+      .orderBy(col("o_orderkey"))
+  }
+
+  /** Hot/cold split-union join — must equal the plain equi-join
+    * row-for-row for ANY hot-key set (detection only moves rows between
+    * the broadcast and shuffle branches, never changes the result).
+    * Hot keys come from the real sampled detector plus a pinned
+    * override (the known-hot-tenant case), so both branches execute
+    * regardless of what the sample surfaces. Measured in StressSkew:
+    * this shape runs at the uniform-join floor while full-dim salting
+    * loses outright at 200 MB dim scale.
+    */
+  val skew_hotcold_join = OpQuery(
+    "skew_hotcold_join",
+    """SELECT o.o_orderkey, c.c_name
+      |FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
+      |ORDER BY o.o_orderkey""".stripMargin) { (spark, dir) =>
+    val orders = t(spark, dir, "orders")
+      .select(col("o_orderkey"), col("o_custkey").as("c_custkey"))
+    val customer = t(spark, dir, "customer").select(col("c_custkey"), col("c_name"))
+    val hot = Skew.detectHotKeys(orders, "c_custkey",
+      sampleFraction = 0.05, minShare = 0.005) :+ 7L :+ 13L
+    Skew.hotKeyJoin(orders, customer, "c_custkey", hot.distinct)
+      .select(col("o_orderkey"), col("c_name"))
+      .orderBy(col("o_orderkey"))
+  }
+
+  /** Window-function family: rank/dense_rank/percent_rank over a tie-ful
+    * ordering (deterministic outputs under ties), lag/lead/ntile and
+    * explicit ROWS frames over a total ordering.
+    */
+  val w4_window_family = OpQuery(
+    "w4_window_family",
+    """SELECT o_orderkey,
+      |  CAST(RANK() OVER (PARTITION BY o_custkey ORDER BY EXTRACT(year FROM o_orderdate)) AS INT) AS yr_rank,
+      |  CAST(DENSE_RANK() OVER (PARTITION BY o_custkey ORDER BY EXTRACT(year FROM o_orderdate)) AS INT) AS yr_dense_rank,
+      |  CAST(ROUND(PERCENT_RANK() OVER (PARTITION BY o_custkey ORDER BY EXTRACT(year FROM o_orderdate)), 6) AS DOUBLE) AS yr_pct_rank,
+      |  CAST(NTILE(4) OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS INT) AS price_quartile,
+      |  LAG(o_orderkey) OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS prev_order,
+      |  LEAD(o_orderkey) OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS next_order,
+      |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey
+      |       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_total,
+      |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey
+      |       ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) AS DOUBLE) AS window3_total
+      |FROM orders
+      |ORDER BY o_orderkey""".stripMargin) { (spark, dir) =>
+    val byYear = Window.partitionBy(col("o_custkey"))
+      .orderBy(year(col("o_orderdate")))
+    val byPrice = Window.partitionBy(col("o_custkey"))
+      .orderBy(col("o_totalprice").desc, col("o_orderkey"))
+    t(spark, dir, "orders").select(
+      col("o_orderkey"),
+      rank().over(byYear).as("yr_rank"),
+      dense_rank().over(byYear).as("yr_dense_rank"),
+      round(percent_rank().over(byYear), 6).cast("double").as("yr_pct_rank"),
+      ntile(4).over(byPrice).as("price_quartile"),
+      lag(col("o_orderkey"), 1).over(byPrice).as("prev_order"),
+      lead(col("o_orderkey"), 1).over(byPrice).as("next_order"),
+      sum(dec(col("o_totalprice")))
+        .over(byPrice.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+        .cast("double").as("running_total"),
+      sum(dec(col("o_totalprice")))
+        .over(byPrice.rowsBetween(-2, Window.currentRow))
+        .cast("double").as("window3_total"))
+      .orderBy(col("o_orderkey"))
+  }
+
+  /** Set operators: INTERSECT / EXCEPT (distinct semantics) / UNION
+    * DISTINCT over customer-key sets.
+    */
+  val j11_set_ops = OpQuery(
+    "j11_set_ops",
+    """WITH with_orders AS (SELECT DISTINCT o_custkey AS k FROM orders),
+      |     big_balance AS (SELECT c_custkey AS k FROM customer WHERE c_acctbal > 5000)
+      |SELECT 'intersect' AS op, k FROM (SELECT k FROM with_orders INTERSECT SELECT k FROM big_balance)
+      |UNION ALL
+      |SELECT 'except' AS op, k FROM (SELECT k FROM big_balance EXCEPT SELECT k FROM with_orders)
+      |UNION ALL
+      |SELECT 'union_d' AS op, k FROM (SELECT k FROM with_orders UNION SELECT k FROM big_balance)
+      |ORDER BY op, k""".stripMargin) { (spark, dir) =>
+    val withOrders = t(spark, dir, "orders").select(col("o_custkey").as("k")).distinct()
+    val bigBalance = t(spark, dir, "customer")
+      .filter(col("c_acctbal") > 5000).select(col("c_custkey").as("k"))
+    withOrders.intersect(bigBalance).withColumn("op", lit("intersect"))
+      .unionByName(bigBalance.except(withOrders).withColumn("op", lit("except")))
+      .unionByName(withOrders.union(bigBalance).distinct().withColumn("op", lit("union_d")))
+      .select("op", "k")
+      .orderBy(col("op"), col("k"))
+  }
+
+  /** Pivot — sugar over conditional aggregation (which is exactly how
+    * the oracle states it).
+    */
+  val p9_pivot = OpQuery(
+    "p9_pivot",
+    """SELECT CAST(EXTRACT(year FROM o_orderdate) AS INT) AS order_year,
+      |       CAST(COUNT(*) FILTER (WHERE o_orderstatus = 'F') AS BIGINT) AS F,
+      |       CAST(COUNT(*) FILTER (WHERE o_orderstatus = 'O') AS BIGINT) AS O,
+      |       CAST(COUNT(*) FILTER (WHERE o_orderstatus = 'P') AS BIGINT) AS P
+      |FROM orders
+      |GROUP BY 1
+      |ORDER BY 1""".stripMargin) { (spark, dir) =>
+    t(spark, dir, "orders")
+      .select(year(col("o_orderdate")).as("order_year"), col("o_orderstatus"))
+      .groupBy("order_year")
+      .pivot("o_orderstatus", Seq("F", "O", "P"))
+      .count()
+      .na.fill(0L, Seq("F", "O", "P"))
+      .orderBy(col("order_year"))
+  }
+
+  /** UNPIVOT / melt — wide-to-long reshape (complements p9_pivot). */
+  val p10_unpivot = OpQuery(
+    "p10_unpivot",
+    """SELECT c_custkey, 'c_acctbal' AS metric, CAST(c_acctbal AS DOUBLE) AS value FROM customer
+      |UNION ALL
+      |SELECT c_custkey, 'c_nationkey', CAST(c_nationkey AS DOUBLE) FROM customer
+      |ORDER BY c_custkey, metric""".stripMargin) { (spark, dir) =>
+    t(spark, dir, "customer")
+      .select(col("c_custkey"),
+        col("c_acctbal").cast("double"), col("c_nationkey").cast("double"))
+      .unpivot(
+        ids = Array(col("c_custkey")),
+        values = Array(col("c_acctbal"), col("c_nationkey")),
+        variableColumnName = "metric", valueColumnName = "value")
+      .orderBy(col("c_custkey"), col("metric"))
+  }
+
+  /** RANGE window frames — value-based (not row-based) frame bounds:
+    * the trailing-2-year running sum includes every peer year in range,
+    * regardless of row ties, so it is deterministic where a ROWS frame
+    * over tied years would not be.
+    */
+  val w5_range_frames = OpQuery(
+    "w5_range_frames",
+    """SELECT o_orderkey,
+      |       CAST(EXTRACT(year FROM o_orderdate) AS INT) AS yr,
+      |       CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) OVER (
+      |         PARTITION BY o_custkey ORDER BY EXTRACT(year FROM o_orderdate)
+      |         RANGE BETWEEN 1 PRECEDING AND CURRENT ROW) AS DOUBLE) AS two_year_total,
+      |       CAST(COUNT(*) OVER (
+      |         PARTITION BY o_custkey ORDER BY EXTRACT(year FROM o_orderdate)
+      |         RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS orders_to_date,
+      |       CAST(ROUND(CUME_DIST() OVER (
+      |         PARTITION BY o_custkey ORDER BY EXTRACT(year FROM o_orderdate)), 6) AS DOUBLE) AS yr_cume_dist
+      |FROM orders
+      |ORDER BY o_orderkey""".stripMargin) { (spark, dir) =>
+    val byYear = Window.partitionBy(col("o_custkey")).orderBy(year(col("o_orderdate")))
+    t(spark, dir, "orders").select(
+      col("o_orderkey"),
+      year(col("o_orderdate")).as("yr"),
+      sum(dec(col("o_totalprice")))
+        .over(byYear.rangeBetween(-1, Window.currentRow))
+        .cast("double").as("two_year_total"),
+      count(lit(1))
+        .over(byYear.rangeBetween(Window.unboundedPreceding, Window.currentRow))
+        .as("orders_to_date"),
+      round(cume_dist().over(byYear), 6).cast("double").as("yr_cume_dist"))
+      .orderBy(col("o_orderkey"))
+  }
+
+  /** Value window functions — first_value / last_value / nth_value with
+    * the explicit full-partition frame (the default frame makes
+    * last_value trivially equal the current row; the full frame is the
+    * form people actually want and the one worth pinning).
+    */
+  val w6_value_windows = OpQuery(
+    "w6_value_windows",
+    """SELECT o_orderkey,
+      |       FIRST_VALUE(o_orderkey) OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey
+      |         ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS priciest_order,
+      |       LAST_VALUE(o_orderkey) OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey
+      |         ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS cheapest_order,
+      |       NTH_VALUE(o_orderkey, 2) OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey
+      |         ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS second_priciest
+      |FROM orders
+      |ORDER BY o_orderkey""".stripMargin) { (spark, dir) =>
+    val byPrice = Window.partitionBy(col("o_custkey"))
+      .orderBy(col("o_totalprice").desc, col("o_orderkey"))
+      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    t(spark, dir, "orders").select(
+      col("o_orderkey"),
+      first(col("o_orderkey")).over(byPrice).as("priciest_order"),
+      last(col("o_orderkey")).over(byPrice).as("cheapest_order"),
+      nth_value(col("o_orderkey"), 2).over(byPrice).as("second_priciest"))
+      .orderBy(col("o_orderkey"))
+  }
+
+  val range_join = OpQuery(
+    "range_join",
+    """WITH p AS (
+      |  SELECT event_id, user_id, epoch_us(ts) AS t_us
+      |  FROM events WHERE event_type = 'purchase'
+      |), s AS (
+      |  SELECT event_id AS signup_id, user_id,
+      |         epoch_us(ts) AS lo_us,
+      |         epoch_us(ts) + 172800000000 AS hi_us
+      |  FROM events WHERE event_type = 'signup'
+      |)
+      |SELECT p.event_id, s.signup_id, p.user_id
+      |FROM p JOIN s ON p.user_id = s.user_id
+      |              AND p.t_us >= s.lo_us AND p.t_us <= s.hi_us
+      |ORDER BY p.event_id, s.signup_id""".stripMargin) { (spark, dir) =>
+    val events = Tables.load(spark, dir, "events")
+    val purchases = events.filter(col("event_type") === "purchase")
+      .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("t_us"))
+    val signups = events.filter(col("event_type") === "signup")
+      .select(
+        col("event_id").as("signup_id"), col("user_id"),
+        unix_micros(col("ts")).as("lo_us"),
+        (unix_micros(col("ts")) + 172800000000L).as("hi_us"))
+    RangeJoin.pointInInterval(
+        purchases, signups, keys = Seq("user_id"),
+        pointCol = "t_us", loCol = "lo_us", hiCol = "hi_us",
+        bucketWidth = 86400000000L) // 1-day buckets
+      .select(col("event_id"), col("signup_id"), col("user_id"))
+      .orderBy(col("event_id"), col("signup_id"))
+  }
+
+  /** The same point-in-interval semantics planned through the custom
+    * [[graft.plans.IntervalJoinStrategy]] physical operator (sorted-lo +
+    * max-hi segment-tree stab instead of BroadcastNestedLoopJoin): every
+    * purchase inside the 10 minutes after ANY signup, no equi-key — the
+    * pure-range shape the default planner handles worst. Plan shape and
+    * planner parity are pinned in IntervalJoinSpec; here the oracle pins
+    * the join semantics row-for-row.
+    */
+  val range_join_interval = OpQuery(
+    "range_join_interval",
+    """WITH p AS (
+      |  SELECT event_id, epoch_us(ts) AS t_us
+      |  FROM events WHERE event_type = 'purchase'
+      |), s AS (
+      |  SELECT event_id AS signup_id,
+      |         epoch_us(ts) AS lo_us,
+      |         epoch_us(ts) + 600000000 AS hi_us
+      |  FROM events WHERE event_type = 'signup'
+      |)
+      |SELECT p.event_id, s.signup_id
+      |FROM p JOIN s ON p.t_us >= s.lo_us AND p.t_us <= s.hi_us
+      |ORDER BY p.event_id, s.signup_id""".stripMargin) { (spark, dir) =>
+    import graft.plans.IntervalJoinStrategy
+    if (!spark.experimental.extraStrategies.contains(IntervalJoinStrategy))
+      spark.experimental.extraStrategies =
+        spark.experimental.extraStrategies :+ IntervalJoinStrategy
+    val events = Tables.load(spark, dir, "events")
+    val purchases = events.filter(col("event_type") === "purchase")
+      .select(col("event_id"), unix_micros(col("ts")).as("t_us"))
+    val signups = events.filter(col("event_type") === "signup")
+      .select(
+        col("event_id").as("signup_id"),
+        unix_micros(col("ts")).as("lo_us"),
+        (unix_micros(col("ts")) + 600000000L).as("hi_us"))
+    purchases
+      .join(signups, col("t_us") >= col("lo_us") && col("t_us") <= col("hi_us"))
+      .select(col("event_id"), col("signup_id"))
+      .orderBy(col("event_id"), col("signup_id"))
+  }
+
+  /** Global row numbering WITHOUT a single-reducer window —
+    * [[TotalOrder.rowNumber]]'s two-phase prefix count, oracled against
+    * the literal `ROW_NUMBER() OVER (ORDER BY ...)`. Bit-equality here
+    * IS the scale story: the distributed plan produces exactly the
+    * sequential assignment.
+    */
+  val o4_global_rownum = OpQuery(
+    "o4_global_rownum",
+    """SELECT o_orderkey,
+      |       CAST(ROW_NUMBER() OVER (ORDER BY o_totalprice DESC, o_orderkey) AS BIGINT) AS rn
+      |FROM orders
+      |ORDER BY o_orderkey""".stripMargin) { (spark, dir) =>
+    TotalOrder.rowNumber(
+        t(spark, dir, "orders").select(col("o_orderkey"), col("o_totalprice")),
+        Seq(col("o_totalprice").desc, col("o_orderkey").asc), "rn")
+      .select(col("o_orderkey"), col("rn").cast("long").as("rn"))
+      .orderBy(col("o_orderkey"))
+  }
+
+  /** Recursive CTE (Spark 4 UnionLoop): generate the full month spine of
+    * the order history recursively, then left-join order counts — months
+    * with no orders survive with 0 (the classic gap-free calendar).
+    */
+  val recursive_cte = OpQuery(
+    "recursive_cte",
+    """WITH RECURSIVE bounds AS (
+      |  SELECT CAST(date_trunc('month', MIN(o_orderdate)) AS DATE) AS lo,
+      |         CAST(date_trunc('month', MAX(o_orderdate)) AS DATE) AS hi
+      |  FROM orders
+      |), months(m) AS (
+      |  SELECT lo FROM bounds
+      |  UNION ALL
+      |  SELECT CAST(m + INTERVAL 1 MONTH AS DATE) FROM months
+      |  WHERE m < (SELECT hi FROM bounds)
+      |)
+      |SELECT strftime(m, '%Y-%m-%d') AS month_start,
+      |       CAST(COUNT(o_orderkey) AS BIGINT) AS n_orders
+      |FROM months LEFT JOIN orders
+      |  ON CAST(date_trunc('month', o_orderdate) AS DATE) = m
+      |GROUP BY m
+      |ORDER BY month_start""".stripMargin) { (spark, dir) =>
+    t(spark, dir, "orders").createOrReplaceTempView("graft_rc_orders")
+    // the recursion CARRIES hi as a column instead of re-evaluating a
+    // correlated `(SELECT hi FROM bounds)` each step — UnionLoop
+    // re-executes the recursive term's subplan every iteration, so the
+    // correlated form re-scanned orders once per generated month
+    // (measured 16 s at sf0.1; carried form ~1 s)
+    spark.sql(
+      """WITH RECURSIVE months(m, hi) AS (
+        |  SELECT CAST(date_trunc('month', MIN(o_orderdate)) AS DATE),
+        |         CAST(date_trunc('month', MAX(o_orderdate)) AS DATE)
+        |  FROM graft_rc_orders
+        |  UNION ALL
+        |  SELECT add_months(m, 1), hi FROM months
+        |  WHERE m < hi
+        |)
+        |SELECT date_format(m, 'yyyy-MM-dd') AS month_start,
+        |       COUNT(o_orderkey) AS n_orders
+        |FROM months LEFT JOIN graft_rc_orders
+        |  ON CAST(date_trunc('month', o_orderdate) AS DATE) = m
+        |GROUP BY m
+        |ORDER BY month_start""".stripMargin)
+  }
+
+  /** IGNORE NULLS value windows: lag / lead / running last over a
+    * sparse (mostly-null) measure — the gap-bridging form of the value
+    * window family.
+    */
+  val w7_ignore_nulls = OpQuery(
+    "w7_ignore_nulls",
+    """WITH li AS (
+      |  SELECT l_orderkey, l_linenumber,
+      |         MAX(CASE WHEN l_quantity > 25 THEN CAST(l_extendedprice AS DECIMAL(18,2)) END) AS v
+      |  FROM lineitem
+      |  GROUP BY l_orderkey, l_linenumber
+      |)
+      |SELECT l_orderkey, l_linenumber, CAST(v AS DOUBLE) AS v,
+      |       CAST(lag(v IGNORE NULLS) OVER w AS DOUBLE) AS prev_v,
+      |       CAST(lead(v IGNORE NULLS) OVER w AS DOUBLE) AS next_v,
+      |       CAST(last_value(v IGNORE NULLS) OVER (PARTITION BY l_orderkey ORDER BY l_linenumber
+      |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS carry_v
+      |FROM li
+      |WINDOW w AS (PARTITION BY l_orderkey ORDER BY l_linenumber)
+      |ORDER BY l_orderkey, l_linenumber""".stripMargin) { (spark, dir) =>
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy(col("l_orderkey")).orderBy(col("l_linenumber"))
+    val carry = w.rowsBetween(Window.unboundedPreceding, 0)
+    t(spark, dir, "lineitem")
+      // (l_orderkey, l_linenumber) is NOT unique in the synthetic data —
+      // pre-aggregate so the window order is total (ties would make
+      // lag/lead nondeterministic)
+      .groupBy(col("l_orderkey"), col("l_linenumber"))
+      .agg(max(when(col("l_quantity") > 25,
+        col("l_extendedprice").cast("decimal(18,2)"))).as("v"))
+      .select(col("l_orderkey"), col("l_linenumber"),
+        col("v").cast("double").as("v"),
+        lag(col("v"), 1, null, ignoreNulls = true).over(w).cast("double").as("prev_v"),
+        lead(col("v"), 1, null, ignoreNulls = true).over(w).cast("double").as("next_v"),
+        last(col("v"), ignoreNulls = true).over(carry).cast("double").as("carry_v"))
+      .orderBy(col("l_orderkey"), col("l_linenumber"))
+  }
+
+  /** Null-safe equality join (`<=>` / IS NOT DISTINCT FROM): null keys
+    * MATCH each other instead of vanishing — the semantics MERGE keys
+    * and SCD handling rely on.
+    */
+  val j12_nullsafe_join = OpQuery(
+    "j12_nullsafe_join",
+    """SELECT c_custkey, s_suppkey
+      |FROM customer JOIN supplier
+      |  ON nullif(c_nationkey, 3) IS NOT DISTINCT FROM nullif(s_nationkey, 3)
+      |ORDER BY c_custkey, s_suppkey""".stripMargin) { (spark, dir) =>
+    val c = t(spark, dir, "customer")
+      .select(col("c_custkey"), nullif(col("c_nationkey"), lit(3)).as("ck"))
+    val s = t(spark, dir, "supplier")
+      .select(col("s_suppkey"), nullif(col("s_nationkey"), lit(3)).as("sk"))
+    c.join(s, c("ck") <=> s("sk"))
+      .select(col("c_custkey"), col("s_suppkey"))
+      .orderBy(col("c_custkey"), col("s_suppkey"))
+  }
+
+  /** Correlated LATERAL join: top-3 customers by account balance PER
+    * nation, stated as a lateral subquery (the SQL-standard form of
+    * top-k-per-group). Identical SQL text runs on both engines.
+    */
+  val j13_lateral = OpQuery.sql("j13_lateral", "nation", "customer")(
+    """SELECT n_name, c_custkey, bal
+      |FROM nation, LATERAL (
+      |  SELECT c_custkey, CAST(CAST(c_acctbal AS DECIMAL(12,2)) AS DOUBLE) AS bal
+      |  FROM customer
+      |  WHERE c_nationkey = n_nationkey
+      |  ORDER BY bal DESC, c_custkey
+      |  LIMIT 3
+      |) t
+      |ORDER BY n_name, bal DESC, c_custkey""".stripMargin)
+
+  /** Classic SQL subquery shapes in one statement: an uncorrelated
+    * scalar subquery (global average), a correlated EXISTS (semi join),
+    * and an IN subquery (semi join) — the same SQL text runs on both
+    * engines, Catalyst planning all three as joins (no per-row
+    * re-execution anywhere).
+    */
+  val j14_subqueries = OpQuery.sql("j14_subqueries", "orders", "lineitem", "customer")(
+    """SELECT o_orderpriority,
+      |       CAST(COUNT(*) AS BIGINT) AS n_orders,
+      |       CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
+      |FROM orders o
+      |WHERE o_totalprice > (SELECT AVG(o_totalprice) FROM orders)
+      |  AND EXISTS (SELECT 1 FROM lineitem l
+      |              WHERE l.l_orderkey = o.o_orderkey AND l.l_returnflag = 'R')
+      |  AND o_custkey IN (SELECT c_custkey FROM customer
+      |                    WHERE c_mktsegment = 'BUILDING')
+      |GROUP BY o_orderpriority
+      |ORDER BY o_orderpriority""".stripMargin)
+
+  /** Weighted sampling without replacement
+    * ([[Sampling.weightedSample]], Efraimidis–Spirakis A-Res): 100
+    * parts drawn by retail-price weight. The oracle replays the
+    * priority formula — ln(md5-uniform)/weight, top-k — so the gate
+    * hash-pins the exact selected set, not just its size.
+    */
+  val sample_weighted = OpQuery(
+    "sample_weighted",
+    """WITH pri AS (
+      |  SELECT p_partkey,
+      |         ln((CAST(('0x' || substr(md5(CAST(p_partkey AS VARCHAR)), 1, 8)) AS BIGINT) + 1)
+      |            / 4294967296.0) / p_retailprice AS pri
+      |  FROM part
+      |  WHERE p_retailprice IS NOT NULL AND p_retailprice > 0
+      |), sel AS (
+      |  SELECT p_partkey FROM pri ORDER BY pri DESC, p_partkey LIMIT 100
+      |)
+      |SELECT s.p_partkey,
+      |       CAST(CAST(p.p_retailprice AS DECIMAL(12,2)) AS DOUBLE) AS price
+      |FROM sel s JOIN part p ON s.p_partkey = p.p_partkey
+      |ORDER BY s.p_partkey""".stripMargin) { (spark, dir) =>
+    val part = t(spark, dir, "part")
+    Sampling.weightedSample(part, "p_partkey", "p_retailprice", k = 100)
+      .join(part, "p_partkey")
+      .select(col("p_partkey"),
+        col("p_retailprice").cast("decimal(12,2)").cast("double").as("price"))
+      .orderBy(col("p_partkey"))
+  }
+
+  /** Sequence-pattern matching: does the user's full ordered event
+    * string contain an IMMEDIATE view→purchase transition? The
+    * contiguous-pattern complement to the (any-gap) funnel operator —
+    * both engines scan the same canonical sequence string.
+    */
+  val seq_pattern = OpQuery(
+    "seq_pattern",
+    """WITH seq AS (
+      |  SELECT user_id,
+      |         array_to_string(list(event_type ORDER BY epoch_us(ts), event_id), '>') AS s
+      |  FROM events GROUP BY user_id
+      |)
+      |SELECT user_id, strpos(s, 'view>purchase') > 0 AS has_immediate_conversion
+      |FROM seq ORDER BY user_id""".stripMargin) { (spark, dir) =>
+    EventAnalytics.userSequences(t(spark, dir, "events"), maxLen = 1 << 20)
+      .select(col("user_id"),
+        (instr(col("head_seq"), "view>purchase") > 0)
+          .as("has_immediate_conversion"))
+      .orderBy(col("user_id"))
+  }
+
+  /** Outer-join family: FULL OUTER of two aggregates with key ranges
+    * that overhang on BOTH sides, null-extended rows surviving into
+    * downstream arithmetic via coalesce.
+    */
+  val j15_outer_family = OpQuery(
+    "j15_outer_family",
+    """WITH s AS (
+      |  SELECT s_nationkey AS k, CAST(COUNT(*) AS BIGINT) AS n_supp
+      |  FROM supplier WHERE s_nationkey < 15 GROUP BY 1
+      |), c AS (
+      |  SELECT c_nationkey AS k, CAST(COUNT(*) AS BIGINT) AS n_cust
+      |  FROM customer WHERE c_nationkey > 8 GROUP BY 1
+      |)
+      |SELECT COALESCE(s.k, c.k) AS k,
+      |       CAST(COALESCE(n_supp, 0) AS BIGINT) AS n_supp,
+      |       CAST(COALESCE(n_cust, 0) AS BIGINT) AS n_cust,
+      |       s.k IS NULL AS cust_only, c.k IS NULL AS supp_only
+      |FROM s FULL OUTER JOIN c ON s.k = c.k
+      |ORDER BY k""".stripMargin) { (spark, dir) =>
+    val s = t(spark, dir, "supplier").filter(col("s_nationkey") < 15)
+      .groupBy(col("s_nationkey").as("sk"))
+      .agg(count(lit(1)).as("n_supp"))
+    val c = t(spark, dir, "customer").filter(col("c_nationkey") > 8)
+      .groupBy(col("c_nationkey").as("ck"))
+      .agg(count(lit(1)).as("n_cust"))
+    s.join(c, col("sk") === col("ck"), "full_outer")
+      .select(
+        coalesce(col("sk"), col("ck")).as("k"),
+        coalesce(col("n_supp"), lit(0L)).as("n_supp"),
+        coalesce(col("n_cust"), lit(0L)).as("n_cust"),
+        col("sk").isNull.as("cust_only"),
+        col("ck").isNull.as("supp_only"))
+      .orderBy(col("k"))
+  }
+
+  /** Correlated scalar subqueries in the SELECT list — two per row,
+    * decorrelated by Catalyst into aggregate-then-join (no per-row
+    * re-execution). Identical SQL text on both engines.
+    */
+  val j16_correlated_select = OpQuery.sql("j16_correlated_select", "orders", "customer")(
+    """SELECT c_custkey,
+      |       (SELECT CAST(COUNT(*) AS BIGINT) FROM orders o
+      |        WHERE o.o_custkey = c.c_custkey) AS n_orders,
+      |       (SELECT CAST(MAX(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+      |        FROM orders o WHERE o.o_custkey = c.c_custkey) AS max_price
+      |FROM customer c
+      |ORDER BY c_custkey""".stripMargin)
+
+  /** NOT IN vs a null-bearing subquery — the classic three-valued-logic
+    * trap: one NULL in the set makes `x NOT IN (...)` never true, so the
+    * second count collapses to 0 while the null-free twin keeps its
+    * rows. Both engines must implement the same (correct, surprising)
+    * semantics.
+    */
+  val j17_not_in_nulls = OpQuery.sql("j17_not_in_nulls", "orders", "customer")(
+    """SELECT
+      |  (SELECT CAST(COUNT(*) AS BIGINT) FROM orders
+      |   WHERE o_custkey NOT IN
+      |     (SELECT c_custkey FROM customer WHERE c_custkey >= 100)) AS n_without_null,
+      |  (SELECT CAST(COUNT(*) AS BIGINT) FROM orders
+      |   WHERE o_custkey NOT IN
+      |     (SELECT NULLIF(c_custkey, 3) FROM customer
+      |      WHERE c_custkey >= 100 OR c_custkey = 3)) AS n_with_null""".stripMargin)
+
+  /** Schema'd JSON parsing: from_json with an explicit struct schema
+    * (no inference), field access through the typed struct — the
+    * structured counterpart to f_json's path extraction.
+    */
+  val p11_from_json = OpQuery(
+    "p11_from_json",
+    """SELECT CAST(json_extract(props, '$.k') AS INT) % 10 AS k_bucket,
+      |       CAST(COUNT(*) AS BIGINT) AS n,
+      |       CAST(SUM(CAST(json_extract(props, '$.k') AS INT)) AS BIGINT) AS sum_k
+      |FROM events
+      |GROUP BY 1
+      |ORDER BY k_bucket""".stripMargin) { (spark, dir) =>
+    val schema = StructType(Seq(StructField("k", IntegerType)))
+    t(spark, dir, "events")
+      .select(from_json(col("props"), schema).as("p"))
+      .select((col("p.k") % 10).as("k_bucket"), col("p.k").as("k"))
+      .groupBy(col("k_bucket"))
+      .agg(count(lit(1)).as("n"), sum(col("k")).as("sum_k"))
+      .orderBy(col("k_bucket"))
+  }
+
+  /** Cross-split contamination: near-duplicate embedding pairs that
+    * STRADDLE the train/val boundary — the leakage every eval pipeline
+    * must audit before trusting a validation score (a val item with a
+    * train near-twin is memorization, not generalization). Composes the
+    * content-stable split with the cosine near-dup join; the oracle
+    * replays both (md5 bucket arithmetic + list_cosine_similarity).
+    *
+    * This gate runs the exhaustive train×val ground truth on a
+    * deterministic subset; at corpus scale substitute
+    * [[graft.operators.Similarity.cellBucketedNearDups]] (or the LSH
+    * path) filtered to straddling pairs — same composition, bucketed
+    * candidates.
+    */
+  val split_contamination = OpQuery(
+    "split_contamination",
+    """WITH half AS (
+      |  SELECT vec_id, embedding,
+      |         CASE WHEN CAST(('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 8)) AS BIGINT) % 100 < 80
+      |              THEN 'train' ELSE 'val' END AS split
+      |  FROM embeddings WHERE vec_id % 2 = 0
+      |)
+      |SELECT a.vec_id AS train_id, b.vec_id AS val_id,
+      |       CAST(ROUND(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6) AS DOUBLE) AS cos
+      |FROM half a JOIN half b
+      |  ON a.split = 'train' AND b.split = 'val'
+      | AND list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) >= 0.45
+      |ORDER BY train_id, val_id""".stripMargin) { (spark, dir) =>
+    VectorExprs.register(spark)
+    val half = Sampling.deterministicSplit(
+      t(spark, dir, "embeddings").filter(col("vec_id") % 2 === 0),
+      "vec_id", Seq("train" -> 80, "val" -> 20))
+    val a = half.filter(col("split") === "train")
+      .select(col("vec_id").as("train_id"), col("embedding").as("v1"))
+    val b = half.filter(col("split") === "val")
+      .select(col("vec_id").as("val_id"), col("embedding").as("v2"))
+    a.crossJoin(b)
+      .withColumn("__cos", VectorExprs.vecCosine(col("v1"), col("v2")))
+      .filter(col("__cos") >= 0.45)
+      .select(col("train_id"), col("val_id"),
+        round(col("__cos"), 6).as("cos"))
+      .orderBy(col("train_id"), col("val_id"))
+  }
+
+  /** Spark-4 VARIANT: semi-structured payloads parsed once into the
+    * binary variant encoding, fields extracted with typed paths —
+    * the open-format answer to schema-on-read JSON columns. The oracle
+    * extracts the same paths with DuckDB's JSON functions.
+    */
+  val p12_variant = OpQuery(
+    "p12_variant",
+    """SELECT CAST(json_extract(props, '$.k') AS INT) % 7 AS k_mod,
+      |       CAST(COUNT(*) AS BIGINT) AS n,
+      |       CAST(MIN(CAST(json_extract(props, '$.k') AS INT)) AS INT) AS min_k,
+      |       CAST(MAX(CAST(json_extract(props, '$.k') AS INT)) AS INT) AS max_k
+      |FROM events
+      |GROUP BY 1
+      |ORDER BY k_mod""".stripMargin) { (spark, dir) =>
+    t(spark, dir, "events")
+      .select(parse_json(col("props")).as("v"))
+      .select(expr("variant_get(v, '$.k', 'int')").as("k"))
+      .groupBy((col("k") % 7).as("k_mod"))
+      .agg(count(lit(1)).as("n"),
+        min(col("k")).as("min_k"), max(col("k")).as("max_k"))
+      .orderBy(col("k_mod"))
+  }
+
+  /** Class-balanced downsampling: every label keeps exactly
+    * min-class-count rows, selected by a content-stable md5 order (so
+    * the sample is reproducible under any partitioning — a shuffled
+    * corpus draws the identical balanced set). Per-label windows
+    * partition on the label key; the class-size floor is a broadcast
+    * scalar.
+    */
+  val sample_balanced = OpQuery.sql("sample_balanced", "embeddings")(
+    """WITH sizes AS (
+      |  SELECT label, COUNT(*) AS cnt FROM embeddings GROUP BY label),
+      |k AS (SELECT MIN(cnt) AS k FROM sizes),
+      |ranked AS (
+      |  SELECT vec_id, label,
+      |         ROW_NUMBER() OVER (PARTITION BY label
+      |           ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn
+      |  FROM embeddings)
+      |SELECT CAST(vec_id AS BIGINT) AS vec_id, CAST(label AS INT) AS label
+      |FROM ranked, k WHERE rn <= k
+      |ORDER BY label, vec_id""".stripMargin,
+    "VARCHAR" -> "STRING")
+
+  /** Keyset pagination (the scalable OFFSET replacement): page 3 of the
+    * (o_orderdate, o_orderkey) total order, located by the composite-
+    * key predicate from page 2's last row rather than a global skip —
+    * the predicate pushes into the scan, so at 100 TB page N costs the
+    * same as page 1 instead of reading N pages.
+    */
+  val o5_keyset_pagination = OpQuery(
+    "o5_keyset_pagination",
+    """WITH ordered AS (
+      |  SELECT o_orderkey, o_orderdate, o_totalprice,
+      |         ROW_NUMBER() OVER (ORDER BY o_orderdate, o_orderkey) AS rn
+      |  FROM orders),
+      |last_of_p2 AS (SELECT o_orderdate AS d, o_orderkey AS k FROM ordered WHERE rn = 200)
+      |SELECT o.o_orderkey, strftime(o.o_orderdate, '%Y-%m-%d') AS order_date,
+      |       CAST(CAST(o.o_totalprice AS DECIMAL(18,2)) AS DOUBLE) AS total
+      |FROM orders o, last_of_p2
+      |WHERE o.o_orderdate > last_of_p2.d
+      |   OR (o.o_orderdate = last_of_p2.d AND o.o_orderkey > last_of_p2.k)
+      |ORDER BY o.o_orderdate, o.o_orderkey
+      |LIMIT 100""".stripMargin) { (spark, dir) =>
+    Tables.load(spark, dir, "orders").createOrReplaceTempView("graft_page_orders")
+    // the page anchor (global row #200) via TotalOrder two-phase ranks;
+    // ranking every order through one reducer to read a single anchor
+    // row was the whole query's scale ceiling
+    graft.operators.TotalOrder
+      .rowNumber(
+        spark.sql("SELECT o_orderkey, o_orderdate FROM graft_page_orders"),
+        Seq(col("o_orderdate"), col("o_orderkey")), "rn")
+      .filter(col("rn") === 200)
+      .select(col("o_orderdate").as("d"), col("o_orderkey").as("k"))
+      .localCheckpoint(true)
+      .createOrReplaceTempView("graft_page_anchor")
+    spark.sql(
+      """WITH last_of_p2 AS (SELECT d, k FROM graft_page_anchor)
+        |SELECT o.o_orderkey, date_format(o.o_orderdate, 'yyyy-MM-dd') AS order_date,
+        |       CAST(CAST(o.o_totalprice AS DECIMAL(18,2)) AS DOUBLE) AS total
+        |FROM graft_page_orders o, last_of_p2
+        |WHERE o.o_orderdate > last_of_p2.d
+        |   OR (o.o_orderdate = last_of_p2.d AND o.o_orderkey > last_of_p2.k)
+        |ORDER BY o.o_orderdate, o.o_orderkey
+        |LIMIT 100""".stripMargin)
+  }
+
+  /** SQL pipe syntax (Spark 4): the |> operator chain — FROM ... |>
+    * WHERE |> AGGREGATE — compiles to the identical logical plan as the
+    * classical form the oracle states.
+    */
+  val p13_pipe_syntax = OpQuery(
+    "p13_pipe_syntax",
+    """SELECT l_returnflag,
+      |       CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS qty,
+      |       CAST(COUNT(*) AS BIGINT) AS n
+      |FROM lineitem
+      |WHERE l_shipdate >= TIMESTAMP '1997-01-01'
+      |GROUP BY l_returnflag
+      |ORDER BY l_returnflag""".stripMargin) { (spark, dir) =>
+    Tables.load(spark, dir, "lineitem").createOrReplaceTempView("graft_pipe_lineitem")
+    spark.sql(
+      """FROM graft_pipe_lineitem
+        ||> WHERE l_shipdate >= TIMESTAMP '1997-01-01'
+        ||> AGGREGATE CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS qty,
+        |             CAST(COUNT(*) AS BIGINT) AS n
+        |   GROUP BY l_returnflag
+        ||> SELECT l_returnflag, qty, n
+        ||> ORDER BY l_returnflag""".stripMargin)
+  }
+
+  /** Parameterized SQL (named-marker binding via spark.sql(args=...)):
+    * literals travel as typed parameters, not string splices — the
+    * injection-safe API surface. The oracle inlines the same values.
+    */
+  val p14_parameterized_sql = OpQuery(
+    "p14_parameterized_sql",
+    """SELECT o_orderkey, CAST(o_totalprice AS DOUBLE) AS total
+      |FROM orders
+      |WHERE o_orderstatus = 'F' AND o_totalprice > 300000
+      |ORDER BY o_orderkey""".stripMargin) { (spark, dir) =>
+    Tables.load(spark, dir, "orders").createOrReplaceTempView("graft_param_orders")
+    spark.sql(
+      """SELECT o_orderkey, CAST(o_totalprice AS DOUBLE) AS total
+        |FROM graft_param_orders
+        |WHERE o_orderstatus = :status AND o_totalprice > :floor
+        |ORDER BY o_orderkey""".stripMargin,
+      Map("status" -> "F", "floor" -> Int.box(300000)))
+  }
+
+  /** Point-in-time join: facts pick the dimension version VALID AT the
+    * fact's own timestamp — the feature-store join that keeps training
+    * data leakage-free (a 1997 order must see the 1997 snapshot, never
+    * a later one). Dimension versions are yearly customer snapshots
+    * derived in-query; the join is equi on the customer key with the
+    * validity-range residual, so it shuffles once on the uniform key.
+    */
+  val j19_point_in_time = OpQuery.sql("j19_point_in_time", "customer", "orders")(
+    """WITH snapshots AS (
+      |  SELECT c_custkey, y.yr AS valid_year,
+      |         (CAST(ROUND(c_acctbal * 100) AS BIGINT) * (100 + y.yr - 1995)) // 100 AS bal_cents_at
+      |  FROM customer, (SELECT unnest(generate_series(1995, 2001)) AS yr) y),
+      |facts AS (
+      |  SELECT o_orderkey, o_custkey, year(o_orderdate) AS o_year,
+      |         CAST(o_totalprice AS DECIMAL(18,2)) AS price
+      |  FROM orders)
+      |SELECT f.o_orderkey,
+      |       CAST(s.valid_year AS INT) AS feature_year,
+      |       CAST(s.bal_cents_at AS BIGINT) AS bal_feature_cents,
+      |       CAST(f.price AS DOUBLE) AS price
+      |FROM facts f JOIN snapshots s
+      |  ON f.o_custkey = s.c_custkey AND f.o_year = s.valid_year
+      |ORDER BY f.o_orderkey""".stripMargin,
+    "//" -> "DIV",
+    "unnest(generate_series(" -> "explode(sequence(")
+
+  /** VARIANT array explosion (Spark 4): a JSON array parsed to variant
+    * and exploded to typed rows — the semi-structured fan-out path. The
+    * array is constructed from row data so the oracle can replay it
+    * with generate_series.
+    */
+  val p15_variant_explode = OpQuery(
+    "p15_variant_explode",
+    """SELECT doc_id, CAST(u.i AS INT) AS pos, CAST(doc_id % 5 + u.i AS BIGINT) AS val
+      |FROM documents, unnest(generate_series(0, 2)) AS u(i)
+      |WHERE doc_id % 100 = 0
+      |ORDER BY doc_id, pos""".stripMargin) { (spark, dir) =>
+    Tables.load(spark, dir, "documents").createOrReplaceTempView("graft_ve_docs")
+    spark.sql(
+      """WITH src AS (
+        |  SELECT doc_id,
+        |         parse_json(concat('[', CAST(doc_id % 5 AS STRING), ',',
+        |                           CAST(doc_id % 5 + 1 AS STRING), ',',
+        |                           CAST(doc_id % 5 + 2 AS STRING), ']')) AS v
+        |  FROM graft_ve_docs WHERE doc_id % 100 = 0)
+        |SELECT doc_id, CAST(e.pos AS INT) AS pos,
+        |       CAST(e.value AS BIGINT) AS val
+        |FROM src, LATERAL variant_explode(v) AS e
+        |ORDER BY doc_id, pos""".stripMargin)
+  }
+
+  /** Running distinct event types per user: windows cannot COUNT
+    * DISTINCT, so mark each (user, type)'s FIRST occurrence with
+    * row_number and take a running sum of the flags — two windows on
+    * the same user partitioning, no extra shuffle. Emitted at each
+    * user's last event of every day to keep the gate bounded.
+    */
+  val w8_running_distinct = OpQuery.sql("w8_running_distinct", "events")(
+    """WITH ordered AS (
+      |  SELECT user_id, event_id, event_type, ts, CAST(ts AS DATE) AS d,
+      |         CASE WHEN ROW_NUMBER() OVER (PARTITION BY user_id, event_type
+      |                                      ORDER BY ts, event_id) = 1
+      |              THEN 1 ELSE 0 END AS first_of_type
+      |  FROM events),
+      |running AS (
+      |  SELECT user_id, event_id, d,
+      |         SUM(first_of_type) OVER (PARTITION BY user_id ORDER BY ts, event_id
+      |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS distinct_types_so_far,
+      |         ROW_NUMBER() OVER (PARTITION BY user_id, CAST(ts AS DATE)
+      |                            ORDER BY ts DESC, event_id DESC) AS rn_day
+      |  FROM ordered)
+      |SELECT user_id, strftime(d, '%Y-%m-%d') AS day,
+      |       CAST(distinct_types_so_far AS BIGINT) AS distinct_types_so_far
+      |FROM running WHERE rn_day = 1
+      |ORDER BY user_id, day""".stripMargin,
+    "strftime(" -> "date_format(",
+    "'%Y-%m-%d'" -> "'yyyy-MM-dd'")
+
+  /** Role-playing dimension: ONE year spine joined in two roles (order
+    * year and ship year) — the classic warehouse pattern where the same
+    * physical dimension serves several foreign keys. Both legs are
+    * broadcast-sized.
+    */
+  val j20_role_playing = OpQuery.sql("j20_role_playing", "lineitem", "orders")(
+    """WITH yearspine AS (
+      |  SELECT y.y AS yr, concat('FY', CAST(y.y AS VARCHAR)) AS label
+      |  FROM (SELECT unnest(generate_series(1995, 2001)) AS y) y),
+      |f AS (
+      |  SELECT l.l_orderkey, l.l_linenumber,
+      |         year(o.o_orderdate) AS oy, year(l.l_shipdate) AS sy
+      |  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey)
+      |SELECT od.label AS ordered_in, sd.label AS shipped_in,
+      |       CAST(COUNT(*) AS BIGINT) AS n
+      |FROM f
+      |JOIN yearspine od ON f.oy = od.yr
+      |JOIN yearspine sd ON f.sy = sd.yr
+      |GROUP BY od.label, sd.label
+      |ORDER BY ordered_in, shipped_in""".stripMargin,
+    "VARCHAR" -> "STRING",
+    "unnest(generate_series(" -> "explode(sequence(")
+
+  /** Multi-column IN subquery: (orderkey, linenumber) tuples membership
+    * against a derived set — the composite-key semi join written the
+    * declarative way.
+    */
+  val j21_multicol_in = OpQuery(
+    "j21_multicol_in",
+    """SELECT l.l_orderkey, l.l_linenumber,
+      |       CAST(l.l_quantity AS BIGINT) AS qty
+      |FROM lineitem l
+      |WHERE EXISTS (
+      |  SELECT 1 FROM (
+      |    SELECT l_orderkey AS k, MIN(l_linenumber) AS m
+      |    FROM lineitem GROUP BY l_orderkey HAVING COUNT(*) >= 5) s
+      |  WHERE s.k = l.l_orderkey AND s.m = l.l_linenumber)
+      |ORDER BY l_orderkey, l_linenumber""".stripMargin) { (spark, dir) =>
+    Tables.load(spark, dir, "lineitem").createOrReplaceTempView("graft_mci_lineitem")
+    spark.sql(
+      """SELECT l_orderkey, l_linenumber,
+        |       CAST(l_quantity AS BIGINT) AS qty
+        |FROM graft_mci_lineitem
+        |WHERE (l_orderkey, l_linenumber) IN (
+        |  SELECT l_orderkey, MIN(l_linenumber)
+        |  FROM graft_mci_lineitem GROUP BY l_orderkey HAVING COUNT(*) >= 5)
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin)
+  }
+
+  /** EXECUTE IMMEDIATE with USING parameters (Spark 4): dynamic SQL
+    * composed at runtime with typed bindings — the scripting surface
+    * migration tools rely on. Oracle states the resolved query.
+    */
+  val p16_execute_immediate = OpQuery(
+    "p16_execute_immediate",
+    """SELECT lang, CAST(COUNT(*) AS BIGINT) AS n
+      |FROM documents
+      |WHERE n_chars > 200
+      |GROUP BY lang
+      |ORDER BY lang""".stripMargin) { (spark, dir) =>
+    Tables.load(spark, dir, "documents").createOrReplaceTempView("graft_ei_docs")
+    spark.sql("DECLARE OR REPLACE VARIABLE graft_min_chars INT DEFAULT 200")
+    spark.sql(
+      """EXECUTE IMMEDIATE
+        |'SELECT lang, CAST(COUNT(*) AS BIGINT) AS n
+        | FROM graft_ei_docs WHERE n_chars > ? GROUP BY lang ORDER BY lang'
+        |USING graft_min_chars""".stripMargin)
+  }
+
+  /** Dynamic partition pruning: the fact table is partitioned on the
+    * join key; the dimension's filter is only known at RUNTIME, so the
+    * optimizer injects a subquery that prunes fact PARTITIONS before
+    * the scan — the feature that makes star joins over partitioned
+    * 100 TB facts read 1/N of the data. Plan-guarded in PlanSpec
+    * (`dynamicpruning` present); here the oracle pins result equality.
+    */
+  val j22_dynamic_partition_pruning = OpQuery(
+    "j22_dynamic_partition_pruning",
+    """WITH dim AS (
+      |  SELECT DISTINCT event_type, length(event_type) AS type_len
+      |  FROM events WHERE event_type IN ('purchase', 'signup'))
+      |SELECT e.event_type, CAST(d.type_len AS INT) AS type_len,
+      |       CAST(COUNT(*) AS BIGINT) AS n
+      |FROM events e JOIN dim d ON e.event_type = d.event_type
+      |GROUP BY e.event_type, d.type_len
+      |ORDER BY e.event_type""".stripMargin) { (spark, dir) =>
+    val events = Tables.load(spark, dir, "events")
+    val base = graft.queries.GateScratch.dir("graft-dpp-").toString
+    events.select("event_id", "user_id", "event_type")
+      .write.mode("overwrite").partitionBy("event_type").parquet(base)
+    val fact = spark.read.parquet(base)
+    val dim = events.filter(col("event_type").isin("purchase", "signup"))
+      .select(col("event_type"), length(col("event_type")).as("type_len"))
+      .distinct()
+    fact.join(dim, "event_type")
+      .groupBy(col("event_type"), col("type_len").cast("int").as("type_len"))
+      .agg(count(lit(1)).cast("long").as("n"))
+      .orderBy("event_type")
+  }
+
+  /** OFFSET pagination: LIMIT/OFFSET over a total order — the naive
+    * pagination the keyset gate exists to replace; both must exist for
+    * API parity, and OFFSET pushdown (GlobalLimit with skip) is its own
+    * plan shape.
+    */
+  val o6_offset_fetch = OpQuery.sql("o6_offset_fetch", "orders")(
+    """SELECT o_orderkey, CAST(o_totalprice AS DOUBLE) AS total
+      |FROM orders
+      |ORDER BY o_orderkey
+      |LIMIT 15 OFFSET 30""".stripMargin)
+
+  /** SQL scripting (Spark 4): BEGIN/DECLARE/SET/IF control flow whose
+    * final statement yields the result — procedural orchestration
+    * without leaving SQL. The oracle states the resolved query.
+    */
+  val p17_sql_scripting = OpQuery(
+    "p17_sql_scripting",
+    """SELECT o_orderstatus, CAST(COUNT(*) AS BIGINT) AS n
+      |FROM orders
+      |WHERE o_totalprice > 250000
+      |GROUP BY o_orderstatus
+      |ORDER BY o_orderstatus""".stripMargin) { (spark, dir) =>
+    Tables.load(spark, dir, "orders").createOrReplaceTempView("graft_script_orders")
+    spark.sql(
+      """BEGIN
+        |  DECLARE threshold DOUBLE DEFAULT 100000;
+        |  IF 1 = 1 THEN
+        |    SET threshold = 250000;
+        |  END IF;
+        |  SELECT o_orderstatus, CAST(COUNT(*) AS BIGINT) AS n
+        |  FROM graft_script_orders
+        |  WHERE o_totalprice > threshold
+        |  GROUP BY o_orderstatus
+        |  ORDER BY o_orderstatus;
+        |END""".stripMargin)
+  }
+
+  /** Temporal train/test split: train strictly before the cutoff, test
+    * at-or-after — the ONLY valid split for forecasting data (random
+    * splits leak the future). The cutoff is the 80th percentile event
+    * second (integer), and the gate emits per-split integrity facts
+    * including a zero-overlap proof.
+    */
+  val data_split_temporal = OpQuery(
+    "data_split_temporal",
+    """WITH cut AS (
+      |  SELECT CAST(TRUNC(quantile_cont(TRUNC(epoch(ts))::BIGINT, 0.8)) AS BIGINT) AS c
+      |  FROM events),
+      |tagged AS (
+      |  SELECT CASE WHEN TRUNC(epoch(ts))::BIGINT < cut.c THEN 'train' ELSE 'test' END AS split,
+      |         TRUNC(epoch(ts))::BIGINT AS t
+      |  FROM events, cut)
+      |SELECT split,
+      |       CAST(COUNT(*) AS BIGINT) AS n,
+      |       CAST(MIN(t) AS BIGINT) AS min_t,
+      |       CAST(MAX(t) AS BIGINT) AS max_t
+      |FROM tagged
+      |GROUP BY split
+      |ORDER BY split""".stripMargin) { (spark, dir) =>
+    Tables.load(spark, dir, "events").createOrReplaceTempView("graft_tsplit_events")
+    spark.sql(
+      """WITH cut AS (
+        |  SELECT CAST(percentile(unix_timestamp(ts), 0.8) AS BIGINT) AS c
+        |  FROM graft_tsplit_events),
+        |tagged AS (
+        |  SELECT CASE WHEN unix_timestamp(ts) < cut.c THEN 'train' ELSE 'test' END AS split,
+        |         unix_timestamp(ts) AS t
+        |  FROM graft_tsplit_events, cut)
+        |SELECT split,
+        |       CAST(COUNT(*) AS BIGINT) AS n,
+        |       CAST(MIN(t) AS BIGINT) AS min_t,
+        |       CAST(MAX(t) AS BIGINT) AS max_t
+        |FROM tagged
+        |GROUP BY split
+        |ORDER BY split""".stripMargin)
+  }
+
+  val j23_set_ops_all = OpQuery.sql("j23_set_ops_all", "lineitem")(
+    """WITH a AS (SELECT CAST(l_quantity AS BIGINT) AS v FROM lineitem WHERE l_returnflag = 'R'),
+      |b AS (SELECT CAST(l_quantity AS BIGINT) AS v FROM lineitem WHERE l_returnflag = 'A')
+      |SELECT op, CAST(v AS BIGINT) AS v, CAST(COUNT(*) AS BIGINT) AS mult
+      |FROM (
+      |  SELECT 'intersect_all' AS op, v FROM (SELECT v FROM a INTERSECT ALL SELECT v FROM b)
+      |  UNION ALL
+      |  SELECT 'except_all' AS op, v FROM (SELECT v FROM a EXCEPT ALL SELECT v FROM b))
+      |GROUP BY op, v
+      |ORDER BY op, v""".stripMargin)
+
+  /** from_csv: CSV text embedded in a COLUMN parsed against an explicit
+    * schema — the inner-format pattern (a CSV payload inside a Kafka
+    * value, a log line inside a table). The oracle re-derives the
+    * fields from the constituent columns.
+    */
+  val p19_from_csv = OpQuery(
+    "p19_from_csv",
+    """SELECT doc_id,
+      |       lang AS f_lang,
+      |       CAST(n_chars AS BIGINT) AS f_chars
+      |FROM documents
+      |WHERE doc_id % 19 = 0
+      |ORDER BY doc_id""".stripMargin) { (spark, dir) =>
+    Tables.load(spark, dir, "documents").createOrReplaceTempView("graft_fcsv_docs")
+    spark.sql(
+      """WITH lines AS (
+        |  SELECT doc_id, concat(lang, ',', CAST(n_chars AS STRING)) AS line
+        |  FROM graft_fcsv_docs WHERE doc_id % 19 = 0),
+        |parsed AS (
+        |  SELECT doc_id, from_csv(line, 'f_lang STRING, f_chars BIGINT') AS p FROM lines)
+        |SELECT doc_id, p.f_lang AS f_lang, CAST(p.f_chars AS BIGINT) AS f_chars
+        |FROM parsed
+        |ORDER BY doc_id""".stripMargin)
+  }
+
+  /** to_json ∘ from_json struct round-trip: serialize a typed struct to
+    * JSON text and parse it back — both directions of the JSON bridge
+    * in one gate, field types preserved.
+    */
+  val p20_json_roundtrip = OpQuery(
+    "p20_json_roundtrip",
+    """SELECT o_orderkey,
+      |       o_orderstatus AS status_rt,
+      |       CAST(ROUND(o_totalprice, 2) AS DOUBLE) AS price_rt
+      |FROM orders
+      |WHERE o_orderkey % 23 = 0
+      |ORDER BY o_orderkey""".stripMargin) { (spark, dir) =>
+    Tables.load(spark, dir, "orders").createOrReplaceTempView("graft_jrt_orders")
+    spark.sql(
+      """WITH ser AS (
+        |  SELECT o_orderkey,
+        |         to_json(named_struct('s', o_orderstatus, 'p', ROUND(o_totalprice, 2))) AS j
+        |  FROM graft_jrt_orders WHERE o_orderkey % 23 = 0),
+        |de AS (
+        |  SELECT o_orderkey, from_json(j, 's STRING, p DOUBLE') AS st FROM ser)
+        |SELECT o_orderkey, st.s AS status_rt,
+        |       CAST(st.p AS DOUBLE) AS price_rt
+        |FROM de
+        |ORDER BY o_orderkey""".stripMargin)
+  }
+
+  /** Malformed-JSON semantics: from_json yields NULL for broken
+    * documents instead of failing the scan (the PERMISSIVE contract on
+    * the function surface); good rows parse fully. Bad rows are
+    * constructed deterministically, so the oracle states exactly which
+    * parse and which do not.
+    */
+  val p21_json_malformed = OpQuery(
+    "p21_json_malformed",
+    """SELECT doc_id,
+      |       CASE WHEN doc_id % 3 = 0 THEN NULL ELSE lang END AS parsed_lang,
+      |       CAST(doc_id % 3 <> 0 AS BOOLEAN) AS parse_ok
+      |FROM documents
+      |WHERE doc_id % 7 = 0
+      |ORDER BY doc_id""".stripMargin) { (spark, dir) =>
+    Tables.load(spark, dir, "documents").createOrReplaceTempView("graft_mal_docs")
+    spark.sql(
+      """WITH payloads AS (
+        |  SELECT doc_id,
+        |         CASE WHEN doc_id % 3 = 0
+        |              THEN concat('{"lang": ', lang)
+        |              ELSE concat('{"lang": "', lang, '"}') END AS j
+        |  FROM graft_mal_docs WHERE doc_id % 7 = 0),
+        |parsed AS (
+        |  SELECT doc_id, from_json(j, 'lang STRING') AS st FROM payloads)
+        |SELECT doc_id,
+        |       st.lang AS parsed_lang,
+        |       CAST(st.lang IS NOT NULL AS BOOLEAN) AS parse_ok
+        |FROM parsed
+        |ORDER BY doc_id""".stripMargin)
+  }
+
+  /** SQL PIVOT clause: event counts fanned to one column per type. */
+  val p23_pivot_sql = OpQuery(
+    "p23_pivot_sql",
+    """SELECT user_id % 10 AS cohort,
+      |       CAST(SUM(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS views,
+      |       CAST(SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS clicks,
+      |       CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS purchases
+      |FROM events
+      |GROUP BY user_id % 10
+      |ORDER BY cohort""".stripMargin) { (spark, dir) =>
+    Tables.load(spark, dir, "events").createOrReplaceTempView("graft_pv_events")
+    spark.sql(
+      """WITH base AS (
+        |  SELECT user_id % 10 AS cohort, event_type FROM graft_pv_events)
+        |SELECT cohort,
+        |       CAST(coalesce(views, 0) AS BIGINT) AS views,
+        |       CAST(coalesce(clicks, 0) AS BIGINT) AS clicks,
+        |       CAST(coalesce(purchases, 0) AS BIGINT) AS purchases
+        |FROM base
+        |PIVOT (COUNT(*) FOR event_type IN ('view' AS views, 'click' AS clicks, 'purchase' AS purchases))
+        |ORDER BY cohort""".stripMargin)
+  }
+
+  /** SQL UNPIVOT clause: the wide per-cohort table melted back to
+    * (cohort, metric, value) rows.
+    */
+  val p22_unpivot_sql = OpQuery(
+    "p22_unpivot_sql",
+    """WITH wide AS (
+      |  SELECT user_id % 10 AS cohort,
+      |         SUM(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS views,
+      |         SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS purchases
+      |  FROM events GROUP BY user_id % 10)
+      |SELECT cohort, metric, CAST(v AS BIGINT) AS v
+      |FROM (
+      |  SELECT cohort, 'views' AS metric, views AS v FROM wide
+      |  UNION ALL
+      |  SELECT cohort, 'purchases' AS metric, purchases AS v FROM wide)
+      |ORDER BY cohort, metric""".stripMargin) { (spark, dir) =>
+    Tables.load(spark, dir, "events").createOrReplaceTempView("graft_upv_events")
+    spark.sql(
+      """WITH wide AS (
+        |  SELECT user_id % 10 AS cohort,
+        |         SUM(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS views,
+        |         SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS purchases
+        |  FROM graft_upv_events GROUP BY user_id % 10)
+        |SELECT cohort, metric, CAST(v AS BIGINT) AS v
+        |FROM wide
+        |UNPIVOT (v FOR metric IN (views, purchases))
+        |ORDER BY cohort, metric""".stripMargin)
+  }
+
+  /** Empty-relation semantics: a GLOBAL aggregate over zero rows yields
+    * ONE row (count 0, null sum); a GROUPED aggregate yields ZERO rows;
+    * a join against empty yields zero — the trio of edge contracts
+    * incremental pipelines trip over on their first empty batch.
+    */
+  val p24_empty_semantics = OpQuery.sql("p24_empty_semantics", "orders")(
+    """WITH empty AS (SELECT * FROM orders WHERE 1 = 0),
+      |g AS (SELECT COUNT(*) AS c, SUM(o_totalprice) AS s FROM empty),
+      |grp AS (SELECT o_orderstatus, COUNT(*) AS c FROM empty GROUP BY o_orderstatus),
+      |j AS (SELECT o.o_orderkey FROM orders o JOIN empty e ON o.o_orderkey = e.o_orderkey)
+      |SELECT (SELECT c FROM g) AS global_count,
+      |       CAST((SELECT s FROM g) IS NULL AS BOOLEAN) AS global_sum_null,
+      |       CAST((SELECT COUNT(*) FROM grp) AS BIGINT) AS grouped_rows,
+      |       CAST((SELECT COUNT(*) FROM j) AS BIGINT) AS join_rows""".stripMargin)
+
+  /** DISTINCT ON semantics — latest shipped line per order. DuckDB
+    * runs its native `DISTINCT ON (key) ... ORDER BY` clause; the
+    * Spark side expresses the identical contract as a row_number
+    * window, the scalable shuffle-once plan for keep-one-row-per-key.
+    */
+  val o7_distinct_on = OpQuery(
+    "o7_distinct_on",
+    """SELECT DISTINCT ON (l_orderkey)
+      |       l_orderkey, CAST(l_linenumber AS INT) AS l_linenumber,
+      |       strftime(l_shipdate, '%Y-%m-%d') AS ship
+      |FROM lineitem
+      |WHERE l_orderkey < 2000
+      |ORDER BY l_orderkey, l_shipdate DESC, l_linenumber DESC""".stripMargin) { (spark, dir) =>
+    val w = Window.partitionBy(col("l_orderkey"))
+      .orderBy(col("l_shipdate").desc, col("l_linenumber").desc)
+    Tables.load(spark, dir, "lineitem")
+      .filter(col("l_orderkey") < 2000)
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") === 1)
+      .select(col("l_orderkey"), col("l_linenumber").cast("int").as("l_linenumber"),
+        date_format(col("l_shipdate"), "yyyy-MM-dd").as("ship"))
+      .orderBy("l_orderkey")
+  }
+
+  /** Nearest-value join: each order matched to the part whose retail
+    * price is CLOSEST to the order total / 100 — no equality key at
+    * all. Instead of the quadratic cross join, both sides are unioned
+    * and sorted once; IGNORE NULLS value windows carry the nearest
+    * candidate below and above each probe, and a final projection picks
+    * the closer (ties to the lower candidate — pinned). O(n log n), and
+    * the sort shuffle is the only data movement.
+    */
+  val j24_nearest_join = OpQuery(
+    "j24_nearest_join",
+    """WITH probes AS (
+      |  SELECT o_orderkey AS id, o_totalprice / 100 AS price
+      |  FROM orders WHERE o_orderkey < 2000),
+      |cands AS (
+      |  SELECT p_partkey AS pk, p_retailprice AS price FROM part),
+      |u AS (
+      |  SELECT price, 0 AS side, pk, CAST(NULL AS BIGINT) AS id FROM cands
+      |  UNION ALL
+      |  SELECT price, 1 AS side, CAST(NULL AS BIGINT) AS pk, id FROM probes),
+      |walked AS (
+      |  SELECT price, side, pk, id,
+      |         last_value(CASE WHEN side = 0 THEN price END IGNORE NULLS)
+      |           OVER (ORDER BY price, side, COALESCE(pk, id)
+      |                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS below_p,
+      |         last_value(CASE WHEN side = 0 THEN pk END IGNORE NULLS)
+      |           OVER (ORDER BY price, side, COALESCE(pk, id)
+      |                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS below_pk,
+      |         last_value(CASE WHEN side = 0 THEN price END IGNORE NULLS)
+      |           OVER (ORDER BY price DESC, side, COALESCE(pk, id)
+      |                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS above_p,
+      |         last_value(CASE WHEN side = 0 THEN pk END IGNORE NULLS)
+      |           OVER (ORDER BY price DESC, side, COALESCE(pk, id)
+      |                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS above_pk
+      |  FROM u)
+      |SELECT id AS o_orderkey, CAST(price AS DOUBLE) AS probe_price,
+      |       CASE WHEN above_p IS NULL THEN below_pk
+      |            WHEN below_p IS NULL THEN above_pk
+      |            WHEN price - below_p <= above_p - price THEN below_pk
+      |            ELSE above_pk END AS nearest_partkey,
+      |       CAST(CASE WHEN above_p IS NULL THEN below_p
+      |            WHEN below_p IS NULL THEN above_p
+      |            WHEN price - below_p <= above_p - price THEN below_p
+      |            ELSE above_p END AS DOUBLE) AS nearest_price
+      |FROM walked WHERE side = 1
+      |ORDER BY o_orderkey""".stripMargin) { (spark, dir) =>
+    val probes = Tables.load(spark, dir, "orders")
+      .filter(col("o_orderkey") < 2000)
+      .select(col("o_orderkey").as("id"),
+        (col("o_totalprice") / 100).as("price"))
+    val cands = Tables.load(spark, dir, "part")
+      .select(col("p_partkey").as("pk"), col("p_retailprice").as("price"))
+    val u = cands.select(col("price"), lit(0).as("side"), col("pk"),
+        lit(null).cast("long").as("id"))
+      .unionByName(probes.select(col("price"), lit(1).as("side"),
+        lit(null).cast("long").as("pk"), col("id")))
+    // The union frame is candidate-table-sized, so the two LAST_VALUE
+    // IGNORE NULLS walks run as ONE distributed TotalOrder pass: the
+    // below-candidate is the prefix MAX of struct(price, pk) among
+    // candidates (side sorts cands before the probe at equal price, pk
+    // ascending → max pk breaks price ties) and the above-candidate is
+    // the SUFFIX max of struct(-price, pk) in the same ascending layout
+    // — one range shuffle carries both walks. The suffix form excludes
+    // equal-price candidates (they sort before the probe), but those
+    // always appear in the below walk at distance 0, which the
+    // ties-to-below rule then picks — output-identical to the oracle's
+    // descending walk.
+    val T = graft.operators.TotalOrder
+    val ordKey = coalesce(col("pk"), col("id"))
+    val walkedBoth = T.prefixAggs(
+      u.withColumn("__b",
+          when(col("side") === 0, struct(col("price"), col("pk"))))
+        .withColumn("__a",
+          when(col("side") === 0, struct((-col("price")).as("np"), col("pk")))),
+      Seq(col("price"), col("side"), ordKey),
+      maxes = Seq("__b" -> "__below"),
+      suffixMaxes = Seq("__a" -> "__above"))
+    val walked = walkedBoth
+      .withColumn("below_p", col("__below.price"))
+      .withColumn("below_pk", col("__below.pk"))
+      .withColumn("above_p", -col("__above.np"))
+      .withColumn("above_pk", col("__above.pk"))
+    val takeBelow = col("above_p").isNull ||
+      (col("below_p").isNotNull && col("price") - col("below_p") <= col("above_p") - col("price"))
+    walked.filter(col("side") === 1)
+      .select(col("id").as("o_orderkey"),
+        col("price").cast("double").as("probe_price"),
+        when(takeBelow, col("below_pk")).otherwise(col("above_pk")).as("nearest_partkey"),
+        when(takeBelow, col("below_p")).otherwise(col("above_p"))
+          .cast("double").as("nearest_price"))
+      .orderBy("o_orderkey")
+  }
+
+  /** Pro-rata allocation of a line item's value across the calendar
+    * months its ship→receipt span touches — the revenue-recognition /
+    * cost-spreading primitive. The month spine comes from a native
+    * sequence+explode (no recursion, no driver loop), overlap is pure
+    * integer day arithmetic, and the allocated amount is a pinned
+    * FLOOR(cents·days/total) — exact on any engine.
+    */
+  val j25_interval_allocation = OpQuery(
+    "j25_interval_allocation",
+    """WITH spans AS (
+      |  SELECT l_orderkey, l_linenumber,
+      |         CAST(ROW_NUMBER() OVER (PARTITION BY l_orderkey, l_linenumber
+      |           ORDER BY l_extendedprice, l_shipdate) AS INT) AS inst,
+      |         CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents,
+      |         CAST(l_shipdate AS DATE) AS d0,
+      |         CAST(l_shipdate AS DATE) + CAST(l_orderkey % 90 + 10 AS INT) AS d1,
+      |         CAST(l_orderkey % 90 + 10 AS INT) + 1 AS total_days
+      |  FROM lineitem WHERE l_orderkey < 500),
+      |exploded AS (
+      |  SELECT l_orderkey, l_linenumber, inst, cents, d0, d1, total_days,
+      |         unnest(generate_series(CAST(date_trunc('month', d0) AS DATE),
+      |                                CAST(date_trunc('month', d1) AS DATE),
+      |                                INTERVAL 1 MONTH)) AS m
+      |  FROM spans),
+      |sliced AS (
+      |  SELECT l_orderkey, l_linenumber, inst, cents, total_days,
+      |         strftime(m, '%Y-%m') AS month,
+      |         date_diff('day',
+      |           GREATEST(CAST(m AS DATE), d0),
+      |           LEAST(CAST(last_day(CAST(m AS DATE)) AS DATE), d1)) + 1 AS days
+      |  FROM exploded)
+      |SELECT l_orderkey, CAST(l_linenumber AS INT) AS l_linenumber, inst, month,
+      |       CAST(days AS INT) AS days,
+      |       CAST(FLOOR(cents * days / total_days) AS BIGINT) AS allocated_cents
+      |FROM sliced
+      |ORDER BY l_orderkey, l_linenumber, inst, month""".stripMargin) { (spark, dir) =>
+    Tables.load(spark, dir, "lineitem").createOrReplaceTempView("graft_alloc_li")
+    spark.sql(
+      """WITH spans AS (
+        |  SELECT l_orderkey, l_linenumber,
+        |         CAST(ROW_NUMBER() OVER (PARTITION BY l_orderkey, l_linenumber
+        |           ORDER BY l_extendedprice, l_shipdate) AS INT) AS inst,
+        |         CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents,
+        |         CAST(l_shipdate AS DATE) AS d0,
+        |         date_add(CAST(l_shipdate AS DATE), CAST(l_orderkey % 90 + 10 AS INT)) AS d1,
+        |         CAST(l_orderkey % 90 + 10 AS INT) + 1 AS total_days
+        |  FROM graft_alloc_li WHERE l_orderkey < 500),
+        |exploded AS (
+        |  SELECT l_orderkey, l_linenumber, inst, cents, d0, d1, total_days,
+        |         explode(sequence(CAST(date_trunc('month', d0) AS DATE),
+        |                          CAST(date_trunc('month', d1) AS DATE),
+        |                          INTERVAL 1 MONTH)) AS m
+        |  FROM spans),
+        |sliced AS (
+        |  SELECT l_orderkey, l_linenumber, inst, cents, total_days,
+        |         date_format(m, 'yyyy-MM') AS month,
+        |         datediff(LEAST(last_day(m), d1), GREATEST(m, d0)) + 1 AS days
+        |  FROM exploded)
+        |SELECT l_orderkey, CAST(l_linenumber AS INT) AS l_linenumber, inst, month,
+        |       CAST(days AS INT) AS days,
+        |       CAST(FLOOR(cents * days / total_days) AS BIGINT) AS allocated_cents
+        |FROM sliced
+        |ORDER BY l_orderkey, l_linenumber, inst, month""".stripMargin)
+  }
+
+  /** LIKE with ESCAPE: patterns over strings that themselves contain %
+    * and _ — the wildcard-literal disambiguation that silently corrupts
+    * filters when ignored. The test strings inject both wildcards into
+    * part names; matches compare an escaped literal-% pattern, an
+    * unescaped (wildcard) form, and a single-char _ probe.
+    */
+  val p25_like_escape = OpQuery.sql("p25_like_escape", "part")(
+    """WITH s AS (
+      |  SELECT p_partkey,
+      |         replace(replace(p_name, 'a', '%'), 'o', '_') AS tricky
+      |  FROM part WHERE p_partkey < 300)
+      |SELECT p_partkey, tricky,
+      |       tricky LIKE '%!%%' ESCAPE '!' AS has_literal_pct,
+      |       tricky LIKE '%!_%' ESCAPE '!' AS has_literal_us,
+      |       tricky LIKE '%%' AS wild_any,
+      |       tricky LIKE 's_r%' AS positional
+      |FROM s
+      |ORDER BY p_partkey""".stripMargin)
+
+  /** Bridge-table attribution: order revenue allocated to suppliers
+    * pro-rata by line quantity — the many-to-many dimensional-modeling
+    * pattern where a fact meets a group through a weighted bridge.
+    * Weights are FLOOR(cents·qty/total_qty) in pure integers; the
+    * final per-supplier rollup is an exact BIGINT sum, so the
+    * attribution is reconciliation-stable (allocations never exceed
+    * the order total).
+    */
+  val j26_bridge_allocation = OpQuery(
+    "j26_bridge_allocation",
+    """WITH lines AS (
+      |  SELECT l_orderkey, l_suppkey,
+      |         CAST(ROUND(l_quantity) AS BIGINT) AS qty
+      |  FROM lineitem),
+      |totals AS (
+      |  SELECT l_orderkey, SUM(qty) AS tq FROM lines GROUP BY l_orderkey),
+      |ordv AS (
+      |  SELECT o_orderkey,
+      |         CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
+      |  FROM orders),
+      |alloc AS (
+      |  SELECT l.l_suppkey,
+      |         CAST(FLOOR(o.cents * l.qty / t.tq) AS BIGINT) AS a
+      |  FROM lines l
+      |  JOIN totals t ON l.l_orderkey = t.l_orderkey
+      |  JOIN ordv o ON l.l_orderkey = o.o_orderkey)
+      |SELECT l_suppkey, CAST(COUNT(*) AS BIGINT) AS n_lines,
+      |       CAST(SUM(a) AS BIGINT) AS attributed_cents
+      |FROM alloc
+      |GROUP BY l_suppkey
+      |ORDER BY l_suppkey""".stripMargin) { (spark, dir) =>
+    val lines = Tables.load(spark, dir, "lineitem")
+      .select(col("l_orderkey"), col("l_suppkey"),
+        round(col("l_quantity")).cast("long").as("qty"))
+    val totals = lines.groupBy("l_orderkey").agg(sum(col("qty")).as("tq"))
+    val ordv = Tables.load(spark, dir, "orders")
+      .select(col("o_orderkey"),
+        (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long").as("cents"))
+    lines.join(totals, "l_orderkey")
+      .join(ordv, lines("l_orderkey") === ordv("o_orderkey"))
+      .select(col("l_suppkey"),
+        floor(col("cents") * col("qty") / col("tq")).cast("long").as("a"))
+      .groupBy("l_suppkey")
+      .agg(count(lit(1)).cast("long").as("n_lines"),
+        sum(col("a")).cast("long").as("attributed_cents"))
+      .orderBy("l_suppkey")
+  }
+
+  /** Running mode: at every event, the user's most frequent event type
+    * SO FAR — the online-summary window that plain running sums can't
+    * express. Each row's type gets its running count; the mode is
+    * recovered from a running MAX over (count, fixed type rank) encoded
+    * into one integer, so two windows over the same (user, time) sort
+    * do all the work — no per-row re-aggregation.
+    */
+  val w9_running_mode = OpQuery.sql("w9_running_mode", "events")(
+    """WITH typed AS (
+      |  SELECT user_id, event_id, ts,
+      |         CASE event_type WHEN 'view' THEN 0 WHEN 'click' THEN 1
+      |              WHEN 'purchase' THEN 2 WHEN 'error' THEN 3 ELSE 4 END AS tr
+      |  FROM events WHERE user_id < 20),
+      |counted AS (
+      |  SELECT user_id, event_id, ts, tr,
+      |         COUNT(*) OVER (PARTITION BY user_id, tr ORDER BY ts, event_id
+      |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS c
+      |  FROM typed),
+      |encoded AS (
+      |  SELECT user_id, event_id, ts,
+      |         MAX(c * 10 + (9 - tr)) OVER (PARTITION BY user_id ORDER BY ts, event_id
+      |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS code
+      |  FROM counted)
+      |SELECT user_id, event_id,
+      |       CAST(FLOOR(code / 10) AS BIGINT) AS mode_count,
+      |       CAST(9 - code % 10 AS INT) AS mode_type_rank
+      |FROM encoded
+      |ORDER BY user_id, event_id""".stripMargin)
+
+  /** Period-over-period deltas in one pass: each day's purchase total
+    * against yesterday (lag 1) and the same weekday last week (lag 7),
+    * with percent changes — the dashboard staple. One sort, two lags,
+    * exact cents until the final ratios.
+    */
+  val w12_period_over_period = OpQuery(
+    "w12_period_over_period",
+    """WITH daily AS (
+      |  SELECT strftime(CAST(ts AS DATE), '%Y-%m-%d') AS day,
+      |         CAST(SUM(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS c
+      |  FROM events WHERE event_type = 'purchase' GROUP BY 1),
+      |lagged AS (
+      |  SELECT day, c,
+      |         LAG(c, 1) OVER (ORDER BY day) AS prev_day,
+      |         LAG(c, 7) OVER (ORDER BY day) AS prev_week
+      |  FROM daily)
+      |SELECT day, CAST(ROUND(CAST(c AS DOUBLE) / 100, 2) AS DOUBLE) AS total,
+      |       CAST(ROUND(100.0 * (c - prev_day) / prev_day, 4) AS DOUBLE) AS dod_pct,
+      |       CAST(ROUND(100.0 * (c - prev_week) / prev_week, 4) AS DOUBLE) AS wow_pct
+      |FROM lagged
+      |ORDER BY day""".stripMargin) { (spark, dir) =>
+    val daily = Tables.load(spark, dir, "events")
+      .filter(col("event_type") === "purchase")
+      .groupBy(date_format(to_date(col("ts")), "yyyy-MM-dd").as("day"))
+      .agg((sum(col("value").cast("decimal(18,2)")) * 100).cast("long").as("c"))
+    // bounded: one row per calendar day after the aggregation
+    val w = graft.operators.TotalOrder.boundedGlobal(col("day"))
+    graft.operators.TotalOrder.checkBounded(daily, "daily-purchase-spine")
+      .withColumn("prev_day", lag(col("c"), 1).over(w))
+      .withColumn("prev_week", lag(col("c"), 7).over(w))
+      .select(col("day"),
+        round(col("c").cast("double") / 100, 2).cast("double").as("total"),
+        round(lit(100.0) * (col("c") - col("prev_day")) / col("prev_day"), 4)
+          .cast("double").as("dod_pct"),
+        round(lit(100.0) * (col("c") - col("prev_week")) / col("prev_week"), 4)
+          .cast("double").as("wow_pct"))
+      .orderBy("day")
+  }
+
+  /** Gap-aware rolling revenue: a RANGE frame over the epoch-day
+    * ORDER BY covers "the last 7 calendar days" even when days are
+    * missing from the series — the frame ROWS cannot express. Also
+    * reports the day count actually inside each frame. DECIMAL sums
+    * keep it exact; dates leave as strings per the cross-engine
+    * timestamp contract.
+    */
+  val w13_range_frame = OpQuery(
+    "w13_range_frame",
+    """WITH daily AS (
+      |  SELECT CAST(FLOOR(epoch(o_orderdate) / 86400) AS BIGINT) AS e,
+      |         SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS y
+      |  FROM orders GROUP BY 1),
+      |r AS (
+      |  SELECT e, y,
+      |         SUM(y) OVER (ORDER BY e RANGE BETWEEN 6 PRECEDING AND CURRENT ROW)
+      |           AS sum7,
+      |         COUNT(*) OVER (ORDER BY e RANGE BETWEEN 6 PRECEDING AND CURRENT ROW)
+      |           AS days7
+      |  FROM daily)
+      |SELECT strftime(DATE '1970-01-01' + CAST(e AS INT), '%Y-%m-%d') AS day,
+      |       CAST(y AS DOUBLE) AS revenue,
+      |       CAST(sum7 AS DOUBLE) AS revenue_7d,
+      |       CAST(days7 AS INT) AS days_in_frame
+      |FROM r ORDER BY e
+      |LIMIT 400""".stripMargin) { (spark, dir) =>
+    Tables.load(spark, dir, "orders").createOrReplaceTempView("graft_rf_orders")
+    spark.sql(
+      """WITH daily AS (
+        |  SELECT CAST(FLOOR(unix_timestamp(o_orderdate) / 86400) AS BIGINT) AS e,
+        |         SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS y
+        |  FROM graft_rf_orders GROUP BY 1),
+        |r AS (
+        |  SELECT e, y,
+        |         SUM(y) OVER (ORDER BY e RANGE BETWEEN 6 PRECEDING AND CURRENT ROW)
+        |           AS sum7,
+        |         COUNT(*) OVER (ORDER BY e RANGE BETWEEN 6 PRECEDING AND CURRENT ROW)
+        |           AS days7
+        |  FROM daily)
+        |SELECT date_format(date_add(DATE '1970-01-01', CAST(e AS INT)),
+        |         'yyyy-MM-dd') AS day,
+        |       CAST(y AS DOUBLE) AS revenue,
+        |       CAST(sum7 AS DOUBLE) AS revenue_7d,
+        |       CAST(days7 AS INT) AS days_in_frame
+        |FROM r ORDER BY e
+        |LIMIT 400""".stripMargin)
+  }
+
+  /** Higher-order array lambdas end-to-end: per order, the array of its
+    * item quantities (sorted), then transform (×2), filter (evens),
+    * exists/forall predicates, and a fold to the sum — Spark's
+    * transform/filter/aggregate against DuckDB's list_* family, same
+    * results. Arrays built by collect_list over an explicit sort.
+    * Array-typed columns are serialized to comma-joined strings in BOTH
+    * engines: the driver's checker row-sorts with pandas before hashing
+    * and numpy arrays are unhashable, so every gate output column must
+    * be scalar (round-5 verdict item 1).
+    */
+  val p26_lambda_funcs = OpQuery(
+    "p26_lambda_funcs",
+    """WITH arr AS (
+      |  SELECT l_orderkey,
+      |         list_sort(list(CAST(l_quantity AS INT))) AS qs
+      |  FROM lineitem WHERE l_orderkey < 100
+      |  GROUP BY l_orderkey)
+      |SELECT l_orderkey,
+      |       array_to_string(qs, ',') AS qs_str,
+      |       array_to_string(list_transform(qs, x -> x * 2), ',') AS doubled,
+      |       COALESCE(array_to_string(list_filter(qs, x -> x % 2 = 0), ','), '')
+      |         AS evens,
+      |       len(list_filter(qs, x -> x > 30)) > 0 AS any_gt30,
+      |       len(list_filter(qs, x -> x > 0)) = len(qs) AS all_pos,
+      |       CAST(list_sum(qs) AS BIGINT) AS total
+      |FROM arr ORDER BY l_orderkey""".stripMargin) { (spark, dir) =>
+    Tables.load(spark, dir, "lineitem").createOrReplaceTempView("graft_hof_li")
+    spark.sql(
+      """WITH arr AS (
+        |  SELECT l_orderkey,
+        |         array_sort(collect_list(CAST(l_quantity AS INT))) AS qs
+        |  FROM graft_hof_li WHERE l_orderkey < 100
+        |  GROUP BY l_orderkey)
+        |SELECT l_orderkey,
+        |       array_join(qs, ',') AS qs_str,
+        |       array_join(transform(qs, x -> x * 2), ',') AS doubled,
+        |       array_join(filter(qs, x -> x % 2 = 0), ',') AS evens,
+        |       exists(qs, x -> x > 30) AS any_gt30,
+        |       forall(qs, x -> x > 0) AS all_pos,
+        |       CAST(aggregate(qs, 0L, (acc, x) -> acc + x) AS BIGINT) AS total
+        |FROM arr ORDER BY l_orderkey""".stripMargin)
+  }
+
+  /** Kish effective sample size per market segment, treating order
+    * value as the sampling weight (the "how much signal do my
+    * importance weights actually keep" audit every weighted corpus
+    * mix needs): ESS = (Σw)²/Σw², design effect = n/ESS. Weight sums
+    * fold through DECIMAL so segment ESS is sum-order-exact.
+    */
+  val sample_ess = OpQuery.sql("sample_ess", "orders", "customer")(
+    """WITH w AS (
+      |  SELECT c.c_mktsegment AS seg, CAST(o.o_totalprice AS DECIMAL(15,2)) AS w
+      |  FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey),
+      |agg AS (
+      |  SELECT seg, COUNT(*) AS n,
+      |         CAST(SUM(w) AS DOUBLE) AS sw,
+      |         CAST(SUM(CAST(ROUND(CAST(w AS DOUBLE) * CAST(w AS DOUBLE), 2)
+      |           AS DECIMAL(38,2))) AS DOUBLE) AS sw2
+      |  FROM w GROUP BY seg)
+      |SELECT seg AS segment, CAST(n AS BIGINT) AS n,
+      |       CAST(ROUND(sw * sw / sw2, 4) AS DOUBLE) AS ess,
+      |       CAST(ROUND(n / (sw * sw / sw2), 6) AS DOUBLE) AS design_effect,
+      |       CAST(ROUND(sw * sw / sw2 / n, 6) AS DOUBLE) AS efficiency
+      |FROM agg
+      |ORDER BY seg""".stripMargin)
+
+  /** Neyman-optimal stratified allocation: for a 1 000-unit sample,
+    * each market segment gets n_h ∝ N_h·σ_h — the allocation that
+    * minimizes the stratified-mean variance for a fixed budget.
+    * Per-stratum σ comes from exact-decimal moments; shares are exact
+    * ratios. The difference vs proportional allocation is reported —
+    * the rows a survey designer actually compares.
+    */
+  val sample_neyman = OpQuery.sql("sample_neyman", "orders", "customer")(
+    """WITH mom AS (
+      |  SELECT c.c_mktsegment AS seg, COUNT(*) AS nh,
+      |         CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS s1,
+      |         CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2))
+      |                  * CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS s2
+      |  FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
+      |  GROUP BY 1),
+      |sig AS (
+      |  SELECT seg, nh,
+      |         SQRT((s2 - s1 * s1 / nh) / (nh - 1)) AS sd
+      |  FROM mom),
+      |tot AS (
+      |  SELECT CAST(SUM(CAST(ROUND(nh * sd, 4) AS DECIMAL(38,4))) AS DOUBLE) AS z,
+      |         SUM(nh) AS n_all
+      |  FROM sig)
+      |SELECT sig.seg AS segment, CAST(sig.nh AS BIGINT) AS stratum_n,
+      |       CAST(ROUND(sig.sd, 2) AS DOUBLE) AS stratum_sd,
+      |       CAST(ROUND(sig.nh * sig.sd / tot.z, 6) AS DOUBLE) AS neyman_share,
+      |       CAST(ROUND(1000 * sig.nh * sig.sd / tot.z, 2) AS DOUBLE) AS neyman_n,
+      |       CAST(ROUND(1000.0 * sig.nh / tot.n_all, 2) AS DOUBLE) AS proportional_n
+      |FROM sig CROSS JOIN tot
+      |ORDER BY segment""".stripMargin)
+
+  /** Grid-tile spatial join: customer-derived points against
+    * supplier-derived boxes on a 1000×1000 integer-valued plane,
+    * 25-unit tiles. The oracle is the exhaustive BETWEEN join — the
+    * gate proves tiled ≡ exhaustive, the ground-truth relationship
+    * every bucketed rewrite here is held to.
+    */
+  val spatial_points_in_boxes = OpQuery(
+    "spatial_points_in_boxes",
+    """WITH p AS (
+      |  SELECT c_custkey AS point_id,
+      |         CAST((c_custkey * 37) % 1000 AS DOUBLE) AS x,
+      |         CAST((c_custkey * 91) % 1000 AS DOUBLE) AS y
+      |  FROM customer
+      |), b AS (
+      |  SELECT s_suppkey AS box_id,
+      |         CAST((s_suppkey * 53) % 950 AS DOUBLE) AS xlo,
+      |         CAST((s_suppkey * 53) % 950 + (s_suppkey % 37) + 2 AS DOUBLE) AS xhi,
+      |         CAST((s_suppkey * 67) % 950 AS DOUBLE) AS ylo,
+      |         CAST((s_suppkey * 67) % 950 + (s_suppkey % 29) + 2 AS DOUBLE) AS yhi
+      |  FROM supplier
+      |)
+      |SELECT p.point_id, b.box_id
+      |FROM p JOIN b
+      |  ON p.x BETWEEN b.xlo AND b.xhi
+      | AND p.y BETWEEN b.ylo AND b.yhi
+      |ORDER BY point_id, box_id""".stripMargin) { (spark, dir) =>
+    val points = Tables.load(spark, dir, "customer").select(
+      col("c_custkey").cast("long").as("point_id"),
+      ((col("c_custkey") * 37) % 1000).cast("double").as("x"),
+      ((col("c_custkey") * 91) % 1000).cast("double").as("y"))
+    val boxes = Tables.load(spark, dir, "supplier").select(
+      col("s_suppkey").cast("long").as("box_id"),
+      ((col("s_suppkey") * 53) % 950).cast("double").as("xlo"),
+      ((col("s_suppkey") * 53) % 950 + (col("s_suppkey") % 37) + 2)
+        .cast("double").as("xhi"),
+      ((col("s_suppkey") * 67) % 950).cast("double").as("ylo"),
+      ((col("s_suppkey") * 67) % 950 + (col("s_suppkey") % 29) + 2)
+        .cast("double").as("yhi"))
+    SpatialJoin.pointsInBoxes(points, boxes, cellSize = 25.0)
+      .select(col("point_id"), col("box_id"))
+      .orderBy(col("point_id"), col("box_id"))
+  }
+
+  /** Distance join at radius 20 between customer- and supplier-derived
+    * integral points: 3×3-neighbourhood tile join ≡ the exhaustive
+    * squared-distance join. All arithmetic stays in the integer domain
+    * (squared distance vs radius², no sqrt) so both engines agree
+    * bit-for-bit on the boundary.
+    */
+  val spatial_within_radius = OpQuery(
+    "spatial_within_radius",
+    """WITH p AS (
+      |  SELECT c_custkey AS point_id,
+      |         (c_custkey * 37) % 1000 AS x, (c_custkey * 91) % 1000 AS y
+      |  FROM customer
+      |), q AS (
+      |  SELECT s_suppkey AS station_id,
+      |         (s_suppkey * 53) % 1000 AS x2, (s_suppkey * 67) % 1000 AS y2
+      |  FROM supplier
+      |)
+      |SELECT p.point_id, q.station_id,
+      |       CAST((p.x - q.x2) * (p.x - q.x2) + (p.y - q.y2) * (p.y - q.y2) AS BIGINT) AS d2
+      |FROM p JOIN q
+      |  ON (p.x - q.x2) * (p.x - q.x2) + (p.y - q.y2) * (p.y - q.y2) <= 400
+      |ORDER BY point_id, station_id""".stripMargin) { (spark, dir) =>
+    val pts = Tables.load(spark, dir, "customer").select(
+      col("c_custkey").cast("long").as("point_id"),
+      ((col("c_custkey") * 37) % 1000).cast("long").as("x"),
+      ((col("c_custkey") * 91) % 1000).cast("long").as("y"))
+    val stations = Tables.load(spark, dir, "supplier").select(
+      col("s_suppkey").cast("long").as("station_id"),
+      ((col("s_suppkey") * 53) % 1000).cast("long").as("x2"),
+      ((col("s_suppkey") * 67) % 1000).cast("long").as("y2"))
+    SpatialJoin.pointsWithinRadius(pts, stations, radius = 20.0)
+      .select(col("point_id"), col("station_id"),
+        ((col("x") - col("x2")) * (col("x") - col("x2")) +
+          (col("y") - col("y2")) * (col("y") - col("y2"))).cast("long").as("d2"))
+      .orderBy(col("point_id"), col("station_id"))
+  }
+
+  /** Leakage-safe eval split: documents split 80/10/10 at the SOURCE
+    * level (same-domain siblings of a training doc must not reach the
+    * eval set — the contamination a row-hashed split misses). The gate
+    * outputs per-split doc/group counts plus the straddle count, which
+    * the construction forces to zero and the oracle recomputes
+    * independently. Both halves key groups through the operator's OWN
+    * g:/s: scheme (`COALESCE('g:'||source, 's:'||doc_id)`) so a
+    * NULL-source row is a SINGLETON on both sides (ADVICE r10: the old
+    * inner join on bare `source` dropped NULL-source rows in the
+    * oracle while the operator assigned them — the gate only agreed
+    * because current data has no NULL sources; a data refresh would
+    * have broken the gate instead of testing the documented null
+    * semantics).
+    */
+  val split_leakage_safe: OpQuery = OpQuery("split_leakage_safe",
+    """WITH keyed AS MATERIALIZED (
+      |  SELECT doc_id,
+      |    COALESCE('g:' || source, 's:' || CAST(doc_id AS VARCHAR)) AS grp
+      |  FROM documents
+      |), assigned AS MATERIALIZED (
+      |  SELECT k.doc_id, k.grp,
+      |    CASE WHEN hb < 80 THEN 'train' WHEN hb < 90 THEN 'val'
+      |         ELSE 'test' END AS split
+      |  FROM keyed k JOIN (
+      |    SELECT grp,
+      |      CAST(('0x' || substr(md5(CAST(MIN(doc_id) AS VARCHAR)), 1, 8)) AS BIGINT) % 100 AS hb
+      |    FROM keyed GROUP BY grp) r ON k.grp = r.grp
+      |), strad AS (
+      |  SELECT CAST(COUNT(*) AS BIGINT) AS straddled_groups FROM (
+      |    SELECT grp FROM assigned GROUP BY grp
+      |    HAVING COUNT(DISTINCT split) > 1)
+      |)
+      |SELECT split, CAST(COUNT(*) AS BIGINT) AS n_docs,
+      |  CAST(COUNT(DISTINCT grp) AS BIGINT) AS n_groups,
+      |  (SELECT straddled_groups FROM strad) AS straddled_groups
+      |FROM assigned GROUP BY split ORDER BY split""".stripMargin) {
+    (spark, dir) =>
+      val docs = Tables.load(spark, dir, "documents")
+      val split = Sampling.leakageSafeSplit(docs, "doc_id", "source",
+          Seq("train" -> 80, "val" -> 10, "test" -> 10))
+        // the operator's group identity, restated for the audit aggs:
+        // NULL source = per-row singleton, never one fused NULL group
+        .withColumn("__grp", coalesce(
+          concat(lit("g:"), col("source").cast("string")),
+          concat(lit("s:"), col("doc_id").cast("string"))))
+      val strad = split.groupBy(col("__grp"))
+        .agg(countDistinct(col("split")).as("k"))
+        .agg(coalesce(sum(when(col("k") > 1, 1L).otherwise(0L)), lit(0L))
+          .as("straddled_groups"))
+      split.groupBy(col("split"))
+        .agg(count(lit(1)).as("n_docs"),
+          countDistinct(col("__grp")).as("n_groups"))
+        .crossJoin(broadcast(strad))
+        .orderBy(col("split"))
+  }
+
+  /** Dense-id dictionary encoding round-trip (VERDICT r10 item 5): the
+    * helper that lets string-keyed corpora reach every integral-id
+    * ANN/top-k entry point. Ids are `DENSE_RANK() OVER (ORDER BY key)`
+    * exactly (assigned by the distributed [[graft.operators.TotalOrder
+    * .rowNumber]] over the distinct keys — no single-reducer window, no
+    * partition-dependent zipWithUniqueId), so DuckDB replays the whole
+    * id↔key bijection. Output pins BOTH directions: the mapping rows
+    * (id, key) and the encode-side join-back (per-id document counts);
+    * an in-gate REQUIRE pins decode(encode(df)) == df row-for-row.
+    */
+  val ids_dense_roundtrip: OpQuery = OpQuery("ids_dense_roundtrip",
+    """WITH m AS (
+      |  SELECT source,
+      |         CAST(ROW_NUMBER() OVER (ORDER BY source) AS BIGINT) AS dense_id
+      |  FROM (SELECT DISTINCT source FROM documents WHERE source IS NOT NULL))
+      |SELECT m.dense_id, m.source, CAST(COUNT(*) AS BIGINT) AS n_docs
+      |FROM documents d JOIN m ON d.source = m.source
+      |GROUP BY m.dense_id, m.source
+      |ORDER BY dense_id""".stripMargin) { (spark, dir) =>
+    import graft.operators.DenseIds
+    val docs = Tables.load(spark, dir, "documents")
+      .select(col("doc_id"), col("source"))
+    val (encoded, mapping) = DenseIds.withDenseIds(docs, "source")
+    // round-trip REQUIRE: decoding the encoded frame restores every
+    // (doc_id, source) pair exactly — the bijection has no blind spots.
+    // Both exceptAll directions ride ONE action (the old two-count form
+    // paid two jobs); a checkpoint of `decoded` was tried and measured
+    // SLOWER (0.87x) — the cache write costs more than the join re-eval.
+    val decoded = DenseIds.decode(
+        encoded.select(col("doc_id"), col("dense_id")),
+        mapping, "dense_id", "dense_id", "source")
+      .select(col("doc_id"), col("source"))
+    val diffs = decoded.exceptAll(docs)
+      .union(docs.exceptAll(decoded)).count()
+    require(diffs == 0,
+      s"ids_dense_roundtrip: decode(encode(df)) diverged on $diffs rows")
+    encoded.groupBy(col("dense_id"), col("source"))
+      .agg(count(lit(1)).as("n_docs"))
+      .orderBy("dense_id")
+  }
+
+  /** Exact stratified 80/10/10 by language: within each lang, rows rank
+    * by md5(doc_id) and split at cumulative ⌊n·Σp/100⌋ thresholds —
+    * every stratum's cell counts are exact integer fractions, replayed
+    * by DuckDB through the identical window + threshold arithmetic
+    * (n·80/100 is one exact long multiply and one correctly-rounded
+    * IEEE divide on both engines; md5 hex strings sort identically).
+    */
+  val split_stratified_exact: OpQuery = OpQuery("split_stratified_exact",
+    """WITH ranked AS (
+      |  SELECT lang, doc_id,
+      |    ROW_NUMBER() OVER (PARTITION BY lang
+      |      ORDER BY md5(CAST(doc_id AS VARCHAR))) AS rn,
+      |    COUNT(*) OVER (PARTITION BY lang) AS n
+      |  FROM documents),
+      |assigned AS (
+      |  SELECT lang,
+      |    CASE WHEN rn <= FLOOR(n * 80 / 100) THEN 'train'
+      |         WHEN rn <= FLOOR(n * 90 / 100) THEN 'val'
+      |         ELSE 'test' END AS split
+      |  FROM ranked)
+      |SELECT lang, split, CAST(COUNT(*) AS BIGINT) AS n_docs
+      |FROM assigned GROUP BY lang, split ORDER BY lang, split""".stripMargin) {
+    (spark, dir) =>
+      val docs = Tables.load(spark, dir, "documents")
+      Sampling.stratifiedExactSplit(docs, "doc_id", "lang",
+          Seq("train" -> 80, "val" -> 10, "test" -> 10))
+        .groupBy(col("lang"), col("split"))
+        .agg(count(lit(1)).as("n_docs"))
+        .orderBy("lang", "split")
+  }
+
+  /** Dictionary growth without re-encoding history: batch 1 builds the
+    * dense-id mapping over the non-zh (source:lang) keys; batch 2's
+    * ingest brings the zh keys, which
+    * [[graft.operators.DenseIds.extendDenseIds]] appends AFTER the
+    * existing max id (key-ordered among themselves) while every
+    * existing id stays frozen — the contract that keeps downstream
+    * indexes keyed on old ids valid across ingests. The oracle replays
+    * both generations' rankings; an in-gate REQUIRE pins that batch
+    * 1's mapping survives unchanged inside the extended one.
+    */
+  val ids_dense_extend: OpQuery = OpQuery("ids_dense_extend",
+    """WITH k AS (SELECT DISTINCT source || ':' || lang AS key, lang
+      |           FROM documents WHERE source IS NOT NULL AND lang IS NOT NULL),
+      |b1 AS (SELECT key FROM k WHERE lang <> 'zh'),
+      |b2 AS (SELECT key FROM k WHERE lang = 'zh'),
+      |m1 AS (SELECT key, CAST(ROW_NUMBER() OVER (ORDER BY key) AS BIGINT) AS dense_id
+      |       FROM b1),
+      |m2 AS (SELECT key,
+      |         CAST((SELECT COUNT(*) FROM b1) +
+      |              ROW_NUMBER() OVER (ORDER BY key) AS BIGINT) AS dense_id
+      |       FROM b2)
+      |SELECT dense_id, key FROM m1
+      |UNION ALL
+      |SELECT dense_id, key FROM m2
+      |ORDER BY dense_id""".stripMargin) { (spark, dir) =>
+    val keyed = Tables.load(spark, dir, "documents")
+      .filter(col("source").isNotNull && col("lang").isNotNull)
+      .select(concat(col("source"), lit(":"), col("lang")).as("key"),
+        col("lang"))
+    val (_, mapping1) = DenseIds.withDenseIds(
+      keyed.filter(col("lang") =!= "zh"), "key")
+    val extended = DenseIds.extendDenseIds(mapping1, keyed, "key")
+      .localCheckpoint(true)
+    // id stability REQUIRE: every batch-1 assignment survives verbatim
+    val changedOld = mapping1.join(extended,
+        mapping1("key") === extended("key") &&
+          mapping1("dense_id") =!= extended("dense_id")).count()
+    require(changedOld == 0,
+      s"extendDenseIds moved $changedOld existing ids — growth must never " +
+        "re-encode history")
+    extended.select(col("dense_id"), col("key")).orderBy("dense_id")
+  }
+
+  /** Seeded random relational shapes in both dialects: [[FuzzShapes]]. */
+  val fuzz_relational: OpQuery = OpQuery("fuzz_relational", duckSql) {
+    (spark, dir) =>
+      val needed = shapes.flatMap(s => s.table +: s.joined.toSeq).distinct
+      // ~300 branches re-scan the same handful of parquet tables; a
+      // lazy RDD-level freeze (localCheckpoint, NOT Dataset.persist —
+      // no cross-invocation CacheManager reuse, so every bench rep
+      // still computes from parquet inside the timed region) makes
+      // branch 2..n read decoded rows instead of re-running the
+      // parquet scan 100+ times per table. Projected FIRST to the
+      // exact column set the grammar can reference, so the freeze
+      // keeps the scans' column pruning (guide §6 / §2.3). A shared
+      // GROUP-BY-shape_id digest rewrite was also tried and REVERTED:
+      // the single big aggregate's barrier + union partition explosion
+      // measured SLOWER (exec ~10 s → ~13 s) than the per-branch
+      // digest aggregates AQE coalesces individually.
+      needed.foreach { t =>
+        val cols = tbl(t).ints ++ tbl(t).strs
+        Tables.load(spark, dir, t).select(cols.map(org.apache.spark.sql
+            .functions.col): _*)
+          .localCheckpoint(false)
+          .createOrReplaceTempView("fz_" + t)
+      }
+      spark.sql(sparkSql)
+  }
+
+  val all: Seq[OpQuery] = Seq(
+    q1_agg, p1_project_filter, p7_null_sentinel, p8_compound_predicates,
+    j1_left_join_broadcast, j3_star_join, j8_yoy_lag, j9_union_by_name,
+    j10_semi_anti, w1_row_number, w2_top1_per_group, w3_share_of_total,
+    o2_topk, data_split, sample_per_group, asof_join, asof_join_tolerance,
+    asof_join_forward, skew_salted_agg, skew_salted_join, skew_hotcold_join,
+    w4_window_family, w5_range_frames, w6_value_windows, j11_set_ops,
+    p9_pivot, p10_unpivot, range_join, range_join_interval, o4_global_rownum,
+    recursive_cte, w7_ignore_nulls, j12_nullsafe_join, j13_lateral,
+    j14_subqueries, sample_weighted, seq_pattern, j15_outer_family,
+    j16_correlated_select, j17_not_in_nulls, p11_from_json,
+    split_contamination, p12_variant, sample_balanced, o5_keyset_pagination,
+    p13_pipe_syntax, p14_parameterized_sql, j19_point_in_time,
+    p15_variant_explode, w8_running_distinct, j20_role_playing,
+    j21_multicol_in, p16_execute_immediate, j22_dynamic_partition_pruning,
+    o6_offset_fetch, p17_sql_scripting, data_split_temporal, j23_set_ops_all,
+    p19_from_csv, p20_json_roundtrip, p21_json_malformed, p23_pivot_sql,
+    p22_unpivot_sql, p24_empty_semantics, o7_distinct_on, j24_nearest_join,
+    j25_interval_allocation, p25_like_escape, j26_bridge_allocation,
+    w9_running_mode, w12_period_over_period, w13_range_frame,
+    p26_lambda_funcs, sample_ess, sample_neyman, spatial_points_in_boxes,
+    spatial_within_radius, split_leakage_safe, ids_dense_roundtrip,
+    split_stratified_exact, ids_dense_extend, fuzz_relational)
+}

@@ -3,7 +3,7 @@ package graft.tools
 import java.nio.file.{Files, Paths}
 
 import graft.GraftSession
-import graft.queries.{Extended, Relational, Registry, ScaleExtras, ScaleOps, TrainingDataOps}
+import graft.queries.Registry
 
 /** Regenerate PLANS.md: formatted physical plans of the headline queries
   * after execution (AQE-final), so the plan-quality evidence the code
@@ -18,129 +18,98 @@ object DumpPlans {
     val out = if (args.length > 1) args(1) else "PLANS.md"
     val spark = GraftSession.local("graft-plans")
 
+    val byName = Registry.all.map(q => q.name -> q).toMap
     val headliners = Seq(
-      Relational.q1_agg, Relational.j3_star_join, Relational.o2_topk,
-      Relational.w2_top1_per_group, ScaleOps.sim_topk_bruteforce,
-      Extended.tpch_q3_shape,
+      "q1_agg", "j3_star_join", "o2_topk", "w2_top1_per_group",
+      "sim_topk_bruteforce", "tpch_q3_shape",
       // scale-path operators added in rounds 2-3: partial_topk heap,
       // z-order re-layout read-back, three-stage minhash-LSH, bloom-
       // filter runtime pruning
-      ScaleExtras.zorder_cluster, ScaleOps.dedup_minhash_lsh,
-      ScaleExtras.bloom_prune_join, Extended.tpch_q5_shape,
+      "zorder_cluster", "dedup_minhash_lsh", "bloom_prune_join",
+      "tpch_q5_shape",
       // round-4 curation family: broadcast decontamination, map-only
       // chunking and repetition stats (the shuffle-free scan passes),
       // PPJoin length-prefiltered jaccard
-      TrainingDataOps.decontam_overlap, TrainingDataOps.text_chunk,
-      TrainingDataOps.text_repetition, ScaleOps.dedup_ngram_jaccard,
+      "decontam_overlap", "text_chunk", "text_repetition",
+      "dedup_ngram_jaccard",
       // round-4 additions: one-pass LSH signatures + rescore-first
       // candidate join, SCD2's broadcastable key-wise joins, corpus-
       // trained LM scoring, single-scan mixture resampling
-      ScaleOps.sim_lsh_neardup, graft.queries.MergeQueries.s15_scd2_merge,
-      TrainingDataOps.text_lm_score, ScaleOps.mixture_sample,
+      "sim_lsh_neardup", "s15_scd2_merge", "text_lm_score", "mixture_sample",
       // custom physical operator + distributed-prefix-sum selection
-      graft.queries.RangeQueries.range_join_interval,
-      graft.queries.CurationPipeline.corpus_select,
+      "range_join_interval", "corpus_select",
       // round-4 batch 2: three-scan span fingerprinting, chained
       // broadcast-reach funnel, day-index RANGE frames
-      graft.queries.Round4Ops2.dedup_spans,
-      graft.queries.Round4Ops2.funnel_analysis,
-      graft.queries.Round4Ops2.ts_rolling,
+      "dedup_spans", "funnel_analysis", "ts_rolling",
       // round-4 batches 5-6: frontier BFS (join + anti-join per hop),
       // (label, dim)-keyed centroid aggregation with broadcast-back,
       // pigeonhole-blocked hamming join, heap-based weighted sampling
       // (no window, no global sort), percentile-broadcast winsorization
-      graft.queries.Round4Ops5.graph_bfs,
-      graft.queries.Round4Ops5.emb_class_stats,
-      graft.queries.Round4Ops5.dedup_fuzzy_names,
-      graft.queries.Round4Ops6.sample_weighted,
-      graft.queries.Round4Ops6.feature_winsorize,
+      "graph_bfs", "emb_class_stats", "dedup_fuzzy_names", "sample_weighted",
+      "feature_winsorize",
       // round-4 batches 19-23: canonical-string dedup shuffle, the
       // 8-table Q8 broadcast tree, fixed-point JL projection (explode +
       // uniform-key aggregate), stateless hashing-trick vectorizer,
       // user-keyed attribution range join, keyset pagination pushdown
-      graft.queries.Round4Ops19.dedup_url_canonical,
-      graft.queries.Round4Ops21.tpch_q8_shape,
-      graft.queries.Round4Ops21.emb_random_projection,
-      graft.queries.Round4Ops22.feature_hashing,
-      graft.queries.Round4Ops22.event_attribution,
-      graft.queries.Round4Ops23.o5_keyset_pagination,
+      "dedup_url_canonical", "tpch_q8_shape", "emb_random_projection",
+      "feature_hashing", "event_attribution", "o5_keyset_pagination",
       // dynamic partition pruning on a partitioned fact, broadcast-query
       // kNN graph, inverted-index containment dedup
-      graft.queries.Round4Ops41.j22_dynamic_partition_pruning,
-      graft.queries.Round4Ops43.sim_knn_graph,
-      graft.queries.Round4Ops40.dedup_containment,
+      "j22_dynamic_partition_pruning", "sim_knn_graph", "dedup_containment",
       // round-4 batches 65-82: sort-merge nearest-value walk (one sort,
       // no cross join), PQ codebook encode + ADC lookup join, exploded
       // per-dim centroid recompute, checkpointed-edge recursive decode,
       // single-window OHLC downsample
-      graft.queries.Round4Ops73.j24_nearest_join,
-      graft.queries.Round4Ops78.sim_ann_pq,
-      graft.queries.Round4Ops74.kmeans_step,
-      graft.queries.Round4Ops74.lm_greedy_decode,
-      graft.queries.Round4Ops65.ts_ohlc,
+      "j24_nearest_join", "sim_ann_pq", "kmeans_step", "lm_greedy_decode",
+      "ts_ohlc",
       // round-5: TotalOrder replaces every table-sized global window —
       // two-phase rank (sorted-neighborhood), distributed ntile (RFM),
       // prefix-sum midranks (Mann-Whitney), one-pass rank+prefix-sum
       // (average precision); recall-saturated verified LSH pairs; the
       // collapsed aggregate()-fold recurrence (Holt)
-      graft.queries.Round4Ops86.dedup_sorted_neighborhood,
-      graft.queries.Round4Ops9.rfm_segmentation,
-      graft.queries.Round4Ops98.a75_mann_whitney,
-      graft.queries.Round4Ops109.eval_average_precision,
-      graft.queries.Round5Ops1.dedup_minhash_verified,
-      graft.queries.Round4Ops123.ts_holt,
+      "dedup_sorted_neighborhood", "rfm_segmentation", "a75_mann_whitney",
+      "eval_average_precision", "dedup_minhash_verified", "ts_holt",
       // round-6: bucketed co-located join (ZERO exchange on the bucket
       // key), dynamic partition pruning (runtime filter in the fact
       // scan's PartitionFilters), shard export (range shuffle + two
       // partition-local windows, no single-reducer sort), IVF top-k on
       // the NearestCell map-only assignment
-      graft.queries.Round6Ops1.s47_bucketed_join,
-      graft.queries.Round6Ops2.s48_dpp_join,
-      graft.queries.Round6Ops1.shard_export,
-      graft.queries.ScaleOps.sim_ivf_topk,
+      "s47_bucketed_join", "s48_dpp_join", "shard_export", "sim_ivf_topk",
       // round-6 cont.: the TPC-H sweep completers (correlated scalar
       // MIN re-entry, null-aware broadcast anti-join for NOT IN,
       // semi+anti double correlation), the hot/cold skew split (cold
       // shuffle branch ∪ broadcast hot branch), and the Delta-protocol
       // round trip (partition columns rejoined broadcast against the
       // imported scan)
-      graft.queries.Round6Ops3.tpch_q2_shape,
-      graft.queries.Round6Ops3.tpch_q16_shape,
-      graft.queries.Round6Ops3.tpch_q21_shape,
-      graft.queries.ScaleExtras.skew_hotcold_join,
-      graft.queries.Round6Ops3.s49_delta_roundtrip,
+      "tpch_q2_shape", "tpch_q16_shape", "tpch_q21_shape",
+      "skew_hotcold_join", "s49_delta_roundtrip",
       // round-6 final block: grid-tile spatial joins (box explode /
       // 3×3 neighbourhood explode feeding a plain shuffled equi-join on
       // the tile id — the plans that replace BroadcastNestedLoopJoin)
-      graft.queries.Round6Ops9.spatial_points_in_boxes,
-      graft.queries.Round6Ops9.spatial_within_radius,
+      "spatial_points_in_boxes", "spatial_within_radius",
       // round-10: the trainable-curation layer — broadcast-literal
       // map-side scoring off a TakeOrdered (no join, no shuffle for the
       // quality filter), and the shuffle-free JL projection (k·d sign
       // literals inside codegen vs emb_random_projection's exploded
       // aggregate)
-      graft.queries.Round10Ops2.qf_linear_score,
-      graft.queries.Round10Ops2.emb_rand_proj,
+      "qf_linear_score", "emb_rand_proj",
       // round-11: string-keyed ANN through the dense-id dictionary
       // (row-number mapping joined back twice for decode, heap top-k in
       // the middle), and the incremental-score read-back (the scored
       // table is partition-pruned aligned-append state, so the plan is
       // a plain partitioned scan — the maintenance cost lives at ingest)
-      graft.queries.Round11Ops1.sim_topk_string_ids,
-      graft.queries.Round11Ops1.curation_incremental_score,
+      "sim_topk_string_ids", "curation_incremental_score",
       // round-11 batches 2-3: the 10-threshold sweep as ONE scan with a
       // broadcast conditional-sum fan-out, and exact top-p% selection
       // through the distributed TotalOrder rank (range shuffle +
       // offsets — no single-reducer sort in either)
-      graft.queries.Round11Ops2.qf_threshold_sweep,
-      graft.queries.Round11Ops3.qf_top_percent,
+      "qf_threshold_sweep", "qf_top_percent",
       // round-12: append-maintained IVF serving (static partition-pruned
       // postings scan — identical plan to the one-shot index, which is
       // the point), and the deletion-vector read (row-index anti-join
       // against executor-decoded DV positions, partition values rejoined
       // broadcast)
-      graft.queries.Round12Ops1.sim_ivf_append,
-      graft.queries.Round12Ops1.s51_delta_import_dv)
+      "sim_ivf_append", "s51_delta_import_dv").map(byName)
 
     val sections = headliners.map { q =>
       val df = q.build(spark, sfDir)

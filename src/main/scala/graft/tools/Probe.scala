@@ -19,6 +19,8 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd,
   SparkListenerSQLExecutionStart}
 
+import graft.queries.Registry
+
 /** Gate profiler: runs a registry gate ([[graft.SparkEntry.queries]]) and
   * records, from Spark's own listener events, one [[Probe.Action]] per
   * action the gate issues: the eager materializations inside operators
@@ -253,7 +255,10 @@ object Probe {
     "shuffle_read_bytes" -> c.shuffleReadBytes,
     "shuffle_write_bytes" -> c.shuffleWriteBytes, "spill_bytes" -> c.spillBytes)
 
-  /** One JSON line per action, then one for the gate. */
+  /** One JSON line per action, then one for the gate. The gate line
+    * carries the gate's [[Registry]] family (null for a name that is not
+    * a registered gate).
+    */
   def jsonLines(p: Profile, rep: Int, planFiles: Seq[Path]): Seq[String] = {
     val id = ListMap[String, Any]("gate" -> p.gate, "rep" -> rep)
     p.actions.zipWithIndex.map { case (a, i) =>
@@ -262,7 +267,8 @@ object Probe {
         "optimization_s" -> a.seconds("optimization"),
         "planning_s" -> a.seconds("planning")) ++ counterFields(a.counters) ++
         planFiles.lift(i).map(f => "plan" -> f.toString)
-    } :+ (id ++ ListMap("build_s" -> p.buildS, "exec_s" -> p.execS,
+    } :+ (id ++ ListMap("family" -> Registry.familyOf(p.gate).orNull,
+      "build_s" -> p.buildS, "exec_s" -> p.execS,
       "actions" -> p.actions.size, "shuffles" -> p.cost.shuffles,
       "broadcasts" -> p.cost.broadcasts, "group_jobs" -> p.cost.jobs,
       "codegen_compiles" -> p.compiles) ++

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.queries.Round9Ops1
+import graft.queries.StatTestsGates
 
 /** Error bounds for the approximate Hodges–Lehmann gate
   * (`a54_hl_approx`): the approximation is exact for small groups
@@ -24,8 +24,8 @@ class HlApproxSpec extends SparkSpec {
       (g, math.pow(1.3, i % 13) * (if (i % 2 == 0) 1 else -1) * 100.0, g * 100 + i)
     rows.toDF("c_nationkey", "c_acctbal", "c_custkey")
       .createOrReplaceTempView("graft_hl_small")
-    val approx = run("graft_hl_small", Round9Ops1.hlApproxSparkSql("graft_hl_small"))
-    val exact = run("graft_hl_small", Round9Ops1.hlExactSparkSql("graft_hl_small"))
+    val approx = run("graft_hl_small", StatTestsGates.hlApproxSparkSql("graft_hl_small"))
+    val exact = run("graft_hl_small", StatTestsGates.hlExactSparkSql("graft_hl_small"))
     assert(approx === exact)
   }
 
@@ -38,8 +38,8 @@ class HlApproxSpec extends SparkSpec {
     val df = rows.toDF("c_nationkey", "c_acctbal", "c_custkey")
       .localCheckpoint(true)
     df.createOrReplaceTempView("graft_hl_big")
-    val approx = run("graft_hl_big", Round9Ops1.hlApproxSparkSql("graft_hl_big"))
-    val exact = run("graft_hl_big", Round9Ops1.hlExactSparkSql("graft_hl_big"))
+    val approx = run("graft_hl_big", StatTestsGates.hlApproxSparkSql("graft_hl_big"))
+    val exact = run("graft_hl_big", StatTestsGates.hlExactSparkSql("graft_hl_big"))
 
     // grid bound: the largest gap between consecutive SAMPLED order
     // statistics per group — the approx walk cannot place the estimate

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.queries.Round9Ops1
+import graft.queries.DedupGates
 
 /** Cross-modal dedup composition (`dedup_multimodal`): the octet-chain
   * fixture makes each modality's edge set a DIFFERENT partial view of
@@ -19,14 +19,14 @@ class MultimodalDedupSpec extends SparkSpec {
 
   // 4 complete octets — enough to show the structure, spec-fast
   private lazy val corpus =
-    Round9Ops1.mmCorpus(spark, (0L until 32L).toDF("doc_id"))
+    DedupGates.mmCorpus(spark, (0L until 32L).toDF("doc_id"))
 
   private def components(pairs: org.apache.spark.sql.DataFrame): Map[Long, Long] =
     Dedup.connectedComponents(pairs).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
 
   test("text edges alone find exactly the planted text pairs (0-1, 3-4, 6-7 per octet)") {
-    val got = Round9Ops1.mmTextPairs(corpus).as[(Long, Long)].collect().toSet
+    val got = DedupGates.mmTextPairs(corpus).as[(Long, Long)].collect().toSet
     val want = (0L until 4L).flatMap(s =>
       Seq((8 * s, 8 * s + 1), (8 * s + 3, 8 * s + 4),
         (8 * s + 6, 8 * s + 7))).toSet
@@ -34,14 +34,14 @@ class MultimodalDedupSpec extends SparkSpec {
   }
 
   test("image edges alone find exactly the planted raster pairs (1-2, 4-5 per octet)") {
-    val got = Round9Ops1.mmImagePairs(corpus).as[(Long, Long)].collect().toSet
+    val got = DedupGates.mmImagePairs(corpus).as[(Long, Long)].collect().toSet
     val want = (0L until 4L).flatMap(s =>
       Seq((8 * s + 1, 8 * s + 2), (8 * s + 4, 8 * s + 5))).toSet
     assert(got === want)
   }
 
   test("audio edges alone find exactly the planted fingerprint pairs (2-3 per octet)") {
-    val got = Round9Ops1.mmAudioPairs(corpus).as[(Long, Long)].collect().toSet
+    val got = DedupGates.mmAudioPairs(corpus).as[(Long, Long)].collect().toSet
     val want = (0L until 4L).map(s => (8 * s + 2, 8 * s + 3)).toSet
     assert(got === want)
   }
@@ -49,16 +49,16 @@ class MultimodalDedupSpec extends SparkSpec {
   test("video edges alone find exactly the truncated-re-encode pairs (5-6 per octet)") {
     // doc 6 has different BYTES (re-encoded frame rate) and fewer
     // frames than doc 5 — only the banded frame-hash sequence links them
-    val got = Round9Ops1.mmVideoPairs(corpus).as[(Long, Long)].collect().toSet
+    val got = DedupGates.mmVideoPairs(corpus).as[(Long, Long)].collect().toSet
     val want = (0L until 4L).map(s => (8 * s + 5, 8 * s + 6)).toSet
     assert(got === want)
   }
 
   test("any single modality SPLITS the octet; the union recovers it whole") {
-    val text = Round9Ops1.mmTextPairs(corpus)
-    val img = Round9Ops1.mmImagePairs(corpus)
-    val aud = Round9Ops1.mmAudioPairs(corpus)
-    val vid = Round9Ops1.mmVideoPairs(corpus)
+    val text = DedupGates.mmTextPairs(corpus)
+    val img = DedupGates.mmImagePairs(corpus)
+    val aud = DedupGates.mmAudioPairs(corpus)
+    val vid = DedupGates.mmVideoPairs(corpus)
     // text-only: {0,1}, {3,4}, {6,7} — docs 2 and 5 unreached
     val tc = components(text)
     assert(tc(1L) === 0L && tc(4L) === 3L && tc(7L) === 6L &&
@@ -83,11 +83,11 @@ class MultimodalDedupSpec extends SparkSpec {
 
   test("partial tail octets chain into prefix components (the oracle's formula)") {
     // 18 docs = 2 full octets + tail {16, 17} (positions 0, 1 — text pair)
-    val tail = Round9Ops1.mmCorpus(spark, (0L until 18L).toDF("doc_id"))
-    val pairs = Round9Ops1.mmTextPairs(tail)
-      .unionByName(Round9Ops1.mmImagePairs(tail))
-      .unionByName(Round9Ops1.mmAudioPairs(tail))
-      .unionByName(Round9Ops1.mmVideoPairs(tail))
+    val tail = DedupGates.mmCorpus(spark, (0L until 18L).toDF("doc_id"))
+    val pairs = DedupGates.mmTextPairs(tail)
+      .unionByName(DedupGates.mmImagePairs(tail))
+      .unionByName(DedupGates.mmAudioPairs(tail))
+      .unionByName(DedupGates.mmVideoPairs(tail))
     val uc = components(pairs)
     for (d <- 0L until 18L)
       assert(uc(d) === 8 * (d / 8), s"doc $d in component ${uc(d)}")

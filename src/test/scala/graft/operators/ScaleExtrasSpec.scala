@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 
 import graft.{SparkSpec, Tables}
-import graft.queries.ScaleExtras
+import graft.queries.StatsGates
 
 class ScaleExtrasSpec extends SparkSpec {
   import spark.implicits._
@@ -11,7 +11,7 @@ class ScaleExtrasSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
   test("approx_count_distinct within its configured relative error") {
-    val rows = ScaleExtras.a11_approx_distinct.build(spark, sf).collect()
+    val rows = StatsGates.a11_approx_distinct.build(spark, sf).collect()
     rows.foreach { r =>
       val exact = r.getLong(1).toDouble
       val approx = r.getLong(2).toDouble

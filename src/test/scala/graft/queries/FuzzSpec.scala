@@ -8,14 +8,14 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class FuzzSpec extends AnyFunSuite {
 
-  private val oracle = Round12Fuzz.fuzz_relational.oracle.get
+  private val oracle = RelationalGates.fuzz_relational.oracle.get
 
   test("generation is deterministic: the oracle embeds the seed row and N shapes") {
-    assert(oracle.contains(s"CAST(${Round12Fuzz.Seed} AS BIGINT) AS digest"))
+    assert(oracle.contains(s"CAST(${FuzzShapes.Seed} AS BIGINT) AS digest"))
     // one newline-delimited UNION ALL separator per shape (the seed row
     // + NShapes branches); set-op SHAPES carry their own inline
     // "UNION ALL" on a single line, so only the \n-framed form counts
-    assert("\nUNION ALL\n".r.findAllIn(oracle).size === Round12Fuzz.NShapes)
+    assert("\nUNION ALL\n".r.findAllIn(oracle).size === FuzzShapes.NShapes)
   }
 
   test("every shape digests at least one aliased column") {
@@ -43,16 +43,16 @@ class FuzzSpec extends AnyFunSuite {
     // the r13 families were appended AFTER the legacy walk — if a
     // generator edit ever perturbs the shared Rng sequence, the first
     // 120 shapes' SQL changes and this checksum names the break
-    val legacy = Round12Fuzz.innerShapes
-      .take(Round12Fuzz.LegacyShapes).mkString("\n")
+    val legacy = FuzzShapes.innerShapes
+      .take(FuzzShapes.LegacyShapes).mkString("\n")
     val md5 = java.security.MessageDigest.getInstance("MD5")
       .digest(legacy.getBytes("UTF-8")).map("%02x".format(_)).mkString
     assert(md5 === "5703bacea9e1e25d738bd0a263f21ed2")
   }
 
   test("the round-13 families are all present at their generated counts") {
-    val extra = Round12Fuzz.innerShapes
-      .slice(Round12Fuzz.LegacyShapes, Round12Fuzz.R13Shapes)
+    val extra = FuzzShapes.innerShapes
+      .slice(FuzzShapes.LegacyShapes, FuzzShapes.R13Shapes)
     assert(extra.size === 80)
     assert(extra.count(_.contains("LEFT JOIN")) === 23)
     assert(extra.count(_.contains("FULL JOIN")) === 19)
@@ -67,8 +67,8 @@ class FuzzSpec extends AnyFunSuite {
   }
 
   test("the round-13b families (EXISTS, multi-grouping) are present at their counts") {
-    val extra = Round12Fuzz.innerShapes
-      .slice(Round12Fuzz.R13Shapes, Round12Fuzz.R13bShapes)
+    val extra = FuzzShapes.innerShapes
+      .slice(FuzzShapes.R13Shapes, FuzzShapes.R13bShapes)
     assert(extra.size === 60)
     val exists = extra.count(_.contains("EXISTS (SELECT 1"))
     val grouping = extra.count(_.contains("GROUPING SETS"))
@@ -87,7 +87,7 @@ class FuzzSpec extends AnyFunSuite {
   }
 
   test("the round-13c string-function family stays on the common surface") {
-    val extra = Round12Fuzz.innerShapes.drop(Round12Fuzz.R13bShapes)
+    val extra = FuzzShapes.innerShapes.drop(FuzzShapes.R13bShapes)
     assert(extra.size === 40)
     // every shape exercises at least one string function
     val fns = Seq("UPPER(", "LOWER(", "TRIM(", "SUBSTR(", "REPLACE(",

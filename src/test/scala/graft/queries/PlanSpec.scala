@@ -19,7 +19,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("p1: filter and projection reach the parquet scan") {
-    val p = plan(Relational.p1_project_filter)
+    val p = plan(RelationalGates.p1_project_filter)
     assert(p.contains("PushedFilters: [IsNotNull(o_orderstatus), EqualTo(o_orderstatus,F)]"),
       s"filter not pushed:\n$p")
     assert(p.contains("ReadSchema") &&
@@ -27,33 +27,33 @@ class PlanSpec extends SparkSpec {
   }
 
   test("j1/j3: dimension joins broadcast (no shuffle of the fact side)") {
-    assert(plan(Relational.j1_left_join_broadcast).contains("BroadcastHashJoin"))
-    val star = plan(Relational.j3_star_join)
+    assert(plan(RelationalGates.j1_left_join_broadcast).contains("BroadcastHashJoin"))
+    val star = plan(RelationalGates.j3_star_join)
     assert(star.split("BroadcastHashJoin").length >= 4,
       s"expected >=3 broadcast joins in star plan")
     assert(!star.contains("SortMergeJoin"), "star join degraded to sort-merge")
   }
 
   test("o2: top-k plans as TakeOrderedAndProject, not a global sort") {
-    val p = plan(Relational.o2_topk)
+    val p = plan(RelationalGates.o2_topk)
     assert(p.contains("TakeOrderedAndProject"), s"top-k not optimized:\n$p")
   }
 
   test("q1: aggregation is two-phase hash (map-side partial combine)") {
-    val p = plan(Relational.q1_agg)
+    val p = plan(RelationalGates.q1_agg)
     assert(p.split("HashAggregate").length >= 3,
       "expected partial + final HashAggregate")
     assert(p.contains("*("), "flagship query fell out of whole-stage codegen")
   }
 
   test("similarity top-k: query side broadcast, corpus streams map-side") {
-    val p = plan(ScaleOps.sim_topk_bruteforce)
+    val p = plan(VectorsGates.sim_topk_bruteforce)
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastHashJoin"),
       s"query set not broadcast:\n$p")
   }
 
   test("q5: join pyramid broadcasts all four dims, facts never sort-merge") {
-    val p = plan(Extended.tpch_q5_shape)
+    val p = plan(TpchGates.tpch_q5_shape)
     assert(p.split("BroadcastHashJoin").length >= 5,
       s"expected >=4 broadcast joins in q5 pyramid:\n$p")
     assert(!p.contains("SortMergeJoin"), "q5 dim join degraded to sort-merge")
@@ -63,25 +63,25 @@ class PlanSpec extends SparkSpec {
   }
 
   test("merge rewrite: small-source anti joins broadcast under AQE") {
-    val p = plan(MergeQueries.s6_insert_only_merge)
+    val p = plan(TablesGates.s6_insert_only_merge)
     assert(p.contains("LeftAnti"), s"insert-only merge lost its anti join:\n$p")
   }
 
   test("q7: both nation dims broadcast, fact side never sort-merges") {
-    val p = plan(Extended.tpch_q7_shape)
+    val p = plan(TpchGates.tpch_q7_shape)
     assert(p.split("BroadcastHashJoin").length >= 5,
       s"expected >=4 broadcast joins in q7:\n$p")
     assert(!p.contains("SortMergeJoin"), "q7 dim join degraded to sort-merge")
   }
 
   test("scd2: every key-wise join broadcasts its dimension-sized side") {
-    val p = plan(MergeQueries.s15_scd2_merge)
+    val p = plan(TablesGates.s15_scd2_merge)
     assert(!p.contains("SortMergeJoin"),
       s"scd2 degraded to sort-merge on a broadcastable side:\n$p")
   }
 
   test("corpus_select: prefix sum is partitioned, never one global window") {
-    val p = plan(graft.queries.CurationPipeline.corpus_select)
+    val p = plan(graft.queries.TextGates.corpus_select)
     // the corpus-sized running sum must window WITHIN partitions (__pid);
     // the only permissible global window is the partition-count-sized
     // offsets frame — so a global windowspec must never see token data
@@ -97,26 +97,26 @@ class PlanSpec extends SparkSpec {
   }
 
   test("sample_weighted: heap aggregation, no window, no global sort before the cut") {
-    val p = plan(Round4Ops6.sample_weighted)
+    val p = plan(RelationalGates.sample_weighted)
     assert(!p.contains("Window"), s"weighted sample fell back to a window:\n$p")
     assert(p.contains("partial_topk"),
       s"bounded-heap partial aggregation missing:\n$p")
   }
 
   test("dedup_fuzzy_names: pigeonhole blocking never degrades to a cartesian product") {
-    val p = plan(Round4Ops5.dedup_fuzzy_names)
+    val p = plan(DedupGates.dedup_fuzzy_names)
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       s"fuzzy join lost its equi-join block keys:\n$p")
   }
 
   test("feature_winsorize: bounds broadcast back, fact side never sort-merges") {
-    val p = plan(Round4Ops6.feature_winsorize)
+    val p = plan(MlGates.feature_winsorize)
     assert(p.contains("BroadcastHashJoin"), s"bounds join not broadcast:\n$p")
     assert(!p.contains("SortMergeJoin"), s"winsorize degraded to sort-merge:\n$p")
   }
 
   test("emb_class_stats: centroids broadcast back onto the corpus") {
-    val p = plan(Round4Ops5.emb_class_stats)
+    val p = plan(VectorsGates.emb_class_stats)
     assert(p.contains("BroadcastHashJoin"), s"centroid join not broadcast:\n$p")
     assert(!p.contains("CartesianProduct"), s"centroid join degraded:\n$p")
   }
@@ -142,31 +142,31 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q18: the HAVING-IN subquery plans as a semi join, never a distinct+inner") {
-    val p = plan(Round4Ops28.tpch_q18_shape)
+    val p = plan(TpchGates.tpch_q18_shape)
     assert(p.contains("LeftSemi"), s"IN subquery not planned as semi join:\n$p")
   }
 
   test("q22: NOT EXISTS plans as an anti join; the avg is a broadcast scalar") {
-    val p = plan(Round4Ops28.tpch_q22_shape)
+    val p = plan(TpchGates.tpch_q22_shape)
     assert(p.contains("LeftAnti"), s"NOT EXISTS not planned as anti join:\n$p")
     assert(!p.contains("CartesianProduct"), "scalar subquery degraded to cartesian")
   }
 
   test("q8: all seven dimension legs broadcast, the fact spine never sort-merges") {
-    val p = plan(Round4Ops21.tpch_q8_shape)
+    val p = plan(TpchGates.tpch_q8_shape)
     assert(p.split("BroadcastHashJoin").length >= 7,
       s"expected >=6 broadcast joins in the Q8 tree")
     assert(!p.contains("SortMergeJoin"), "Q8 degraded to sort-merge")
   }
 
   test("mips: corpus scores map-side against broadcast queries (no corpus shuffle before ranking)") {
-    val p = plan(Round4Ops27.sim_mips_topk)
+    val p = plan(VectorsGates.sim_mips_topk)
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastHashJoin"),
       s"queries not broadcast:\n$p")
   }
 
   test("dpp: the partitioned fact scan carries a dynamic pruning subquery") {
-    val p = plan(Round4Ops41.j22_dynamic_partition_pruning)
+    val p = plan(RelationalGates.j22_dynamic_partition_pruning)
     assert(p.toLowerCase.contains("dynamicpruning"),
       s"no dynamic partition pruning in the fact scan:\n$p")
   }
@@ -208,13 +208,13 @@ class PlanSpec extends SparkSpec {
   }
 
   test("s48: the year-partitioned fact scan is dynamically pruned by the dim filter") {
-    val p = plan(Round6Ops2.s48_dpp_join)
+    val p = plan(TablesGates.s48_dpp_join)
     assert(p.toLowerCase.contains("dynamicpruning"),
       s"no dynamic partition pruning in the s48 fact scan:\n$p")
   }
 
   test("q16: NOT IN plans as a null-aware broadcast anti-join, never a nested loop over data") {
-    val p = plan(Round6Ops3.tpch_q16_shape)
+    val p = plan(TpchGates.tpch_q16_shape)
     assert(p.contains("BroadcastHashJoin") && p.contains("LeftAnti"),
       s"NOT IN not a broadcast anti-join:\n$p")
     assert(!p.contains("BroadcastNestedLoopJoin"),
@@ -222,13 +222,13 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q21: EXISTS/NOT EXISTS become semi+anti joins, no per-row subquery execution") {
-    val p = plan(Round6Ops3.tpch_q21_shape)
+    val p = plan(TpchGates.tpch_q21_shape)
     assert(p.contains("LeftSemi"), s"EXISTS not a semi-join:\n$p")
     assert(p.contains("LeftAnti"), s"NOT EXISTS not an anti-join:\n$p")
   }
 
   test("hot/cold skew join: the hot branch broadcasts, the cold branch keeps the equi-join") {
-    val p = plan(ScaleExtras.skew_hotcold_join)
+    val p = plan(RelationalGates.skew_hotcold_join)
     assert(p.contains("BroadcastHashJoin"), s"hot branch not broadcast:\n$p")
     assert(p.contains("Union"), s"missing split-union shape:\n$p")
   }

@@ -157,6 +157,14 @@ class ProbeSpec extends SparkSpec {
     assert(Probe.jsonLines(second, 1, Nil).last.contains("\"codegen_compiles\":0"))
   }
 
+  test("the gate line names the gate's registry family") {
+    def gateLine(name: String) =
+      Probe.jsonLines(Probe.run(spark, name)(t.groupBy("g").count()), 1, Nil).last
+    assert(gateLine("q1_agg").contains("\"family\":\"relational\""))
+    assert(gateLine("sim_ivf_topk").contains("\"family\":\"vectors\""))
+    assert(gateLine("not_a_gate").contains("\"family\":null"))
+  }
+
   test("--plans writes one file per recorded action") {
     val p = Probe.run(spark, "plans", plans = true)(
       checkpointAndWrite(dir.resolve("out2").toString))
