@@ -16,8 +16,9 @@ import graft.operators.{IncrementalAgg, Merge, TableStore}
   * Replication keeps merge SELECTIVITY constant across k (2 % updates,
   * 1 % inserts of the TARGET size), so the measured growth isolates
   * data volume — the claim under test is that each merge is a constant
-  * number of key-wise joins whose cost is ~linear in the bigger side,
-  * with the source side broadcastable at every k.
+  * number of key-wise joins whose cost is ~linear in the bigger side
+  * (scd2's joins broadcast the source at every k; scd1's one full outer
+  * join shuffles both sides once).
   *
   * Usage: runMain graft.StressWriteScale <sfDir> <k> [cpus] [families]
   *   families: csv subset of scd1,scd2,ivm (default all)

@@ -1,19 +1,24 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit, max_by, struct}
+import org.apache.spark.sql.functions.{
+  broadcast, coalesce, col, concat, concat_ws, count, lit, max_by, raise_error, struct, when}
 
 /** Delta-MERGE emulation as relational rewrites (SURVEY.md §2.1 S6/S7,
-  * §7.3). No Delta jars locally, so MERGE becomes anti/semi-join algebra
-  * plus an atomic table swap — Catalyst still optimizes the joins
+  * §7.3). No Delta jars locally, so MERGE becomes outer/anti/semi-join
+  * algebra plus an atomic table swap — Catalyst still optimizes the joins
   * (broadcast when the source is small, shuffle-hash otherwise, AQE
   * re-plans skew), so the rewrite scales the same way Delta's own
   * merge-on-read does.
   *
-  * Scale note: both merges shuffle on the key columns only; at 100 TB the
+  * Scale note: every merge shuffles on the key columns only. SCD1 is one
+  * full outer join, which cannot broadcast: the target is shuffled once
+  * and the source once (by its duplicate-key guard). At 100 TB the
   * dominant cost is the full rewrite of the target, which is inherent to
-  * copy-on-write MERGE without a transaction log. A log-structured
-  * append (insert-only case) avoids rewriting the target entirely.
+  * copy-on-write MERGE without a transaction log; the partition-aligned
+  * forms rewrite only the partitions the source touches, and a
+  * log-structured append (insert-only case) avoids rewriting the target
+  * entirely.
   */
 object Merge {
 
@@ -42,35 +47,33 @@ object Merge {
   }
 
   /** Delta parity guard: a source with duplicate merge keys would fan
-    * out each matched target row through the inner join — duplicate
-    * primary keys committed silently. Delta MERGE fails such sources
-    * with "multiple source rows matched"; so do we.
+    * out each matched target row through the join — duplicate primary
+    * keys committed silently. Delta MERGE fails such sources with
+    * "multiple source rows matched"; so do we.
     *
-    * Fused, not a separate job: the round-6 form ran a full
-    * `groupBy(keys).count()` + collect BEFORE every merge — an extra
-    * aggregation job per merge (the 4.3× `s15_scd2_merge` regression,
-    * VERDICT r6 "What's wrong" #1). Now the per-key count rides a
-    * window ON the source inside the merge's own plan, and the first
-    * key column raises (`raise_error`) the moment a duplicated key is
-    * evaluated — the window's hash partitioning on the keys is the
-    * same partitioning the merge joins need, so the check costs a
-    * per-partition sort, not a job. Every merge branch evaluates the
-    * source's key columns (inner join, both anti-joins), so no
-    * duplicate can slip through unevaluated; the failure moves from
-    * call time to first-action time, which the specs pin.
+    * Fused, not a separate job: the per-key count rides a window ON the
+    * source inside the merge's own plan (a separate `groupBy(keys).count()`
+    * + collect before every merge was the 4.3× `s15_scd2_merge`
+    * regression, VERDICT r6 "What's wrong" #1), and a `Filter` over that
+    * count raises (`raise_error`) on the first row of a duplicated key.
+    * Every source row passes the filter, so no duplicate slips through
+    * unevaluated; the failure moves from call time to first-action time,
+    * which the specs pin. The filter keeps the source's own columns, so
+    * the guarded source stays hash-partitioned and sorted on the keys by
+    * its window: a merge joining on the keys needs no second exchange of
+    * the source.
     */
   private def guardUniqueKeys(source: DataFrame, keys: Seq[String], op: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window.partitionBy(keys.map(col): _*)
-    val cnt = org.apache.spark.sql.functions.count(lit(1)).over(w)
-    val k = keys.head
-    val msg = org.apache.spark.sql.functions.concat(
+    val n = "__merge_key_rows"
+    val msg = concat(
       lit(s"$op: multiple source rows share merge key (" + keys.mkString(",") + ") = ("),
-      org.apache.spark.sql.functions.concat_ws(
-        ",", keys.map(c => col(c).cast("string")): _*),
+      concat_ws(",", keys.map(c => col(c).cast("string")): _*),
       lit(") — precombine the source first (Merge.precombine)"))
-    source.withColumn(k,
-      org.apache.spark.sql.functions.when(cnt === 1, col(k))
-        .otherwise(org.apache.spark.sql.functions.raise_error(msg)))
+    source
+      .withColumn(n, count(lit(1)).over(w))
+      .filter(when(col(n) === 1, lit(true)).otherwise(raise_error(msg)))
+      .drop(n)
   }
 
   /** S6 — insert-only MERGE: insert source rows whose key is absent from
@@ -85,36 +88,37 @@ object Merge {
 
   /** S7 — SCD Type 1 MERGE: matched target rows take the source's values
     * for `updateCols` (other target columns kept); unmatched source rows
-    * are inserted whole.
+    * are inserted whole; unmatched target rows pass unchanged.
     * Ref: 04a_gold_dim_athletes.ipynb:300-333 (cell-10), 04b:425-444,
     * 04c:368-387.
+    *
+    * One pass, as Delta's own MERGE writes matched and unmatched rows: a
+    * full outer join of the target and the guarded source on the keys,
+    * each side carrying a presence marker. An `updateCols` column comes
+    * from the source when the source row is present, every other column
+    * from the target when the target row is present, so a source-only
+    * row is inserted whole. A NULL key matches nothing and passes through
+    * from its own side. The source is evaluated once and shuffled only by
+    * the guard's window, whose partitioning the join reuses; the target
+    * is scanned once and shuffled once.
     */
   def scd1(
       target: DataFrame,
       source: DataFrame,
       keys: Seq[String],
       updateCols: Seq[String]): DataFrame = {
-    // the guarded source is referenced by all three branches, but it is
-    // deliberately NOT frozen (r14-opt second sitting): the branches
-    // shuffle the source identically on the keys, so ReusedExchange
-    // already dedupes the guard window's exchange, and the r14 freeze
-    // both added a cache write and erased the stats that let the
-    // planner broadcast the source projections — measured
-    // s21_precombine_merge 0.38 → 0.65 s (isolated + cold-reproduced in
-    // the closing bench), while no scd1 gate ever measured a freeze win
-    // (s7 was noise-flat). scd2 keeps its freeze: there the source
-    // feeds three DIFFERENTLY-shaped consumers and measured 1.20x.
-    val src = guardUniqueKeys(source, keys, "scd1")
-    val keptCols = target.columns.filterNot(updateCols.contains)
-    // matched: target's kept columns + source's updated columns
-    val updated = target
-      .select(keptCols.toSeq.map(col): _*)
-      .join(src.select((keys ++ updateCols).distinct.map(col): _*), keys, "inner")
-      .select(target.columns.toSeq.map(col): _*)
-    val survivors = target.join(src.select(keys.map(col): _*), keys, "left_anti")
-    val inserts = src.join(target.select(keys.map(col): _*), keys, "left_anti")
-      .select(target.columns.toSeq.map(col): _*)
-    updated.unionByName(survivors).unionByName(inserts)
+    val inTarget = "__merge_in_target"
+    val inSource = "__merge_in_source"
+    val t = target.withColumn(inTarget, lit(true)).as("t")
+    val s = guardUniqueKeys(source, keys, "scd1").withColumn(inSource, lit(true)).as("s")
+    val on = keys.map(k => col(s"t.$k") === col(s"s.$k")).reduce(_ && _)
+    val merged = target.columns.toSeq.map { c =>
+      val (side, other, present) =
+        if (updateCols.contains(c)) ("s", "t", inSource) else ("t", "s", inTarget)
+      when(col(s"$side.$present").isNotNull, col(s"$side.$c"))
+        .otherwise(col(s"$other.$c")).as(c)
+    }
+    t.join(s, on, "full_outer").select(merged: _*)
   }
 
   /** Partition-aligned insert-only MERGE: only the partitions present in
@@ -304,9 +308,8 @@ object Merge {
     require(source.columns.sorted.toSeq == dataCols.sorted,
       s"scd2 source must carry exactly the data columns ${dataCols.mkString(",")}; " +
         s"got ${source.columns.mkString(",")}")
-    // every source branch below (changed-keys join, opened, brandNew)
-    // evaluates the guarded key column, so a duplicated key raises on
-    // whichever branch its rows reach first
+    // the guard filters every source row, so a duplicated key raises
+    // when the frozen source is first materialized.
     // guarded source frozen once (lazy): three branches (changed-keys
     // join, opened semi, brandNew anti) each re-ran the guard's per-key
     // window + the caller's source expression (r14-opt, guide §3.3).

@@ -12,8 +12,12 @@ import graft.operators.{Merge, TableStore}
   * key → SCD1 merge keyed on the natural key.
   *
   * Scale: dimension inputs are aggregates/distincts of silver — tiny
-  * relative to the fact — so every dim-side join broadcasts and the only
-  * shuffles are the distinct/group-by on the (small) key domain.
+  * relative to the fact — so every join inside a build broadcasts, and
+  * the build's shuffles are the distinct/group-by/window on the (small)
+  * key domain. An incremental run's SCD1 merge ([[Merge.scd1]]) is one
+  * full outer join, which cannot broadcast: it shuffles the existing
+  * dimension once on the natural key, and the new build once (its
+  * duplicate-key guard's window, which the join reuses).
   */
 object Dims {
 
@@ -115,7 +119,7 @@ object Dims {
         "age_group_start", "age_group_end", "updated_at"))
 
   /** Shared SCD1 write path: full overwrite on full_load/first run, else
-    * join-rewrite upsert updating only the listed attributes.
+    * an upsert (one full outer join) updating only the listed attributes.
     */
   private def writeScd1(
       store: TableStore,

@@ -103,6 +103,42 @@ class MergePropertySpec extends SparkSpec {
     }
   }
 
+  private type R = (Option[Long], Option[String], String)
+
+  test("scd1 == driver-side reference on random data") {
+    // trial 0: empty source; trial 1: empty target
+    (0 until 6).foreach { trial =>
+      val rnd = new scala.util.Random(200 + trial)
+      def value(): Option[String] = if (rnd.nextInt(4) == 0) None else Some(s"v${rnd.nextInt(3)}")
+      // target: NULL keys and duplicated keys allowed
+      val tgt: Seq[R] = if (trial == 1) Nil else (1 to 40).map { i =>
+        val k = if (rnd.nextInt(8) == 0) None else Some(rnd.nextInt(30).toLong)
+        (k, value(), s"t$i")
+      }
+      // source: unique keys (the guard refuses duplicates), one NULL key
+      // at most; a None value is an update to NULL
+      val srcKeys = (0L until 40L).filter(_ => rnd.nextBoolean()).map(Option(_)) ++
+        (if (rnd.nextBoolean()) Seq(None) else Nil)
+      val src: Seq[R] =
+        if (trial == 0) Nil else srcKeys.zipWithIndex.map { case (k, i) => (k, value(), s"s$i") }
+      val target = tgt.toDF("k", "a", "b")
+      val source = src.toDF("k", "a", "b")
+
+      // driver-side reference of the SCD1 contract: `a` updates, `b` is kept
+      val srcByKey = src.collect { case r @ (Some(k), _, _) => k -> r }.toMap
+      val tgtKeys = tgt.flatMap(_._1).toSet
+      val expected = (tgt.map {
+        case (Some(k), _, b) if srcByKey.contains(k) => (Some(k), srcByKey(k)._2, b)
+        case row => row
+      } ++ src.filter(r => r._1.forall(k => !tgtKeys.contains(k)))).sorted
+
+      val got = Merge.scd1(target, source, Seq("k"), Seq("a"))
+        .as[R].collect().toSeq.sorted
+      assert(got == expected,
+        s"trial $trial: diff ${got.diff(expected).take(3)} / ${expected.diff(got).take(3)}")
+    }
+  }
+
   private implicit class SeedOps(s: rng.Seed) {
     def next(n: Int): rng.Seed = (0 until n).foldLeft(s)((acc, _) => acc.next)
   }

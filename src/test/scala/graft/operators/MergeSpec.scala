@@ -314,4 +314,26 @@ class MergeSpec extends SparkSpec {
     assert(back.filter($"k" === 1 && $"color".isNull).count() === 1)
     assert(back.filter($"k" === 3 && $"color" === "blue").count() === 1)
   }
+
+  test("scd1 over inputs too big to broadcast: one shuffle exchange per side, one source scan") {
+    // a session of its own with broadcasting off, as for a target and a
+    // source above the broadcast threshold
+    val big = spark.newSession()
+    big.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val store = new TableStore(big, Files.createTempDirectory("graft-merge-plan-").toString)
+    store.overwrite("scd1_target", big.range(0, 2000)
+      .selectExpr("id AS k", "concat('v', id) AS v", "concat('keep', id) AS stable"))
+    store.overwrite("scd1_source", big.range(1000, 3000)
+      .selectExpr("id AS k", "concat('new', id) AS v", "'src' AS stable"))
+    val merged = Merge.scd1(store.read("scd1_target"), store.read("scd1_source"),
+      Seq("k"), Seq("v"))
+    assert(merged.collect().length === 3000)
+    val plan = merged.queryExecution.executedPlan.toString
+      .split("== Initial Plan ==").head // AQE prints the final plan first
+    // 9 exchanges before the one-pass join: each of its three branches
+    // (inner update, anti survivors, anti inserts) shuffled the source anew
+    assert("Exchange hashpartitioning".r.findAllIn(plan).size === 2, plan)
+    assert("FileScan parquet".r.findAllIn(plan).size === 2, plan)
+    assert("scd1_source".r.findAllIn(plan).size === 1, plan)
+  }
 }
