@@ -183,15 +183,15 @@ object Bench {
     // candidates: executor GC time, shuffle bytes written/read,
     // memory+disk spill over the tasks of the gate's own jobs (Probe's
     // counters), plus the persistent-RDD count after the gate
-    // (localCheckpoint(true) blocks linger until the ContextCleaner runs
-    // — block-manager pressure is the leading suspect). bench_detail.json
+    // (a frozen frame's blocks linger until the ContextCleaner runs —
+    // block-manager pressure is the leading suspect). bench_detail.json
     // carries them so a flag adjudication can point at a cause, not a
     // p-value.
     val residue = scala.collection.mutable.Map.empty[String, (graft.tools.Probe.Counters, Int)]
     val timed: Seq[(String, (Double, (Double, Double), Seq[Double]))] =
       queries.map { case (name, fn) =>
         val (t, recording) = graft.tools.Probe.record(spark, name)(timeGate(name, fn))
-        // rdds = what THIS gate left persisted (localCheckpoint blocks)…
+        // rdds = what THIS gate left persisted (frozen frames' blocks)…
         residue(name) = (recording.total, spark.sparkContext.getPersistentRDDs.size)
         // …then release them: round-12 residue data measured the live
         // count climbing 2 → ~23 across the suite with GC time

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.Dedup
+import graft.operators.{Dedup, Freeze}
 
 /** Scale-stress driver for the dedup pipeline: replicates the sf
   * documents corpus `k`× with a per-replica token suffix, so replica
@@ -37,7 +37,7 @@ object Stress {
           transform(split(col("text"), "\\s+"),
             t => concat(t, lit("_r"), col("rep")))).as("text"))
       .repartition(cpus * 2)
-      .localCheckpoint(true)
+      .transform(Freeze.eager)
     val nDocs = corpus.count()
 
     def timed[T](label: String)(f: => T): T = {
@@ -51,13 +51,13 @@ object Stress {
     val pairs = timed("minhash_lsh_neardups") {
       Dedup.minHashNearDups(corpus, "doc_id", "text",
           numHashes = 32, bands = 4, threshold = 0.9)
-        .localCheckpoint(true)
+        .transform(Freeze.eager)
     }
     val nPairs = pairs.count()
     println(s"[stress] verified pairs: $nPairs")
     val cc = timed("connected_components") {
       Dedup.connectedComponents(pairs.select("id1", "id2"))
-        .localCheckpoint(true)
+        .transform(Freeze.eager)
     }
     val nClusters = cc.select("component").distinct().count()
     println(s"[stress] clusters: $nClusters over ${cc.count()} member rows")
@@ -70,7 +70,7 @@ object Stress {
     // ids ≡ 5 (mod 50) — a deterministic 10% slice
     val batch = corpus.filter(col("doc_id") % 50 === 5)
       .select((col("doc_id") + 1000000000L).as("doc_id"), col("text"))
-      .localCheckpoint(true)
+      .transform(Freeze.eager)
     println(s"[stress] incremental batch: ${batch.count()} docs")
     val root = graft.queries.GateScratch.dir("graft-stress-lsh-").toString
     val store = new graft.operators.TableStore(spark, root)
@@ -80,13 +80,13 @@ object Stress {
     }
     val probed = timed("lsh_index_probe(batch)") {
       graft.operators.LshTextIndex.probe(idx, batch, threshold = 0.9)
-        .localCheckpoint(true)
+        .transform(Freeze.eager)
     }
     println(s"[stress] probe pairs: ${probed.count()}")
     timed("full_rerun(corpus+batch)") {
       Dedup.minHashNearDups(corpus.unionByName(batch), "doc_id", "text",
           numHashes = 32, bands = 4, threshold = 0.9)
-        .localCheckpoint(true)
+        .transform(Freeze.eager)
     }
     // the realistic ingest case: a batch of mostly NOVEL content (fresh
     // vocabulary) — probe work collapses to the batch's own map-side
@@ -96,10 +96,10 @@ object Stress {
         concat_ws(" ",
           transform(split(col("text"), "\\s+"),
             t => concat(t, lit("_new")))).as("text"))
-      .localCheckpoint(true)
+      .transform(Freeze.eager)
     val novelPairs = timed("lsh_index_probe(novel batch)") {
       graft.operators.LshTextIndex.probe(idx, novel, threshold = 0.9)
-        .localCheckpoint(true)
+        .transform(Freeze.eager)
     }
     println(s"[stress] novel probe pairs: ${novelPairs.count()}")
     spark.stop()

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.Similarity
+import graft.operators.{Freeze, Similarity}
 
 /** Scale-stress driver for the ANN family: replicates the sf embeddings
   * corpus `k`× under per-replica Rademacher sign flips — elementwise
@@ -40,7 +40,7 @@ object StressAnn {
           (x, i) => when(pmod(hash(col("rep"), i), lit(2)) === 0, x)
             .otherwise(-x)).as("embedding"))
       .repartition(cpus * 2)
-      .localCheckpoint(true)
+      .transform(Freeze.eager)
     val n = corpus.count()
     println(s"[stress-ann] corpus: $n vectors ($k replicas)")
 
@@ -49,7 +49,7 @@ object StressAnn {
     val queries = corpus
       .filter(pmod(col("vec_id"), lit(10000000L)) < lit((nQueries + k - 1) / k))
       .orderBy(col("vec_id")).limit(nQueries)
-      .localCheckpoint(true)
+      .transform(Freeze.eager)
     println(s"[stress-ann] queries: ${queries.count()}")
 
     // input-bytes accounting: at local corpus sizes (~130 MB of
@@ -74,31 +74,31 @@ object StressAnn {
     }
 
     val exact = timed("brute_force_top10") {
-      Similarity.bruteForceTopK(corpus, queries, 10).localCheckpoint(true)
+      Similarity.bruteForceTopK(corpus, queries, 10).transform(Freeze.eager)
     }
     val nExact = exact.count()
 
     val cells = math.max(16, math.sqrt(n.toDouble).toInt)
     val cents = timed(s"centroids(cells=$cells,lloyd=2)") {
       Similarity.refineCentroids(corpus,
-        Similarity.centroids(corpus, cells), iterations = 2).localCheckpoint(true)
+        Similarity.centroids(corpus, cells), iterations = 2).transform(Freeze.eager)
     }
     // index build = one corpus×cells assignment pass, paid ONCE; query
     // batches then cost only the probed-cell join (the production split)
     val index = timed(s"ivf_index_build(cells=$cells)") {
-      Similarity.assignCells(corpus, cents).localCheckpoint(true)
+      Similarity.assignCells(corpus, cents).transform(Freeze.eager)
     }
     for (nprobe <- Seq(math.max(4, cells / 16), math.max(8, cells / 4))) {
       val ivf = timed(s"ivf_search_top10(probe=$nprobe)") {
         Similarity.ivfSearch(index, queries, 10, cents, nprobe)
-          .localCheckpoint(true)
+          .transform(Freeze.eager)
       }
       val hits = ivf.join(exact, Seq("query_id", "corpus_id")).count()
       println(f"[stress-ann] recall@10(probe=$nprobe): ${hits.toDouble / nExact}%.3f ($hits/$nExact)")
     }
 
     val quant = timed("quantized_top10") {
-      Similarity.bruteForceTopKQuantized(corpus, queries, 10).localCheckpoint(true)
+      Similarity.bruteForceTopKQuantized(corpus, queries, 10).transform(Freeze.eager)
     }
     val qHits = quant.join(exact, Seq("query_id", "corpus_id")).count()
     println(f"[stress-ann] quant recall@10: ${qHits.toDouble / nExact}%.3f")
@@ -117,7 +117,7 @@ object StressAnn {
     }
     val nprobe = math.max(8, cells / 4)
     val persisted = timed(s"persisted_search(probe=$nprobe)") {
-      graft.operators.AnnIndex.search(h, queries, 10, nprobe).localCheckpoint(true)
+      graft.operators.AnnIndex.search(h, queries, 10, nprobe).transform(Freeze.eager)
     }
     val pHits = persisted.join(exact, Seq("query_id", "corpus_id")).count()
     println(f"[stress-ann] persisted recall@10: ${pHits.toDouble / nExact}%.3f")
@@ -125,20 +125,20 @@ object StressAnn {
       // what the same query batch costs without cell pruning: the whole
       // posting table re-read and shuffled into the probe join
       Similarity.ivfSearch(h.postings, queries, 10, h.centroids, nprobe)
-        .localCheckpoint(true)
+        .transform(Freeze.eager)
     }
     // the pruning payoff case: a SMALL batch (one request's worth) probes
     // few cells, so the pruned scan touches a fraction of the partitions —
     // saturated batches above cover every cell and pruning cannot help
-    val fewQueries = queries.limit(5).localCheckpoint(true)
+    val fewQueries = queries.limit(5).transform(Freeze.eager)
     val smallProbe = math.max(4, cells / 16)
     timed(s"persisted_search(q=5,probe=$smallProbe)") {
       graft.operators.AnnIndex.search(h, fewQueries, 10, smallProbe)
-        .localCheckpoint(true)
+        .transform(Freeze.eager)
     }
     timed(s"full_scan_search(q=5,probe=$smallProbe)") {
       Similarity.ivfSearch(h.postings, fewQueries, 10, h.centroids, smallProbe)
-        .localCheckpoint(true)
+        .transform(Freeze.eager)
     }
     spark.stop()
   }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{AnnIndex, Similarity, TableStore}
+import graft.operators.{AnnIndex, Freeze, Similarity, TableStore}
 
 /** Incremental-ANN cost study (VERDICT r11 item 3's second half): a
   * daily embedding batch lands in a persisted IVF index via
@@ -60,12 +60,12 @@ object StressAnnAppend {
             (x, i) => when(pmod(hash(col("rep"), i), lit(2)) === 0, x)
               .otherwise(-x)).as("embedding"))
         .repartition(cpus * 2)
-        .localCheckpoint(true)
+        .transform(Freeze.eager)
       val n = corpus.count()
       val batch = base.limit(batchSize)
         .select((col("vec_id") + lit(900000000L)).as("vec_id"),
           transform(col("embedding"), x => -x).as("embedding"))
-        .localCheckpoint(true)
+        .transform(Freeze.eager)
       val cells = math.max(16, math.sqrt(n.toDouble).toInt)
       println(s"[stress-annappend] === n=$n cells=$cells batch=$batchSize ===")
 
@@ -83,10 +83,10 @@ object StressAnnAppend {
       }
       // serve sanity: the appended index answers a query batch
       val q = corpus.filter(pmod(col("vec_id"), lit(10000000L)) < 4)
-        .limit(8).localCheckpoint(true)
+        .limit(8).transform(Freeze.eager)
       timed("probe_after_append(q=8)") {
         AnnIndex.search(h, q, k = 10, nprobe = math.max(4, cells / 16))
-          .localCheckpoint(true)
+          .transform(Freeze.eager)
       }
     }
     spark.stop()

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{AnnIndex, TableStore}
+import graft.operators.{AnnIndex, Freeze, TableStore}
 
 /** IVF cell-rebalance cost study (VERDICT r12 item 6's second half):
   * [[AnnIndex.rebalance]] claims O(split-cell rows × centroids), never
@@ -57,7 +57,7 @@ object StressAnnRebalance {
             (x, i) => when(pmod(hash(col("rep"), i), lit(2)) === 0, x)
               .otherwise(-x)).as("embedding"))
         .repartition(cpus * 2)
-        .localCheckpoint(true)
+        .transform(Freeze.eager)
       val n = corpus.count()
       val cells = math.max(16, math.sqrt(n.toDouble).toInt)
       val root = graft.queries.GateScratch.dir("graft-stress-reb-").toString
@@ -79,10 +79,10 @@ object StressAnnRebalance {
       }
       // probe sanity: the rebalanced index still serves
       val q = corpus.filter(pmod(col("vec_id"), lit(10000000L)) < 4)
-        .limit(8).localCheckpoint(true)
+        .limit(8).transform(Freeze.eager)
       timed("probe_after_rebalance(q=8)") {
         AnnIndex.search(h, q, k = 10, nprobe = math.max(4, cells / 16))
-          .localCheckpoint(true)
+          .transform(Freeze.eager)
       }
     }
     spark.stop()

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.TableStore
+import graft.operators.{Freeze, TableStore}
 
 /** Small-files stress: the classic lakehouse failure mode measured.
   * The ×100 events table (60M rows) is written three ways — shattered
@@ -35,7 +35,7 @@ object StressCompact {
       .crossJoin(reps)
       .withColumn("event_id", col("event_id") + col("rep") * 1000000000L)
       .drop("rep")
-      .localCheckpoint(true)
+      .transform(Freeze.eager)
     val n = events.count()
     println(s"[compact] corpus: $n event rows, local[$cpus]")
 

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{AnnIndex, LshTextIndex, PqIndex, TableStore}
+import graft.operators.{AnnIndex, Freeze, LshTextIndex, PqIndex, TableStore}
 
 /** Scale study for the PERSISTED INDEX family (VERDICT r7 item 4):
   * PqIndex / AnnIndex / LshTextIndex build + probe at 1×, 10×, 100× of
@@ -60,7 +60,7 @@ object StressIndexScale {
           (x, i) => when(pmod(hash(col("rep"), i), lit(2)) === 0, x)
             .otherwise(-x)).as("embedding"))
       .repartition(cpus * 2)
-      .localCheckpoint(true)
+      .transform(Freeze.eager)
     val nVec = corpus.count()
     val rawVecBytes = nVec * 64L * 4 // float32 payload for the size ratio
     println(s"[idxscale] k=$k embeddings: $nVec vectors")
@@ -74,12 +74,12 @@ object StressIndexScale {
           array_join(transform(split(col("text"), " "),
             t => concat(t, lit("_r"), col("rep"))), " ")).as("text"))
       .repartition(cpus * 2)
-      .localCheckpoint(true)
+      .transform(Freeze.eager)
     val nDocs = docs.count()
     println(s"[idxscale] k=$k documents: $nDocs docs")
 
     val queries = corpus.filter(pmod(col("vec_id"), lit(stride)) < 64)
-      .limit(64).localCheckpoint(true)
+      .limit(64).transform(Freeze.eager)
     queries.count()
 
     // ---- PqIndex (residual IVF-PQ) -------------------------------------
@@ -101,7 +101,7 @@ object StressIndexScale {
           spark.range(bulkReps).select(col("id").as("qrep")))
         .select((col("vec_id") + col("qrep") * (stride * k)).as("vec_id"),
           col("embedding"))
-        .limit(bulkQueries).localCheckpoint(true)
+        .limit(bulkQueries).transform(Freeze.eager)
       val nb = bulk.count()
       timed(s"pq BULK serve ($nb queries, nprobe=4, join-form)") {
         PqIndex.searchBulk(hPq, bulk, k = 10, nprobe = 4).count()

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{IncrementalAgg, Merge, TableStore}
+import graft.operators.{Freeze, IncrementalAgg, Merge, TableStore}
 
 /** Scale study for the WRITE/MERGE family (VERDICT r8 item 5): SCD1,
   * SCD2 and IVM refresh at 1× / 10× / 100× of sf0.1, so SCALE.md can
@@ -56,7 +56,7 @@ object StressWriteScale {
         (col("o_totalprice") + col("rep")).as("o_totalprice"),
         col("o_orderstatus"))
       .repartition(cpus * 2)
-      .localCheckpoint(true)
+      .transform(Freeze.eager)
     val nRows = target.count()
     println(s"[wscale] k=$k target rows: $nRows")
 
@@ -68,7 +68,7 @@ object StressWriteScale {
       .select((col("o_orderkey") + lit(stride * (k + 1))).as("o_orderkey"),
         col("o_custkey"), col("o_totalprice"), col("o_orderstatus"))
     val source = updates.unionByName(inserts)
-      .repartition(cpus).localCheckpoint(true)
+      .repartition(cpus).transform(Freeze.eager)
     println(s"[wscale] k=$k source rows: ${source.count()}")
 
     if (families("scd1")) {
@@ -85,7 +85,7 @@ object StressWriteScale {
         .withColumn("valid_from", lit("2026-01-01"))
         .withColumn("valid_to", lit(null).cast("string"))
         .withColumn("is_current", lit(true))
-        .localCheckpoint(true)
+        .transform(Freeze.eager)
       t2.count()
       val merged = timed("scd2 merge (changed-key detect + closeout + reopen)") {
         Merge.scd2(t2, source, Seq("o_orderkey"), Seq("o_totalprice"),
@@ -156,7 +156,7 @@ object StressWriteScale {
       val src = ptarget.filter(col("part") === (k - 1) * P0 + 3)
         .select(col("o_orderkey"), col("part"),
           (col("o_totalprice") * 2).as("o_totalprice"), col("o_orderstatus"))
-        .localCheckpoint(true)
+        .transform(Freeze.eager)
       println(s"[wscale] k=$k aligned source rows: ${src.count()}")
       timed("aligned: scd1PartitionAligned (O(touched partition))") {
         Merge.scd1PartitionAligned(store, "dim", src,

@@ -151,7 +151,7 @@ object AnnIndex {
           VectorExprs.vecQ8(Similarity.normalize(col(h.vecCol))).as("cq"),
           col("cell_id"))
       else assignedRaw)
-      .localCheckpoint(true) // freeze: feeds both the touch list and the merge
+      .transform(Freeze.eager) // freeze: feeds both the touch list and the merge
     val touched = assigned.select(col("cell_id")).distinct()
       .collect().map(r => Int.box(r.getInt(0))).toSeq
     if (touched.nonEmpty) {
@@ -217,7 +217,7 @@ object AnnIndex {
       // otherwise re-reads the cell's parquet partition. Bounded by
       // the oversized cell, the rows this rebalance touches anyway.
       val cellRows = h.postings.filter(col("cell_id") === c)
-        .localCheckpoint(false)
+        .transform(Freeze.lazily)
       val seed = Similarity.centroids(cellRows, subCells, h.idCol, h.vecCol)
       val refined =
         if (refineIterations == 0) seed
@@ -230,13 +230,13 @@ object AnnIndex {
     }.reduce(_ unionByName _)
     val newCents = cents.filter(!col("cell_id").isin(splitCells.map(Int.box): _*))
       .unionByName(subCentroids)
-      .localCheckpoint(true) // feeds assignCells' collect + the final write
+      .transform(Freeze.eager) // feeds assignCells' collect + the final write
     // reassign ONLY the split cells' vectors, against the FULL new set
     val splitRows = h.postings
       .filter(col("cell_id").isin(splitCells.map(Int.box): _*))
       .drop("cell_id")
     val reassigned = Similarity.assignCells(splitRows, newCents, h.idCol, h.vecCol)
-      .localCheckpoint(true) // one execution: dest list + merge
+      .transform(Freeze.eager) // one execution: dest list + merge
     val destCells = reassigned.select(col("cell_id")).distinct()
       .collect().map(_.getInt(0)).toSeq
     val keepDest = destCells.filterNot(splitCells.contains)
@@ -316,7 +316,7 @@ object AnnIndex {
         h.store.commitIfNew(resultTable, appId, batchId) {
           val hits = search(h, batch, k, nprobe)
             .withColumn("batch_id", lit(batchId))
-            .localCheckpoint(true) // one execution: emptiness probe + write
+            .transform(Freeze.eager) // one execution: emptiness probe + write
           if (!hits.isEmpty) {
             if (h.store.exists(resultTable))
               h.store.overwritePartitions(resultTable, hits, "batch_id", Seq(batchId))

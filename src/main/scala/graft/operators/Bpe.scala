@@ -92,7 +92,7 @@ object Bpe {
       // split(w, "") keeps a trailing "" with Spark's limit=-1 semantics;
       // drop it or it becomes a phantom symbol in every word
       .select(array_remove(split(col("w"), ""), "").as("syms"), col("cnt"))
-      .localCheckpoint(true)
+      .transform(Freeze.eager)
 
     val collectTop = 8 * batchSize + 64
     val merges = Seq.newBuilder[(String, String)]
@@ -154,7 +154,7 @@ object Bpe {
                 mergeAdjacent(s, a, b)
               }.as("syms"),
               col("cnt"))
-            .localCheckpoint(true)
+            .transform(Freeze.eager)
         }
       }
     }

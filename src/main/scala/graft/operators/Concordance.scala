@@ -103,7 +103,7 @@ object Concordance {
         guarded(col(yCol), yCol).as("__y"),
         aFilter.as("__a"))
       .filter(col("__x").isNotNull && col("__y").isNotNull)
-      .localCheckpoint(false)
+      .transform(Freeze.lazily)
 
     // EQUI-DEPTH bucket map over DISTINCT values (see class doc): count
     // per value, distributed prefix sum in value order, join back. The
@@ -149,7 +149,7 @@ object Concordance {
       // the y-level (its per-value count + its join-back); the y-level
       // output IS bb, whose freeze the pair joins and cell counts below
       // always relied on
-      in.join(map, Seq(vCol)).localCheckpoint(false)
+      in.join(map, Seq(vCol)).transform(Freeze.lazily)
     }
     val bb = bucketed(bucketed(base, "__x", "__bx"), "__y", "__by")
     val sideA = bb.filter(col("__a")).select("__x", "__y", "__bx", "__by")

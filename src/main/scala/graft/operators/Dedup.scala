@@ -97,7 +97,7 @@ object Dedup {
           s => s.getField("tok")).as("ts"),
         array_sort(TextFunctions.distinctTokens(col(textCol))).as("ts_lex"))
       .select(col("doc_id"), col("ts"), col("ts_lex"), size(col("ts")).as("set_size"))
-      .localCheckpoint(true)
+      .transform(Freeze.eager)
     // prefix length |A| - ceil(t|A|) + 1; the 1e-9 slack makes double
     // rounding err toward a LONGER prefix (extra candidates are verified
     // away; a shorter prefix would silently drop true pairs)
@@ -154,7 +154,7 @@ object Dedup {
         TextFunctions.distinctTokens(col(textCol)).as("ts"))
       .select(col("doc_id"), size(col("ts")).as("set_size"),
         explode(col("ts")).as("tok"))
-      .localCheckpoint(true)
+      .transform(Freeze.eager)
     val a = toks.as("a")
     val b = toks.as("b")
     a.join(b, col("a.tok") === col("b.tok") &&
@@ -298,8 +298,8 @@ object Dedup {
     val tokenSets = df.select(
         col(idCol).as("doc_id"),
         array_sort(TextFunctions.distinctTokens(col(textCol))).as("toks"))
-      .localCheckpoint(true)
-    val sigs = signatureFromUnits(tokenSets, numHashes).localCheckpoint(true)
+      .transform(Freeze.eager)
+    val sigs = signatureFromUnits(tokenSets, numHashes).transform(Freeze.eager)
     // distinct BEFORE scoring: a pair sharing p bands appears p times in
     // the raw join output, and re-scoring duplicates through the (non-
     // codegen) estimate lambda costs more than the pair-key shuffle saves
@@ -372,11 +372,11 @@ object Dedup {
       // materialize once; reused by whichever path runs
       val edges0 = pairs
         .select(col("id1").cast("long").as("src"), col("id2").cast("long").as("dst"))
-        .localCheckpoint(true)
+        .transform(Freeze.eager)
       if (edges0.count() <= localThreshold) return localComponents(edges0, idType)
       return distributedComponents(
         edges0.unionByName(edges0.select(col("dst").as("src"), col("src").as("dst")))
-          .repartition(col("dst")).localCheckpoint(true),
+          .repartition(col("dst")).transform(Freeze.eager),
         maxIter)
         .select(col("node").cast(idType).as("node"),
           col("component").cast(idType).as("component"))
@@ -384,7 +384,7 @@ object Dedup {
     val edges = pairs.select(col("id1").as("src"), col("id2").as("dst"))
       .unionByName(pairs.select(col("id2").as("src"), col("id1").as("dst")))
       .repartition(col("dst"))
-      .localCheckpoint(true)
+      .transform(Freeze.eager)
     distributedComponents(edges, maxIter)
   }
 
@@ -448,7 +448,7 @@ object Dedup {
     var labels = edges.groupBy(col("src"))
       .agg(least(col("src"), min(col("dst"))).as("label"))
       .select(col("src").as("node"), col("label"))
-      .localCheckpoint(true)
+      .transform(Freeze.eager)
     var changed = 1L
     var iter = 0
     while (changed > 0 && iter < maxIter) {
@@ -472,7 +472,7 @@ object Dedup {
           col("node"),
           least(col("l1"), coalesce(col("jlabel"), col("l1"))).as("new_label"),
           col("old_label"))
-        .localCheckpoint(true)
+        .transform(Freeze.eager)
       changed = updated.filter(col("new_label") =!= col("old_label")).count()
       labels = updated.select(col("node"), col("new_label").as("label"))
       iter += 1

@@ -277,7 +277,7 @@ object DeltaExport {
       .withColumn("__part",
         when(col("add").isNull, lit(0))
           .otherwise(pmod(xxhash64(col("add.path")), lit(parts.toLong)).cast("int")))
-      .localCheckpoint(true) // one plan, N part-filtered writes below
+      .transform(Freeze.eager) // one plan, N part-filtered writes below
     val nActions = cp.count()
     val partNames = (0 until parts).map { i =>
       if (parts == 1) f"$version%020d.checkpoint.parquet"

@@ -99,7 +99,7 @@ object DeltaImport {
       .select(col("path"), col("partitionValues"), col("dvStorage"),
         col("dvPathOrInline"), col("dvOffset"), col("dvSize"),
         col("dvCardinality"))
-      .localCheckpoint(true)
+      .transform(Freeze.eager)
 
     // add-action paths are URL-encoded table-relative paths per the
     // protocol, but MAY be absolute URIs (e.g. shallow clones). We don't

@@ -11,10 +11,9 @@ import org.apache.spark.sql.functions._
   *
   * Scale: each iteration is ONE equi-join (edges ⋈ ranks on src) + ONE
   * aggregation (contributions by dst) — both shuffle on the node id, no
-  * all-pairs step anywhere. The rank frame is `localCheckpoint`ed per
-  * iteration (same discipline as connectedComponents) so the lineage
-  * stays O(1) instead of O(iterations) and AQE re-plans each round on
-  * materialized sizes. Edge skew (a celebrity in-node) is an aggregation
+  * all-pairs step anywhere. The rank frame is frozen per iteration
+  * (same discipline as connectedComponents) so the lineage stays O(1)
+  * instead of O(iterations). Edge skew (a celebrity in-node) is an aggregation
   * hot key, absorbed by partial aggregation map-side — contributions
   * combine before the shuffle.
   */
@@ -66,25 +65,17 @@ object Graph {
     val nodes = e.select(col("__src").as("id"))
       .union(e.select(col("__dst").as("id")))
       .distinct()
-      .localCheckpoint(true)
+      .transform(Freeze.eager)
     // out-degree is joined into the edge list ONCE, outside the loop —
     // inside it would add a full edge-sized join per iteration. The
     // degree table is one row per distinct source, so the join back to
     // the edges is AQE-broadcast and never shuffles the edge list; the
-    // LAZY checkpoint materializes it on the first iteration and every
-    // later iteration reads the cached copy.
-    // r13's up-front `repartition(col("__src"))` REMOVED (r14-opt): with
-    // AQE on, `localCheckpoint` captures the AdaptiveSparkPlan's
-    // pre-execution partitioning — UnknownPartitioning — so the cached
-    // layout never satisfied the loop join's distribution and the
-    // repartition was one full wasted edge shuffle (plan evidence:
-    // plans/r14/pagerank_loop_body_before.txt shows the checkpointed
-    // scan as `ExistingRDD, UnknownPartitioning(0)`). The cached
-    // partition count stays the scan's own (size-proportional at any
-    // scale, guide §2.2).
+    // LAZY freeze materializes it on the first iteration and every
+    // later iteration reads the cached copy. Not pre-partitioned on
+    // __src: a frozen frame's partitioning is unknown ([[Freeze]]).
     val eDeg = e.join(
         e.groupBy(col("__src")).agg(count(lit(1)).as("__deg")), "__src")
-      .localCheckpoint(false)
+      .transform(Freeze.lazily)
 
     // Dangling handling, ONCE instead of per-iteration: a node with no
     // in-edges has the CONSTANT rank (1-d) + d·0 from iteration 1 on,
@@ -102,22 +93,17 @@ object Graph {
     val danglingRanks = nodes
       .join(e.select(col("__dst").as("id")).distinct(), Seq("id"), "left_anti")
       .select(col("id"), baseRank.as("rank"))
-      .localCheckpoint(true)
+      .transform(Freeze.eager)
 
-    var ranks = nodes.withColumn("rank", lit(1.0)).localCheckpoint(true)
-    // Deliberate join strategy for the loop (r14-opt, guide §3.1): the
-    // checkpointed frames carry no usable size statistics, and the
-    // planner's estimate picked BuildLeft — broadcasting the EDGE frame
-    // (96 MiB at sf0.1) and rebuilding its hash relation EVERY
-    // iteration (plans/r14/pagerank_loop_body_before.txt). The rank
-    // frame is one row per node — the side that should move. Decide
-    // from the MEASURED node count (`nodes` is already materialized, so
-    // the count is a cache read): broadcast the rank side while it fits
-    // comfortably under the broadcast threshold; on huge graphs fall
-    // back to the planner's shuffle join, where the edge side's runtime
-    // size is real and no side broadcasts.
-    val nNodes = nodes.count()
-    val ranksFit = nNodes * 24L < (4L << 20)
+    var ranks = nodes.withColumn("rank", lit(1.0)).transform(Freeze.eager)
+    // Deliberate join strategy for the loop (r14-opt, guide §3.1): each
+    // later rank frame is lazily frozen with the product estimate of an
+    // aggregate over the edge join, and left to it the planner broadcasts
+    // the EDGE frame every round (plans/r14/pagerank_loop_body_before.txt).
+    // The first rank frame holds the same rows and its stored bytes are
+    // measured: broadcast the rank side while they clear the threshold.
+    val ranksFit = ranks.queryExecution.optimizedPlan.stats.sizeInBytes <=
+      ranks.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
     for (_ <- 1 to iterations) {
       val rawC = col("rank") / col("__deg")
       val scale = math.pow(10, quantizeDp)
@@ -129,13 +115,10 @@ object Graph {
         .join(if (ranksFit) broadcast(ranksSide) else ranksSide, "__src")
         .select(col("__dst").as("id"), contrib.as("__c"))
         .groupBy(col("id")).agg(sum(col("__c")).as("__in"))
-      // LAZY checkpoint: with a fixed iteration count there is no
-      // driver action inside the loop, so eager materialization would
-      // pay one synchronous job barrier per round for nothing — lazy
-      // still truncates lineage and caches each rank frame on first
-      // use, but lets Spark run the whole cascade as one job chain
-      // (connectedComponents needs eager only because its convergence
-      // count() acts per round)
+      // LAZY freeze: with a fixed iteration count there is no driver
+      // action inside the loop, so an eager one would add a job barrier
+      // per round for nothing (connectedComponents freezes eagerly only
+      // because its convergence count() acts per round)
       // literal SUBTRACTION (not a pre-folded constant) so the quantized
       // path's base term is the identical IEEE value an oracle computing
       // 1.0 - damping produces
@@ -150,7 +133,7 @@ object Graph {
           (if (quantizeDp > 0) round(newRank, quantizeDp) else newRank)
             .as("rank"))
         .unionByName(danglingRanks)
-        .localCheckpoint(false)
+        .transform(Freeze.lazily)
     }
     ranks
   }
@@ -165,7 +148,7 @@ object Graph {
     * grows the work, never the full graph. Early-stops when a frontier
     * comes back empty (the per-hop `isEmpty` is a driver-side boolean on
     * an already-checkpointed frame, not an extra scan of the graph).
-    * Visited/frontier frames are eagerly `localCheckpoint`ed so lineage
+    * Visited/frontier frames are eagerly frozen so lineage
     * stays O(1) across hops and each anti-join reads a materialized set.
     *
     * Directed: follows `srcCol` → `dstCol` only; pass edges in both
@@ -194,43 +177,30 @@ object Graph {
     // (scan+filter-shaped) expression is cheaper than writing and
     // re-reading the full edge list (r6 checkpointed unconditionally —
     // half of the 2.1× graph_bfs regression, VERDICT r6 #3).
-    // r13's pre-partition on __src REMOVED (r14-opt): under AQE the
-    // checkpoint captures UnknownPartitioning, so the cached layout
-    // never fed the hop join and the repartition was a wasted full edge
-    // shuffle (same evidence as pageRank —
-    // plans/r14/pagerank_loop_body_before.txt).
-    val e = if (maxHops > 2) e0.localCheckpoint(false) else e0
+    val e = if (maxHops > 2) e0.transform(Freeze.lazily) else e0
     val seed = seeds.select(col(idCol).as("id")).distinct()
       .filter(col("id").isNotNull)
       .withColumn("dist", lit(0))
-      .localCheckpoint(true)
-    // ONE eager checkpoint per hop, of the NEW frontier only: `next` is
-    // re-read three times (the emptiness probe, the next hop's edge
-    // join, every later anti-join via `visited`), so materializing it
-    // is pure reuse. `visited` stays a LAZY union of those already-
-    // materialized pieces — r6 additionally checkpointed the union
-    // itself, re-materializing all of visited every hop (O(hops²) rows
-    // written; the other half of the regression).
+      .transform(Freeze.eager)
+    // ONE eager freeze per hop, of the NEW frontier only: `next` is
+    // re-read three times (the emptiness count, the next hop's edge join,
+    // every later anti-join via `visited`), and its stored bytes let the
+    // planner broadcast it while it fits (the graph side never moves).
+    // `visited` stays a LAZY union of those pieces — r6 also froze the
+    // union, rewriting all of visited every hop (O(hops²) rows written;
+    // the other half of the regression).
     var visited = seed
     var frontier = seed
-    // measured frontier size drives the hop join's build side (r14-opt,
-    // guide §3.1): checkpointed frames carry no usable stats, so the
-    // planner cannot see that the frontier is the small, moving side —
-    // broadcast it while it fits (the graph side then never moves at
-    // all), fall back to the planner's shuffle join on huge frontiers.
-    // The count replaces the old isEmpty probe (same one cache-read job,
-    // and it doubles as the emptiness check).
     var frontierRows = seed.count()
     var hop = 1
     while (hop <= maxHops && frontierRows > 0) {
-      val f = if (frontierRows * 16L < (4L << 20)) broadcast(frontier) else frontier
-      val next = f
-        .join(e, f("id") === e("__src"))
+      val next = frontier
+        .join(e, frontier("id") === e("__src"))
         .select(col("__dst").as("id"))
         .distinct()
         .join(visited, Seq("id"), "left_anti")
         .withColumn("dist", lit(hop))
-        .localCheckpoint(true)
+        .transform(Freeze.eager)
       frontierRows = next.count()
       if (frontierRows > 0) {
         visited = visited.union(next)
@@ -281,11 +251,11 @@ object Graph {
     // sf0.1/6 hops) — the min-aggregation after the hop join already
     // shrinks the frontier so fast that the per-hop edge-side exchange
     // never dominates (r13-opt)
-    val ep = e.localCheckpoint(false)
+    val ep = e.transform(Freeze.lazily)
     var dist = seeds.select(col(idCol).as("id")).distinct()
       .filter(col("id").isNotNull)
       .withColumn("dist", lit(0L).cast(e.schema("__w").dataType))
-      .localCheckpoint(true)
+      .transform(Freeze.eager)
     var frontier = dist
     var hop = 1
     var drained = false
@@ -298,12 +268,12 @@ object Graph {
         .join(dist, Seq("id"), "left")
         .filter(col("dist").isNull || col("__cand") < col("dist"))
         .select(col("id"), col("__cand").as("dist"))
-        .localCheckpoint(true)
+        .transform(Freeze.eager)
       if (improved.isEmpty) drained = true
       else {
         dist = dist.join(improved.select(col("id")), Seq("id"), "left_anti")
           .union(improved)
-          .localCheckpoint(true)
+          .transform(Freeze.eager)
         frontier = improved
         hop += 1
       }
@@ -333,7 +303,7 @@ object Graph {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     var e = edges.select(col(aCol).as("__a"), col(bCol).as("__b"))
-      .localCheckpoint(false)
+      .transform(Freeze.lazily)
     for (_ <- 1 to rounds) {
       val keep = e.select(col("__a").as("id"))
         .union(e.select(col("__b").as("id")))
@@ -346,7 +316,7 @@ object Graph {
       e = e
         .join(keep.withColumnRenamed("id", "__a"), Seq("__a"), "left_semi")
         .join(keep.withColumnRenamed("id", "__b"), Seq("__b"), "left_semi")
-        .localCheckpoint(false)
+        .transform(Freeze.lazily)
     }
     e.select(col("__a").as("id")).union(e.select(col("__b").as("id")))
       .groupBy("id").agg(count(lit(1)).as("degree"))
@@ -379,7 +349,7 @@ object Graph {
     * for every node of the simple graph, zero-count nodes included.
     */
   def triangles(edges: DataFrame, aCol: String = "a", bCol: String = "b"): DataFrame = {
-    val und = undirect(edges, aCol, bCol).localCheckpoint(true)
+    val und = undirect(edges, aCol, bCol).transform(Freeze.eager)
     val deg = und.select(col("u").as("id")).union(und.select(col("v").as("id")))
       .groupBy("id").agg(count(lit(1)).as("d"))
     val oriented = und
@@ -391,7 +361,7 @@ object Graph {
           struct(col("u").as("s"), col("v").as("t")))
           .otherwise(struct(col("v").as("s"), col("u").as("t"))).as("e"))
       .select(col("e.s").as("s"), col("e.t").as("t"))
-      .localCheckpoint(true)
+      .transform(Freeze.eager)
     // one wedge per unordered out-neighbor pair at the common source
     val wedges = oriented.select(col("s"), col("t").as("x"))
       .join(oriented.select(col("s"), col("t").as("y")), Seq("s"))
@@ -425,7 +395,7 @@ object Graph {
       edges: DataFrame, minCommon: Long = 1L,
       maxHubDegree: Int = Int.MaxValue,
       aCol: String = "a", bCol: String = "b"): DataFrame = {
-    val und = undirect(edges, aCol, bCol).localCheckpoint(true)
+    val und = undirect(edges, aCol, bCol).transform(Freeze.eager)
     val deg = und.select(col("u").as("id")).union(und.select(col("v").as("id")))
       .groupBy("id").agg(count(lit(1)).as("d"))
     // full adjacency (both directions), centers capped at maxHubDegree
@@ -480,30 +450,23 @@ object Graph {
         s"labelPropagation needs integral node ids, got $idType in '$c' — " +
           "hash or dictionary-encode string ids first")
     }
-    val und = undirect(edges, aCol, bCol).localCheckpoint(true)
+    val und = undirect(edges, aCol, bCol).transform(Freeze.eager)
     val adj = und.select(col("u").as("id"), col("v").as("nbr"))
       .union(und.select(col("v").as("id"), col("u").as("nbr")))
-      // r13's pre-partition on nbr REMOVED (r14-opt): under AQE the
-      // checkpoint captures UnknownPartitioning, so the cached layout
-      // never fed the round join — the repartition was a wasted full
-      // adjacency shuffle (same evidence as pageRank)
-      .localCheckpoint(true)
+      .transform(Freeze.eager)
     var labels = adj.select(col("id")).distinct()
       .select(col("id"), col("id").cast("long").as("label"))
-      .localCheckpoint(true)
-    // measured label-frame size picks the round join's build side (§3.1,
-    // same rationale as pageRank): one row per node, fixed across
-    // rounds; broadcast while it fits, else the planner's shuffle join
-    val labelsFit = labels.count() * 24L < (4L << 20)
+      .transform(Freeze.eager)
+    // eagerly frozen, adj and labels report their stored bytes: the round
+    // join builds on the label side (one row per node) while it fits
     for (_ <- 1 to rounds) {
-      val labelsSide = labels.select(col("id").as("nbr"), col("label"))
       labels = adj
-        .join(if (labelsFit) broadcast(labelsSide) else labelsSide, Seq("nbr"))
+        .join(labels.select(col("id").as("nbr"), col("label")), Seq("nbr"))
         .groupBy(col("id"), col("label")).agg(count(lit(1)).as("n"))
         .groupBy(col("id"))
         .agg(max(struct(col("n"), (-col("label")).as("negl"))).as("top"))
         .select(col("id"), (-col("top.negl")).as("label"))
-        .localCheckpoint(true)
+        .transform(Freeze.eager)
     }
     labels
   }

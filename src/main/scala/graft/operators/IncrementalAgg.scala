@@ -133,7 +133,7 @@ object IncrementalAgg {
             (col(minCol).isNull || col("__del_min") <= col(minCol) ||
               col("__del_max") >= col(maxCol))).as("__affected")): _*)
       .filter(col("n_rows") > 0)
-      .localCheckpoint(true) // read before the view table is overwritten
+      .transform(Freeze.eager) // read before the view table is overwritten
 
     val affectedKeys = joined.filter(col("__affected"))
       .select(groupCols.map(col): _*)

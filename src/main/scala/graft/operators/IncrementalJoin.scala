@@ -64,8 +64,8 @@ object IncrementalJoin {
     // generations — freeze each delta once (lazy; the refresh action
     // populates the cache) instead of re-deriving it per term. Deltas
     // are change-sized by the IVM contract, never table-sized.
-    val dA = signedChanges(store, aTable, aFrom, aTo).localCheckpoint(false)
-    val dB = signedChanges(store, bTable, bFrom, bTo).localCheckpoint(false)
+    val dA = signedChanges(store, aTable, aFrom, aTo).transform(Freeze.lazily)
+    val dB = signedChanges(store, bTable, bFrom, bTo).transform(Freeze.lazily)
     val t3 = dA.withColumnRenamed("__sign", "__sa")
       .join(dB.withColumnRenamed("__sign", "__sb"), keys)
       .withColumn("__sign", col("__sa") * col("__sb"))

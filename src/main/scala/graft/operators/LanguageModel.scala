@@ -43,7 +43,7 @@ object LanguageModel {
     * (ln parity bound with the oracle engine).
     */
   def scoreDocs(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val bg = bigrams(docs, idCol, textCol).localCheckpoint(true)
+    val bg = bigrams(docs, idCol, textCol).transform(Freeze.eager)
     val cwp = bg.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c"))
     val cw = cwp.groupBy(col("w1")).agg(sum(col("c")).as("cw"))
     val vocab = docs

@@ -58,9 +58,9 @@ object LshTextIndex {
       Seq((numHashes, bands)).toDF("num_hashes", "bands"), numFiles = 1)
     // tokenize ONCE; signatures and buckets both derive from the same
     // checkpointed token sets (the minHashNearDups discipline)
-    val toks = tokenSets(corpus, idCol, textCol).localCheckpoint(true)
+    val toks = tokenSets(corpus, idCol, textCol).transform(Freeze.eager)
     store.overwrite(h.toksTable, toks)
-    val sigs = Dedup.signatureFromUnits(toks, numHashes).localCheckpoint(true)
+    val sigs = Dedup.signatureFromUnits(toks, numHashes).transform(Freeze.eager)
     store.overwrite(h.sigsTable, sigs)
     store.overwrite(h.bucketsTable, Dedup.bandBuckets(sigs, numHashes, bands))
     h
@@ -85,8 +85,8 @@ object LshTextIndex {
       idCol: String = "doc_id", textCol: String = "text",
       threshold: Double = 0.9, estMargin: Double = 0.15): DataFrame = {
     graft.expressions.ArrayExprs.register(h.store.spark)
-    val newToks = tokenSets(newDocs, idCol, textCol).localCheckpoint(true)
-    val newSigs = Dedup.signatureFromUnits(newToks, h.numHashes).localCheckpoint(true)
+    val newToks = tokenSets(newDocs, idCol, textCol).transform(Freeze.eager)
+    val newSigs = Dedup.signatureFromUnits(newToks, h.numHashes).transform(Freeze.eager)
     val newBuckets = Dedup.bandBuckets(newSigs, h.numHashes, h.bands)
     val candidates = newBuckets
       .select(col("doc_id").as("new_id"), col("band_idx"), col("band_hash"))
@@ -134,13 +134,13 @@ object LshTextIndex {
     */
   def append(h: Handle, newDocs: DataFrame,
       idCol: String = "doc_id", textCol: String = "text"): Handle = {
-    val toks = tokenSets(newDocs, idCol, textCol).localCheckpoint(true)
+    val toks = tokenSets(newDocs, idCol, textCol).transform(Freeze.eager)
     val dup = h.toks.select("doc_id").join(toks.select("doc_id"), "doc_id")
       .limit(1).collect()
     require(dup.isEmpty,
       s"append would duplicate doc_id=${dup.headOption.map(_.get(0)).orNull} — " +
         "ids must be new")
-    val sigs = Dedup.signatureFromUnits(toks, h.numHashes).localCheckpoint(true)
+    val sigs = Dedup.signatureFromUnits(toks, h.numHashes).transform(Freeze.eager)
     val batchIds = toks.select("doc_id")
     def merged(old: DataFrame, add: DataFrame): DataFrame =
       old.join(batchIds, Seq("doc_id"), "left_anti").unionByName(add)

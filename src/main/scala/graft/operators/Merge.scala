@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{
-  broadcast, coalesce, col, concat, concat_ws, count, lit, max_by, raise_error, struct, when}
+  coalesce, col, concat, concat_ws, count, lit, max_by, raise_error, struct, when}
 
 /** Delta-MERGE emulation as relational rewrites (SURVEY.md §2.1 S6/S7,
   * §7.3). No Delta jars locally, so MERGE becomes outer/anti/semi-join
@@ -308,19 +308,13 @@ object Merge {
     require(source.columns.sorted.toSeq == dataCols.sorted,
       s"scd2 source must carry exactly the data columns ${dataCols.mkString(",")}; " +
         s"got ${source.columns.mkString(",")}")
-    // the guard filters every source row, so a duplicated key raises
-    // when the frozen source is first materialized.
     // guarded source frozen once (lazy): three branches (changed-keys
     // join, opened semi, brandNew anti) each re-ran the guard's per-key
     // window + the caller's source expression (r14-opt, guide §3.3).
-    // The source is load-batch-sized by contract; the duplicate-key
-    // raise still fires at first action (MergeSpec pins it).
+    // The guard filters every source row, so a duplicated key raises
+    // when the changed-key set below is frozen (MergeSpec pins it).
     val guarded = guardUniqueKeys(source, keys, "scd2")
-    val src = guarded.localCheckpoint(false)
-    // see preFreezeBroadcastHint: re-apply the broadcast the unfrozen
-    // plan would have gotten; changedKeys ⊆ the source's keys, so the
-    // same estimate bounds it
-    val hint = preFreezeBroadcastHint(guarded)
+    val src = guarded.transform(Freeze.lazily)
     // a NULL current flag (e.g. a row widened in by schema evolution)
     // must not vanish from BOTH branches — treat it as history.
     // cur deliberately NOT frozen: it is target-sized (a full dimension
@@ -331,57 +325,27 @@ object Merge {
     val hist = target.filter(!coalesce(col(isCurrent), lit(false)))
     // keys whose tracked attributes actually moved (null-safe compare)
     val differs = trackCols.map(c => !(col("s." + c) <=> col("t." + c))).reduce(_ || _)
-    // changed-key set frozen once (lazy): referenced by closeouts,
-    // opened, and untouched — unfrozen, the cur⋈src change-detection
-    // join re-ran per reference
+    // changed-key set frozen once: referenced by closeouts, opened, and
+    // untouched — unfrozen, the cur⋈src join re-ran per reference. Eager,
+    // so those joins see its stored bytes, not the join's product
+    // estimate (which would shuffle it where it fits a broadcast).
     val changedKeys = cur.as("t")
       .join(src.as("s"), keys)
       .filter(differs)
       .select(keys.map(col): _*)
-      .localCheckpoint(false)
-    val ckHint = hint(keys)
-    val closeouts = cur.join(ckHint(changedKeys), keys, "left_semi")
+      .transform(Freeze.eager)
+    val closeouts = cur.join(changedKeys, keys, "left_semi")
       .withColumn(validTo, lit(effectiveDate))
       .withColumn(isCurrent, lit(false))
-    val opened = src.join(ckHint(changedKeys), keys, "left_semi")
+    val opened = src.join(changedKeys, keys, "left_semi")
     val brandNew = src.join(cur.select(keys.map(col): _*), keys, "left_anti")
     val newVersions = opened.unionByName(brandNew)
       .withColumn(validFrom, lit(effectiveDate))
       .withColumn(validTo, lit(null).cast("string"))
       .withColumn(isCurrent, lit(true))
       .select(target.columns.toSeq.map(col): _*)
-    val untouched = cur.join(ckHint(changedKeys), keys, "left_anti")
+    val untouched = cur.join(changedKeys, keys, "left_anti")
     hist.unionByName(untouched).unionByName(closeouts).unionByName(newVersions)
-  }
-
-  /** scd2 freezes its guarded source and its changed-key set with lazy
-    * `localCheckpoint`s, and a checkpointed LogicalRDD reports the
-    * "unknown = huge" size default: a join side the planner would have
-    * BROADCAST from the unfrozen plan turns into a sort-merge join on
-    * the frozen form (the no-stats-after-checkpoint mechanism of the
-    * pageRank loop join; when scd1 still froze its source it cost
-    * `s21_precombine_merge` 0.38 → 0.65 s, r14-opt). Recover the
-    * decision the planner would have made: estimate the PROJECTED
-    * (column-pruned, as the planner sees it under the join) unfrozen
-    * `guarded` plan — driver-side only, no job, so the duplicate-key
-    * raise still fires at first action (MergeSpec pins it) — and return
-    * a hint that applies `broadcast` iff the estimate clears the
-    * session's own autoBroadcastJoinThreshold. The changed-key set is a
-    * subset of the source's keys, so the same estimate bounds it. On a
-    * huge load batch the estimate exceeds the threshold and the hint
-    * stays off — exactly the unfrozen planner behavior at 100 TB.
-    */
-  private def preFreezeBroadcastHint(guarded: DataFrame)
-      : Seq[String] => DataFrame => DataFrame = { projCols =>
-    val fits =
-      try {
-        val thresh =
-          guarded.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-        thresh > 0 &&
-          guarded.select(projCols.map(col): _*)
-            .queryExecution.optimizedPlan.stats.sizeInBytes <= thresh
-      } catch { case _: Throwable => false }
-    if (fits) broadcast _ else identity
   }
 
   /** Full-sync MERGE — the `WHEN NOT MATCHED BY SOURCE THEN DELETE`

@@ -286,7 +286,7 @@ object PqIndex {
         h.store.commitIfNew(resultTable, appId, batchId) {
           val hits = search(h, batch, k, nprobe)
             .withColumn("batch_id", lit(batchId))
-            .localCheckpoint(true) // one execution: emptiness probe + write
+            .transform(Freeze.eager) // one execution: emptiness probe + write
           if (!hits.isEmpty) {
             if (h.store.exists(resultTable))
               h.store.overwritePartitions(resultTable, hits, "batch_id", Seq(batchId))
@@ -313,7 +313,7 @@ object PqIndex {
         col(h.idCol),
         codeExpr(h, col(h.vecCol)).as("pq_code"),
         cellExpr(col(h.vecCol), h.coarse).as("cell_id"))
-      .localCheckpoint(true) // freeze: feeds both the touch list and the merge
+      .transform(Freeze.eager) // freeze: feeds both the touch list and the merge
     val touched = assigned.select(col("cell_id")).distinct()
       .collect().map(r => Int.box(r.getInt(0))).toSeq
     if (touched.nonEmpty) {

@@ -37,7 +37,7 @@ object Retrieval {
         when(col("t").isNull ||
           (size(col("t")) === 1 && element_at(col("t"), 1) === ""), lit(0.0))
           .otherwise(size(col("t")).cast("double")).as("dl"))
-      .localCheckpoint(true)
+      .transform(Freeze.eager)
     val n = lens.count()
     val avgdlRow = lens.agg(avg(col("dl"))).first()
     if (avgdlRow.isNullAt(0)) // empty corpus: empty scores, not an NPE

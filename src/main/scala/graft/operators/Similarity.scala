@@ -311,7 +311,7 @@ object Similarity {
       // one materialization of the queries×k-bounded result; both the
       // starvation guard and the found_k window read it back instead of
       // re-running the signature scan + rerank
-      val mat = mined.localCheckpoint(true)
+      val mat = mined.transform(Freeze.eager)
       if (requireK) {
         val counts = mat.groupBy(col("query_id"))
           .agg(count(lit(1)).as("__fk"))
@@ -378,7 +378,7 @@ object Similarity {
       else math.max(k, 4 * k)
     require(s0 >= k, s"initialShortlist $s0 < topK $k")
     var pending = queries.filter(col(labelCol).isNotNull)
-      .localCheckpoint(true)
+      .transform(Freeze.eager)
     val rounds = Seq.newBuilder[DataFrame]
     var s = s0.toLong
     var done = pending.count() == 0
@@ -396,7 +396,7 @@ object Similarity {
       } else {
         val out = hardNegatives(corpus, pending, k, Some(s.toInt),
           idCol, vecCol, labelCol, emitFoundK = true)
-          .localCheckpoint(true)
+          .transform(Freeze.eager)
         val satisfied = out.filter(col("found_k") >= k)
         rounds += satisfied
         // starved queries (including zero-row ones, which `out` cannot
@@ -404,7 +404,7 @@ object Similarity {
         pending = pending.join(
             satisfied.select(col("query_id").as(idCol)).distinct(),
             Seq(idCol), "left_anti")
-          .localCheckpoint(true)
+          .transform(Freeze.eager)
         s = math.min(s * 4, n)
         done = pending.count() == 0
       }
@@ -482,15 +482,14 @@ object Similarity {
       // a cell that won zero vectors this round KEEPS its old centroid:
       // dropping it silently shrinks the requested cell count (lower
       // recall per nprobe) and can keep shrinking across iterations.
-      // EAGER checkpoint per round: `updated` sits on both sides of the
-      // union and assignCells collect()s the centroid frame, so an
-      // unbroken lineage re-evaluates every earlier round's corpus
-      // aggregation — O(iterations²) corpus passes by the last round
-      // (the same reason every iterative loop in Graph checkpoints).
+      // EAGER freeze per round: `updated` sits on both sides of the union
+      // and assignCells collect()s the centroid frame, so an unbroken
+      // lineage re-evaluates every earlier round's corpus aggregation —
+      // O(iterations²) corpus passes by the last round.
       current = updated.unionByName(
         current.join(updated.select("cell_id"), Seq("cell_id"), "left_anti")
           .select(col("cell_id"), col("centroid").cast("array<double>")))
-        .localCheckpoint(true)
+        .transform(Freeze.eager)
     }
     current
   }
@@ -639,7 +638,7 @@ object Similarity {
     // resulting megamethod costs far more in codegen than the whole
     // query (measured 13 s vs 1 s at sf0.1).
     val buckets = lshBuckets(corpus, numTables, bitsPerTable, dim, seed, idCol, vecCol)
-      .localCheckpoint(true)
+      .transform(Freeze.eager)
     val a = buckets.select(col("lsh_table"), col("lsh_bucket"), col(idCol).as("id1"))
     val b = buckets.select(col("lsh_table"), col("lsh_bucket"), col(idCol).as("id2"))
     // candidates are NOT distinct'ed before rescoring: clustered corpora
@@ -654,7 +653,7 @@ object Similarity {
     // materialized once for the same reason as the signature table: the
     // normalize expression must not re-inline into each broadcast build
     val unit = corpus.select(col(idCol), normalize(col(vecCol)).as(vecCol))
-      .localCheckpoint(true)
+      .transform(Freeze.eager)
     candidates
       .join(broadcast(unit.select(col(idCol).as("id1"), col(vecCol).as("v1"))), Seq("id1"))
       .join(broadcast(unit.select(col(idCol).as("id2"), col(vecCol).as("v2"))), Seq("id2"))

@@ -67,7 +67,7 @@ object Skew {
       .filter(col(key).isNotNull) // null never matches an inner join — a
       // null "hot key" would also poison hotKeyJoin's isin predicate
       .groupBy(col(key)).agg(count(lit(1)).as("__n"))
-      .localCheckpoint(true)
+      .transform(Freeze.eager)
     // tiny input x small fraction can sample zero rows: sum() is NULL
     val totalRow = sampled.agg(sum(col("__n"))).collect()(0)
     if (totalRow.isNullAt(0) || totalRow.getLong(0) == 0L) Seq.empty

@@ -89,15 +89,12 @@ object TotalOrder {
       df: DataFrame, order: Seq[Column], outCol: String): (DataFrame, Long) = {
     // freeze the input before the range shuffle: repartitionByRange
     // samples its input to pick boundaries, which would recompute an
-    // expensive upstream a second time. LAZY localCheckpoint, not an
-    // eager one: the boundary-sampling job is the FIRST reader, so it
-    // populates the checkpoint cache in the same pass it samples — the
-    // eager form paid one extra full materialization of the input
-    // before any sampling began (r13-opt: one pass saved per
-    // rowNumber/prefixAggs call across all 24 TotalOrder call sites;
-    // Dataset.persist was tried and rejected — InMemoryRelation's
-    // columnar encode cost more than the saved pass on several gates)
-    val slim = df.localCheckpoint(false)
+    // expensive upstream a second time. LAZY: the boundary-sampling job
+    // is the FIRST reader and fills the cache in the pass it samples (an
+    // eager freeze paid one extra full pass per call, r13-opt;
+    // Dataset.persist was rejected — InMemoryRelation's columnar encode
+    // cost more than the saved pass on several gates)
+    val slim = df.transform(Freeze.lazily)
     val spark = slim.sparkSession
     val n = spark.sessionState.conf.numShufflePartitions
     // ONE materializing pass instead of two: the ranged layout is
@@ -110,7 +107,7 @@ object TotalOrder {
       .repartitionByRange(n, order: _*)
       .sortWithinPartitions(order: _*)
       .withColumn("__pid", spark_partition_id())
-      .localCheckpoint(false) // LAZY: the count action below materializes it
+      .transform(Freeze.lazily) // LAZY: the count action below materializes it
     val counts = ranged.groupBy(col("__pid"))
       .agg(count(lit(1)).as("__part_rows"))
       .collect()
@@ -178,7 +175,7 @@ object TotalOrder {
       rnCol: Option[String] = None,
       suffixMaxes: Seq[(String, String)] = Nil): DataFrame = {
     // lazy checkpoint for the same one-pass-saved reason as [[rowNumber]]
-    val slim = df.localCheckpoint(false)
+    val slim = df.transform(Freeze.lazily)
     val spark = slim.sparkSession
     val n = spark.sessionState.conf.numShufflePartitions
     // same single-materializing-pass shape as [[rowNumber]]: the cache
@@ -191,7 +188,7 @@ object TotalOrder {
       .repartitionByRange(n, order: _*)
       .sortWithinPartitions(order: _*)
       .withColumn("__pid", spark_partition_id())
-      .localCheckpoint(false) // LAZY: the count action below materializes it
+      .transform(Freeze.lazily) // LAZY: the count action below materializes it
     val perPartDistributed = ranged.groupBy(col("__pid")).agg(
       count(lit(1)).as("__part_rows"),
       (sums.map { case (in, _) => sum(col(in)).as(s"__s_$in") } ++

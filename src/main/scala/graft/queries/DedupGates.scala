@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.expressions.FuzzyStrings
 import graft.functions.TextFunctions
-import graft.operators.{Curation, Dedup, LshTextIndex, TableStore}
+import graft.operators.{Curation, Dedup, Freeze, LshTextIndex, TableStore}
 
 /** Deduplication: exact, fuzzy, MinHash/SimHash, span and substring,
   * blocking and record linkage, incremental and multimodal dedup.
@@ -1407,8 +1407,10 @@ object DedupGates {
         (d, text, img, wav, avi)
       })
       .toDF("media_id", "text", "img", "wav", "avi")
-      // encode once: four modality passes re-read this frame
-      .localCheckpoint(true)
+      // encode once: four modality passes re-read this frame. Lazily: the
+      // blobs put its stored bytes at 64x Spark's estimate, and sized from
+      // them the cluster-size join shuffles where it broadcast before
+      .transform(Freeze.lazily)
   }
 
   private[graft] def mmTextPairs(corpus: org.apache.spark.sql.DataFrame) =

@@ -8,7 +8,7 @@ import org.apache.spark.sql.types.{IntegerType, StringType, StructField,
   StructType}
 
 import graft.Tables
-import graft.operators.TableStore
+import graft.operators.{Freeze, TableStore}
 
 /** File formats and sources: CSV/JSON/ORC/XML/Avro/text/binary scans
   * and writes, corrupt-record handling, schema inference and merging,
@@ -543,7 +543,7 @@ object FormatsGates {
         .agg(count(lit(1)).cast("long").as("n"),
           sum(col("o_totalprice").cast("decimal(18,2)")).cast("double").as("total"))
         .orderBy("o_orderstatus")
-        .localCheckpoint() // materialize THROUGH the cache before unpersist
+        .transform(Freeze.eager) // materialize THROUGH the cache before unpersist
     } finally orders.unpersist()
   }
 
@@ -778,7 +778,7 @@ object FormatsGates {
       |FROM supplier
       |WHERE s_suppkey % 100 = 7
       |ORDER BY s_suppkey""".stripMargin) { (spark, dir) =>
-    val outPath = s"/tmp/graft_pq_bloom_${math.abs(dir.hashCode)}"
+    val outPath = GateScratch.dir("graft_pq_bloom_").resolve("supplier").toString
     Tables.load(spark, dir, "supplier")
       .select(col("s_suppkey").cast("bigint"), col("s_name"),
         col("s_acctbal").cast("decimal(15,2)"))

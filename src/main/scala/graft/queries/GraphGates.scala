@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.operators.Graph
+import graft.operators.{Freeze, Graph}
 
 /** Graph analytics: traversal, PageRank, centralities, triangles,
   * community detection and link prediction.
@@ -241,7 +241,7 @@ object GraphGates {
         |SELECT DISTINCT a.l_suppkey AS u, b.l_suppkey AS v
         |FROM supp a JOIN supp b
         |  ON a.l_partkey = b.l_partkey AND a.l_suppkey < b.l_suppkey""".stripMargin)
-      .localCheckpoint(false)
+      .transform(Freeze.lazily)
       .createOrReplaceTempView("graft_lp_edges")
     spark.sql(
       """WITH edges AS (SELECT u, v FROM graft_lp_edges),
@@ -378,7 +378,7 @@ object GraphGates {
     // guide §3.3). Lazy checkpoint: the first job populates the cache.
     val sp = t(spark, dir, "lineitem")
       .select(col("l_suppkey").as("s"), col("l_partkey").as("p")).distinct()
-      .localCheckpoint(false)
+      .transform(Freeze.lazily)
     val deg = sp.groupBy("s").agg(count(lit(1)).as("d"))
     val pairs = sp.as("a")
       .join(sp.as("b"), col("a.p") === col("b.p") && col("a.s") < col("b.s"))
@@ -485,13 +485,13 @@ object GraphGates {
       .select(concat(lit("c"), col("o_custkey")).as("a"),
         concat(lit("s"), col("l_suppkey")).as("b"))
       .distinct()
-      .localCheckpoint(false)
+      .transform(Freeze.lazily)
     val deg = e0.select(col("a").as("id")).union(e0.select(col("b").as("id")))
       .groupBy("id").agg(count(lit(1)).as("d"))
     val joined = e0
       .join(deg.select(col("id").as("a"), col("d").as("da")), "a")
       .join(deg.select(col("id").as("b"), col("d").as("db")), "b")
-      .localCheckpoint(false)
+      .transform(Freeze.lazily)
     val dd = joined.select(col("da").as("x"), col("db").as("y"))
       .union(joined.select(col("db").as("x"), col("da").as("y")))
     val m = dd.agg(count(lit(1)).as("n"),
@@ -698,7 +698,7 @@ object GraphGates {
         |JOIN graft_clo_customer c ON o.o_custkey = c.c_custkey
         |JOIN graft_clo_supplier s ON l.l_suppkey = s.s_suppkey
         |WHERE c.c_nationkey <> s.s_nationkey""".stripMargin)
-      .localCheckpoint(false)
+      .transform(Freeze.lazily)
       .createOrReplaceTempView("graft_clo_edges")
     spark.sql(
       """SELECT DISTINCT a.u, b.v
@@ -706,7 +706,7 @@ object GraphGates {
         |WHERE a.u <> b.v
         |  AND NOT EXISTS (SELECT 1 FROM graft_clo_edges x
         |                  WHERE x.u = a.u AND x.v = b.v)""".stripMargin)
-      .localCheckpoint(false)
+      .transform(Freeze.lazily)
       .createOrReplaceTempView("graft_clo_d2")
     spark.sql(
       """SELECT DISTINCT a.u, b.v
@@ -716,7 +716,7 @@ object GraphGates {
         |                  WHERE x.u = a.u AND x.v = b.v)
         |  AND NOT EXISTS (SELECT 1 FROM graft_clo_d2 x
         |                  WHERE x.u = a.u AND x.v = b.v)""".stripMargin)
-      .localCheckpoint(false)
+      .transform(Freeze.lazily)
       .createOrReplaceTempView("graft_clo_d3")
     spark.sql(
       """WITH d4 AS (
@@ -801,14 +801,14 @@ object GraphGates {
         |SELECT DISTINCT a.l_suppkey AS u, b.l_suppkey AS v
         |FROM ps a JOIN ps b
         |  ON a.l_partkey = b.l_partkey AND a.l_suppkey < b.l_suppkey""".stripMargin)
-      .localCheckpoint(false)
+      .transform(Freeze.lazily)
       .createOrReplaceTempView("graft_mod_edges")
     spark.sql(
       """SELECT e.u, e.v, su.s_nationkey AS cu, sv.s_nationkey AS cv
         |FROM graft_mod_edges e
         |JOIN graft_mod_supp su ON su.s_suppkey = e.u
         |JOIN graft_mod_supp sv ON sv.s_suppkey = e.v""".stripMargin)
-      .localCheckpoint(false)
+      .transform(Freeze.lazily)
       .createOrReplaceTempView("graft_mod_lab")
     spark.sql(
       """WITH m AS (SELECT COUNT(*) AS m FROM graft_mod_edges),

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.operators.Similarity
+import graft.operators.{Freeze, Similarity}
 
 /** Machine learning: feature encoding, model fits, clustering,
   * recommendations, market baskets, hard-negative mining and model
@@ -177,7 +177,7 @@ object MlGates {
         col("l_partkey") === col("p_partkey"))
       .select(col("l_orderkey"), col("p_type"))
       .distinct()
-      .localCheckpoint(false)
+      .transform(Freeze.lazily)
     val nOrders = items.agg(
       countDistinct(col("l_orderkey")).cast("double").as("n_orders"))
     val freq = items.groupBy(col("p_type"))
@@ -2013,18 +2013,19 @@ object MlGates {
         |       CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE -1 END AS y
         |FROM graft_ab_orders""".stripMargin)
     base.createOrReplaceTempView("graft_ab_base")
-    // ...and the 9-row cut table is MATERIALIZED once (eager
-    // localCheckpoint): the boosting SQL references the candidate set
-    // in two fanout aggregates and eight scalar subqueries, and a lazy
-    // view would re-inline (re-plan, re-execute) the whole ranking
-    // machinery into every one of them
+    // ...and the 9-row cut table is frozen once (lazily): the boosting
+    // SQL references the candidate set in two fanout aggregates and eight
+    // scalar subqueries, which a view would each re-plan and re-execute.
+    // An eager freeze's measured size flips the cross joins' build side,
+    // and their identical subtrees stop sharing exchanges (+4 shuffles,
+    // +6 broadcasts at sf0.001)
     import org.apache.spark.sql.functions.{col => c, round => rnd, max => mx}
     graft.operators.TotalOrder
       .ntile(base.select(c("x")), Seq(c("x")), 10, "tile")
       .filter(c("tile") < 10)
       .groupBy(c("tile")).agg(rnd(mx(c("x")), 8).as("th"))
       .select(c("th"))
-      .localCheckpoint(true)
+      .transform(Freeze.lazily)
       .createOrReplaceTempView("graft_ab_cuts")
     spark.sql(
       """WITH base AS (SELECT * FROM graft_ab_base),
@@ -2139,7 +2140,7 @@ object MlGates {
       val emb = Tables.load(spark, dir, "embeddings")
       val queries = emb.filter(col("vec_id") % 8 === 0)
       val out = Similarity.hardNegativesAdaptive(emb, queries, k = 3,
-        initialShortlist = 3).localCheckpoint(true)
+        initialShortlist = 3).transform(Freeze.eager)
       val nq = queries.count()
       val short = out.groupBy(col("query_id"))
         .agg(count(lit(1)).as("c")).filter(col("c") =!= 3).count()

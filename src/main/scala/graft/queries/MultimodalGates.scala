@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.operators.{AudioFeatures, MediaCodec, Multimodal}
+import graft.operators.{AudioFeatures, Freeze, MediaCodec, Multimodal}
 import graft.queries.DedupGates.mix
 
 /** Multimodal media: image, audio and video decoding, features,
@@ -885,7 +885,7 @@ object MultimodalGates {
         (d, payload)
       })
       .toDF("media_id", "payload")
-      .localCheckpoint(true)
+      .transform(Freeze.eager)
     val fp = Multimodal.videoBandFingerprints(corpus, everyNth = 2,
       bandSize = 3, subBands = 1) // exact mode: bit-identical rasters
     fp.as("a").join(fp.as("b"),
@@ -1054,7 +1054,7 @@ object MultimodalGates {
         (d, payload)
       })
       .toDF("media_id", "payload")
-      .localCheckpoint(true)
+      .transform(Freeze.eager)
     val fp = Multimodal.videoBandFingerprints(corpus, everyNth = 2,
       bandSize = 3, subBands = 4)
     fp.as("a").join(fp.as("b"),

@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
 import graft.Tables
 import graft.expressions.VectorExprs
-import graft.operators.{AsOfJoin, DenseIds, EventAnalytics, RangeJoin,
+import graft.operators.{AsOfJoin, DenseIds, EventAnalytics, Freeze, RangeJoin,
   Sampling, Skew, SpatialJoin, TotalOrder}
 import graft.queries.FuzzShapes.{duckSql, shapes, sparkSql, tbl}
 
@@ -1205,7 +1205,7 @@ object RelationalGates {
         Seq(col("o_orderdate"), col("o_orderkey")), "rn")
       .filter(col("rn") === 200)
       .select(col("o_orderdate").as("d"), col("o_orderkey").as("k"))
-      .localCheckpoint(true)
+      .transform(Freeze.eager)
       .createOrReplaceTempView("graft_page_anchor")
     spark.sql(
       """WITH last_of_p2 AS (SELECT d, k FROM graft_page_anchor)
@@ -2377,7 +2377,7 @@ object RelationalGates {
     val (_, mapping1) = DenseIds.withDenseIds(
       keyed.filter(col("lang") =!= "zh"), "key")
     val extended = DenseIds.extendDenseIds(mapping1, keyed, "key")
-      .localCheckpoint(true)
+      .transform(Freeze.eager)
     // id stability REQUIRE: every batch-1 assignment survives verbatim
     val changedOld = mapping1.join(extended,
         mapping1("key") === extended("key") &&
@@ -2403,15 +2403,17 @@ object RelationalGates {
       // GROUP-BY-shape_id digest rewrite was also tried and REVERTED:
       // the single big aggregate's barrier + union partition explosion
       // measured SLOWER (exec ~10 s → ~13 s) than the per-branch
-      // digest aggregates AQE coalesces individually.
+      // digest aggregates AQE coalesces individually. The views go once
+      // the query is analysed, so they pin no frozen RDD after the gate.
       needed.foreach { t =>
         val cols = tbl(t).ints ++ tbl(t).strs
         Tables.load(spark, dir, t).select(cols.map(org.apache.spark.sql
             .functions.col): _*)
-          .localCheckpoint(false)
+          .transform(Freeze.lazily)
           .createOrReplaceTempView("fz_" + t)
       }
-      spark.sql(sparkSql)
+      try spark.sql(sparkSql)
+      finally needed.foreach(t => spark.catalog.dropTempView("fz_" + t))
   }
 
   val all: Seq[OpQuery] = Seq(

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.operators.Freeze
 
 /** Statistical inference: hypothesis tests, confidence intervals, rank
   * correlations, distribution fits, survival estimators and A/B
@@ -180,7 +181,7 @@ object StatTestsGates {
     val ranked = TotalOrder.rowNumber(
         spend, Seq(col("o_custkey").asc), "idx")
       .select(col("s"), col("idx"))
-      .localCheckpoint(true)
+      .transform(Freeze.eager)
     val n = ranked.count()
     val draws = spark.range(1, 101).select(col("id").as("b"))
       .crossJoin(spark.range(1, n + 1).select(col("id").as("i")))
@@ -401,7 +402,7 @@ object StatTestsGates {
       .rowNumberWithCount(runsSeq, Seq(col("value")), "r", "n")
       .filter(col("r") === floor((col("n") + 1) / 2).cast("int"))
       .select(col("value").as("m"))
-      .localCheckpoint(true)
+      .transform(Freeze.eager)
       .createOrReplaceTempView("graft_runs_med")
     spark.sql(
       """WITH seq AS (SELECT value, i FROM graft_runs_seq),
@@ -1788,7 +1789,7 @@ object StatTestsGates {
         Seq(col("x"), col("o_orderkey")), "r", "n")
       .filter(col("r") * 2 === col("n") || col("r") * 2 === col("n") + 1)
       .select(col("x").as("m"))
-      .localCheckpoint(true)
+      .transform(Freeze.eager)
       .createOrReplaceTempView("graft_ca_med")
     spark.sql(
       """WITH med AS (SELECT m FROM graft_ca_med),
@@ -1862,7 +1863,9 @@ object StatTestsGates {
     // partitions: the cartesian becomes 36 tasks over the frozen rows
     // and the lineitem⋈orders join runs once (r13-opt §3: 2 scans → 1,
     // right side no longer recomputed per left partition; results
-    // bit-identical, same pair predicate).
+    // bit-identical, same pair predicate). Lazily: the pair join, its only
+    // reader, stores each partition at first read; an eager freeze's
+    // measured size would add a broadcast job to the same pair work.
     val obs = spark.sql(
       """SELECT l.l_orderkey * 10 + l.l_linenumber AS id,
         |       CAST(FLOOR(unix_timestamp(l.l_shipdate) / 86400)
@@ -1872,7 +1875,7 @@ object StatTestsGates {
         |FROM graft_ci_lineitem l
         |JOIN graft_ci_orders o ON l.l_orderkey = o.o_orderkey
         |WHERE l.l_orderkey < 2000""".stripMargin)
-      .repartition(6).localCheckpoint(true)
+      .repartition(6).transform(Freeze.lazily)
     obs.createOrReplaceTempView("graft_ci_obs")
     spark.sql(
       """WITH pairs AS (

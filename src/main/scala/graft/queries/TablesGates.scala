@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.operators.{AsOfJoin, BloomPrune, Bucketing,
-  ConcurrentWriteException, IncrementalAgg, IncrementalJoin, MaterializedAgg,
+  ConcurrentWriteException, Freeze, IncrementalAgg, IncrementalJoin, MaterializedAgg,
   Merge, OptimisticWriter, ShardExport, TableStore}
 
 /** Table maintenance: MERGE (insert-only, SCD1, SCD2, full sync),
@@ -905,7 +905,7 @@ object TablesGates {
         col("o_custkey") === col("c_custkey"))
       .select(col("o_orderkey"), col("c_mktsegment").as("g"),
         col("o_totalprice").cast("decimal(18,2)").as("v"))
-      .localCheckpoint(false)
+      .transform(Freeze.lazily)
     val root = graft.queries.GateScratch.dir("graft-ivmm-gate-").toString
     val store = new TableStore(spark, root, retainVersions = 5)
     store.overwrite("base", joined.filter(col("o_orderkey") % 10 < 4))
@@ -1371,7 +1371,7 @@ object TablesGates {
       store, "rg", scratch.resolve("delta").toString).toString
     val targets = dvTargets(spark, exp, col("doc_id") % 11 === 2)
     DeltaExport.appendDeletionVectors(exp, targets)
-    val pre = DeltaImport.read(spark, exp).localCheckpoint(true)
+    val pre = DeltaImport.read(spark, exp).transform(Freeze.eager)
     val purged = DeltaReorg.purge(spark, exp)
     require(purged == targets.size,
       s"s56: purged $purged files, expected ${targets.size} DV-bearing ones")
@@ -1460,12 +1460,12 @@ object TablesGates {
     val exported = IcebergExport.exportTable(
       store, "ups", scratch.resolve("ice").toString)
     val keys = docs.filter(col("doc_id") % 19 === 0)
-      .select(col("lang"), col("source")).distinct().localCheckpoint(true)
+      .select(col("lang"), col("source")).distinct().transform(Freeze.eager)
     val reinsert = docs.join(keys,
         docs("lang") <=> keys("lang") && docs("source") <=> keys("source"),
         "left_semi")
       .filter(col("doc_id") % 2 === 0)
-      .localCheckpoint(true)
+      .transform(Freeze.eager)
     require(reinsert.count() > 0, "s58: empty reinsert slice — fixture broke")
     IcebergExport.appendEqualityUpsert(
       spark, exported.toString, keys, Seq("lang", "source"), reinsert)

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.expressions.BpeEncode
 import graft.functions.TextFunctions
-import graft.operators.{Bpe, Curation, Dedup, Pq, QualityModel, Retrieval,
+import graft.operators.{Bpe, Curation, Dedup, Freeze, Pq, QualityModel, Retrieval,
   Sampling, TotalOrder}
 
 /** Text and training-data curation: normalization, tokenization (BPE),
@@ -1318,15 +1318,15 @@ object TextGates {
       |SELECT CAST(step AS INT) AS step, w
       |FROM walk
       |ORDER BY step""".stripMargin) { (spark, dir) =>
-    // tokenized ONCE and frozen (lazy localCheckpoint, r14-opt): the old
-    // shape re-ran the posexplode tokenization three times (both sides
-    // of the bigram self-join + the unigram start count)
+    // tokenized ONCE and lazily frozen (r14-opt): the old shape re-ran the
+    // posexplode tokenization three times (both sides of the bigram
+    // self-join + the unigram start count)
     val toks = Tables.load(spark, dir, "documents")
       .select(col("doc_id"),
         posexplode(filter(split(lower(col("text")), "[^a-z]+"),
           s => length(s) >= 3)).as(Seq("i0", "w")))
       .select(col("doc_id"), (col("i0") + 1).as("i"), col("w"))
-      .localCheckpoint(false)
+      .transform(Freeze.lazily)
     // bigram pairs via lead() over the per-doc position order instead of
     // the (doc_id, i+1) self-join (r14-opt, guide §2.4): positions are
     // dense consecutive by construction (posexplode), so the next-row
@@ -1344,9 +1344,9 @@ object TextGates {
     // recursion below re-executes its subplan per step, and must not
     // re-scan the corpus 10 times
     val nxt = bigrams.withColumn("rk", row_number().over(rk))
-      .filter(col("rk") === 1).select("w1", "w2").localCheckpoint()
+      .filter(col("rk") === 1).select("w1", "w2").transform(Freeze.eager)
     val start = toks.groupBy("w").agg(count(lit(1)).as("c"))
-      .orderBy(col("c").desc, col("w")).limit(1).select("w").localCheckpoint()
+      .orderBy(col("c").desc, col("w")).limit(1).select("w").transform(Freeze.eager)
     nxt.createOrReplaceTempView("graft_lm_nxt")
     start.createOrReplaceTempView("graft_lm_start")
     spark.sql(

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.operators.{Intervals, TimeSeries, TotalOrder}
+import graft.operators.{Freeze, Intervals, TimeSeries, TotalOrder}
 
 /** Time-series operators: gap filling, rolling and exponential
   * smoothing, decomposition, change-point and anomaly detection,
@@ -1727,7 +1727,7 @@ object TimeSeriesGates {
         (floor(unix_timestamp(col("l.l_shipdate")) / 86400)
           - floor(unix_timestamp(col("o.o_orderdate")) / 86400)).cast("int").as("x"),
         col("l.l_quantity").cast("int").as("y"))
-      .localCheckpoint(false)
+      .transform(Freeze.lazily)
     val counts = graft.operators.Concordance.counts(
       obs, "x", "y", lit(true), buckets = 2048)
     def tiePairs(c: String) = obs.groupBy(c).agg(count(lit(1)).as("c"))

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.expressions.VectorExprs
-import graft.operators.{AnnIndex, Pq, RandomProjection, Similarity,
+import graft.operators.{AnnIndex, Freeze, Pq, RandomProjection, Similarity,
   TableStore}
 
 /** Vector search and embeddings: brute-force, IVF, PQ and LSH top-k,
@@ -922,17 +922,17 @@ object VectorsGates {
     // driver merge), not a global row_number window over the embeddings.
     val cand = base
       .orderBy(col("qs").desc, col("vec_id")).limit(12)
-      .localCheckpoint(true)
+      .transform(Freeze.eager)
     val pw = cand.select(col("vec_id").as("a"), col("embedding").as("ea"))
       .crossJoin(cand.select(col("vec_id").as("b"), col("embedding").as("eb")))
       .filter(col("a") =!= col("b"))
       .select(col("a"), col("b"), round(cos(col("ea"), col("eb")), 9).as("sim"))
-      .localCheckpoint(true)
+      .transform(Freeze.eager)
     var selected = cand
       .orderBy(col("qs").desc, col("vec_id")).limit(1)
       .select(col("vec_id"), round(col("qs") * 0.7, 9).as("sc"),
         lit(1).as("step"))
-      .localCheckpoint(true)
+      .transform(Freeze.eager)
     for (step <- 2 to 4) {
       val selIds = selected.select("vec_id")
       val maxSim = pw
@@ -944,7 +944,7 @@ object VectorsGates {
           round(col("qs") * 0.7 - col("msim") * 0.3, 9).as("sc"),
           lit(step).as("step"))
         .orderBy(col("sc").desc, col("vec_id")).limit(1)
-      selected = selected.unionByName(next).localCheckpoint(true)
+      selected = selected.unionByName(next).transform(Freeze.eager)
     }
     selected.select(col("step").cast("int").as("step"),
         col("vec_id").cast("long").as("vec_id"),
@@ -1595,7 +1595,7 @@ object VectorsGates {
     val cand = Pq.adcTopK(encoded, queries, cb, shortlist,
         idCol = "vec_id", vecCol = "v")
       .select(col("query_id"), col("corpus_id"))
-      .localCheckpoint(true) // tiny: queries × shortlist ids
+      .transform(Freeze.eager) // tiny: queries × shortlist ids
     val reranked = Pq.rerankShortlist(cand, embs, queries,
       topK = 10, idCol = "vec_id", vecCol = "v")
     // coverage proof: the reranked top-10 IS the exact top-10 iff every
@@ -2288,14 +2288,14 @@ object VectorsGates {
     // REQUIRE and the gate output otherwise re-ran each probe-join
     // search per action (served was evaluated 3x, oneShot 2x)
     val served = AnnIndex.search(idx, queries, k = 5, nprobe = 4)
-      .localCheckpoint(false)
+      .transform(Freeze.lazily)
     // rebuild-equality REQUIRE: a one-shot index over the full corpus
     // (same centroid rule — seed ids all in `base`) must serve the
     // exact same rows
     AnnIndex.build(store, "emb_full", emb, numCells = 16)
     val oneShot = AnnIndex.search(
         AnnIndex.open(store, "emb_full"), queries, k = 5, nprobe = 4)
-      .localCheckpoint(false)
+      .transform(Freeze.lazily)
     val diff = served.exceptAll(oneShot)
       .union(oneShot.exceptAll(served)).count()
     require(diff == 0,

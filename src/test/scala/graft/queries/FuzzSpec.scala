@@ -1,12 +1,16 @@
 package graft.queries
 
-import org.scalatest.funsuite.AnyFunSuite
+import java.nio.file.Files
+
+import org.apache.spark.sql.functions.col
+
+import graft.SparkSpec
 
 /** Pins the fuzz generator's determinism and dialect hygiene — the gate
   * itself is hash-compared by the driver; these are the properties a
   * fixture-free unit test can hold.
   */
-class FuzzSpec extends AnyFunSuite {
+class FuzzSpec extends SparkSpec {
 
   private val oracle = RelationalGates.fuzz_relational.oracle.get
 
@@ -31,6 +35,22 @@ class FuzzSpec extends AnyFunSuite {
         "o_totalprice", "c_acctbal", "s_acctbal", "p_retailprice",
         "l_shipdate", "o_orderdate", "\"value\"", " ts ", "props"))
       assert(!oracle.contains(c), s"divergent-type column $c leaked into a shape")
+  }
+
+  test("building the gate leaves no fz_ view in the catalog") {
+    // one-row tables carrying the columns the grammar reads
+    val dir = Files.createTempDirectory("fuzz-views").toString
+    FuzzShapes.shapes.flatMap(s => s.table +: s.joined.toSeq).distinct.foreach { t =>
+      val spec = FuzzShapes.tbl(t)
+      val cols = spec.ints.map(col("id").as(_)) ++
+        spec.strs.map(col("id").cast("string").as(_)) ++
+        (if (t == "events") Seq(col("id").as("ts")) else Nil)
+      spark.range(1).select(cols: _*).write.parquet(s"$dir/$t.parquet")
+    }
+    RelationalGates.fuzz_relational.build(spark, dir)
+    val left = spark.catalog.listTables().collect()
+      .filter(t => t.isTemporary && t.name.startsWith("fz_")).map(_.name)
+    assert(left.isEmpty, left.mkString(", "))
   }
 
   test("the oracle rendering carries no spark-side view prefix") {
